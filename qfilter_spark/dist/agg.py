@@ -63,7 +63,7 @@ class SketchSpec:
         """Arrow RecordBatch -> update array (uint64 hashes or float64)."""
         arr = batch.column(self.col)
         if self.mode == "hash_col":
-            return u64_hashes_from_arrow(arr, f"sketch build ({self.col!r})")
+            return u64_hashes_from_arrow(arr, f"column {self.col!r}")
         if self.mode == "tokens_ngram":
             flat, offsets = flat_from_arrow(arr)
             return ngram_hashes(flat, offsets, self.ngram_n)

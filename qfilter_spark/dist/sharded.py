@@ -9,20 +9,30 @@ quotient (src/lib.rs:1304-1309), so splitting the fingerprint domain into
 the single big filter — same answers, bit-for-bit (tested against the
 single-blob path).
 
-Build: one ``mapInArrow`` pass emits per-(partition, shard) sorted
-fingerprint chunks; one ``groupBy(shard).applyInPandas`` round merges each
-shard (k-way timsort of sorted runs). The filter then LIVES as a Parquet
-table (shard, n_fps, payload) — the checkpointed lineage IS the data.
+Routing: a :class:`ShardDirectory` maps the fingerprint domain onto table
+rows; row ``i`` owns [starts[i], starts[i+1]) inside one shard. The
+fixed-prefix table is the uniform directory — one row per shard, starting
+at ``shard << (fs-k)``, row key == shard id — and is stored as
+(shard, n_fps, payload). The skew-resistant build
+(:func:`build_sharded_filter_split`) cuts hot shards into several rows;
+only a table with more rows than shards carries the extra ``key`` column
+(key, shard, n_fps, payload). Every operation takes ``n_shards`` as an int
+(the uniform directory) or as a ShardDirectory.
 
-Probe: probes are shuffled once by the same shard function and co-grouped
-with the filter table (``cogroup.applyInPandas``) — a co-partitioned join;
-each task touches exactly one shard's state. No broadcast, no driver blob,
-no single reducer, at any scale.
+Build / insert: one ``mapInArrow`` pass emits per-(task, row) sorted
+fingerprint chunks; one grouped merge per row key (k-way timsort of sorted
+runs) writes each row's blob, and an insert co-groups the chunks with the
+existing rows. The filter then LIVES as a Parquet table — the checkpointed
+lineage IS the data.
+
+Probe / remove: probe and retraction hashes travel as the same sorted
+chunks, co-grouped with their row (``cogroup.applyInArrow``) — a
+co-partitioned join; each task touches exactly one row's state. No
+broadcast, no driver blob, no single reducer, at any scale. Only
+:func:`count_sharded`, which answers per probe row, shuffles single rows.
 """
 
 from __future__ import annotations
-
-import time
 
 import numpy as np
 
@@ -32,6 +42,14 @@ from ..rsqf import Filter
 from .agg import SketchSpec
 
 SHARDED_SCHEMA = "shard int, n_fps long, payload binary"
+SPLIT_SCHEMA = "key int, " + SHARDED_SCHEMA
+_SPLIT_PREFIX = "qfs_split_"
+_SAMPLES_PER_CHUNK = 64  # bounded per (task, shard) row => driver metadata
+                         # stays KB-scale at ANY corpus size (RangePartitioner
+                         # uses the same bounded-sample-per-partition idea)
+# per-task fingerprint buffer (~128 MB) before the emitter flushes a chunk
+# wave; read on the driver when a plan is built
+_MAX_BUFFER = 16_000_000
 
 _FMT_RAW64 = 0
 _FMT_REL32 = 1
@@ -88,12 +106,6 @@ def _local_mask(fs: int, k: int) -> np.uint64:
     return np.uint64((1 << (fs - k)) - 1)
 
 
-# a NULL hash routes to a NULL shard (_route_by_shard's JVM expressions
-# propagate NULL) and reaches the group kernels, which refuse it via the
-# shared helper instead of laundering it through float NaN
-_u64_from_arrow = u64_hashes_from_arrow
-
-
 def _fp_meta(spec: SketchSpec) -> tuple[int, int, int]:
     """(qbits, rbits, fingerprint_size) of the spec's filter params."""
     f = spec.make().filter
@@ -101,337 +113,21 @@ def _fp_meta(spec: SketchSpec) -> tuple[int, int, int]:
 
 
 def shard_bits_for(n_shards: int) -> int:
-    k = int(n_shards).bit_length() - 1
-    assert (1 << k) == n_shards, "n_shards must be a power of two"
-    return k
-
-
-def build_sharded_filter(df, spec: SketchSpec, n_shards: int = 64,
-                         max_buffer: int = 16_000_000):
-    """Returns a DataFrame (shard, n_fps, payload): the distributed filter.
-
-    ``payload`` is a canonical sorted-fingerprint Filter blob restricted to
-    the shard's fingerprint range [shard << (fs-k), (shard+1) << (fs-k)).
-    Write it to Parquet to persist; union of shards == the single filter.
-
-    Spill-aware: a task's fingerprint buffer is capped at ``max_buffer``
-    entries (~128 MB); larger input partitions emit multiple sorted chunk
-    waves, which the shard merge treats as extra sorted runs — per-task
-    memory stays bounded no matter the input partition size (SURVEY.md §7
-    "Python-side memory" risk item).
-    """
-    k = shard_bits_for(n_shards)
-    qbits, rbits, fs = _fp_meta(spec)
-    assert k <= qbits, "shard prefix must fit in the quotient"
-
-    # the same spill-aware chunk emitter the split build and incremental
-    # insert use (one copy of the flush/boundary logic)
-    chunks_df = _emit_chunk_rows(df, spec, n_shards, fs, max_buffer,
-                                 with_samples=False)
-
-    import pandas as pd
-
-    keep = getattr(spec.make(), "keep_duplicates", True)
-
-    def merge_shard(key, pdf: "pd.DataFrame") -> "pd.DataFrame":
-        shard = int(key[0])
-        runs = [_unpack_chunk(p, shard, fs - k) for p in pdf["payload"]]
-        fps = np.concatenate(runs) if runs else np.empty(0, dtype=np.uint64)
-        fps.sort(kind="stable")  # timsort: adaptive on concatenated sorted runs
-        if not keep:
-            fps = np.unique(fps)
-        blob = _shard_blob(fps, shard, qbits - k, rbits, keep)
-        return pd.DataFrame({"shard": [int(key[0])], "n_fps": [int(fps.size)],
-                             "payload": [blob]})
-
-    return chunks_df.groupBy("shard").applyInPandas(merge_shard, SHARDED_SCHEMA)
-
-
-def _route_by_shard(df, hash_col: str, fs: int, k: int):
-    """(h, shard) projection: the JVM-side fingerprint-prefix shard router,
-    shared by probe/count/remove so all three stay in lockstep with the
-    build's shard function. Guards the JVM's shift-mod-64: at k=0 with a
-    64-bit fingerprint, ``h >>> 64`` would return h, not 0."""
-    from pyspark.sql import functions as F
-
-    shard = (F.lit(0) if fs - k >= 64 else F.shiftrightunsigned(
-        F.col(hash_col).bitwiseAND(F.lit((1 << fs) - 1 if fs < 64 else -1)),
-        fs - k))
-    return df.select(F.col(hash_col).alias("h"),
-                     shard.cast("int").alias("shard"))
-
-
-def probe_sharded(probe_df, hash_col: str, filter_df, n_shards: int,
-                  spec: SketchSpec):
-    """Membership/count stats per shard via a co-partitioned group join.
-
-    Returns a DataFrame (shard, n_probed, n_contained) — aggregate per
-    shard; sum for global counts. Probes travel through one shuffle keyed
-    by the same fingerprint-prefix shard function as the build.
-    """
-    import pyarrow as pa
-    from pyspark.sql import functions as F
-
-    k = shard_bits_for(n_shards)
-    _, _, fs = _fp_meta(spec)
-
-    probes = _route_by_shard(probe_df, hash_col, fs, k)
-
-    def probe_group(key, probes_tbl: "pa.Table", filt_tbl: "pa.Table") -> "pa.Table":
-        n = probes_tbl.num_rows
-        if n == 0:
-            return pa.table({"shard": pa.array([], pa.int32()),
-                             "n_probed": pa.array([], pa.int64()),
-                             "n_contained": pa.array([], pa.int64())})
-        # extract BEFORE the empty-shard shortcut: a NULL probe hash routes
-        # to the NULL shard, whose filter side is always empty — skipping
-        # extraction there would silently count NULLs as clean misses
-        h = _u64_from_arrow(probes_tbl.column("h"), "probe_sharded")
-        if filt_tbl.num_rows == 0:
-            hit = 0
-        else:
-            sk = sketches.loads(filt_tbl.column("payload")[0].as_py())
-            hit = int(sk.contains_hashes(h & _local_mask(fs, k)).sum())
-        return pa.table({"shard": pa.array([key[0].as_py()], pa.int32()),
-                         "n_probed": pa.array([n], pa.int64()),
-                         "n_contained": pa.array([hit], pa.int64())})
-
-    return (probes.groupBy("shard")
-            .cogroup(filter_df.groupBy("shard"))
-            .applyInArrow(probe_group, "shard int, n_probed long, n_contained long"))
-
-
-def count_sharded(probe_df, hash_col: str, filter_df, n_shards: int,
-                  spec: SketchSpec):
-    """Per-key COUNT estimates through the sharded layout (reference
-    counting semantics src/lib.rs:1008-1018 applied at table scale).
-
-    Each probe row routes to its fingerprint-prefix shard — the same
-    single co-partitioned shuffle as :func:`probe_sharded` — and receives
-    the shard-local ``count_hashes`` estimate. Returns (h, est) keyed by
-    the probe hash; join back on ``h`` downstream. Counting multiplicity
-    lives entirely inside one shard (a fingerprint's copies share its
-    prefix), so sharded counts are exactly the single-filter counts.
-    """
-    import pyarrow as pa
-    from pyspark.sql import functions as F
-
-    k = shard_bits_for(n_shards)
-    _, _, fs = _fp_meta(spec)
-
-    probes = _route_by_shard(probe_df, hash_col, fs, k)
-
-    def count_group(key, probes_tbl: "pa.Table", filt_tbl: "pa.Table") -> "pa.Table":
-        n = probes_tbl.num_rows
-        if n == 0:
-            return pa.table({"h": pa.array([], pa.int64()),
-                             "est": pa.array([], pa.int64())})
-        # NULL refusal before the empty-shard shortcut, like probe/remove
-        h_u64 = _u64_from_arrow(probes_tbl.column("h"), "count_sharded")
-        h_raw = h_u64.view(np.int64)
-        if filt_tbl.num_rows == 0:
-            est = np.zeros(n, dtype=np.int64)
-        else:
-            sk = sketches.loads(filt_tbl.column("payload")[0].as_py())
-            est = np.asarray(
-                sk.count_hashes(h_u64 & _local_mask(fs, k)),
-                dtype=np.int64)
-        return pa.table({"h": pa.array(h_raw, pa.int64()),
-                         "est": pa.array(est, pa.int64())})
-
-    return (probes.groupBy("shard")
-            .cogroup(filter_df.groupBy("shard"))
-            .applyInArrow(count_group, "h long, est long"))
-
-
-def _probe_chunks_against(filt_tbl, qs: list, fs: int, k: int) -> tuple[int, int]:
-    """(n_probed, n_contained) of sorted probe chunks vs a (possibly
-    absent) filter row — the ONE sorted-chunk probe kernel shared by the
-    unsplit and split probe paths.
-
-    table.size guard: a shard drained to empty by remove_sharded still has
-    a row, and min(lo, -1) would index into nothing.
-    """
-    n = sum(int(q.size) for q in qs)
-    hit = 0
-    if filt_tbl.num_rows:
-        sk = sketches.loads(filt_tbl.column("payload")[0].as_py())
-        table = sk.filter._fps
-        lm = _local_mask(fs, k)
-        for q in qs if table.size else ():  # chunks sorted: locality-optimal
-            q = q & lm  # shard-local coordinates (stays sorted)
-            lo = np.searchsorted(table, q, side="left")
-            hit += int(((lo < table.size)
-                        & (table[np.minimum(lo, table.size - 1)] == q)).sum())
-    return n, hit
-
-
-def probe_sharded_chunks(df, spec_in: SketchSpec, filter_df, n_shards: int,
-                         spec: SketchSpec, max_buffer: int = 16_000_000):
-    """Like :func:`probe_sharded` but shuffles sorted per-shard hash CHUNKS
-    instead of individual probe rows.
-
-    The probe side runs the same extract kernel as the build, sorts its
-    partition's hashes once, splits them at the shard boundaries, and ships
-    one binary blob per (partition, shard) — a few thousand rows of vector
-    payloads instead of billions of scalar rows. Each shard task then probes
-    sorted-queries-against-sorted-table, the cache-optimal case. At 100 TB
-    this turns the probe shuffle from O(rows) record overhead into O(bytes).
-    Per-task probe buffers flush every ``max_buffer`` hashes (same bounded
-    discipline as the build; the shard task sums over multiple chunk rows).
-
-    ``spec_in`` describes how to extract probe hashes from ``df`` (same modes
-    as the build spec). Returns (shard, n_probed, n_contained).
-    """
-    import pyarrow as pa
-
-    k = shard_bits_for(n_shards)
-    qbits, rbits, fs = _fp_meta(spec)
-
-    probe_chunks = _emit_chunk_rows(df, spec_in, n_shards, fs, max_buffer,
-                                    with_samples=False)
-
-    def probe_group(key, probes_tbl: "pa.Table", filt_tbl: "pa.Table") -> "pa.Table":
-        if probes_tbl.num_rows == 0:
-            return pa.table({"shard": pa.array([], pa.int32()),
-                             "n_probed": pa.array([], pa.int64()),
-                             "n_contained": pa.array([], pa.int64())})
-        shard = key[0].as_py()
-        qs = [_unpack_chunk(p.as_py(), shard, fs - k)
-              for p in probes_tbl.column("payload")]
-        n, hit = _probe_chunks_against(filt_tbl, qs, fs, k)
-        return pa.table({"shard": pa.array([shard], pa.int32()),
-                         "n_probed": pa.array([n], pa.int64()),
-                         "n_contained": pa.array([hit], pa.int64())})
-
-    return (probe_chunks.groupBy("shard")
-            .cogroup(filter_df.groupBy("shard"))
-            .applyInArrow(probe_group, "shard int, n_probed long, n_contained long"))
-
-
-def insert_sharded(filter_df, new_df, spec_in: SketchSpec, n_shards: int,
-                   spec: SketchSpec):
-    """Incremental insert into an EXISTING sharded filter table.
-
-    The daily-ingest operation: new rows are extracted with the same kernel
-    as the build, shuffled as sorted per-(task, shard) chunks, and merged
-    into each shard's blob via a co-partitioned group join — identical
-    plan shape to the build's merge round, so the result is bit-equal to
-    rebuilding from the union of old and new data (canonical-form merge).
-    Shards absent from the table are created (a new prefix range appearing
-    in fresh data). A hot shard grows its local qbits exactly like the
-    build does.
-    """
-    import pandas as pd
-    import pyarrow as pa
-    from pyspark.sql import functions as F
-
-    k = shard_bits_for(n_shards)
-    qbits, rbits, fs = _fp_meta(spec)
-    keep = getattr(spec.make(), "keep_duplicates", True)
-
-    chunks = _emit_chunk_rows(new_df, spec_in, n_shards, fs,
-                              max_buffer=16_000_000, with_samples=False)
-
-    # old blobs hold SHARD-LOCAL fingerprints while new chunks arrive in
-    # global coordinates: lift old to global, merge, re-encode shard-local
-    def merge_in(key, new_tbl: "pa.Table", filt_tbl: "pa.Table") -> "pa.Table":
-        shard = int(key[0].as_py())
-        base = np.uint64(shard) << np.uint64(fs - k)
-        runs = [_unpack_chunk(p.as_py(), shard, fs - k)
-                for p in new_tbl.column("payload")]
-        if filt_tbl.num_rows:
-            old = sketches.loads(filt_tbl.column("payload")[0].as_py())
-            runs.append(old.filter.fingerprints() + base)
-        fps = np.concatenate(runs) if runs else np.empty(0, dtype=np.uint64)
-        fps.sort(kind="stable")
-        if not keep:
-            fps = np.unique(fps)
-        blob = _shard_blob(fps, shard, qbits - k, rbits, keep)
-        return pa.table({"shard": pa.array([shard], pa.int32()),
-                         "n_fps": pa.array([int(fps.size)], pa.int64()),
-                         "payload": pa.array([blob], pa.binary())})
-
-    return (chunks.groupBy("shard")
-            .cogroup(filter_df.groupBy("shard"))
-            .applyInArrow(merge_in, SHARDED_SCHEMA))
-
-
-def remove_sharded(filter_df, removals_df, hash_col: str, n_shards: int,
-                   spec: SketchSpec):
-    """Distributed remove: retractions shuffle to their fingerprint shard.
-
-    Each shard applies the batch locally (one occurrence removed per request
-    when present — reference remove semantics, src/lib.rs:1072-1129, with the
-    same collision caveat). Returns the new filter DataFrame; removals of
-    absent fingerprints are ignored (count clamped at zero), implementing
-    the "counting merge with signed multiplicities" plan from SURVEY.md §2.1
-    row 10.
-    """
-    import pyarrow as pa
-    from pyspark.sql import functions as F
-
-    k = shard_bits_for(n_shards)
-    qbits, rbits, fs = _fp_meta(spec)
-    keep = getattr(spec.make(), "keep_duplicates", True)
-
-    removals = _route_by_shard(removals_df, hash_col, fs, k)
-
-    def apply_removals(key, rem_tbl: "pa.Table", filt_tbl: "pa.Table") -> "pa.Table":
-        # extract BEFORE the empty-shard shortcut (NULL removal hashes land
-        # on the NULL shard, which never has a filter chunk — they must be
-        # refused, not silently dropped)
-        h = (_u64_from_arrow(rem_tbl.column("h"), "remove_sharded")
-             if rem_tbl.num_rows else None)
-        if filt_tbl.num_rows == 0:
-            return pa.table({"shard": pa.array([], pa.int32()),
-                             "n_fps": pa.array([], pa.int64()),
-                             "payload": pa.array([], pa.binary())})
-        sk = sketches.loads(filt_tbl.column("payload")[0].as_py())
-        if h is not None:
-            sk.filter.remove_hashes(h & _local_mask(fs, k))
-        blob = sketches.RsqfSketch(
-            Filter(sk.filter.qbits, sk.filter.rbits, None,
-                   sk.filter.fingerprints()), keep).to_blocks_bytes()
-        return pa.table({"shard": pa.array([key[0].as_py()], pa.int32()),
-                         "n_fps": pa.array([len(sk.filter)], pa.int64()),
-                         "payload": pa.array([blob], pa.binary())})
-
-    return (removals.groupBy("shard")
-            .cogroup(filter_df.groupBy("shard"))
-            .applyInArrow(apply_removals, SHARDED_SCHEMA))
-
-
-# ---------------------------------------------------------------------------
-# hot-shard splitting: bounded per-task state under fingerprint-prefix skew
-# ---------------------------------------------------------------------------
-#
-# A shard whose fingerprint range is hit disproportionately (biased upstream
-# hashes, adversarial prefixes) would concentrate one task's memory. The fix
-# is a RangePartitioner-style split: chunk rows already carry SORTED
-# fingerprint runs, so each chunk also ships a 1/4096 systematic sample;
-# oversized shards get quantile split points planned from the pooled samples
-# (driver-side metadata only — a few KB), and every consumer routes by
-# directory index instead of shard id. Sub-rows keep SHARD-local fingerprint
-# coordinates, so the canonical form and the blob codec are untouched — the
-# split is pure metadata, and the union of sub-rows is bit-equal to the
-# unsplit shard. Limitation: a multiset piled onto ONE fingerprint value
-# cannot be range-split (its copies stay in one row); distinct-key skew is
-# fully handled.
-
-SPLIT_SCHEMA = "key int, shard int, n_fps long, payload binary"
-_SPLIT_PREFIX = "qfs_split_"
-_SAMPLES_PER_CHUNK = 64  # bounded per (task, shard) row => driver metadata
-                         # stays KB-scale at ANY corpus size (RangePartitioner
-                         # uses the same bounded-sample-per-partition idea)
+    n = int(n_shards)
+    if n != n_shards or n < 1 or n & (n - 1):
+        raise ValueError(f"n_shards must be a power of two, got {n_shards!r}")
+    return n.bit_length() - 1
 
 
 class ShardDirectory:
-    """Routing metadata for a (possibly split) sharded filter.
+    """Routing metadata for a sharded filter table.
 
     ``starts`` is the ascending array of global-fingerprint range starts,
     one per table row; row ``i`` owns [starts[i], starts[i+1]). Entry i's
-    shard id is ``shards[i]`` (= starts[i] >> (fs-k)).
+    shard id is ``shards[i]`` (= starts[i] >> (fs-k)); every shard base is
+    a start, so no row spans two shards. The uniform directory has exactly
+    one row per shard and keys its table by ``shard``; a split directory
+    (more rows than shards) keys it by the extra ``key`` column.
     """
 
     def __init__(self, starts: np.ndarray, fs: int, k: int):
@@ -443,16 +139,30 @@ class ShardDirectory:
         self.shards = ((self.starts >> np.uint64(fs - k)).astype(np.int64)
                        if fs - k < 64
                        else np.zeros(self.starts.size, dtype=np.int64))
-
-    def route(self, fps: np.ndarray) -> np.ndarray:
-        """Row key (directory index) for each global fingerprint."""
-        return (np.searchsorted(self.starts, fps, side="right") - 1).astype(np.int64)
+        self.split = self.starts.size > (1 << k)
+        self.key = "key" if self.split else "shard"
+        self.schema = SPLIT_SCHEMA if self.split else SHARDED_SCHEMA
 
     def split_sorted(self, fps: np.ndarray) -> list[tuple[int, np.ndarray]]:
         """Split an ASCENDING fingerprint array at row boundaries."""
         bounds = np.searchsorted(fps, self.starts[1:], side="left")
         chunks = np.split(fps, bounds)
         return [(i, c) for i, c in enumerate(chunks) if c.size]
+
+
+def _directory(n_shards, spec: SketchSpec) -> ShardDirectory:
+    """The routing of ``n_shards``: a ShardDirectory as given, or an int as
+    the uniform directory over the spec's fingerprint domain."""
+    if isinstance(n_shards, ShardDirectory):
+        return n_shards
+    k = shard_bits_for(n_shards)
+    qbits, _, fs = _fp_meta(spec)
+    if k > qbits:
+        raise ValueError(
+            f"n_shards={n_shards} needs a {k}-bit shard prefix, but the "
+            f"filter's quotient has only {qbits} bits")
+    return ShardDirectory(
+        np.arange(n_shards, dtype=np.uint64) << np.uint64(fs - k), fs, k)
 
 
 def plan_directory(sizes_samples: list, n_shards: int, fs: int,
@@ -493,154 +203,200 @@ def plan_directory(sizes_samples: list, n_shards: int, fs: int,
     return ShardDirectory(np.array(sorted(set(starts)), dtype=np.uint64), fs, k)
 
 
-def _emit_chunk_rows(df, spec_like: SketchSpec, n_shards: int, fs: int,
-                     max_buffer: int, with_samples: bool):
-    """mapInArrow pass: per-(task, shard) sorted fingerprint chunk rows,
-    optionally with a 1/4096 systematic sample column for split planning."""
+def _rows(directory: ShardDirectory, keys, ns, payloads,
+          **extra) -> "pa.Table":
+    """Rows in the directory's table schema; ``keys`` are row keys."""
     import pyarrow as pa
 
-    k = shard_bits_for(n_shards)
-    shift = np.uint64(fs - k)
-    mask = np.uint64((1 << fs) - 1) if fs < 64 else np.uint64(0xFFFFFFFFFFFFFFFF)
-    schema = SHARDED_SCHEMA + (", sample binary" if with_samples else "")
+    keys = np.asarray(keys, dtype=np.int64)
+    cols = {"key": pa.array(keys, pa.int32())} if directory.split else {}
+    cols.update(shard=pa.array(directory.shards[keys], pa.int32()),
+                n_fps=pa.array(ns, pa.int64()),
+                payload=pa.array(payloads, pa.binary()), **extra)
+    return pa.table(cols)
 
-    def flush(buf: list) -> "pa.RecordBatch":
+
+def _cut(directory: ShardDirectory, fps: np.ndarray,
+         with_samples: bool = False) -> "pa.Table":
+    """Cut ASCENDING global fingerprints at the directory's row bounds into
+    packed chunk rows, optionally with a bounded systematic sample per row
+    for split planning."""
+    import pyarrow as pa
+
+    parts = directory.split_sorted(fps)
+    keys = [i for i, _ in parts]
+    rb = directory.fs - directory.k
+    extra = {}
+    if with_samples:
+        extra["sample"] = pa.array(
+            [c[::max(1, c.size // _SAMPLES_PER_CHUNK)].tobytes()
+             for _, c in parts], pa.binary())
+    return _rows(directory, keys, [c.size for _, c in parts],
+                 [_pack_chunk(c, int(directory.shards[i]), rb)
+                  for i, c in parts], **extra)
+
+
+def _emit_chunks(df, spec_in: SketchSpec, directory: ShardDirectory,
+                 with_samples: bool = False):
+    """The one chunk emitter: a mapInArrow pass that extracts fingerprints
+    with ``spec_in`` and emits per-(task, row) sorted chunk rows.
+
+    Spill-aware: a task's fingerprint buffer flushes every ``_MAX_BUFFER``
+    entries, so per-task memory stays bounded no matter the input partition
+    size (SURVEY.md §7 "Python-side memory" risk item); every consumer
+    treats each extra wave as one more sorted run of its row.
+    """
+    fs = directory.fs
+    mask = np.uint64((1 << fs) - 1) if fs < 64 else np.uint64(0xFFFFFFFFFFFFFFFF)
+    flush_at = _MAX_BUFFER  # read here, on the driver
+    schema = directory.schema + (", sample binary" if with_samples else "")
+
+    def flush(buf: list):
         fps = np.concatenate(buf)
         # default introsort: the buffer is fresh UNSORTED hashes (unlike the
         # merge paths, which concatenate sorted runs and want timsort) and
         # this numpy's stable u64 sort is ~7x slower on random input
         fps.sort()
-        bounds = np.searchsorted(
-            fps, np.arange(1, n_shards, dtype=np.uint64) << shift, side="left")
-        chunks = np.split(fps, bounds)
-        shards = [s for s in range(n_shards) if chunks[s].size]
-        cols = [
-            pa.array(shards, pa.int32()),
-            pa.array([int(chunks[s].size) for s in shards], pa.int64()),
-            pa.array([_pack_chunk(chunks[s], s, fs - k) for s in shards],
-                     pa.binary()),
-        ]
-        names = ["shard", "n_fps", "payload"]
-        if with_samples:
-            cols.append(pa.array(
-                [chunks[s][::max(1, chunks[s].size // _SAMPLES_PER_CHUNK)]
-                 .tobytes() for s in shards],
-                pa.binary()))
-            names.append("sample")
-        return pa.record_batch(cols, names=names)
+        return _cut(directory, fps, with_samples).to_batches()
 
     def emit(batches):
         buf: list[np.ndarray] = []
         buffered = 0
         for batch in batches:
             if batch.num_rows:
-                data = spec_like.extract(batch)
+                data = spec_in.extract(batch)
                 if data.size:
                     buf.append(np.asarray(data, dtype=np.uint64) & mask)
                     buffered += data.size
-            if buffered >= max_buffer:
-                yield flush(buf)
+            if buffered >= flush_at:
+                yield from flush(buf)
                 buf, buffered = [], 0
         if buf:
-            yield flush(buf)
+            yield from flush(buf)
 
-    return df.select(spec_like.col).mapInArrow(emit, schema)
+    return df.select(spec_in.col).mapInArrow(emit, schema)
+
+
+def _merge(chunks, directory: ShardDirectory, spec: SketchSpec,
+           filter_df=None):
+    """The one merge kernel (build, split build, insert): every row's
+    sorted chunk runs — plus, when ``filter_df`` is given, the row's
+    current fingerprints — merge into one canonical shard-local blob.
+
+    Row blobs hold SHARD-LOCAL fingerprints while chunks arrive in global
+    coordinates: old rows are lifted to global, merged, and re-encoded
+    shard-local. Rows absent from the table are created (a new prefix range
+    appearing in fresh data), and a hot row grows its local qbits exactly
+    like a build does, so an insert is bit-equal to rebuilding from the
+    union of old and new data (canonical-form merge).
+    """
+    qbits, rbits, fs = _fp_meta(spec)
+    k = directory.k
+    keep = getattr(spec.make(), "keep_duplicates", True)
+
+    def merge(key, new_tbl, old_tbl):
+        row = key[0].as_py()
+        shard = int(directory.shards[row])
+        runs = [_unpack_chunk(p.as_py(), shard, fs - k)
+                for p in new_tbl.column("payload")]
+        if old_tbl is not None and old_tbl.num_rows:
+            old = sketches.loads(old_tbl.column("payload")[0].as_py())
+            runs.append(old.filter.fingerprints()
+                        + (np.uint64(shard) << np.uint64(fs - k)))
+        fps = np.concatenate(runs) if runs else np.empty(0, dtype=np.uint64)
+        fps.sort(kind="stable")  # timsort: adaptive on concatenated sorted runs
+        if not keep:
+            fps = np.unique(fps)
+        return _rows(directory, [row], [fps.size],
+                     [_shard_blob(fps, shard, qbits - k, rbits, keep)])
+
+    grouped = chunks.groupBy(directory.key)
+    if filter_df is None:
+        return grouped.applyInArrow(lambda key, tbl: merge(key, tbl, None),
+                                    directory.schema)
+    return (grouped.cogroup(filter_df.groupBy(directory.key))
+            .applyInArrow(merge, directory.schema))
+
+
+def build_sharded_filter(df, spec: SketchSpec, n_shards=64):
+    """Returns the distributed filter: one row per directory row that
+    receives fingerprints — (shard, n_fps, payload) for the uniform
+    directory of an int ``n_shards``.
+
+    ``payload`` is a canonical sorted-fingerprint Filter blob restricted to
+    the row's fingerprint range — for shard s of the uniform directory,
+    [s << (fs-k), (s+1) << (fs-k)). Write it to Parquet to persist; union
+    of rows == the single filter.
+    """
+    directory = _directory(n_shards, spec)
+    return _merge(_emit_chunks(df, spec, directory), directory, spec)
 
 
 def build_sharded_filter_split(df, spec: SketchSpec, n_shards: int = 64,
                                max_fps_per_row: int = 16_000_000,
-                               max_buffer: int = 16_000_000,
                                path: str | None = None):
     """Skew-resistant build: returns (filter_df, directory).
 
-    Two passes over the CHUNK rows (never the raw input): pass 1 collects
-    per-shard sizes + samples (driver sees only metadata); pass 2 re-splits
-    each sorted chunk at the planned boundaries and merges per row key.
-    Every merge task handles <= ~max_fps_per_row fingerprints regardless of
-    prefix skew. Row payloads stay in shard-local coordinates.
+    A shard whose fingerprint range is hit disproportionately (biased
+    upstream hashes, adversarial prefixes) would concentrate one task's
+    memory. The fix is a RangePartitioner-style split. Two passes over the
+    CHUNK rows (never the raw input): pass 1 collects per-shard sizes + a
+    bounded sample of each sorted chunk (driver sees only metadata, a few
+    KB) and plans quantile split points for oversized shards; pass 2
+    re-cuts each sorted chunk at the planned boundaries and merges per row
+    key. Every merge task handles <= ~max_fps_per_row fingerprints
+    regardless of prefix skew. Row payloads stay in shard-local
+    coordinates, so the canonical form and the blob codec are untouched —
+    the split is pure metadata, and the union of a shard's rows is
+    bit-equal to the unsplit shard. Limitation: a multiset piled onto ONE
+    fingerprint value cannot be range-split (its copies stay in one row);
+    distinct-key skew is fully handled.
 
     The merged table's at-rest form is a parquet directory at ``path``
     (default: a unique dir under ``spark.qfilter.intermediateDir`` /
     system temp) and the returned DataFrame simply reads it — matching how
     the unsplit filter lives as a parquet table, with NO caller-side
-    unpersist contract and nothing pinned in executor memory (the round-3
-    API returned a persisted DataFrame the caller had to remember to
-    release). Call :func:`retire_split_filter` on the returned DataFrame
-    to delete the directory when the filter is retired.
+    unpersist contract and nothing pinned in executor memory. Call
+    :func:`retire_split_filter` on the returned DataFrame to delete the
+    directory when the filter is retired.
     """
-    import os
     import uuid
 
-    import pandas as pd
     from pyspark import StorageLevel
 
-    k = shard_bits_for(n_shards)
-    qbits, rbits, fs = _fp_meta(spec)
-    assert k <= qbits
-    keep = getattr(spec.make(), "keep_duplicates", True)
-
-    chunks_df = _emit_chunk_rows(df, spec, n_shards, fs, max_buffer,
-                                 with_samples=True) \
+    uniform = _directory(n_shards, spec)
+    chunks_df = _emit_chunks(df, spec, uniform, with_samples=True) \
         .persist(StorageLevel.MEMORY_AND_DISK)
     meta = chunks_df.select("shard", "n_fps", "sample").collect()
     directory = plan_directory(
         [(r["shard"], r["n_fps"], r["sample"]) for r in meta],
-        n_shards, fs, max_fps_per_row)
-
-    import pyarrow as pa
+        n_shards, uniform.fs, max_fps_per_row)
+    rb = directory.fs - directory.k
 
     def resplit(batches):
         for batch in batches:
             shards = batch.column("shard").to_numpy(zero_copy_only=False)
-            payloads = batch.column("payload")
-            out_key, out_shard, out_n, out_pay = [], [], [], []
-            for i in range(batch.num_rows):
-                shard = int(shards[i])
-                fps = _unpack_chunk(payloads[i].as_py(), shard, fs - k)
-                for key, part in directory.split_sorted(fps):
-                    if directory.shards[key] != shard:
-                        continue  # empty boundary slices of other shards
-                    out_key.append(key)
-                    out_shard.append(shard)
-                    out_n.append(int(part.size))
-                    out_pay.append(_pack_chunk(part, shard, fs - k))
-            yield pa.record_batch(
-                [pa.array(out_key, pa.int32()), pa.array(out_shard, pa.int32()),
-                 pa.array(out_n, pa.int64()), pa.array(out_pay, pa.binary())],
-                names=["key", "shard", "n_fps", "payload"])
+            for shard, p in zip(shards, batch.column("payload")):
+                fps = _unpack_chunk(p.as_py(), int(shard), rb)
+                yield from _cut(directory, fps).to_batches()
 
-    keyed = chunks_df.mapInArrow(resplit, SPLIT_SCHEMA)
-
-    def merge_row(key, pdf: "pd.DataFrame") -> "pd.DataFrame":
-        shard = int(pdf["shard"].iloc[0])
-        runs = [_unpack_chunk(p, shard, fs - k) for p in pdf["payload"]]
-        fps = np.concatenate(runs) if runs else np.empty(0, dtype=np.uint64)
-        fps.sort(kind="stable")
-        if not keep:
-            fps = np.unique(fps)
-        blob = _shard_blob(fps, shard, qbits - k, rbits, keep)
-        return pd.DataFrame({"key": [int(key[0])], "shard": [shard],
-                             "n_fps": [int(fps.size)], "payload": [blob]})
+    keyed = chunks_df.mapInArrow(resplit, directory.schema)
 
     # materialize the merged table NOW (to its at-rest parquet home) so the
-    # corpus-scale chunk cache can be released inside this call (round-2
-    # leaked it for the app lifetime; round-3 returned a persisted
-    # DataFrame with an easy-to-forget unpersist contract)
+    # corpus-scale chunk cache can be released inside this call
     spark = df.sparkSession
     if path is None:
+        from ..fsutil import child
         from ..sources import intermediate_dir, sweep_dead_intermediates
 
         base = intermediate_dir(spark)
         app = spark.sparkContext.applicationId
         # dead-session leftovers; once per (base, prefix) per process
         sweep_dead_intermediates(spark, base, app, _SPLIT_PREFIX)
-        from ..fsutil import child
-
         path = child(base, f"{_SPLIT_PREFIX}{app}_{uuid.uuid4().hex[:8]}")
-    keyed.groupBy("key").applyInPandas(merge_row, SPLIT_SCHEMA) \
-        .write.mode("errorifexists").parquet(path)
+    _merge(keyed, directory, spec).write.mode("errorifexists").parquet(path)
     chunks_df.unpersist()
-    out = spark.read.schema(SPLIT_SCHEMA).parquet(path)
+    out = spark.read.schema(directory.schema).parquet(path)
     out._qfs_split_path = path  # lets retire_split_filter find an empty table
     return out, directory
 
@@ -667,140 +423,177 @@ def retire_split_filter(filter_df) -> None:
     delete(filter_df.sparkSession, path)
 
 
-def _emit_split_chunks(df, spec_in: SketchSpec, directory: "ShardDirectory",
-                       max_buffer: int = 16_000_000):
-    """mapInArrow pass shared by split probe/remove: sorted fingerprint
-    chunks cut at the directory boundaries, flushed every ``max_buffer``
-    fingerprints so per-task state stays bounded (same discipline as
-    ``_emit_chunk_rows``; downstream co-groups already sum/iterate over
-    multiple chunk rows per (task, key))."""
-    import pyarrow as pa
+def insert_sharded(filter_df, new_df, spec_in: SketchSpec, n_shards,
+                   spec: SketchSpec):
+    """Incremental insert into an EXISTING sharded filter table.
 
-    fs, k = directory.fs, directory.k
-    mask = (np.uint64((1 << fs) - 1) if fs < 64
-            else np.uint64(0xFFFFFFFFFFFFFFFF))
-
-    def flush(buf: list) -> "pa.RecordBatch":
-        fps = np.concatenate(buf)
-        # introsort: fresh unsorted hashes (see _emit_chunk_rows.flush)
-        fps.sort()
-        keys, shards, ns, pays = [], [], [], []
-        for key, part in directory.split_sorted(fps):
-            shard = int(directory.shards[key])
-            keys.append(key)
-            shards.append(shard)
-            ns.append(int(part.size))
-            pays.append(_pack_chunk(part, shard, fs - k))
-        return pa.record_batch(
-            [pa.array(keys, pa.int32()), pa.array(shards, pa.int32()),
-             pa.array(ns, pa.int64()), pa.array(pays, pa.binary())],
-            names=["key", "shard", "n_fps", "payload"])
-
-    def emit(batches):
-        buf: list[np.ndarray] = []
-        buffered = 0
-        for batch in batches:
-            if batch.num_rows:
-                data = spec_in.extract(batch)
-                if data.size:
-                    buf.append(np.asarray(data, dtype=np.uint64) & mask)
-                    buffered += data.size
-            if buffered >= max_buffer:
-                yield flush(buf)
-                buf, buffered = [], 0
-        if buf:
-            yield flush(buf)
-
-    return df.select(spec_in.col).mapInArrow(emit, SPLIT_SCHEMA)
+    The daily-ingest operation: new rows are extracted with ``spec_in``
+    (same modes as the build spec), shuffled as sorted per-(task, row)
+    chunks, and merged into each row's blob via a co-partitioned group
+    join — the build's merge kernel, so the result is bit-equal to
+    rebuilding from the union of old and new data, in either directory
+    shape.
+    """
+    directory = _directory(n_shards, spec)
+    return _merge(_emit_chunks(new_df, spec_in, directory), directory, spec,
+                  filter_df)
 
 
-def probe_sharded_split(df, spec_in: SketchSpec, filter_df,
-                        directory: "ShardDirectory", spec: SketchSpec,
-                        max_buffer: int = 16_000_000):
-    """Chunked probe against a split filter table: sorted probe chunks are
-    cut at the directory boundaries and co-grouped by row key."""
-    import pyarrow as pa
+def probe_sharded_chunks(df, spec_in: SketchSpec, filter_df, n_shards,
+                         spec: SketchSpec):
+    """Membership stats per row key: (shard, n_probed, n_contained) for
+    the uniform directory, (key, n_probed, n_contained) for a split one.
+    Sum for global counts.
 
-    fs, k = directory.fs, directory.k
-
-    probe_chunks = _emit_split_chunks(df, spec_in, directory, max_buffer)
-
-    def probe_group(key, probes_tbl: "pa.Table", filt_tbl: "pa.Table") -> "pa.Table":
-        if probes_tbl.num_rows == 0:
-            return pa.table({"key": pa.array([], pa.int32()),
-                             "n_probed": pa.array([], pa.int64()),
-                             "n_contained": pa.array([], pa.int64())})
-        shard = int(probes_tbl.column("shard")[0].as_py())
-        qs = [_unpack_chunk(p.as_py(), shard, fs - k)
-              for p in probes_tbl.column("payload")]
-        n, hit = _probe_chunks_against(filt_tbl, qs, fs, k)
-        return pa.table({"key": pa.array([key[0].as_py()], pa.int32()),
-                         "n_probed": pa.array([n], pa.int64()),
-                         "n_contained": pa.array([hit], pa.int64())})
-
-    return (probe_chunks.groupBy("key")
-            .cogroup(filter_df.groupBy("key"))
-            .applyInArrow(probe_group, "key int, n_probed long, n_contained long"))
-
-
-def remove_sharded_split(filter_df, removals_df, spec_in: SketchSpec,
-                         directory: "ShardDirectory", spec: SketchSpec,
-                         max_buffer: int = 16_000_000):
-    """Distributed remove against a SPLIT filter table.
-
-    Retractions are extracted with the same kernel as the build, sorted,
-    cut at the directory boundaries, and co-grouped with their row — the
-    removal shuffle is O(bytes) chunk rows, and per-task memory stays
-    bounded by the split row sizes. Returns the new filter DataFrame
-    (same SPLIT_SCHEMA; reference remove semantics per row,
-    src/lib.rs:1056-1129).
+    The probe side runs the same chunk emitter as the build (``spec_in``
+    describes how to extract probe hashes from ``df``; same modes as the
+    build spec): it sorts its partition's hashes once, cuts them at the
+    row boundaries, and ships one binary blob per (task, row) — a few
+    thousand rows of vector payloads instead of billions of scalar rows.
+    Each row task then probes sorted-queries-against-sorted-table, the
+    cache-optimal case. At 100 TB this turns the probe shuffle from
+    O(rows) record overhead into O(bytes).
     """
     import pyarrow as pa
 
+    directory = _directory(n_shards, spec)
+    fs, k = directory.fs, directory.k
+    schema = f"{directory.key} int, n_probed long, n_contained long"
+
+    def probe_row(key, probes_tbl, filt_tbl):
+        if probes_tbl.num_rows == 0:
+            return pa.table({directory.key: pa.array([], pa.int32()),
+                             "n_probed": pa.array([], pa.int64()),
+                             "n_contained": pa.array([], pa.int64())})
+        row = key[0].as_py()
+        shard = int(directory.shards[row])
+        qs = [_unpack_chunk(p.as_py(), shard, fs - k)
+              for p in probes_tbl.column("payload")]
+        n = sum(int(q.size) for q in qs)
+        hit = 0
+        if filt_tbl.num_rows:
+            sk = sketches.loads(filt_tbl.column("payload")[0].as_py())
+            table = sk.filter._fps
+            lm = _local_mask(fs, k)
+            # table.size guard: a row drained to empty by remove_sharded
+            # still exists, and min(lo, -1) would index into nothing
+            for q in qs if table.size else ():  # sorted: locality-optimal
+                q = q & lm  # shard-local coordinates (stays sorted)
+                lo = np.searchsorted(table, q, side="left")
+                hit += int(((lo < table.size)
+                            & (table[np.minimum(lo, table.size - 1)] == q))
+                           .sum())
+        return pa.table({directory.key: pa.array([row], pa.int32()),
+                         "n_probed": pa.array([n], pa.int64()),
+                         "n_contained": pa.array([hit], pa.int64())})
+
+    return (_emit_chunks(df, spec_in, directory).groupBy(directory.key)
+            .cogroup(filter_df.groupBy(directory.key))
+            .applyInArrow(probe_row, schema))
+
+
+def probe_sharded(probe_df, hash_col: str, filter_df, n_shards,
+                  spec: SketchSpec):
+    """:func:`probe_sharded_chunks` for a column of prehashed int64 keys."""
+    return probe_sharded_chunks(
+        probe_df, SketchSpec(spec.kind, spec.params, "hash_col", hash_col),
+        filter_df, n_shards, spec)
+
+
+def remove_sharded(filter_df, removals_df, hash_col: str, n_shards,
+                   spec: SketchSpec):
+    """Distributed remove: retractions travel to their row as sorted
+    chunks, the mirror image of :func:`insert_sharded`.
+
+    Each row applies its batch locally (one occurrence removed per request
+    when present — reference remove semantics, src/lib.rs:1072-1129, with
+    the same collision caveat) and keeps its local qbits. Returns the new
+    filter DataFrame; removals of absent fingerprints are ignored (count
+    clamped at zero), implementing the "counting merge with signed
+    multiplicities" plan from SURVEY.md §2.1 row 10. A row drained to
+    empty stays in the table with ``n_fps = 0``.
+    """
+    directory = _directory(n_shards, spec)
     fs, k = directory.fs, directory.k
     keep = getattr(spec.make(), "keep_duplicates", True)
+    spec_in = SketchSpec(spec.kind, spec.params, "hash_col", hash_col)
 
-    def apply_removals(key, rem_tbl: "pa.Table", filt_tbl: "pa.Table") -> "pa.Table":
+    def remove_row(key, rem_tbl, filt_tbl):
         if filt_tbl.num_rows == 0:
-            return pa.table({"key": pa.array([], pa.int32()),
-                             "shard": pa.array([], pa.int32()),
-                             "n_fps": pa.array([], pa.int64()),
-                             "payload": pa.array([], pa.binary())})
-        shard = int(filt_tbl.column("shard")[0].as_py())
-        sk = sketches.loads(filt_tbl.column("payload")[0].as_py())
+            return _rows(directory, [], [], [])
+        row = key[0].as_py()
+        shard = int(directory.shards[row])
+        f = sketches.loads(filt_tbl.column("payload")[0].as_py()).filter
         if rem_tbl.num_rows:
-            lm = _local_mask(fs, k)
-            for p in rem_tbl.column("payload"):
-                h = _unpack_chunk(p.as_py(), shard, fs - k)
-                sk.filter.remove_hashes(h & lm)
+            f.remove_hashes(np.concatenate(
+                [_unpack_chunk(p.as_py(), shard, fs - k)
+                 for p in rem_tbl.column("payload")]) & _local_mask(fs, k))
         blob = sketches.RsqfSketch(
-            Filter(sk.filter.qbits, sk.filter.rbits, None,
-                   sk.filter.fingerprints()), keep).to_blocks_bytes()
-        return pa.table({"key": pa.array([key[0].as_py()], pa.int32()),
-                         "shard": pa.array([shard], pa.int32()),
-                         "n_fps": pa.array([len(sk.filter)], pa.int64()),
-                         "payload": pa.array([blob], pa.binary())})
+            Filter(f.qbits, f.rbits, None, f.fingerprints()),
+            keep).to_blocks_bytes()
+        return _rows(directory, [row], [len(f)], [blob])
 
-    chunks = _emit_split_chunks(removals_df, spec_in, directory, max_buffer)
-    return (chunks.groupBy("key")
-            .cogroup(filter_df.groupBy("key"))
-            .applyInArrow(apply_removals, SPLIT_SCHEMA))
+    return (_emit_chunks(removals_df, spec_in, directory)
+            .groupBy(directory.key)
+            .cogroup(filter_df.groupBy(directory.key))
+            .applyInArrow(remove_row, directory.schema))
 
 
-def split_to_single(filter_df, spec: SketchSpec, n_shards: int) -> bytes:
-    """Collapse a split filter table to one global blob (parity checks)."""
-    k = shard_bits_for(n_shards)
-    qbits, rbits, fs = _fp_meta(spec)
-    keep = getattr(spec.make(), "keep_duplicates", True)
-    rows = sorted(filter_df.collect(), key=lambda r: r["key"])
-    parts = []
-    for r in rows:
-        local = sketches.loads(bytes(r["payload"])).filter.fingerprints()
-        base = np.uint64(int(r["shard"])) << np.uint64(fs - k)
-        parts.append(local + base)
-    fps = (np.concatenate(parts) if parts else np.empty(0, dtype=np.uint64))
-    fps.sort(kind="stable")  # row ranges are disjoint; sort is adaptive
-    return sketches.RsqfSketch(Filter(qbits, rbits, None, fps), keep).to_bytes()
+def _route_by_shard(df, hash_col: str, fs: int, k: int):
+    """(h, shard) projection: the JVM-side fingerprint-prefix shard router,
+    in lockstep with the directory's shard function. Guards the JVM's
+    shift-mod-64: at k=0 with a 64-bit fingerprint, ``h >>> 64`` would
+    return h, not 0."""
+    from pyspark.sql import functions as F
+
+    shard = (F.lit(0) if fs - k >= 64 else F.shiftrightunsigned(
+        F.col(hash_col).bitwiseAND(F.lit((1 << fs) - 1 if fs < 64 else -1)),
+        fs - k))
+    return df.select(F.col(hash_col).alias("h"),
+                     shard.cast("int").alias("shard"))
+
+
+def count_sharded(probe_df, hash_col: str, filter_df, n_shards,
+                  spec: SketchSpec):
+    """Per-key COUNT estimates through the sharded layout (reference
+    counting semantics src/lib.rs:1008-1018 applied at table scale).
+
+    Each probe row routes to its fingerprint-prefix shard — one
+    co-partitioned shuffle of single rows, since the answer is per row —
+    and receives the shard-local ``count_hashes`` estimate. A split
+    shard's rows hold disjoint ranges, so the shard's estimate is the sum
+    over its rows. Returns (h, est) keyed by the probe hash; join back on
+    ``h`` downstream. Counting multiplicity lives entirely inside one shard
+    (a fingerprint's copies share its prefix), so sharded counts are
+    exactly the single-filter counts.
+    """
+    import pyarrow as pa
+
+    directory = _directory(n_shards, spec)
+    fs, k = directory.fs, directory.k
+
+    probes = _route_by_shard(probe_df, hash_col, fs, k)
+
+    def count_group(key, probes_tbl, filt_tbl):
+        n = probes_tbl.num_rows
+        if n == 0:
+            return pa.table({"h": pa.array([], pa.int64()),
+                             "est": pa.array([], pa.int64())})
+        # a NULL hash routes to the NULL shard, whose filter side is always
+        # empty: refuse it via the shared helper (the chunk emitter refuses
+        # NULLs in SketchSpec.extract) instead of laundering it through NaN
+        h_u64 = u64_hashes_from_arrow(probes_tbl.column("h"), "count_sharded")
+        est = np.zeros(n, dtype=np.int64)
+        for p in filt_tbl.column("payload"):
+            sk = sketches.loads(p.as_py())
+            est += np.asarray(sk.count_hashes(h_u64 & _local_mask(fs, k)),
+                              dtype=np.int64)
+        return pa.table({"h": pa.array(h_u64.view(np.int64), pa.int64()),
+                         "est": pa.array(est, pa.int64())})
+
+    return (probes.groupBy("shard")
+            .cogroup(filter_df.groupBy("shard"))
+            .applyInArrow(count_group, "h long, est long"))
 
 
 def shrink_sharded(filter_df):
@@ -842,21 +635,23 @@ def shrink_sharded(filter_df):
     return filter_df.mapInArrow(shrink_rows, schema)
 
 
-def sharded_to_single(filter_df, spec: SketchSpec, n_shards: int = 64) -> bytes:
-    """Collapse the shard table to one global blob (parity tests / export).
+def sharded_to_single(filter_df, spec: SketchSpec, n_shards=64) -> bytes:
+    """Collapse the table to one global blob (parity tests / export).
 
-    Shard blobs hold shard-local fingerprints (fs-k bits); adding each
-    shard's base back and concatenating in shard order yields the global
-    sorted multiset (shards are contiguous ranges).
+    Row blobs hold shard-local fingerprints (fs-k bits); adding each row's
+    shard base back and concatenating in shard order yields the global
+    sorted multiset (shards are contiguous ranges; the rows of a split
+    shard are disjoint ranges, which the adaptive sort merges).
     """
-    k = shard_bits_for(n_shards)
+    k = _directory(n_shards, spec).k
     qbits, rbits, fs = _fp_meta(spec)
     keep = getattr(spec.make(), "keep_duplicates", True)
     rows = sorted(filter_df.collect(), key=lambda r: r["shard"])
     parts = []
     for r in rows:
-        local = sketches.loads(r["payload"]).filter.fingerprints()
+        local = sketches.loads(bytes(r["payload"])).filter.fingerprints()
         base = np.uint64(int(r["shard"])) << np.uint64(fs - k)
         parts.append(local + base)
     fps = (np.concatenate(parts) if parts else np.empty(0, dtype=np.uint64))
+    fps.sort(kind="stable")
     return sketches.RsqfSketch(Filter(qbits, rbits, None, fps), keep).to_bytes()

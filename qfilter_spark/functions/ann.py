@@ -53,6 +53,11 @@ def lsh_params_for(n_vectors: int, threshold: float = 0.95,
     vectors — hyperplane LSH is the wrong blocking tool there), and the
     sized-to-avoid-a-blow-up path must not create a different blow-up.
     A ValueError names the computed geometry and the escape hatches.
+
+    Accepted ranges: ``threshold`` in (-1, 1] (a cosine similarity; at -1
+    no hyperplane bucket can hold the pair) and ``min_recall`` in (0, 1)
+    (recall 1 needs infinitely many tables). Values outside them raise a
+    ValueError naming the parameter.
     """
     # cosine thresholds live in (-1, 1]; at threshold <= -1 the collision
     # probability p is 0, which would bypass the pinned-n_tables recall
@@ -65,6 +70,10 @@ def lsh_params_for(n_vectors: int, threshold: float = 0.95,
             "cosine similarity thresholds must be > -1 (p would be 0: no "
             "hyperplane bucket can separate antipodal-or-worse pairs) "
             "and <= 1")
+    if not 0.0 < min_recall < 1.0:
+        raise ValueError(
+            f"lsh_params_for: min_recall {min_recall} is outside (0, 1) — "
+            "no finite table count reaches recall 1")
     p = 1.0 - math.acos(threshold) / math.pi
     bucket_bits = max(4, math.ceil(
         math.log2(max(n_vectors, 2) / target_bucket_rows)))

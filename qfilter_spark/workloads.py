@@ -565,8 +565,8 @@ def q_rsqf_sharded_skew(spark, sf_dir):
     single-blob filter and probes find every inserted fingerprint.
     """
     from .dist.sharded import (_fp_meta, build_sharded_filter_split,
-                               probe_sharded_split, retire_split_filter,
-                               split_to_single)
+                               probe_sharded_chunks, retire_split_filter,
+                               sharded_to_single)
 
     ev = load(spark, sf_dir, "events")
     n = table_rows(sf_dir, "events")
@@ -601,12 +601,12 @@ def q_rsqf_sharded_skew(spark, sf_dir):
             fut_single = pool.submit(
                 lambda: sketches.loads(build_sketch(df, spec, fan_in=8)))
             fut_stats = pool.submit(
-                lambda: (probe_sharded_split(df, spec, filt, directory, spec)
+                lambda: (probe_sharded_chunks(df, spec, filt, directory, spec)
                          .groupBy().sum("n_probed", "n_contained")
                          .collect()[0]))
             shape = filt.agg(F.max("n_fps").alias("mx"),
                              F.count("*").alias("rows")).collect()[0]
-            merged = sketches.loads(split_to_single(filt, spec, n_shards))
+            merged = sketches.loads(sharded_to_single(filt, spec, directory))
             single = fut_single.result()
             stats = fut_stats.result()
         identical = bool(np.array_equal(merged.filter.fingerprints(),
@@ -628,22 +628,21 @@ def q_rsqf_split_remove_shrink(spark, sf_dir):
     src/lib.rs:1311-1328 (tests src/lib.rs:1687-1754), applied to the
     skew-resistant split table: build a split filter over events at 4x
     headroom, retract every ``event_id % 3 == 0`` key through the directory
-    (``remove_sharded_split`` — retractions shuffle as sorted chunk rows,
+    (``remove_sharded`` — retractions shuffle as sorted chunk rows,
     never through the driver), then run the distributed shrink maintenance
     pass (``shrink_sharded``). Asserts, fully distributed except the
     metadata-scale parity collapse:
 
     - the shrunk split table's fingerprint union is IDENTICAL to the
-      (already-gated) unsplit ``remove_sharded`` result — split remove ==
-      sharded remove == single-node remove, transitively;
+      (already-gated) uniform-table ``remove_sharded`` result — split remove
+      == sharded remove == single-node remove, transitively;
     - shrink reclaimed at-rest bytes while keeping every fingerprint;
     - every surviving key still probes as contained through the split path.
     """
     from .dist.sharded import (build_sharded_filter, build_sharded_filter_split,
-                               probe_sharded_split, remove_sharded,
-                               remove_sharded_split, retire_split_filter,
-                               sharded_to_single, shrink_sharded,
-                               split_to_single)
+                               probe_sharded, remove_sharded,
+                               retire_split_filter, sharded_to_single,
+                               shrink_sharded)
 
     ev = _hashed(load(spark, sf_dir, "events"), "event_id")
     n = table_rows(sf_dir, "events")
@@ -681,8 +680,7 @@ def q_rsqf_split_remove_shrink(spark, sf_dir):
     after = shrunk = None
     try:
         n_split_rows = filt.count()
-        after = remove_sharded_split(filt, removals, spec, directory,
-                                     spec).cache()
+        after = remove_sharded(filt, removals, "h", directory, spec).cache()
         bytes_before = after.agg(F.sum(F.length("payload")).alias("b")) \
             .collect()[0]["b"]
         shrunk = shrink_sharded(after).cache()
@@ -693,9 +691,9 @@ def q_rsqf_split_remove_shrink(spark, sf_dir):
         # probe and parity collapse both read the cached shrunk table
         # (materialized by the aggregate above) — overlap them too
         fut_stats = pool.submit(
-            lambda: (probe_sharded_split(keep, spec, shrunk, directory, spec)
+            lambda: (probe_sharded(keep, "h", shrunk, directory, spec)
                      .agg(F.sum("n_contained").alias("n")).collect()[0]))
-        a = sketches.loads(split_to_single(shrunk, spec, n_shards))
+        a = sketches.loads(sharded_to_single(shrunk, spec, directory))
         b = fut_ref.result()
         identical = bool(np.array_equal(a.filter.fingerprints(),
                                         b.filter.fingerprints()))

@@ -191,6 +191,18 @@ def test_lsh_params_for_degenerate_threshold():
     assert ann.lsh_params_for(10**6, 0.95) == (22, 10)
 
 
+def test_lsh_params_for_min_recall_range():
+    """ADVICE r6: min_recall >= 1 used to raise a bare ``math domain error``
+    from log(0.0); every value outside (0, 1) must be a ValueError naming
+    the parameter."""
+    from qfilter_spark.functions import ann
+
+    for bad in (1.0, 1.5, 0.0, -0.1, float("nan")):
+        with pytest.raises(ValueError, match="min_recall"):
+            ann.lsh_params_for(10**6, 0.95, min_recall=bad)
+    assert ann.lsh_params_for(10**6, 0.95, min_recall=0.5)[0] >= 1
+
+
 def test_grouped_values_n_items_excludes_nulls(spark):
     """ADVICE r5: values-mode build_grouped_sketches must report n_items as
     the values actually sketched — NULL rows become NaN and are filtered by

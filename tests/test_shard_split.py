@@ -8,8 +8,8 @@ from pyspark.sql import functions as F
 from qfilter_spark import sketches
 from qfilter_spark.dist import SketchSpec, build_sketch
 from qfilter_spark.dist.sharded import (build_sharded_filter_split,
-                                        probe_sharded_split, split_to_single,
-                                        _fp_meta)
+                                        probe_sharded_chunks,
+                                        sharded_to_single, _fp_meta)
 
 
 @pytest.fixture(scope="module")
@@ -60,17 +60,17 @@ def test_split_bounds_row_sizes(spark, skewed, tmp_path):
 
 def test_split_union_bit_equal_to_single(spark, skewed, tmp_path):
     df, spec, n_shards, n = skewed
-    filt, _ = build_sharded_filter_split(df, spec, n_shards=n_shards,
-                                         max_fps_per_row=n // 6,
-                                         path=str(tmp_path / "t"))
+    filt, directory = build_sharded_filter_split(df, spec, n_shards=n_shards,
+                                                 max_fps_per_row=n // 6,
+                                                 path=str(tmp_path / "t"))
     single = sketches.loads(build_sketch(df, spec, fan_in=8))
-    merged = sketches.loads(split_to_single(filt, spec, n_shards))
+    merged = sketches.loads(sharded_to_single(filt, spec, directory))
     assert np.array_equal(merged.filter.fingerprints(),
                           single.filter.fingerprints())
 
 
 def test_split_remove_then_probe(spark, skewed, tmp_path):
-    from qfilter_spark.dist.sharded import remove_sharded_split
+    from qfilter_spark.dist.sharded import remove_sharded
 
     df, spec, n_shards, n = skewed
     filt, directory = build_sharded_filter_split(df, spec, n_shards=n_shards,
@@ -81,10 +81,10 @@ def test_split_remove_then_probe(spark, skewed, tmp_path):
     # make exact-count asserts off by a handful; tolerances cover them)
     uniform = spark.range(0, n // 2).select(
         F.xxhash64(F.col("id").cast("long")).alias("h"))
-    after = remove_sharded_split(filt, uniform, spec, directory, spec).cache()
+    after = remove_sharded(filt, uniform, "h", directory, spec).cache()
     removed = before - after.groupBy().sum("n_fps").collect()[0][0]
     assert n // 2 - 20 <= removed <= n // 2, removed
-    stats = (probe_sharded_split(uniform, spec, after, directory, spec)
+    stats = (probe_sharded_chunks(uniform, spec, after, directory, spec)
              .groupBy().sum("n_probed", "n_contained").collect()[0])
     assert int(stats[1]) <= 20  # removed fingerprints gone (collision slack)
     after.unpersist()
@@ -127,14 +127,14 @@ def test_split_probe_zero_false_negatives(spark, skewed, tmp_path):
     filt, directory = build_sharded_filter_split(df, spec, n_shards=n_shards,
                                                  max_fps_per_row=n // 6,
                                                  path=str(tmp_path / "t"))
-    stats = (probe_sharded_split(df, spec, filt, directory, spec)
+    stats = (probe_sharded_chunks(df, spec, filt, directory, spec)
              .groupBy().sum("n_probed", "n_contained").collect()[0])
     assert int(stats[0]) == n
     assert int(stats[1]) == n  # every inserted fingerprint found
     # absent keys: FPR within the configured bound (with slack)
     absent = spark.range(10**9, 10**9 + 20000).select(
         F.xxhash64(F.col("id").cast("long")).alias("h"))
-    a = (probe_sharded_split(absent, spec, filt, directory, spec)
+    a = (probe_sharded_chunks(absent, spec, filt, directory, spec)
          .groupBy().sum("n_probed", "n_contained").collect()[0])
     sk = spec.make()
     assert int(a[1]) / int(a[0]) <= 4 * sk.filter.max_error_ratio() + 0.001

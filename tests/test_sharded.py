@@ -116,10 +116,34 @@ def test_remove_sharded_matches_single_node(spark, hashed_df):
     assert stats[0] == stats[1]
 
 
-def test_build_spill_waves_identical(spark, hashed_df):
-    """Tiny max_buffer forces multiple chunk waves per task; result unchanged."""
+def test_build_spill_waves_identical(spark, hashed_df, monkeypatch):
+    """A tiny emitter buffer forces multiple chunk waves per task; result
+    unchanged."""
+    from qfilter_spark.dist import sharded
+
     a = build_sharded_filter(hashed_df, SPEC, n_shards=8)
-    b = build_sharded_filter(hashed_df, SPEC, n_shards=8, max_buffer=50)
     pa_ = {r["shard"]: bytes(r["payload"]) for r in a.collect()}
+    monkeypatch.setattr(sharded, "_MAX_BUFFER", 50)
+    b = build_sharded_filter(hashed_df, SPEC, n_shards=8)
     pb = {r["shard"]: bytes(r["payload"]) for r in b.collect()}
     assert pa_ == pb
+
+
+@pytest.mark.parametrize("bad", [0, 3, 6, -4, 2.5])
+def test_shard_bits_for_rejects_non_power_of_two(bad):
+    from qfilter_spark.dist.sharded import shard_bits_for
+
+    with pytest.raises(ValueError, match=f"power of two, got {bad!r}"):
+        shard_bits_for(bad)
+    assert shard_bits_for(1) == 0 and shard_bits_for(64) == 6
+
+
+def test_builders_reject_shard_prefix_wider_than_quotient(spark, hashed_df):
+    from qfilter_spark.dist.sharded import _fp_meta, build_sharded_filter_split
+
+    qbits, _, _ = _fp_meta(SPEC)
+    too_many = 2 << qbits  # qbits + 1 prefix bits
+    for build in (build_sharded_filter, build_sharded_filter_split):
+        with pytest.raises(ValueError, match=f"n_shards={too_many} needs a "
+                           f"{qbits + 1}-bit shard prefix"):
+            build(hashed_df, SPEC, n_shards=too_many)
