@@ -1,7 +1,9 @@
 """Partial/final sketch aggregation over Spark DataFrames.
 
 This hand-rolls Spark's own partial -> final typed-aggregate split
-(SURVEY.md §4.2) with pandas/Arrow UDFs, because the state lives in numpy:
+(SURVEY.md §4.2) with pandas/Arrow UDFs, because the state lives in numpy.
+Every path shares one build kernel (:func:`_fold`) and one merge kernel
+(:func:`merge_payloads`):
 
 1. **Partial build** — ``mapInArrow`` over the input partitions; each task
    folds its Arrow batches into one local sketch with vectorized numpy
@@ -10,12 +12,13 @@ This hand-rolls Spark's own partial -> final typed-aggregate split
    in this stage: the scan's partitioning is reused as-is, so at 100 TB the
    stage is embarrassingly parallel and bounded by scan throughput.
 
-2. **Tree merge** — iterative ``groupBy(shard % fan_in).applyInPandas``
+2. **Tree merge** — iterative ``groupBy(shard_id % groups).applyInPandas``
    rounds until one sketch remains (the reference's merge,
    src/lib.rs:1343-1352, applied as a k-way reduction). Fan-in keeps every
    reducer's input at <= fan_in small blobs, so no single reducer becomes a
    bottleneck at any scale; each round optionally checkpoints to Parquet
-   with per-shard lineage + metrics for resumability (north_rule).
+   with per-shard lineage + metrics for resumability (north_rule). Only the
+   grouped build (:func:`build_grouped_sketches`) is salted.
 
 Merge-order independence: hash sketches (RSQF/Bloom/HLL/CMS) are bit-stable
 under any merge order; groups additionally sort by shard_id so even the
@@ -65,6 +68,8 @@ class SketchSpec:
         if self.mode == "hash_col":
             return u64_hashes_from_arrow(arr, f"column {self.col!r}")
         if self.mode == "tokens_ngram":
+            # a NULL tokens row has zero extent in the offsets: an empty
+            # document
             flat, offsets = flat_from_arrow(arr)
             return ngram_hashes(flat, offsets, self.ngram_n)
         if self.mode == "values":
@@ -72,11 +77,56 @@ class SketchSpec:
         raise ValueError(f"unknown mode {self.mode!r}")
 
     def update(self, sk, data: np.ndarray) -> int:
+        """Fold ``data`` into ``sk``; returns the items absorbed (quantile
+        sketches skip NaN, i.e. NULL, as SQL aggregates ignore nulls)."""
         if self.mode == "values":
             sk.update_values(data)
-        else:
-            sk.update_hashes(data)
+            return int(np.count_nonzero(~np.isnan(data)))
+        sk.update_hashes(data)
         return int(data.size)
+
+
+def _fold(spec: SketchSpec, batches):
+    """The build kernel: Arrow batches -> (new sketch, items absorbed)."""
+    sk = spec.make()
+    n = 0
+    # RSQF keeps a SORTED multiset: feeding it per Arrow batch re-sorts
+    # the whole accumulated array once per batch (O(batches * n log n)
+    # across a task — measured 2.3 s for a 600k-row single-partition
+    # build at the 2048-row batch size). Buffer the extracted hash
+    # chunks and fold them in bounded bulk updates instead — identical
+    # final multiset (insert_hashes is sequential-equivalent and calls
+    # compose), one sort per ~16M hashes. Other sketch kinds
+    # (HLL/CMS/KLL/t-digest/Bloom) absorb batches in O(batch) already.
+    bulk = isinstance(sk, sketches.RsqfSketch)
+    bufs: list[np.ndarray] = []
+    buffered = 0
+    for batch in batches:
+        if batch.num_rows:
+            data = spec.extract(batch)
+            if not bulk:
+                n += spec.update(sk, data)
+            elif data.size:
+                bufs.append(data)
+                buffered += data.size
+                if buffered >= 16_000_000:
+                    n += spec.update(sk, np.concatenate(bufs))
+                    bufs, buffered = [], 0
+    if bufs:
+        n += spec.update(sk, np.concatenate(bufs))
+    return sk, n
+
+
+def merge_payloads(payloads, acc=None):
+    """The merge kernel: fold serialized sketches, in order, into ``acc``
+    (a live sketch, merged in place) or else into the first of them."""
+    for payload in payloads:
+        sk = sketches.loads(bytes(payload))
+        if acc is None:
+            acc = sk
+        else:
+            acc.merge(sk)
+    return acc
 
 
 def partial_sketches(df, spec: SketchSpec):
@@ -88,36 +138,9 @@ def partial_sketches(df, spec: SketchSpec):
     import pyarrow as pa
     from pyspark import TaskContext
 
-    pruned = df.select(spec.col)
-
     def build(batches):
         t0 = time.perf_counter()
-        sk = spec.make()
-        n = 0
-        # RSQF keeps a SORTED multiset: feeding it per Arrow batch re-sorts
-        # the whole accumulated array once per batch (O(batches * n log n)
-        # across a task — measured 2.3 s for a 600k-row single-partition
-        # build at the 2048-row batch size). Buffer the extracted hash
-        # chunks and fold them in bounded bulk updates instead — identical
-        # final multiset (insert_hashes is sequential-equivalent and calls
-        # compose), one sort per ~16M hashes. Other sketch kinds
-        # (HLL/CMS/KLL/t-digest/Bloom) absorb batches in O(batch) already.
-        bulk = isinstance(sk, sketches.RsqfSketch)
-        bufs: list[np.ndarray] = []
-        buffered = 0
-        for batch in batches:
-            if batch.num_rows:
-                data = spec.extract(batch)
-                if not bulk:
-                    n += spec.update(sk, data)
-                elif data.size:
-                    bufs.append(data)
-                    buffered += data.size
-                    if buffered >= 16_000_000:
-                        n += spec.update(sk, np.concatenate(bufs))
-                        bufs, buffered = [], 0
-        if bufs:
-            n += spec.update(sk, np.concatenate(bufs))
+        sk, n = _fold(spec, batches)
         pid = TaskContext.get().partitionId()
         yield pa.record_batch(
             [pa.array([pid], pa.int64()), pa.array([n], pa.int64()),
@@ -125,71 +148,66 @@ def partial_sketches(df, spec: SketchSpec):
              pa.array([sk.to_bytes()], pa.binary())],
             names=["shard_id", "n_items", "build_secs", "payload"])
 
-    return pruned.mapInArrow(build, PARTIAL_SCHEMA)
+    return df.select(spec.col).mapInArrow(build, PARTIAL_SCHEMA)
 
 
-def _merge_group_fn(spec_unused=None):
+def _merge_round(partials, n_groups: int, schema: str, keys=()):
+    """One merge round: per value of ``keys``, the partials fold into
+    ``n_groups`` rows, row ``shard_id % n_groups`` taking each partial."""
     import pandas as pd
+    from pyspark.sql import functions as F
 
-    def merge_group(key, pdf: "pd.DataFrame") -> "pd.DataFrame":
+    # no type hints: PySpark warns on every call when it cannot resolve
+    # them, and the hint-free default is the grouped-map pandas eval type
+    def merge(key, pdf):
         t0 = time.perf_counter()
-        # shard_id is the ORIGINAL id (the group key travels in "grp"), so
-        # this sort gives a deterministic merge order for the weakly
+        # shard_id is the ORIGINAL id (the round's group travels in "grp"),
+        # so this sort gives a deterministic merge order for the weakly
         # order-dependent quantile sketches, run-to-run
         pdf = pdf.sort_values("shard_id")
-        acc = None
-        for payload in pdf["payload"]:
-            sk = sketches.loads(bytes(payload))
-            if acc is None:
-                acc = sk
-            else:
-                acc.merge(sk)
+        acc = merge_payloads(pdf["payload"])
         return pd.DataFrame({
-            "shard_id": [int(key[0])],
+            **{k: [v] for k, v in zip(keys, key)},
+            "shard_id": [int(key[-1])],
             "n_items": [int(pdf["n_items"].sum())],
             "build_secs": [float(pdf["build_secs"].sum()) + (time.perf_counter() - t0)],
             "payload": [acc.to_bytes()],
         })
 
-    return merge_group
+    return (partials
+            .withColumn("grp", F.pmod(F.col("shard_id"), F.lit(n_groups)))
+            .groupBy(*keys, "grp")
+            .applyInPandas(merge, schema))
 
 
-def tree_merge(partials, fan_in: int = 16, lineage=None, n_partials: int | None = None,
-               write_initial: bool = True, round_offset: int = 0):
+def tree_merge(partials, fan_in: int = 16, lineage=None, n_partials: int | None = None):
     """Reduce the partials DataFrame to a single sketch blob (bytes).
 
     Explicit tree: each round shuffles only small blobs into
     ``ceil(n / fan_in)`` groups — never a single hot reducer until the last
     round, which merges <= fan_in blobs. With ``lineage`` (a
-    :class:`qfilter_spark.dist.checkpoint.MergeLineage`), every round is
-    persisted and the reduction is resumable; ``round_offset`` shifts the
-    on-disk round numbering when continuing an interrupted run (resume
-    passes the last complete round), keeping one consistent numbering
-    between this loop and the checkpoint directory.
+    :class:`qfilter_spark.dist.checkpoint.MergeLineage`), the partials and
+    every round are persisted and the reduction is resumable
+    (:func:`qfilter_spark.dist.checkpoint.resume_tree_merge`).
     """
-    from pyspark.sql import functions as F
-
-    current = partials
-    n = n_partials if n_partials is not None else current.count()
-    rnd = round_offset
+    n = n_partials if n_partials is not None else partials.count()
     if lineage is not None:
-        if write_initial:
-            # the start of a fresh checkpointed run: record the merge
-            # shape so resume can default to the same fan_in
-            if hasattr(lineage, "record_fan_in"):
-                lineage.record_fan_in(fan_in)
-            current = lineage.write_round(current, rnd)
-    merge_fn = _merge_group_fn()
+        # the start of a fresh checkpointed run: record the merge shape so
+        # resume can default to the same fan_in
+        lineage.record_fan_in(fan_in)
+        partials = lineage.write_round(partials, 0)
+    return _reduce_rounds(partials, n, fan_in, lineage, 0)
+
+
+def _reduce_rounds(current, n: int, fan_in: int, lineage, rnd: int) -> bytes:
+    """Merge rounds after round ``rnd`` (``current``, ``n`` rows) down to one
+    blob, numbered on from ``rnd`` as in the checkpoint directory."""
     while n > 1:
         rnd += 1
-        n_groups = max(1, math.ceil(n / fan_in))
-        current = (current
-                   .withColumn("grp", F.pmod(F.col("shard_id"), F.lit(n_groups)))
-                   .groupBy("grp")
-                   .applyInPandas(merge_fn, PARTIAL_SCHEMA))
+        n = max(1, math.ceil(n / fan_in))
+        current = _merge_round(current, n, PARTIAL_SCHEMA)
         if lineage is not None:
             current = lineage.write_round(current, rnd)
-        n = n_groups
     rows = current.collect()
     if not rows:
         raise ValueError("tree_merge: empty partials")
@@ -214,70 +232,37 @@ def build_grouped_sketches(df, group_col: str, spec: SketchSpec,
                            n_salts: int = 8):
     """One sketch per value of ``group_col``, with salted skew mitigation.
 
-    Round 1 aggregates by (group, salt) so a hot group (e.g. a source that
+    Round 1 folds each (group, salt) so a hot group (e.g. a source that
     is 50% of all rows) fans out over ``n_salts`` reducers instead of one;
-    round 2 merges the salts away. Returns a DataFrame
-    (group_col, n_items, build_secs, payload).
+    round 2, the tree merge's round keyed by group, merges the salts
+    (carried as ``shard_id``) away. Returns a DataFrame
+    (group_col, n_items, build_secs, payload), group_col in its own type.
     """
-    import pandas as pd
     import pyarrow as pa
     from pyspark.sql import functions as F
 
-    out_schema = f"{group_col} string, n_items long, build_secs double, payload binary"
-    salted_schema = f"{group_col} string, salt int, n_items long, build_secs double, payload binary"
+    schema = f"{group_col} {df.schema[group_col].dataType.simpleString()}, {PARTIAL_SCHEMA}"
 
     # no type hints: grouped-map arrow eval-type inference requires hints on
     # EVERY parameter (including the key tuple) and the hint-free fallback
     # is the grouped-map arrow eval type we want
     def build_salted(key, tbl):
         # Arrow-native (applyInArrow): tokens stay a flat values+offsets
-        # buffer for the vectorized ngram kernel — the pandas variant
-        # re-boxed every row's token array through Python
+        # buffer for the vectorized ngram kernel
         t0 = time.perf_counter()
-        sk = spec.make()
-        col = tbl.column(spec.col)
-        if spec.mode == "values":
-            # NULL -> NaN here is correct: the quantile sketches filter NaN,
-            # matching SQL aggregates' ignore-nulls semantics. n_items must
-            # count what the sketch actually absorbed, so NaN rows are
-            # excluded — the hash/ngram modes likewise never inflate the
-            # count with refused/empty rows (ADVICE r5)
-            data = col.to_numpy(zero_copy_only=False).astype(np.float64)
-            sk.update_values(data)
-            data = data[~np.isnan(data)]
-        elif spec.mode == "hash_col":
-            data = u64_hashes_from_arrow(col, "grouped sketch build")
-            sk.update_hashes(data)
-        else:
-            # a NULL tokens row has zero extent in flat_from_arrow's
-            # offsets: an empty document
-            flat, offsets = flat_from_arrow(col)
-            data = ngram_hashes(flat, offsets, spec.ngram_n)
-            sk.update_hashes(data)
+        # one batch: quantile-sketch bytes must not follow Arrow's cuts
+        sk, n = _fold(spec, tbl.combine_chunks().to_batches())
         return pa.table({
-            group_col: pa.array([key[0].as_py()], pa.string()),
-            "salt": pa.array([int(key[1].as_py())], pa.int32()),
-            "n_items": pa.array([int(data.size)], pa.int64()),
+            group_col: tbl.column(group_col).slice(0, 1),
+            "shard_id": pa.array([key[1].as_py()], pa.int64()),
+            "n_items": pa.array([n], pa.int64()),
             "build_secs": pa.array([time.perf_counter() - t0], pa.float64()),
             "payload": pa.array([sk.to_bytes()], pa.binary()),
         })
 
-    def merge_salts(key, pdf: "pd.DataFrame") -> "pd.DataFrame":
-        t0 = time.perf_counter()
-        pdf = pdf.sort_values("salt")
-        acc = None
-        for payload in pdf["payload"]:
-            sk = sketches.loads(bytes(payload))
-            acc = sk if acc is None else (acc.merge(sk) or acc)
-        return pd.DataFrame({
-            group_col: [key[0]], "n_items": [int(pdf["n_items"].sum())],
-            "build_secs": [float(pdf["build_secs"].sum()) + (time.perf_counter() - t0)],
-            "payload": [acc.to_bytes()],
-        })
-
     salted = (df
               .select(group_col, spec.col)
-              .withColumn("salt", F.pmod(F.spark_partition_id(), F.lit(n_salts)))
-              .groupBy(group_col, "salt")
-              .applyInArrow(build_salted, salted_schema))
-    return salted.groupBy(group_col).applyInPandas(merge_salts, out_schema)
+              .withColumn("shard_id", F.pmod(F.spark_partition_id(), F.lit(n_salts)))
+              .groupBy(group_col, "shard_id")
+              .applyInArrow(build_salted, schema))
+    return _merge_round(salted, 1, schema, (group_col,)).drop("shard_id")

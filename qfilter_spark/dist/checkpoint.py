@@ -26,7 +26,7 @@ from __future__ import annotations
 
 import json
 
-from .agg import PARTIAL_SCHEMA, tree_merge
+from .agg import PARTIAL_SCHEMA, _reduce_rounds
 
 _MANIFEST = "manifest.json"
 
@@ -147,6 +147,4 @@ def resume_tree_merge(spark, directory: str, fan_in: int | None = None) -> bytes
         # produced the rounds written from here on, not the original one
         lineage.record_fan_in(fan_in)
     df = lineage.read_round(last)
-    n = df.count()
-    return tree_merge(df, fan_in=fan_in, lineage=lineage,
-                      n_partials=n, write_initial=False, round_offset=last)
+    return _reduce_rounds(df, df.count(), fan_in, lineage, last)

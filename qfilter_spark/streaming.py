@@ -31,7 +31,7 @@ import time
 import numpy as np
 
 from . import sketches
-from .dist.agg import SketchSpec, partial_sketches
+from .dist.agg import SketchSpec, merge_payloads, partial_sketches
 from .hashing import u64_hashes_from_pandas
 
 
@@ -329,15 +329,13 @@ class StreamingSketch:
                 "streaming checkpoint was reset but state_dir "
                 f"{self.state_dir!r} was not — point the query at a fresh "
                 "state_dir or restore the original checkpoint")
-        rows = partial_sketches(batch_df, self.spec).collect()
-        acc = cur if cur is not None else self.spec.make()
-        n_new = 0
-        for r in sorted(rows, key=lambda r: r["shard_id"]):
-            acc.merge(sketches.loads(bytes(r["payload"])))
-            n_new += r["n_items"]
+        rows = sorted(partial_sketches(batch_df, self.spec).collect(),
+                      key=lambda r: r["shard_id"])
+        acc = merge_payloads((r["payload"] for r in rows),
+                             cur if cur is not None else self.spec.make())
         self._write_gen(gen + 1, acc, {
             "batch_id": batch_id,
-            "n_items": meta["n_items"] + int(n_new),
+            "n_items": meta["n_items"] + sum(r["n_items"] for r in rows),
             "ts": time.time(),
         })
 

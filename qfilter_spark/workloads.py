@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import sketches
 from .dist import SketchSpec, build_sketch, partial_sketches
+from .dist.agg import merge_payloads
 from .dist.probe import probe_hashes
 from .functions import ann, dedup, multimodal, text as T
 
@@ -266,20 +267,9 @@ def q_rsqf_merge_invariance(spark, sf_dir):
         .select("h").repartition(8)
     n = table_rows(sf_dir, "lineitem")
     spec = SketchSpec("rsqf", dict(capacity=max(64, n), fp_rate=0.01), "hash_col", "h")
-    parts = [bytes(r["payload"]) for r in partial_sketches(li, spec).collect()]
-
-    def reduce_order(order):
-        acc = None
-        for i in order:
-            sk = sketches.loads(parts[i])
-            if acc is None:
-                acc = sk
-            else:
-                acc.merge(sk)
-        return acc
-
-    a = reduce_order(range(len(parts)))
-    b = reduce_order(list(reversed(range(len(parts)))))
+    parts = [r["payload"] for r in partial_sketches(li, spec).collect()]
+    a = merge_payloads(parts)
+    b = merge_payloads(reversed(parts))
     identical = a.to_bytes() == b.to_bytes()
     return _one_row(spark, n_fps=len(a.filter), identical=bool(identical))
 
@@ -395,11 +385,9 @@ def q_rsqf_fingerprint_size(spark, sf_dir):
 
     import pandas as pd
 
-    def merge_width(key, pdf: "pd.DataFrame") -> "pd.DataFrame":
-        acc = None
-        for payload in pdf["payload"]:
-            sk = sketches.loads(bytes(payload))
-            acc = sk if acc is None else (acc.merge(sk) or acc)
+    # no type hints: PySpark warns on every call when it cannot resolve them
+    def merge_width(key, pdf):
+        acc = merge_payloads(pdf["payload"])
         return pd.DataFrame({"w": [int(key[0])], "payload": [acc.to_bytes()]})
 
     merged = (base.mapInArrow(build_all, "w int, payload binary")

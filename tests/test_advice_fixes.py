@@ -226,6 +226,28 @@ def test_grouped_values_n_items_excludes_nulls(spark):
         assert sketches.loads(bytes(rows[g]["payload"])).n == 80
 
 
+def test_values_n_items_excludes_nulls(spark, tmp_path):
+    """The ungrouped build counts like the grouped one: values-mode
+    partial_sketches (and so build_sketch's lineage) report n_items as the
+    values the sketch absorbed, not the rows it saw."""
+    from pyspark.sql import functions as F
+
+    from qfilter_spark.dist.agg import build_sketch, partial_sketches
+    from qfilter_spark.dist.checkpoint import MergeLineage
+
+    df = spark.range(0, 200, numPartitions=4).select(
+        F.when(F.col("id") % 5 != 0, F.col("id").cast("double")).alias("v"))
+    spec = SketchSpec("kll", dict(k=50), "values", "v")
+    parts = partial_sketches(df, spec).collect()
+    for r in parts:
+        assert r["n_items"] == sketches.loads(bytes(r["payload"])).n
+    assert sum(r["n_items"] for r in parts) == 160   # 40 NULLs skipped
+    lineage = MergeLineage(spark, str(tmp_path / "lineage"))
+    blob = build_sketch(df, spec, fan_in=2, lineage=lineage)
+    root = lineage.metrics(lineage.last_complete_round())
+    assert [r["n_items"] for r in root] == [sketches.loads(blob).n] == [160]
+
+
 def test_resume_override_rerecords_fan_in(spark, corpus_df, tmp_path):
     """ADVICE r4: resuming with an explicit fan_in override must become
     the manifest's truth, so a LATER resume regroups the same way."""

@@ -242,21 +242,48 @@ def test_grouped_sketches_with_salting(spark, corpus_df):
         assert r["n_items"] == true  # doc_ids unique per source
 
 
-def test_grouped_rsqf_equals_unsalted(spark, corpus_df):
-    """F4 skew fixture: salted result == unsalted result, per group."""
+def test_grouped_sketches_keep_group_column_type(spark):
+    """A non-string group column comes back in its own Spark type."""
     from pyspark.sql import functions as F
-    spec = SketchSpec(kind="rsqf", params=dict(capacity=1 << 13, fp_rate=0.01),
-                      mode="hash_col", col="h")
-    df = corpus_df.withColumn("h", F.xxhash64("doc_id"))
-    salted = {r["source"]: bytes(r["payload"]) for r in
-              build_grouped_sketches(df, "source", spec, n_salts=4).collect()}
-    unsalted = {r["source"]: bytes(r["payload"]) for r in
-                build_grouped_sketches(df, "source", spec, n_salts=1).collect()}
-    assert salted.keys() == unsalted.keys()
-    for src in salted:
-        a = sketches.loads(salted[src]).filter.fingerprints()
-        b = sketches.loads(unsalted[src]).filter.fingerprints()
-        assert np.array_equal(a, b), src
+    from pyspark.sql.types import LongType
+    spec = SketchSpec(kind="hll", params=dict(p=10), mode="hash_col", col="h")
+    df = spark.range(0, 300, numPartitions=3).select(
+        (F.col("id") % 3).alias("g"), F.xxhash64("id").alias("h"))
+    out = build_grouped_sketches(df, "g", spec, n_salts=2)
+    assert out.columns == ["g", "n_items", "build_secs", "payload"]
+    assert out.schema["g"].dataType == LongType()
+    assert {r["g"]: r["n_items"] for r in out.collect()} == {0: 100, 1: 100, 2: 100}
+
+
+GROUPED_SPECS = {
+    "rsqf": SketchSpec("rsqf", dict(capacity=1 << 13, fp_rate=0.01), "hash_col", "h"),
+    "hll": SketchSpec("hll", dict(p=12), "hash_col", "h"),
+    "cms": SketchSpec("cms", dict(eps=0.01, delta=0.01), "tokens_ngram", "tokens"),
+    "kll": SketchSpec("kll", dict(k=100), "values", "n_tok"),
+}
+
+
+@pytest.mark.parametrize("kind", list(GROUPED_SPECS))
+def test_grouped_rsqf_equals_unsalted(spark, corpus_df, kind):
+    """F4 skew fixture: each group's salted sketch equals the ungrouped
+    build over that group's rows — bit-equal for the hash kinds, same n
+    and n_items for the order-dependent KLL."""
+    from pyspark.sql import functions as F
+    spec = GROUPED_SPECS[kind]
+    # the hot source plus three colder ones keeps the per-group builds few
+    sources = corpus.SOURCE_NAMES[::3]
+    df = (corpus_df.where(F.col("source").isin(sources))
+          .withColumn("h", F.xxhash64("doc_id")))
+    rows = build_grouped_sketches(df, "source", spec, n_salts=4).collect()
+    assert sorted(r["source"] for r in rows) == sources
+    for r in rows:
+        want = build_sketch(
+            df.where(F.col("source") == r["source"]).coalesce(2), spec)
+        got = bytes(r["payload"])
+        if kind == "kll":
+            assert sketches.loads(got).n == sketches.loads(want).n == r["n_items"]
+        else:
+            assert got == want, r["source"]
 
 
 def test_quantile_sketch_distributed(spark, corpus_df):
