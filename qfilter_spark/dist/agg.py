@@ -13,16 +13,21 @@ Every path shares one build kernel (:func:`_fold`) and one merge kernel
    stage is embarrassingly parallel and bounded by scan throughput.
 
 2. **Tree merge** — iterative ``groupBy(shard_id % groups).applyInPandas``
-   rounds until one sketch remains (the reference's merge,
-   src/lib.rs:1343-1352, applied as a k-way reduction). Fan-in keeps every
-   reducer's input at <= fan_in small blobs, so no single reducer becomes a
-   bottleneck at any scale; each round optionally checkpoints to Parquet
-   with per-shard lineage + metrics for resumability (north_rule). Only the
-   grouped build (:func:`build_grouped_sketches`) is salted.
+   rounds while more than ``fan_in`` blobs remain (the reference's merge,
+   src/lib.rs:1343-1352, applied as a k-way reduction), then the driver
+   collects the last <= fan_in blobs and folds them itself, as RDD
+   ``treeReduce`` does its last step — one Spark job and one shuffle round
+   of Python tasks fewer per call. Fan-in keeps every reducer's input,
+   the driver's included, at <= fan_in small blobs, so no single reducer
+   becomes a bottleneck at any scale; each round optionally checkpoints to
+   Parquet with per-shard lineage + metrics for resumability (north_rule),
+   the driver-merged root included. Only the grouped build
+   (:func:`build_grouped_sketches`) is salted.
 
 Merge-order independence: hash sketches (RSQF/Bloom/HLL/CMS) are bit-stable
-under any merge order; groups additionally sort by shard_id so even the
-weakly order-dependent quantile sketches are deterministic run-to-run.
+under any merge order; groups (and the driver's root merge) additionally
+sort by shard_id so even the weakly order-dependent quantile sketches are
+deterministic run-to-run.
 """
 
 from __future__ import annotations
@@ -180,49 +185,76 @@ def _merge_round(partials, n_groups: int, schema: str, keys=()):
             .applyInPandas(merge, schema))
 
 
+def _check_fan_in(fan_in: int) -> None:
+    # fan_in=1 never shrinks the round count (an endless stream of jobs),
+    # and fan_in=0 would fail as a bare ZeroDivisionError
+    if fan_in < 2:
+        raise ValueError(f"fan_in must be >= 2, got {fan_in!r}")
+
+
 def tree_merge(partials, fan_in: int = 16, lineage=None, n_partials: int | None = None):
     """Reduce the partials DataFrame to a single sketch blob (bytes).
 
-    Explicit tree: each round shuffles only small blobs into
-    ``ceil(n / fan_in)`` groups — never a single hot reducer until the last
-    round, which merges <= fan_in blobs. With ``lineage`` (a
-    :class:`qfilter_spark.dist.checkpoint.MergeLineage`), the partials and
-    every round are persisted and the reduction is resumable
-    (:func:`qfilter_spark.dist.checkpoint.resume_tree_merge`).
+    Explicit tree: while more than ``fan_in`` blobs remain, each round
+    shuffles only small blobs into ``ceil(n / fan_in)`` groups — never a
+    single hot reducer. The last <= fan_in blobs are collected and merged
+    on the driver in shard_id order, the order a single-group round would
+    use, so the driver holds at most ``fan_in`` payloads: the same set the
+    final reducer task would hold. With ``lineage`` (a
+    :class:`qfilter_spark.dist.checkpoint.MergeLineage`), the partials,
+    every round and the driver-merged root are persisted and the reduction
+    is resumable (:func:`qfilter_spark.dist.checkpoint.resume_tree_merge`).
+
+    ``n_partials`` is the row count of ``partials`` when the caller knows
+    it (one row per input partition). Without it, a checkpointed run counts
+    the written round 0; an uncheckpointed one counts ``partials``, which
+    runs the partial build once more.
     """
-    n = n_partials if n_partials is not None else partials.count()
+    _check_fan_in(fan_in)
     if lineage is not None:
         # the start of a fresh checkpointed run: record the merge shape so
         # resume can default to the same fan_in
         lineage.record_fan_in(fan_in)
         partials = lineage.write_round(partials, 0)
+    n = n_partials if n_partials is not None else partials.count()
     return _reduce_rounds(partials, n, fan_in, lineage, 0)
 
 
 def _reduce_rounds(current, n: int, fan_in: int, lineage, rnd: int) -> bytes:
     """Merge rounds after round ``rnd`` (``current``, ``n`` rows) down to one
     blob, numbered on from ``rnd`` as in the checkpoint directory."""
-    while n > 1:
+    while n > fan_in:
         rnd += 1
-        n = max(1, math.ceil(n / fan_in))
+        n = math.ceil(n / fan_in)
         current = _merge_round(current, n, PARTIAL_SCHEMA)
         if lineage is not None:
             current = lineage.write_round(current, rnd)
     rows = current.collect()
     if not rows:
         raise ValueError("tree_merge: empty partials")
-    if len(rows) > 1:
-        # an under-counted n_partials would end the loop with several
-        # roots; returning rows[0] would silently drop the other shards'
-        # contents from the final sketch
+    if len(rows) > n:
+        # an under-counted n_partials ends the Spark rounds early: the
+        # driver would hold more than the planned roots, or, with a single
+        # planned root, return one shard and drop the others' contents
         raise ValueError(
-            f"tree_merge: {len(rows)} roots remain after the final round "
-            "— n_partials under-counts the partials DataFrame")
-    return bytes(rows[0]["payload"])
+            f"tree_merge: {len(rows)} roots remain after the final round, "
+            f"{n} planned — n_partials under-counts the partials DataFrame")
+    if len(rows) == 1:
+        return bytes(rows[0]["payload"])
+    t0 = time.perf_counter()
+    rows.sort(key=lambda r: r["shard_id"])
+    root = merge_payloads(r["payload"] for r in rows).to_bytes()
+    if lineage is not None:
+        lineage.commit_root(
+            rnd + 1, sum(r["n_items"] for r in rows),
+            sum(r["build_secs"] for r in rows) + (time.perf_counter() - t0),
+            root)
+    return root
 
 
 def build_sketch(df, spec: SketchSpec, fan_in: int = 16, lineage=None) -> bytes:
     """End-to-end: partial build -> tree merge -> final sketch blob."""
+    _check_fan_in(fan_in)  # before df.rdd, which can run the input's shuffles
     parts = partial_sketches(df, spec)
     n = df.rdd.getNumPartitions()
     return tree_merge(parts, fan_in=fan_in, lineage=lineage, n_partials=n)
@@ -241,6 +273,8 @@ def build_grouped_sketches(df, group_col: str, spec: SketchSpec,
     import pyarrow as pa
     from pyspark.sql import functions as F
 
+    if n_salts < 1:
+        raise ValueError(f"n_salts must be >= 1, got {n_salts!r}")
     schema = f"{group_col} {df.schema[group_col].dataType.simpleString()}, {PARTIAL_SCHEMA}"
 
     # no type hints: grouped-map arrow eval-type inference requires hints on

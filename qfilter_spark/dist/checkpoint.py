@@ -2,7 +2,10 @@
 
 Each tree-merge round is persisted as a Parquet table
 ``<dir>/round=K/`` carrying per-shard lineage + metrics
-(shard_id, n_items, build_secs, payload). A round is complete when Spark's
+(shard_id, n_items, build_secs, payload). Spark writes round 0 and every
+shuffle round; the root, which the driver merges from the last <= fan_in
+blobs, is committed by the driver as one Parquet file without a Spark job,
+its ``_SUCCESS`` marker created last. A round is complete when its
 ``_SUCCESS`` marker exists; resume reads the last complete round and
 continues the reduction from there, skipping all finished work.
 
@@ -12,7 +15,8 @@ any Spark-writable location — ``hdfs://``, ``s3a://``, or a local path —
 and completeness detection works wherever the data was written.
 
 Two recovery hazards are closed structurally:
-- **stale rounds**: writing round K deletes every round > K, so a reused
+- **stale rounds**: writing round K deletes every round > K (committing a
+  root at K first deletes every round >= K), so a reused
   directory can never resume into leftovers of a previous run (the
   highest complete round always belongs to the run that wrote last);
 - **merge-shape drift**: the fan_in is recorded in ``manifest.json`` at
@@ -26,9 +30,11 @@ from __future__ import annotations
 
 import json
 
-from .agg import PARTIAL_SCHEMA, _reduce_rounds
+from .agg import PARTIAL_SCHEMA, _check_fan_in, _reduce_rounds
 
 _MANIFEST = "manifest.json"
+#: bytes per Hadoop FS write call: bounds the Py4J message for large roots
+_CHUNK = 1 << 20
 
 
 class MergeLineage:
@@ -68,6 +74,42 @@ class MergeLineage:
                 fs.delete(self._jpath(f"round={stale}"), True)
         return self.spark.read.schema(PARTIAL_SCHEMA).parquet(path)
 
+    def commit_root(self, rnd: int, n_items: int, build_secs: float,
+                    payload: bytes) -> None:
+        """Commit the driver-merged root as round ``rnd`` without a Spark job.
+
+        One ``PARTIAL_SCHEMA`` Parquet file (shard_id 0) built with pyarrow.
+        Rounds >= ``rnd`` are deleted first and ``_SUCCESS`` is created
+        last, so a crash mid-commit leaves an incomplete round that resume
+        ignores, merging again from the round below.
+        """
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        sink = pa.BufferOutputStream()
+        pq.write_table(pa.table({
+            "shard_id": pa.array([0], pa.int64()),
+            "n_items": pa.array([n_items], pa.int64()),
+            "build_secs": pa.array([build_secs], pa.float64()),
+            "payload": pa.array([payload], pa.binary()),
+        }), sink)
+        fs = self._fs()
+        for stale in self._round_dirs(fs):
+            if stale >= rnd:
+                fs.delete(self._jpath(f"round={stale}"), True)
+        self._put(fs, sink.getvalue(), f"round={rnd}", "part-00000.parquet")
+        self._put(fs, b"", f"round={rnd}", "_SUCCESS")
+
+    def _put(self, fs, data, *parts: str) -> None:
+        """Create (overwrite) the file ``parts`` holding ``data``."""
+        view = memoryview(data)
+        out = fs.create(self._jpath(*parts), True)
+        try:
+            for i in range(0, len(view), _CHUNK):
+                out.write(bytearray(view[i:i + _CHUNK]))
+        finally:
+            out.close()
+
     def _round_dirs(self, fs) -> list[int]:
         base = self._jpath()
         if not fs.exists(base):
@@ -103,11 +145,8 @@ class MergeLineage:
     # -- manifest (merge-shape metadata, makes resume self-describing) --
     def record_fan_in(self, fan_in: int) -> None:
         """Called by tree_merge at the start of a checkpointed run."""
-        out = self._fs().create(self._jpath(_MANIFEST), True)
-        try:
-            out.write(bytearray(json.dumps({"fan_in": int(fan_in)}).encode()))
-        finally:
-            out.close()
+        self._put(self._fs(), json.dumps({"fan_in": int(fan_in)}).encode(),
+                  _MANIFEST)
 
     def manifest_fan_in(self) -> int | None:
         fs = self._fs()
@@ -135,6 +174,8 @@ def resume_tree_merge(spark, directory: str, fan_in: int | None = None) -> bytes
     order-dependent quantile sketches. Pass it explicitly only to
     override (or for pre-manifest checkpoints, where the fallback is 16).
     """
+    if fan_in is not None:
+        _check_fan_in(fan_in)
     lineage = MergeLineage(spark, directory)
     last = lineage.last_complete_round()
     if last is None:
