@@ -5,12 +5,15 @@ This hand-rolls Spark's own partial -> final typed-aggregate split
 Every path shares one build kernel (:func:`_fold`) and one merge kernel
 (:func:`merge_payloads`):
 
-1. **Partial build** — ``mapInArrow`` over the input partitions; each task
-   folds its Arrow batches into one local sketch with vectorized numpy
-   kernels (no per-row Python, per the input_hint mandate) and emits a
-   single (shard_id, n_items, build_secs, payload) row. No shuffle at all
-   in this stage: the scan's partitioning is reused as-is, so at 100 TB the
-   stage is embarrassingly parallel and bounded by scan throughput.
+1. **Partial build** — ``mapInArrow`` over the input, one partial per
+   sized task; each task folds its Arrow batches into one local sketch
+   with vectorized numpy kernels (no per-row Python, per the input_hint
+   mandate) and emits a single (shard_id, n_items, build_secs, payload)
+   row. No shuffle at all in this stage: a small input is coalesced to
+   AQE's target task size (:func:`qfilter_spark.dist.sizing.sized_input`,
+   a narrow ``coalesce``), and otherwise the scan's partitioning is reused
+   as-is, so at 100 TB the stage is embarrassingly parallel and bounded
+   by scan throughput.
 
 2. **Tree merge** — iterative ``groupBy(shard_id % groups).applyInPandas``
    rounds while more than ``fan_in`` blobs remain (the reference's merge,
@@ -41,6 +44,7 @@ import numpy as np
 from .. import sketches
 from ..functions.ngrams import flat_from_arrow, ngram_hashes
 from ..hashing import u64_hashes_from_arrow
+from .sizing import sized_input
 
 PARTIAL_SCHEMA = "shard_id long, n_items long, build_secs double, payload binary"
 
@@ -135,10 +139,13 @@ def merge_payloads(payloads, acc=None):
 
 
 def partial_sketches(df, spec: SketchSpec):
-    """One partial sketch per input partition; returns the partials DataFrame.
+    """One partial sketch per sized task; returns the partials DataFrame.
 
     Projects to the single needed column first so Parquet scans read only it
-    (column pruning reaches the file scan; verify with .explain).
+    (column pruning reaches the file scan; verify with .explain), then sizes
+    the tasks with :func:`~qfilter_spark.dist.sizing.sized_input`: one per
+    input partition, or fewer when the input is smaller than AQE's target
+    partition size.
     """
     import pyarrow as pa
     from pyspark import TaskContext
@@ -153,7 +160,7 @@ def partial_sketches(df, spec: SketchSpec):
              pa.array([sk.to_bytes()], pa.binary())],
             names=["shard_id", "n_items", "build_secs", "payload"])
 
-    return df.select(spec.col).mapInArrow(build, PARTIAL_SCHEMA)
+    return sized_input(df.select(spec.col)).mapInArrow(build, PARTIAL_SCHEMA)
 
 
 def _merge_round(partials, n_groups: int, schema: str, keys=()):
@@ -206,9 +213,9 @@ def tree_merge(partials, fan_in: int = 16, lineage=None, n_partials: int | None 
     is resumable (:func:`qfilter_spark.dist.checkpoint.resume_tree_merge`).
 
     ``n_partials`` is the row count of ``partials`` when the caller knows
-    it (one row per input partition). Without it, a checkpointed run counts
-    the written round 0; an uncheckpointed one counts ``partials``, which
-    runs the partial build once more.
+    it (one row per sized task of :func:`partial_sketches`). Without it, a
+    checkpointed run counts the written round 0; an uncheckpointed one
+    counts ``partials``, which runs the partial build once more.
     """
     _check_fan_in(fan_in)
     if lineage is not None:
@@ -254,9 +261,9 @@ def _reduce_rounds(current, n: int, fan_in: int, lineage, rnd: int) -> bytes:
 
 def build_sketch(df, spec: SketchSpec, fan_in: int = 16, lineage=None) -> bytes:
     """End-to-end: partial build -> tree merge -> final sketch blob."""
-    _check_fan_in(fan_in)  # before df.rdd, which can run the input's shuffles
+    _check_fan_in(fan_in)  # before .rdd, which can run the input's shuffles
     parts = partial_sketches(df, spec)
-    n = df.rdd.getNumPartitions()
+    n = parts.rdd.getNumPartitions()  # one partial per sized task
     return tree_merge(parts, fan_in=fan_in, lineage=lineage, n_partials=n)
 
 

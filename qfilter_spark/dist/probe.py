@@ -11,6 +11,7 @@ from __future__ import annotations
 import numpy as np
 
 from ..hashing import u64_hashes_from_arrow
+from .sizing import sized_input
 
 #: per-worker sketch cache: PySpark reuses python worker processes across
 #: tasks, and a broadcast's .value object is stable per process — caching the
@@ -121,4 +122,4 @@ def probe_hashes(df, blob: bytes, hash_col: str, out_col: str = "est_count",
             arrays = [batch.column(i) for i in range(batch.num_columns)] + [col]
             yield pa.record_batch(arrays, names=list(batch.schema.names) + [out_col])
 
-    return df.mapInArrow(run, schema)
+    return sized_input(df).mapInArrow(run, schema)

@@ -40,6 +40,7 @@ from .. import sketches
 from ..hashing import u64_hashes_from_arrow
 from ..rsqf import Filter
 from .agg import SketchSpec
+from .sizing import sized_input
 
 SHARDED_SCHEMA = "shard int, n_fps long, payload binary"
 SPLIT_SCHEMA = "key int, " + SHARDED_SCHEMA
@@ -274,7 +275,7 @@ def _emit_chunks(df, spec_in: SketchSpec, directory: ShardDirectory,
         if buf:
             yield from flush(buf)
 
-    return df.select(spec_in.col).mapInArrow(emit, schema)
+    return sized_input(df.select(spec_in.col)).mapInArrow(emit, schema)
 
 
 def _merge(chunks, directory: ShardDirectory, spec: SketchSpec,
@@ -632,7 +633,7 @@ def shrink_sharded(filter_df):
 
     schema = ", ".join(f"{f.name} {f.dataType.simpleString()}"
                        for f in filter_df.schema.fields)
-    return filter_df.mapInArrow(shrink_rows, schema)
+    return sized_input(filter_df).mapInArrow(shrink_rows, schema)
 
 
 def sharded_to_single(filter_df, spec: SketchSpec, n_shards=64) -> bytes:

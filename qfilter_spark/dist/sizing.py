@@ -1,0 +1,49 @@
+"""Task sizing for the input-side Python map stages.
+
+AQE's ``CoalesceShufflePartitions`` sizes every Python stage that reads a
+shuffle, but never one that reads the input directly: the partial build,
+the chunk emitter and the broadcast probe keep one task per input split,
+and Spark spreads even a small input over every core. Each Python task
+pays a fixed worker start-up before its UDF runs, so at small sizes the
+task count, not the data, sets the cost. :func:`sized_input` gives those
+stages AQE's own target task size, with a narrow ``coalesce`` (no
+Exchange, no extra job).
+"""
+
+from __future__ import annotations
+
+_LONG_MAX = (1 << 63) - 1  # sizeInBytes of a plan without statistics
+# Spark's partition count is an int; a projection scales the unknown
+# Long.MaxValue estimate down by row width, to a count far past this
+_INT_MAX = (1 << 31) - 1
+
+
+def sized_input(df):
+    """``df`` coalesced to ``k = ceil(estimated bytes / target)`` partitions.
+
+    The estimate is the optimized plan's ``sizeInBytes``; the target is the
+    one ``CoalesceShufflePartitions`` uses: ``coalescePartitions.
+    minPartitionSize`` under ``parallelismFirst``, else
+    ``advisoryPartitionSizeInBytes``. ``df`` comes back as is when
+    ``spark.sql.adaptive.enabled`` or ``coalescePartitions.enabled`` is
+    off, or when its size is unknown (no statistics, e.g. a
+    ``createDataFrame`` from local rows, or a projection of one).
+    ``coalesce`` never adds partitions, so an input with fewer partitions
+    than ``k`` keeps its own; nothing runs to count them (``df.rdd`` can
+    run the input's AQE shuffles).
+    """
+    spark = df.sparkSession
+    conf = spark._jsparkSession.sessionState().conf()
+    if not (conf.adaptiveExecutionEnabled()
+            and conf.coalesceShufflePartitionsEnabled()):
+        return df
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    if size >= _LONG_MAX:
+        return df
+    entries = spark._jvm.org.apache.spark.sql.internal.SQLConf
+    target = conf.getConf(
+        entries.COALESCE_PARTITIONS_MIN_PARTITION_SIZE()
+        if conf.getConf(entries.COALESCE_PARTITIONS_PARALLELISM_FIRST())
+        else entries.ADVISORY_PARTITION_SIZE_IN_BYTES())
+    k = max(1, -(-size // target))  # an empty input still needs a task
+    return df.coalesce(k) if k < _INT_MAX else df

@@ -69,6 +69,20 @@ def fan_out(df: DataFrame) -> DataFrame:
     return df
 
 
+def _partials_per_partition(df: DataFrame, spec: SketchSpec) -> DataFrame:
+    """``partial_sketches`` with one partial per partition of ``df``: input
+    sizing off while the plan is built, for the gate queries that check
+    merges of several partials of a small table."""
+    conf = df.sparkSession.conf
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = conf.get(key)
+    conf.set(key, "false")
+    try:
+        return partial_sketches(df, spec)
+    finally:
+        conf.set(key, old)
+
+
 def _hashed(df: DataFrame, col: str, out: str = "h") -> DataFrame:
     """int64 XXH64 column, JVM-side (cast to long first: int32 lanes differ)."""
     return df.withColumn(out, F.xxhash64(F.col(col).cast("long")))
@@ -267,7 +281,7 @@ def q_rsqf_merge_invariance(spark, sf_dir):
         .select("h").repartition(8)
     n = table_rows(sf_dir, "lineitem")
     spec = SketchSpec("rsqf", dict(capacity=max(64, n), fp_rate=0.01), "hash_col", "h")
-    parts = [r["payload"] for r in partial_sketches(li, spec).collect()]
+    parts = [r["payload"] for r in _partials_per_partition(li, spec).collect()]
     a = merge_payloads(parts)
     b = merge_payloads(reversed(parts))
     identical = a.to_bytes() == b.to_bytes()
@@ -1036,7 +1050,7 @@ def q_merge_lineage_resume(spark, sf_dir):
     import shutil
     import tempfile
 
-    from .dist import partial_sketches, tree_merge
+    from .dist import tree_merge
     from .dist.checkpoint import MergeLineage, resume_tree_merge
     import os as _os
 
@@ -1049,7 +1063,7 @@ def q_merge_lineage_resume(spark, sf_dir):
     with tempfile.TemporaryDirectory() as d:
         ckpt = _os.path.join(d, "lineage")
         lineage = MergeLineage(spark, ckpt)
-        blob = tree_merge(partial_sketches(li, spec), fan_in=2,
+        blob = tree_merge(_partials_per_partition(li, spec), fan_in=2,
                           lineage=lineage, n_partials=8)
         rounds = lineage.complete_rounds()
         for rnd in rounds[2:]:  # simulate a crash after round 1

@@ -4,7 +4,8 @@ Asserts the properties the engine is designed around (SURVEY.md §4.2):
 - parquet scans are column-pruned (ReadSchema carries only needed columns)
 - JVM expression stages run inside WholeStageCodegen
 - the partial sketch build reuses the scan partitioning (no Exchange
-  between the scan and the ArrowEvalPython/MapInArrow stage)
+  between the scan and the ArrowEvalPython/MapInArrow stage); a small
+  input is sized by a narrow Coalesce instead
 
 Usage: python scripts/explain_audit.py [sf_dir]
 Prints one PASS/FAIL line per check plus the formatted plans to stderr.
@@ -49,9 +50,14 @@ def main():
           "ReadSchema: struct<doc_id:" in plan
           and "text" not in plan.split("ReadSchema:")[1].splitlines()[0],
           "column pruning")
+    # the operator tree, root first: what lies below the Arrow stage
+    below = plan.split("\n\n")[0].split("MapInArrow", 1)[1]
     check("partial-build has no Exchange before the Arrow stage",
-          "Exchange" not in plan.split("MapInArrow")[0],
-          "scan partitioning reused")
+          "Exchange" not in below, "scan partitioning reused")
+    check("sized partial build: Coalesce, no Exchange, between the scan "
+          "and MapInArrow",
+          "Coalesce" in below and "Exchange" not in below
+          and "Scan parquet" in below, "narrow input sizing")
 
     # 2. text quality: pure JVM expressions inside WholeStageCodegen
     q = (docs.withColumn("bucket", T.quality_bucket(F.col("text")))

@@ -25,6 +25,18 @@ def spark():
     s.stop()
 
 
+@pytest.fixture
+def unsized_inputs(spark):
+    """Input-side Python stages keep one task per input partition (no
+    coalescing to AQE's target size), for tests that need several
+    partials from a tiny input; the old value is restored after."""
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    yield
+    spark.conf.set(key, old)
+
+
 @pytest.fixture(scope="session")
 def corpus_dir(tmp_path_factory):
     from qfilter_spark import corpus

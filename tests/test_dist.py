@@ -217,6 +217,7 @@ def test_tree_merge_with_lineage_and_resume(spark, corpus_df, ngram_spec, tmp_pa
     assert resumed == blob
 
 
+@pytest.mark.usefixtures("unsized_inputs")
 def test_tree_merge_rejects_undercounted_n_partials(corpus_df, ngram_spec):
     """Round-5 review: an n_partials below the real partial count ends the
     reduction loop with several roots; returning rows[0] would silently

@@ -64,6 +64,7 @@ def _cut_after(ckpt, lineage, rnd):
             shutil.rmtree(os.path.join(ckpt, f"round={r}"))
 
 
+@pytest.mark.usefixtures("unsized_inputs")
 @pytest.mark.parametrize("kind", list(SPECS))
 def test_driver_root_equals_spark_root(spark, df, tmp_path, kind):
     """Bytes equal the all-Spark reduction in build_sketch, tree_merge with
@@ -90,6 +91,7 @@ def test_driver_root_equals_spark_root(spark, df, tmp_path, kind):
     assert old.complete_rounds() == [0, 1, 2, 3]
 
 
+@pytest.mark.usefixtures("unsized_inputs")
 def test_root_without_success_is_ignored(spark, df, tmp_path):
     """A crash mid-commit leaves a root directory without _SUCCESS: resume
     ignores it, merges again from the round below to the same bytes and
@@ -111,6 +113,7 @@ def test_root_without_success_is_ignored(spark, df, tmp_path):
     assert resume_tree_merge(spark, ckpt) == blob    # the one-row root as is
 
 
+@pytest.mark.usefixtures("unsized_inputs")
 def test_root_metrics_sum_the_round_below(spark, df, tmp_path):
     lineage = MergeLineage(spark, str(tmp_path / "lineage"))
     tree_merge(partial_sketches(df, SPECS["cms"]), fan_in=4, lineage=lineage)
@@ -123,6 +126,7 @@ def test_root_metrics_sum_the_round_below(spark, df, tmp_path):
     assert root["build_secs"] >= sum(r["build_secs"] for r in below)
 
 
+@pytest.mark.usefixtures("unsized_inputs")
 def test_checkpointed_tree_merge_builds_partials_once(spark, df, tmp_path):
     """Without n_partials, a checkpointed run counts the written round 0
     instead of running the partial build a second time to count it."""
@@ -156,6 +160,7 @@ def _jobs_of(spark, call):
     return [len(tracker.getJobInfo(j).stageIds) for j in jobs]
 
 
+@pytest.mark.usefixtures("unsized_inputs")
 def test_plan_shape_of_one_call(spark, df, tmp_path):
     """<= fan_in partials: build_sketch is one job of one stage (no
     shuffle); a checkpointed tree_merge writes round 0, then collects it."""
