@@ -22,7 +22,8 @@ from .sizing import sized_input
 #: (spark.python.worker.reuse default), unbounded pinned blobs would hold
 #: GBs per node across a pipeline that probes several large sketches
 #: (round-5 code-review finding). A single over-budget sketch still caches
-#: (cache of one) — the per-task decode it saves is the whole point.
+#: (cache of one) — the per-task decode it saves is the whole point. A
+#: broadcast sharded table is ONE entry (all its rows, decoded together).
 _SKETCH_CACHE: dict = {}
 _SKETCH_CACHE_MAX = 4
 _SKETCH_CACHE_MAX_BYTES = 192 << 20
@@ -31,7 +32,8 @@ _SKETCH_CACHE_MAX_BYTES = 192 << 20
 def _approx_resident_bytes(blob, sk) -> int:
     """Blob + every numpy array on the decoded sketch (one nested level, for
     wrappers like RsqfSketch->Filter) + headroom for the probe bitmap an RSQF
-    may build LATER while cached (bounded by its own gate)."""
+    may build LATER while cached: one bit per point of its fingerprint
+    domain, counted only when the filter's own gate would build it."""
     def attrs(obj):
         names = list(getattr(type(obj), "__slots__", ()) or ())
         names += list(getattr(obj, "__dict__", ()) or ())
@@ -47,21 +49,33 @@ def _approx_resident_bytes(blob, sk) -> int:
                     total += w.nbytes
     for obj in (sk, *attrs(sk)):
         fps = getattr(obj, "_fps", None)
-        if isinstance(fps, np.ndarray):
+        if isinstance(fps, np.ndarray) and hasattr(obj, "fingerprint_size"):
+            fs = obj.fingerprint_size()
+            bitmap = (1 << fs) >> 3 if fs <= 32 else 0
             gate = getattr(type(obj), "_BITMAP_MAX_BYTES", 0)
-            total += min(gate, 8 * max(fps.nbytes, 1 << 20))
+            if bitmap <= min(gate, 8 * max(fps.nbytes, 1 << 20)):
+                total += bitmap
     return total
 
 
-def _load_cached(blob):
+def _decode_sketch(blob):
+    """The decoded sketch of ``blob`` and its approximate resident bytes."""
     from .. import sketches
 
+    sk = sketches.loads(blob)
+    return sk, _approx_resident_bytes(blob, sk)
+
+
+def _load_cached(blob, decode=_decode_sketch):
+    """``decode(blob)``'s object, decoded once per worker while cached.
+
+    ``decode`` returns (object, approximate resident bytes); the default
+    decodes one sketch blob."""
     key = id(blob)
     hit = _SKETCH_CACHE.get(key)
     if hit is not None and hit[0] is blob:
         return hit[1]
-    sk = sketches.loads(blob)
-    cost = _approx_resident_bytes(blob, sk)
+    sk, cost = decode(blob)
     held = sum(e[2] for e in _SKETCH_CACHE.values())
     while _SKETCH_CACHE and (len(_SKETCH_CACHE) >= _SKETCH_CACHE_MAX
                              or held + cost > _SKETCH_CACHE_MAX_BYTES):

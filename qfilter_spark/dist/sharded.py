@@ -25,11 +25,23 @@ runs) writes each row's blob, and an insert co-groups the chunks with the
 existing rows. The filter then LIVES as a Parquet table — the checkpointed
 lineage IS the data.
 
-Probe / remove: probe and retraction hashes travel as the same sorted
-chunks, co-grouped with their row (``cogroup.applyInArrow``) — a
-co-partitioned join; each task touches exactly one row's state. No
-broadcast, no driver blob, no single reducer, at any scale. Only
-:func:`count_sharded`, which answers per probe row, shuffles single rows.
+Remove: retraction hashes travel as the same sorted chunks, co-grouped
+with their row (``cogroup.applyInArrow``) — a co-partitioned join; each
+task touches exactly one row's state, with no driver blob and no single
+reducer at any scale. Insert and remove rewrite every row they reach, so
+they always take this plan.
+
+Probe / count: the plan is picked the way Spark picks a broadcast join.
+When the table's optimized-plan ``sizeInBytes`` is at most
+``spark.sql.autoBroadcastJoinThreshold``, its (key, payload) rows are
+collected once and broadcast; each worker decodes them once per call, and
+one map stage answers the probes (the emit stage for
+:func:`probe_sharded_chunks`, whose per-task rows a JVM ``groupBy`` sums
+per row key; a per-row map for :func:`count_sharded`). Otherwise — a
+larger table, a threshold of ``-1``, or a table whose size Spark does not
+know, which is never collected — probe chunks are co-grouped with their
+row like a remove, and :func:`count_sharded` shuffles single probe rows
+to their shard.
 """
 
 from __future__ import annotations
@@ -40,7 +52,8 @@ from .. import sketches
 from ..hashing import u64_hashes_from_arrow
 from ..rsqf import Filter
 from .agg import SketchSpec
-from .sizing import sized_input
+from .probe import _decode_sketch, _load_cached
+from .sizing import broadcastable, sized_input
 
 SHARDED_SCHEMA = "shard int, n_fps long, payload binary"
 SPLIT_SCHEMA = "key int, " + SHARDED_SCHEMA
@@ -101,6 +114,10 @@ def _shard_blob(fps_global: np.ndarray, shard: int, local_qbits: int,
         q += 1
     filt = Filter(q, rbits, None, local)
     return sketches.RsqfSketch(filt, keep).to_blocks_bytes()
+
+
+def _fp_mask(fs: int) -> np.uint64:
+    return np.uint64((1 << fs) - 1) if fs < 64 else np.uint64(0xFFFFFFFFFFFFFFFF)
 
 
 def _local_mask(fs: int, k: int) -> np.uint64:
@@ -237,20 +254,21 @@ def _cut(directory: ShardDirectory, fps: np.ndarray,
                   for i, c in parts], **extra)
 
 
-def _emit_chunks(df, spec_in: SketchSpec, directory: ShardDirectory,
-                 with_samples: bool = False):
-    """The one chunk emitter: a mapInArrow pass that extracts fingerprints
-    with ``spec_in`` and emits per-(task, row) sorted chunk rows.
+def _emit(df, spec_in: SketchSpec, directory: ShardDirectory, consume,
+          schema: str):
+    """The one emitter: a mapInArrow pass that extracts fingerprints with
+    ``spec_in``, masks them to the fingerprint width and sorts them; each
+    sorted wave goes to ``consume(fps)``, which returns the stage's record
+    batches for it (:func:`_emit_chunks` packs chunk rows, the broadcast
+    probe counts hits in place).
 
     Spill-aware: a task's fingerprint buffer flushes every ``_MAX_BUFFER``
     entries, so per-task memory stays bounded no matter the input partition
     size (SURVEY.md §7 "Python-side memory" risk item); every consumer
     treats each extra wave as one more sorted run of its row.
     """
-    fs = directory.fs
-    mask = np.uint64((1 << fs) - 1) if fs < 64 else np.uint64(0xFFFFFFFFFFFFFFFF)
+    mask = _fp_mask(directory.fs)
     flush_at = _MAX_BUFFER  # read here, on the driver
-    schema = directory.schema + (", sample binary" if with_samples else "")
 
     def flush(buf: list):
         fps = np.concatenate(buf)
@@ -258,7 +276,7 @@ def _emit_chunks(df, spec_in: SketchSpec, directory: ShardDirectory,
         # merge paths, which concatenate sorted runs and want timsort) and
         # this numpy's stable u64 sort is ~7x slower on random input
         fps.sort()
-        return _cut(directory, fps, with_samples).to_batches()
+        return consume(fps)
 
     def emit(batches):
         buf: list[np.ndarray] = []
@@ -276,6 +294,68 @@ def _emit_chunks(df, spec_in: SketchSpec, directory: ShardDirectory,
             yield from flush(buf)
 
     return sized_input(df.select(spec_in.col)).mapInArrow(emit, schema)
+
+
+def _emit_chunks(df, spec_in: SketchSpec, directory: ShardDirectory,
+                 with_samples: bool = False):
+    """Per-(task, row) sorted chunk rows of ``df``'s fingerprints, in the
+    directory's table schema (plus a bounded ``sample`` for split
+    planning)."""
+    schema = directory.schema + (", sample binary" if with_samples else "")
+    return _emit(df, spec_in, directory,
+                 lambda fps: _cut(directory, fps, with_samples).to_batches(),
+                 schema)
+
+
+def _broadcast_table(filter_df, directory: ShardDirectory):
+    """The table's (row key, payload) rows, collected and broadcast, when
+    Spark would broadcast the table in a join (:func:`sizing.broadcastable`:
+    its estimate is at most ``spark.sql.autoBroadcastJoinThreshold``);
+    otherwise None, and nothing is collected."""
+    if not broadcastable(filter_df):
+        return None
+    rows = filter_df.select(directory.key, "payload").collect()
+    return filter_df.sparkSession.sparkContext.broadcast(
+        [(int(key), bytes(payload)) for key, payload in rows])
+
+
+def _decode_table(rows):
+    """{row key: decoded sketch} of broadcast table rows and its resident
+    bytes: one per-worker cache entry for the whole table, so a probe
+    decodes each row once per worker, not once per task."""
+    table, cost = {}, 0
+    for key, payload in rows:
+        table[key], nbytes = _decode_sketch(payload)
+        cost += nbytes
+    return table, cost
+
+
+def _hits(sk, runs, lm: np.uint64) -> int:
+    """The one hit kernel: how many of the sorted global fingerprint
+    ``runs`` of one row are in the row's decoded sketch ``sk``. No table
+    row (``sk`` None) and a drained row hit nothing."""
+    table = sk.filter._fps if sk is not None else None
+    # table.size guard: a row drained to empty by remove_sharded still
+    # exists, and min(lo, -1) would index into nothing
+    if table is None or table.size == 0:
+        return 0
+    hit = 0
+    for q in runs:  # sorted: locality-optimal
+        q = q & lm  # shard-local coordinates (stays sorted)
+        lo = np.searchsorted(table, q, side="left")
+        hit += int(((lo < table.size)
+                    & (table[np.minimum(lo, table.size - 1)] == q)).sum())
+    return hit
+
+
+def _counts(sks, h: np.ndarray, lm: np.uint64) -> np.ndarray:
+    """The one count kernel: per-hash count estimates of uint64 hashes
+    ``h`` against the decoded rows ``sks`` of their shard. A split shard's
+    rows hold disjoint ranges, so the shard's estimate is their sum."""
+    est = np.zeros(h.size, dtype=np.int64)
+    for sk in sks:
+        est += np.asarray(sk.count_hashes(h & lm), dtype=np.int64)
+    return est
 
 
 def _merge(chunks, directory: ShardDirectory, spec: SketchSpec,
@@ -443,50 +523,66 @@ def insert_sharded(filter_df, new_df, spec_in: SketchSpec, n_shards,
 def probe_sharded_chunks(df, spec_in: SketchSpec, filter_df, n_shards,
                          spec: SketchSpec):
     """Membership stats per row key: (shard, n_probed, n_contained) for
-    the uniform directory, (key, n_probed, n_contained) for a split one.
-    Sum for global counts.
+    the uniform directory, (key, n_probed, n_contained) for a split one,
+    one row per row key that received probes. Sum for global counts.
 
-    The probe side runs the same chunk emitter as the build (``spec_in``
+    The probe side runs the same emitter as the build (``spec_in``
     describes how to extract probe hashes from ``df``; same modes as the
-    build spec): it sorts its partition's hashes once, cuts them at the
-    row boundaries, and ships one binary blob per (task, row) — a few
-    thousand rows of vector payloads instead of billions of scalar rows.
-    Each row task then probes sorted-queries-against-sorted-table, the
-    cache-optimal case. At 100 TB this turns the probe shuffle from
-    O(rows) record overhead into O(bytes).
+    build spec): each task sorts its partition's hashes once and cuts them
+    at the row boundaries, and each row's sorted queries are searched in
+    the row's sorted fingerprints, the cache-optimal case. The plan is
+    picked the way Spark picks a broadcast join:
+
+    - **small table** (``filter_df``'s estimated ``sizeInBytes`` at most
+      ``spark.sql.autoBroadcastJoinThreshold``): its (key, payload) rows
+      are collected and broadcast, each worker decodes them once, and the
+      emit stage probes its sorted waves in place. One Python map stage;
+      a JVM ``groupBy`` sums the per-task rows per row key.
+    - **otherwise** (a larger table, a threshold of ``-1``, or a table
+      whose size Spark does not know, which is never collected): the
+      emitter ships one binary chunk per (task, row), co-grouped with the
+      row (``cogroup.applyInArrow``), so each task touches exactly one
+      row's state. At 100 TB this turns the probe shuffle from O(rows)
+      record overhead into O(bytes).
     """
     import pyarrow as pa
+    from pyspark.sql import functions as F
 
     directory = _directory(n_shards, spec)
     fs, k = directory.fs, directory.k
+    lm = _local_mask(fs, k)
     schema = f"{directory.key} int, n_probed long, n_contained long"
+
+    def stats(keys, ns, hits):
+        return pa.table({directory.key: pa.array(keys, pa.int32()),
+                         "n_probed": pa.array(ns, pa.int64()),
+                         "n_contained": pa.array(hits, pa.int64())})
+
+    b = _broadcast_table(filter_df, directory)
+    if b is not None:
+        def probe_wave(fps):
+            table = _load_cached(b.value, _decode_table)
+            parts = directory.split_sorted(fps)
+            return stats([i for i, _ in parts], [c.size for _, c in parts],
+                         [_hits(table.get(i), [c], lm) for i, c in parts]
+                         ).to_batches()
+
+        return (_emit(df, spec_in, directory, probe_wave, schema)
+                .groupBy(directory.key)
+                .agg(F.sum("n_probed").alias("n_probed"),
+                     F.sum("n_contained").alias("n_contained")))
 
     def probe_row(key, probes_tbl, filt_tbl):
         if probes_tbl.num_rows == 0:
-            return pa.table({directory.key: pa.array([], pa.int32()),
-                             "n_probed": pa.array([], pa.int64()),
-                             "n_contained": pa.array([], pa.int64())})
+            return stats([], [], [])
         row = key[0].as_py()
         shard = int(directory.shards[row])
         qs = [_unpack_chunk(p.as_py(), shard, fs - k)
               for p in probes_tbl.column("payload")]
-        n = sum(int(q.size) for q in qs)
-        hit = 0
-        if filt_tbl.num_rows:
-            sk = sketches.loads(filt_tbl.column("payload")[0].as_py())
-            table = sk.filter._fps
-            lm = _local_mask(fs, k)
-            # table.size guard: a row drained to empty by remove_sharded
-            # still exists, and min(lo, -1) would index into nothing
-            for q in qs if table.size else ():  # sorted: locality-optimal
-                q = q & lm  # shard-local coordinates (stays sorted)
-                lo = np.searchsorted(table, q, side="left")
-                hit += int(((lo < table.size)
-                            & (table[np.minimum(lo, table.size - 1)] == q))
-                           .sum())
-        return pa.table({directory.key: pa.array([row], pa.int32()),
-                         "n_probed": pa.array([n], pa.int64()),
-                         "n_contained": pa.array([hit], pa.int64())})
+        sk = (sketches.loads(filt_tbl.column("payload")[0].as_py())
+              if filt_tbl.num_rows else None)
+        return stats([row], [sum(int(q.size) for q in qs)],
+                     [_hits(sk, qs, lm)])
 
     return (_emit_chunks(df, spec_in, directory).groupBy(directory.key)
             .cogroup(filter_df.groupBy(directory.key))
@@ -559,40 +655,63 @@ def count_sharded(probe_df, hash_col: str, filter_df, n_shards,
     """Per-key COUNT estimates through the sharded layout (reference
     counting semantics src/lib.rs:1008-1018 applied at table scale).
 
-    Each probe row routes to its fingerprint-prefix shard — one
-    co-partitioned shuffle of single rows, since the answer is per row —
-    and receives the shard-local ``count_hashes`` estimate. A split
-    shard's rows hold disjoint ranges, so the shard's estimate is the sum
-    over its rows. Returns (h, est) keyed by the probe hash; join back on
+    Each probe row receives the shard-local ``count_hashes`` estimate of
+    its fingerprint-prefix shard. A split shard's rows hold disjoint
+    ranges, so the shard's estimate is the sum over its rows. Returns
+    (h, est), one row per probe row, keyed by the probe hash; join back on
     ``h`` downstream. Counting multiplicity lives entirely inside one shard
     (a fingerprint's copies share its prefix), so sharded counts are
     exactly the single-filter counts.
+
+    The plan is picked like :func:`probe_sharded_chunks`'s: a table whose
+    estimated ``sizeInBytes`` is at most
+    ``spark.sql.autoBroadcastJoinThreshold`` is broadcast and every probe
+    row is answered in one map stage; otherwise (a larger table, ``-1``,
+    or unknown size) each probe row routes to its shard in one
+    co-partitioned shuffle of single rows, co-grouped with the shard's
+    table rows.
     """
     import pyarrow as pa
 
     directory = _directory(n_shards, spec)
     fs, k = directory.fs, directory.k
+    lm = _local_mask(fs, k)
+    mask = _fp_mask(fs)
 
-    probes = _route_by_shard(probe_df, hash_col, fs, k)
+    def answer(h_u64, est):
+        return pa.record_batch([pa.array(h_u64.view(np.int64), pa.int64()),
+                                pa.array(est, pa.int64())], names=["h", "est"])
+
+    b = _broadcast_table(filter_df, directory)
+    if b is not None:
+        def count_batches(batches):
+            by_shard: dict = {}
+            for key, sk in _load_cached(b.value, _decode_table).items():
+                by_shard.setdefault(int(directory.shards[key]), []).append(sk)
+            for batch in batches:
+                h_u64 = u64_hashes_from_arrow(batch.column(0), "count_sharded")
+                rows = np.searchsorted(directory.starts, h_u64 & mask,
+                                       side="right") - 1
+                shard = directory.shards[rows]
+                est = np.zeros(h_u64.size, dtype=np.int64)
+                for s in np.unique(shard):
+                    sel = shard == s
+                    est[sel] = _counts(by_shard.get(int(s), ()), h_u64[sel], lm)
+                yield answer(h_u64, est)
+
+        return sized_input(probe_df.select(hash_col)).mapInArrow(
+            count_batches, "h long, est long")
 
     def count_group(key, probes_tbl, filt_tbl):
-        n = probes_tbl.num_rows
-        if n == 0:
-            return pa.table({"h": pa.array([], pa.int64()),
-                             "est": pa.array([], pa.int64())})
         # a NULL hash routes to the NULL shard, whose filter side is always
         # empty: refuse it via the shared helper (the chunk emitter refuses
         # NULLs in SketchSpec.extract) instead of laundering it through NaN
         h_u64 = u64_hashes_from_arrow(probes_tbl.column("h"), "count_sharded")
-        est = np.zeros(n, dtype=np.int64)
-        for p in filt_tbl.column("payload"):
-            sk = sketches.loads(p.as_py())
-            est += np.asarray(sk.count_hashes(h_u64 & _local_mask(fs, k)),
-                              dtype=np.int64)
-        return pa.table({"h": pa.array(h_u64.view(np.int64), pa.int64()),
-                         "est": pa.array(est, pa.int64())})
+        sks = ([sketches.loads(p.as_py()) for p in filt_tbl.column("payload")]
+               if probes_tbl.num_rows else [])
+        return pa.Table.from_batches([answer(h_u64, _counts(sks, h_u64, lm))])
 
-    return (probes.groupBy("shard")
+    return (_route_by_shard(probe_df, hash_col, fs, k).groupBy("shard")
             .cogroup(filter_df.groupBy("shard"))
             .applyInArrow(count_group, "h long, est long"))
 

@@ -7,7 +7,8 @@ and Spark spreads even a small input over every core. Each Python task
 pays a fixed worker start-up before its UDF runs, so at small sizes the
 task count, not the data, sets the cost. :func:`sized_input` gives those
 stages AQE's own target task size, with a narrow ``coalesce`` (no
-Exchange, no extra job).
+Exchange, no extra job). :func:`broadcastable` reads the same estimate to
+pick a broadcast plan the way Spark picks a broadcast join.
 """
 
 from __future__ import annotations
@@ -16,6 +17,23 @@ _LONG_MAX = (1 << 63) - 1  # sizeInBytes of a plan without statistics
 # Spark's partition count is an int; a projection scales the unknown
 # Long.MaxValue estimate down by row width, to a count far past this
 _INT_MAX = (1 << 31) - 1
+
+
+def plan_bytes(df) -> int:
+    """The optimized plan's ``sizeInBytes`` estimate of ``df`` (at least
+    Long.MaxValue when Spark does not know it)."""
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+
+
+def broadcastable(df) -> bool:
+    """Whether Spark would broadcast ``df`` as a join side: its estimate is
+    at most ``spark.sql.autoBroadcastJoinThreshold``. A threshold of ``-1``
+    never broadcasts, and neither does an input without statistics, so a
+    caller that collects only what passes never collects an unbounded
+    input."""
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    size = plan_bytes(df)
+    return size < _LONG_MAX and 0 <= size <= conf.autoBroadcastJoinThreshold()
 
 
 def sized_input(df):
@@ -37,7 +55,7 @@ def sized_input(df):
     if not (conf.adaptiveExecutionEnabled()
             and conf.coalesceShufflePartitionsEnabled()):
         return df
-    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    size = plan_bytes(df)
     if size >= _LONG_MAX:
         return df
     entries = spark._jvm.org.apache.spark.sql.internal.SQLConf

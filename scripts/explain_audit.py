@@ -6,6 +6,10 @@ Asserts the properties the engine is designed around (SURVEY.md §4.2):
 - the partial sketch build reuses the scan partitioning (no Exchange
   between the scan and the ArrowEvalPython/MapInArrow stage); a small
   input is sized by a narrow Coalesce instead
+- a probe of a small written sharded filter table runs one Python stage
+  and no cogroup; with ``spark.sql.autoBroadcastJoinThreshold=-1`` it
+  keeps the co-partitioned cogroup (counted from the event log, per job
+  group)
 
 Usage: python scripts/explain_audit.py [sf_dir]
 Prints one PASS/FAIL line per check plus the formatted plans to stderr.
@@ -14,19 +18,18 @@ Prints one PASS/FAIL line per check plus the formatted plans to stderr.
 import os
 import re
 import sys
+import tempfile
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    from pyspark.sql import SparkSession, functions as F
+    from pyspark.sql import functions as F
 
-    spark = (SparkSession.builder.master("local[2]")
-             .config("spark.sql.shuffle.partitions", "4")
-             .config("spark.ui.enabled", "false")
-             .config("spark.sql.adaptive.enabled", "true").getOrCreate())
-    spark.sparkContext.setLogLevel("ERROR")
+    logs = tempfile.mkdtemp(prefix="explain_audit_events_")
+    spark = audit_session(logs)
 
     from qfilter_spark.dist import SketchSpec, partial_sketches
     from qfilter_spark.functions import dedup, text as T
@@ -126,9 +129,97 @@ def main():
                   for n in hp_names)
           and all(n.startswith(allowed) for n in hp_names))
 
+    # 6. sharded probe: broadcast a small table, cogroup otherwise
+    shapes = sharded_probe_shapes(spark, logs, tempfile.mkdtemp())
+    print(shapes, file=sys.stderr)
+    small, cogrouped = shapes["default"], shapes["-1"]
+    check("small sharded table: the probe is one Python stage, no "
+          "FlatMapCoGroupsInArrow",
+          small["python_stages"] == 1 and not small["cogroup"],
+          f"{small['python_stages']} Python stages")
+    check("broadcast threshold -1: the probe keeps the co-partitioned "
+          "cogroup", cogrouped["cogroup"] and cogrouped["python_stages"] == 2,
+          f"{cogrouped['python_stages']} Python stages")
+
     spark.stop()
     print(f"{failures} failures")
     sys.exit(1 if failures else 0)
+
+
+def audit_session(logs: str):
+    """The audit's local session, logging uncompressed events to ``logs``
+    (Python workers find the package through PYTHONPATH)."""
+    os.environ.setdefault("PYTHONPATH", REPO)
+    from pyspark.sql import SparkSession
+
+    spark = (SparkSession.builder.master("local[2]")
+             .config("spark.sql.shuffle.partitions", "4")
+             .config("spark.ui.enabled", "false")
+             .config("spark.eventLog.enabled", "true")
+             .config("spark.eventLog.dir", logs)
+             .config("spark.eventLog.compress", "false")
+             .config("spark.sql.adaptive.enabled", "true").getOrCreate())
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
+def sharded_probe_shapes(spark, logs: str, work: str) -> dict:
+    """Per broadcast threshold ("default", "-1"): the Spark work of one
+    ``probe_sharded`` call on a written 8-shard table, counted with the
+    job-group, StatusTracker and event-log recipe: jobs, stages, Python
+    stages and tasks, and whether the plan has FlatMapCoGroupsInArrow.
+    ``spark`` must log uncompressed events to ``logs``."""
+    from pyspark.sql import functions as F
+
+    from perfbench.trace import read_event_log
+    from qfilter_spark import sources
+    from qfilter_spark.dist import SketchSpec
+    from qfilter_spark.dist.sharded import build_sharded_filter, probe_sharded
+
+    sc = spark.sparkContext
+    spec = SketchSpec("rsqf", dict(capacity=8192, fp_rate=0.01),
+                      "hash_col", "h")
+    hashes = spark.range(0, 6000, numPartitions=4).select(
+        F.xxhash64("id").alias("h"))
+    path = os.path.join(work, "sharded_probe_table")
+    sources.write_filter_table(
+        build_sharded_filter(hashes, spec, n_shards=8), path)
+    table = sources.read_filter_table(spark, path)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+
+    def call():
+        out = probe_sharded(hashes, "h", table, 8, spec)
+        out.collect()
+        return "FlatMapCoGroupsInArrow" in (
+            out._jdf.queryExecution().executedPlan().toString())
+
+    call()  # warm-up: worker start-up
+    shapes = {}
+    try:
+        for group, threshold in ((901, None), (902, "-1")):
+            if threshold is not None:
+                spark.conf.set(key, threshold)
+            sc.setJobGroup(str(group), "sharded probe")  # digit: a span
+            try:
+                cogroup = call()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            st = sc.statusTracker()
+            jobs = st.getJobIdsForGroup(str(group))
+            shapes[threshold or "default"] = dict(
+                group=group, cogroup=cogroup, jobs=len(jobs),
+                stages=sum(len(st.getJobInfo(j).stageIds) for j in jobs))
+    finally:
+        spark.conf.set(key, old)
+    stages = read_event_log(logs)[0]
+    for shape in shapes.values():
+        py = [s for s in stages if s.span == shape["group"]
+              and "time to run Python workers" in s.sql]
+        shape.update(python_stages=len(py),
+                     python_tasks=sum(s.tasks for s in py))
+    return shapes
 
 
 if __name__ == "__main__":

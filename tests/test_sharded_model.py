@@ -4,11 +4,15 @@ Every operation on a sharded table is replayed on two models: an exact
 fingerprint multiset (``collections.Counter``) and one single-blob
 ``Filter``. After each step the table's collapse must equal both models;
 at the end the chunk probe, the hash-column probe, ``count_sharded`` and
-a Parquet round trip must agree with the multiset. The table's shape is a
-parameter: the uniform one-row-per-shard table, and a split table whose
-hot shard is cut into several rows by a small ``max_fps_per_row``.
+a Parquet round trip must agree with the multiset; the probes and counts
+run on both plans, the broadcast one (the default threshold) and the
+co-partitioned one (``spark.sql.autoBroadcastJoinThreshold=-1``). The
+table's shape is a parameter: the uniform one-row-per-shard table, and a
+split table whose hot shard is cut into several rows by a small
+``max_fps_per_row``.
 """
 
+import contextlib
 from collections import Counter
 
 import numpy as np
@@ -79,11 +83,26 @@ def _hash_df(spark, hashes: np.ndarray):
 def _pin(spark, table):
     """Collect a tiny table and re-create it without its lineage, so a
     chain of updates does not recompute every earlier step. Every row's
-    ``n_fps`` must match its payload."""
-    rows = table.collect()
-    for r in rows:
+    ``n_fps`` must match its payload. The copy is a local relation, so
+    Spark knows its size and the probes may broadcast it."""
+    rows = table.toArrow()
+    for r in rows.to_pylist():
         assert len(sketches.loads(bytes(r["payload"])).filter) == r["n_fps"]
-    return spark.createDataFrame(rows, table.schema)
+    return spark.createDataFrame(rows)
+
+
+@contextlib.contextmanager
+def _broadcast_threshold(spark, value):
+    """``spark.sql.autoBroadcastJoinThreshold`` set for the block (None
+    keeps the session's), then restored."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    if value is not None:
+        spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
 
 
 def _build(spark, shape, hashes):
@@ -110,14 +129,23 @@ def _check_probes(spark, table, route, model: Counter):
     probes = np.concatenate([UNIVERSE, ABSENT])
     df = _hash_df(spark, probes)
     want_hits = sum(model[fp] > 0 for fp in _fps(probes))
-    for stats in (S.probe_sharded_chunks(df, SPEC, table, route, SPEC),
-                  S.probe_sharded(df, "h", table, route, SPEC)):
-        n, hit = stats.groupBy().sum("n_probed", "n_contained").collect()[0]
-        assert (int(n), int(hit or 0)) == (probes.size, want_hits)
-    est = {r["h"]: r["est"]
-           for r in S.count_sharded(df, "h", table, route, SPEC).collect()}
-    assert est == {int(h): model[fp]
-                   for h, fp in zip(probes.view(np.int64), _fps(probes))}
+    want_est = {int(h): model[fp]
+                for h, fp in zip(probes.view(np.int64), _fps(probes))}
+    for threshold, cogroup in ((None, False), ("-1", True)):
+        with _broadcast_threshold(spark, threshold):
+            for stats in (S.probe_sharded_chunks(df, SPEC, table, route, SPEC),
+                          S.probe_sharded(df, "h", table, route, SPEC)):
+                assert ("CoGroup" in _plan(stats)) == cogroup
+                n, hit = stats.groupBy().sum("n_probed",
+                                             "n_contained").collect()[0]
+                assert (int(n), int(hit or 0)) == (probes.size, want_hits)
+            est = {r["h"]: r["est"] for r in
+                   S.count_sharded(df, "h", table, route, SPEC).collect()}
+        assert est == want_est
+
+
+def _plan(frame):
+    return frame._jdf.queryExecution().optimizedPlan().toString()
 
 
 def _run(spark, path, shape, initial, steps):
