@@ -296,7 +296,7 @@ def oracle_sql() -> dict[str, str]:
             "    SELECT unnest(string_split(text, ' ')) AS word FROM documents"
             "  ) GROUP BY word ORDER BY cnt DESC, word ASC LIMIT 10)",
         # hll_estimate: per-source degree (register max is merge-order
-        # invariant, salted partials included). At the gate SFs every
+        # invariant, per-task partials included). At the gate SFs every
         # per-source estimate is exact; at sf0.1 the measured deviations
         # are pinned as VALUES (config-stable under local[8] and
         # local[32]).

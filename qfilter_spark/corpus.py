@@ -24,7 +24,7 @@ import numpy as np
 SEED = 42
 VOCAB = 50257
 N_SOURCES = 12
-_SOURCE_ZIPF_A = 1.5  # top source ~49% of rows (drives skew/salting tests)
+_SOURCE_ZIPF_A = 1.5  # top source ~49% of rows (drives the skew tests)
 
 _w = 1.0 / np.arange(1, N_SOURCES + 1) ** _SOURCE_ZIPF_A
 SOURCE_WEIGHTS = _w / _w.sum()

@@ -13,7 +13,9 @@ Every path shares one build kernel (:func:`_fold`) and one merge kernel
    AQE's target task size (:func:`qfilter_spark.dist.sizing.sized_input`,
    a narrow ``coalesce``), and otherwise the scan's partitioning is reused
    as-is, so at 100 TB the stage is embarrassingly parallel and bounded
-   by scan throughput.
+   by scan throughput. The grouped build (:func:`build_grouped_sketches`)
+   is the keyed case: each task sorts its rows by the group column and
+   emits one partial per group it holds.
 
 2. **Tree merge** — iterative ``groupBy(shard_id % groups).applyInPandas``
    rounds while more than ``fan_in`` blobs remain (the reference's merge,
@@ -24,8 +26,8 @@ Every path shares one build kernel (:func:`_fold`) and one merge kernel
    the driver's included, at <= fan_in small blobs, so no single reducer
    becomes a bottleneck at any scale; each round optionally checkpoints to
    Parquet with per-shard lineage + metrics for resumability (north_rule),
-   the driver-merged root included. Only the grouped build
-   (:func:`build_grouped_sketches`) is salted.
+   the driver-merged root included. The grouped build runs the same
+   rounds keyed by group, and its last round merges each group to one row.
 
 Merge-order independence: hash sketches (RSQF/Bloom/HLL/CMS) are bit-stable
 under any merge order; groups (and the driver's root merge) additionally
@@ -47,6 +49,8 @@ from ..hashing import u64_hashes_from_arrow
 from .sizing import sized_input
 
 PARTIAL_SCHEMA = "shard_id long, n_items long, build_secs double, payload binary"
+# the merge round's group column and the partial columns
+_RESERVED = ("grp", "shard_id", "n_items", "build_secs", "payload")
 
 
 @dataclass
@@ -138,7 +142,7 @@ def merge_payloads(payloads, acc=None):
     return acc
 
 
-def partial_sketches(df, spec: SketchSpec):
+def partial_sketches(df, spec: SketchSpec, _key: str | None = None):
     """One partial sketch per sized task; returns the partials DataFrame.
 
     Projects to the single needed column first so Parquet scans read only it
@@ -146,24 +150,52 @@ def partial_sketches(df, spec: SketchSpec):
     the tasks with :func:`~qfilter_spark.dist.sizing.sized_input`: one per
     input partition, or fewer when the input is smaller than AQE's target
     partition size.
+
+    With ``_key`` (the grouped build), each task sorts its rows by that
+    column (no Exchange) and emits one partial per run of equal keys,
+    holding one live sketch at a time; a task without rows emits nothing.
     """
     import pyarrow as pa
     from pyspark import TaskContext
 
     def build(batches):
-        t0 = time.perf_counter()
-        sk, n = _fold(spec, batches)
-        pid = TaskContext.get().partitionId()
-        yield pa.record_batch(
-            [pa.array([pid], pa.int64()), pa.array([n], pa.int64()),
-             pa.array([time.perf_counter() - t0], pa.float64()),
-             pa.array([sk.to_bytes()], pa.binary())],
-            names=["shard_id", "n_items", "build_secs", "payload"])
+        pid = pa.array([TaskContext.get().partitionId()], pa.int64())
+        for key, run in _runs(batches, _key) if _key else [({}, batches)]:
+            t0 = time.perf_counter()
+            sk, n = _fold(spec, run)
+            yield pa.record_batch({
+                **key, "shard_id": pid, "n_items": pa.array([n], pa.int64()),
+                "build_secs": pa.array([time.perf_counter() - t0], pa.float64()),
+                "payload": pa.array([sk.to_bytes()], pa.binary())})
 
-    return sized_input(df.select(spec.col)).mapInArrow(build, PARTIAL_SCHEMA)
+    if _key is None:
+        return sized_input(df.select(spec.col)).mapInArrow(build, PARTIAL_SCHEMA)
+    schema = f"{_key} {df.schema[_key].dataType.simpleString()}, {PARTIAL_SCHEMA}"
+    return (sized_input(df.select(_key, spec.col)).sortWithinPartitions(_key)
+            .mapInArrow(build, schema))
 
 
-def _merge_round(partials, n_groups: int, schema: str, keys=()):
+def _runs(batches, key: str):
+    """Key-sorted Arrow batches -> ({key: 1-row key column}, row slices)
+    per run of equal keys, joined across batch edges."""
+    import itertools
+
+    import pyarrow.compute as pc
+
+    def slices():
+        for batch in batches:
+            col, start = batch.column(key), 0
+            for end in pc.run_end_encode(col).run_ends.to_pylist():
+                yield col[start].as_py(), batch.slice(start, end - start)
+                start = end
+
+    for _, run in itertools.groupby(slices(), key=lambda s: s[0]):
+        first = next(run)[1]
+        yield ({key: first.column(key).slice(0, 1)},
+               itertools.chain([first], (part for _, part in run)))
+
+
+def _merge_round(partials, n_groups: int, schema, keys=()):
     """One merge round: per value of ``keys``, the partials fold into
     ``n_groups`` rows, row ``shard_id % n_groups`` taking each partial."""
     import pandas as pd
@@ -227,15 +259,24 @@ def tree_merge(partials, fan_in: int = 16, lineage=None, n_partials: int | None 
     return _reduce_rounds(partials, n, fan_in, lineage, 0)
 
 
-def _reduce_rounds(current, n: int, fan_in: int, lineage, rnd: int) -> bytes:
-    """Merge rounds after round ``rnd`` (``current``, ``n`` rows) down to one
-    blob, numbered on from ``rnd`` as in the checkpoint directory."""
+def _tree_rounds(current, n: int, fan_in: int, schema=PARTIAL_SCHEMA,
+                 keys=(), lineage=None, rnd: int = 0):
+    """Spark merge rounds after round ``rnd`` while more than ``fan_in``
+    partials (``n`` per value of ``keys``) remain; returns the last round,
+    its row count per key and its number, as in the checkpoint directory."""
     while n > fan_in:
         rnd += 1
         n = math.ceil(n / fan_in)
-        current = _merge_round(current, n, PARTIAL_SCHEMA)
+        current = _merge_round(current, n, schema, keys)
         if lineage is not None:
             current = lineage.write_round(current, rnd)
+    return current, n, rnd
+
+
+def _reduce_rounds(current, n: int, fan_in: int, lineage, rnd: int) -> bytes:
+    """Merge rounds after round ``rnd`` (``current``, ``n`` rows) down to one
+    blob, numbered on from ``rnd`` as in the checkpoint directory."""
+    current, n, rnd = _tree_rounds(current, n, fan_in, lineage=lineage, rnd=rnd)
     rows = current.collect()
     if not rows:
         raise ValueError("tree_merge: empty partials")
@@ -267,43 +308,24 @@ def build_sketch(df, spec: SketchSpec, fan_in: int = 16, lineage=None) -> bytes:
     return tree_merge(parts, fan_in=fan_in, lineage=lineage, n_partials=n)
 
 
-def build_grouped_sketches(df, group_col: str, spec: SketchSpec,
-                           n_salts: int = 8):
-    """One sketch per value of ``group_col``, with salted skew mitigation.
-
-    Round 1 folds each (group, salt) so a hot group (e.g. a source that
-    is 50% of all rows) fans out over ``n_salts`` reducers instead of one;
-    round 2, the tree merge's round keyed by group, merges the salts
-    (carried as ``shard_id``) away. Returns a DataFrame
+def build_grouped_sketches(df, group_col: str, spec: SketchSpec):
+    """One sketch per value of ``group_col``; returns a DataFrame
     (group_col, n_items, build_secs, payload), group_col in its own type.
+
+    Each sized input task folds its rows per group (the keyed
+    :func:`partial_sketches`), so raw rows are never shuffled and a hot
+    group (e.g. a source that is 50% of all rows) is spread over every
+    input task without a salt. The tree merge's keyed rounds then merge at
+    most ``fan_in`` = 16 partials of a group per reducer, down to one row
+    per group; a 1-task input needs no merge round at all.
     """
-    import pyarrow as pa
-    from pyspark.sql import functions as F
-
-    if n_salts < 1:
-        raise ValueError(f"n_salts must be >= 1, got {n_salts!r}")
-    schema = f"{group_col} {df.schema[group_col].dataType.simpleString()}, {PARTIAL_SCHEMA}"
-
-    # no type hints: grouped-map arrow eval-type inference requires hints on
-    # EVERY parameter (including the key tuple) and the hint-free fallback
-    # is the grouped-map arrow eval type we want
-    def build_salted(key, tbl):
-        # Arrow-native (applyInArrow): tokens stay a flat values+offsets
-        # buffer for the vectorized ngram kernel
-        t0 = time.perf_counter()
-        # one batch: quantile-sketch bytes must not follow Arrow's cuts
-        sk, n = _fold(spec, tbl.combine_chunks().to_batches())
-        return pa.table({
-            group_col: tbl.column(group_col).slice(0, 1),
-            "shard_id": pa.array([key[1].as_py()], pa.int64()),
-            "n_items": pa.array([n], pa.int64()),
-            "build_secs": pa.array([time.perf_counter() - t0], pa.float64()),
-            "payload": pa.array([sk.to_bytes()], pa.binary()),
-        })
-
-    salted = (df
-              .select(group_col, spec.col)
-              .withColumn("shard_id", F.pmod(F.spark_partition_id(), F.lit(n_salts)))
-              .groupBy(group_col, "shard_id")
-              .applyInArrow(build_salted, schema))
-    return _merge_round(salted, 1, schema, (group_col,)).drop("shard_id")
+    if group_col in _RESERVED:
+        raise ValueError(f"group column {group_col!r} is reserved by the "
+                         f"grouped build ({', '.join(_RESERVED)}); rename it")
+    parts = partial_sketches(df, spec, _key=group_col)
+    n = parts.rdd.getNumPartitions()  # at most one partial per task and group
+    if n > 1:  # 16: tree_merge's default fan_in
+        keys = (group_col,)
+        current, _, _ = _tree_rounds(parts, n, 16, parts.schema, keys)
+        parts = _merge_round(current, 1, parts.schema, keys)
+    return parts.drop("shard_id")

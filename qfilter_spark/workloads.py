@@ -1013,15 +1013,17 @@ def q_topk_tokens(spark, sf_dir):
 
 
 def q_hll_per_source(spark, sf_dir):
-    """Per-group sketches with salted skew mitigation (grouped build path):
-    one HLL per documents.source, checked against exact per-source distincts."""
+    """Per-group sketches (grouped build path: each input task folds the
+    sources it holds, so the hot source is split without a shuffle of raw
+    rows): one HLL per documents.source, checked against exact per-source
+    distincts."""
     from .dist import build_grouped_sketches
 
     from concurrent.futures import ThreadPoolExecutor
 
     docs = load(spark, sf_dir, "documents").withColumn("h", F.xxhash64("doc_id"))
     spec = SketchSpec("hll", dict(p=14), "hash_col", "h")
-    per_source = build_grouped_sketches(docs, "source", spec, n_salts=4)
+    per_source = build_grouped_sketches(docs, "source", spec)
     # grouped build and exact distincts are independent scans — overlap
     with ThreadPoolExecutor(1) as pool:
         fut_rows = pool.submit(per_source.collect)
@@ -1035,7 +1037,7 @@ def q_hll_per_source(spark, sf_dir):
         est, rsd = sk.estimate(), sk.relative_sd()  # bound from the sketch
         n = exact[r["source"]]
         # hll_estimate: per-source degree, deterministic (register max is
-        # merge-order invariant, salted partials included) and mirrored in
+        # merge-order invariant, per-task partials included) and mirrored in
         # the oracle (== exact at the gate SFs, pinned VALUES at sf0.1)
         out.append((r["source"], int(n), int(round(est)),
                     bool(abs(est - n) <= 4 * rsd * n + 2)))

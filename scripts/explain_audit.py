@@ -6,6 +6,8 @@ Asserts the properties the engine is designed around (SURVEY.md §4.2):
 - the partial sketch build reuses the scan partitioning (no Exchange
   between the scan and the ArrowEvalPython/MapInArrow stage); a small
   input is sized by a narrow Coalesce instead
+- the grouped build folds per group in the same map stage: raw rows never
+  cross an Exchange, only the per-group partials do
 - a probe of a small written sharded filter table runs one Python stage
   and no cogroup; with ``spark.sql.autoBroadcastJoinThreshold=-1`` it
   keeps the co-partitioned cogroup (counted from the event log, per job
@@ -31,7 +33,8 @@ def main():
     logs = tempfile.mkdtemp(prefix="explain_audit_events_")
     spark = audit_session(logs)
 
-    from qfilter_spark.dist import SketchSpec, partial_sketches
+    from qfilter_spark.dist import (
+        SketchSpec, build_grouped_sketches, partial_sketches)
     from qfilter_spark.functions import dedup, text as T
 
     failures = 0
@@ -61,6 +64,18 @@ def main():
           "and MapInArrow",
           "Coalesce" in below and "Exchange" not in below
           and "Scan parquet" in below, "narrow input sizing")
+
+    # 1b. grouped build: keyed partials in the map stage, then the merge
+    grouped = build_grouped_sketches(docs, "source", SketchSpec(
+        "hll", dict(p=12), "hash_col", "h"))
+    plan1b = grouped._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+    print(plan1b, file=sys.stderr)
+    below = plan1b.split("\n\n")[0].split("MapInArrow", 1)[1]
+    check("grouped build: no Exchange between the scan and MapInArrow "
+          "(raw rows are never shuffled)",
+          "Exchange" not in below and "Scan parquet" in below,
+          "per-group fold in the map stage")
 
     # 2. text quality: pure JVM expressions inside WholeStageCodegen
     q = (docs.withColumn("bucket", T.quality_bucket(F.col("text")))

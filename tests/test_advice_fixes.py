@@ -219,7 +219,7 @@ def test_grouped_values_n_items_excludes_nulls(spark):
                   .alias("v")))
     spec = SketchSpec("tdigest", dict(compression=100.0), "values", "v")
     rows = {r["g"]: r for r in
-            build_grouped_sketches(df, "g", spec, n_salts=2).collect()}
+            build_grouped_sketches(df, "g", spec).collect()}
     # 100 rows per group; ids divisible by 5 are NULL -> 20 NULLs per group
     for g in ("g0", "g1"):
         assert rows[g]["n_items"] == 80

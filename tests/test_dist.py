@@ -1,5 +1,5 @@
 """Distributed pipeline tests (FIXTURES.md F4): partial build + tree merge,
-merge-order invariance, salted skew handling, checkpoint resume, and
+merge-order invariance, grouped skew handling, checkpoint resume, and
 single-node parity — on a local[2] SparkSession over the F1 corpus.
 """
 
@@ -231,7 +231,7 @@ def test_grouped_sketches_with_salting(spark, corpus_df):
     from pyspark.sql import functions as F
     spec = SketchSpec(kind="hll", params=dict(p=12), mode="hash_col", col="h")
     df = corpus_df.withColumn("h", F.xxhash64("doc_id"))
-    per_source = build_grouped_sketches(df, "source", spec, n_salts=4)
+    per_source = build_grouped_sketches(df, "source", spec)
     rows = per_source.collect()
     truth = {r["source"]: r["cnt"] for r in
              corpus_df.groupBy("source").agg(F.countDistinct("doc_id").alias("cnt")).collect()}
@@ -250,7 +250,7 @@ def test_grouped_sketches_keep_group_column_type(spark):
     spec = SketchSpec(kind="hll", params=dict(p=10), mode="hash_col", col="h")
     df = spark.range(0, 300, numPartitions=3).select(
         (F.col("id") % 3).alias("g"), F.xxhash64("id").alias("h"))
-    out = build_grouped_sketches(df, "g", spec, n_salts=2)
+    out = build_grouped_sketches(df, "g", spec)
     assert out.columns == ["g", "n_items", "build_secs", "payload"]
     assert out.schema["g"].dataType == LongType()
     assert {r["g"]: r["n_items"] for r in out.collect()} == {0: 100, 1: 100, 2: 100}
@@ -266,7 +266,7 @@ GROUPED_SPECS = {
 
 @pytest.mark.parametrize("kind", list(GROUPED_SPECS))
 def test_grouped_rsqf_equals_unsalted(spark, corpus_df, kind):
-    """F4 skew fixture: each group's salted sketch equals the ungrouped
+    """F4 skew fixture: each group's sketch equals the ungrouped
     build over that group's rows — bit-equal for the hash kinds, same n
     and n_items for the order-dependent KLL."""
     from pyspark.sql import functions as F
@@ -275,7 +275,7 @@ def test_grouped_rsqf_equals_unsalted(spark, corpus_df, kind):
     sources = corpus.SOURCE_NAMES[::3]
     df = (corpus_df.where(F.col("source").isin(sources))
           .withColumn("h", F.xxhash64("doc_id")))
-    rows = build_grouped_sketches(df, "source", spec, n_salts=4).collect()
+    rows = build_grouped_sketches(df, "source", spec).collect()
     assert sorted(r["source"] for r in rows) == sources
     for r in rows:
         want = build_sketch(
@@ -432,7 +432,7 @@ def test_build_null_hashes_refused(spark):
         build_sketch(df.repartition(2), spec)
     assert "NULL values" in str(ei.value)
     with pytest.raises(Exception) as ei:
-        build_grouped_sketches(df, "g", spec, n_salts=2).collect()
+        build_grouped_sketches(df, "g", spec).collect()
     assert "NULL values" in str(ei.value)
 
 
@@ -477,12 +477,12 @@ def test_grouped_build_null_tokens_row_is_empty_doc(spark, corpus_df):
         "tokens", F.when(F.col("n_tok") % 2 == 0, F.col("tokens")))
     assert df.where("tokens IS NULL").count() > 0
     spec = SketchSpec("hll", dict(p=12), "tokens_ngram", "tokens", ngram_n=3)
-    rows = build_grouped_sketches(df, "source", spec, n_salts=2).collect()
+    rows = build_grouped_sketches(df, "source", spec).collect()
     # every sketch decodes and the NULL rows contributed nothing
     with_nulls = {r["source"]: sketches.loads(bytes(r["payload"])).estimate()
                   for r in rows}
     dropped = df.where("tokens IS NOT NULL")
-    rows2 = build_grouped_sketches(dropped, "source", spec, n_salts=2).collect()
+    rows2 = build_grouped_sketches(dropped, "source", spec).collect()
     without = {r["source"]: sketches.loads(bytes(r["payload"])).estimate()
                for r in rows2}
     for src_name, est in without.items():

@@ -12,7 +12,6 @@ import pytest
 
 from qfilter_spark.dist import (
     SketchSpec,
-    build_grouped_sketches,
     build_sketch,
     partial_sketches,
     tree_merge,
@@ -189,12 +188,3 @@ def test_bad_fan_in_rejected_on_driver(spark, df, tmp_path, fan_in):
         with pytest.raises(ValueError, match=msg):
             call()
     assert not os.path.exists(ckpt)
-
-
-@pytest.mark.parametrize("n_salts", [0, -1])
-def test_bad_n_salts_rejected_on_driver(spark, df, n_salts):
-    from pyspark.sql import functions as F
-
-    grouped = df.withColumn("g", F.col("h") % 3)
-    with pytest.raises(ValueError, match=f"n_salts must be >= 1, got {n_salts}"):
-        build_grouped_sketches(grouped, "g", SPECS["hll"], n_salts=n_salts)
