@@ -62,16 +62,17 @@ class MergeLineage:
     def write_round(self, df, rnd: int):
         """Persist a round and return the re-read DataFrame (cuts lineage).
 
-        Also invalidates every round ABOVE ``rnd``: those can only be
+        First invalidates every round ABOVE ``rnd``: those can only be
         leftovers of a previous run in a reused directory, and resuming
-        into them would silently return the previous run's data.
+        into them would silently return the previous run's data — also
+        when this write dies, so they go before it starts.
         """
-        path = self._round_path(rnd)
-        df.write.mode("overwrite").parquet(path)
         fs = self._fs()
         for stale in self._round_dirs(fs):
             if stale > rnd:
                 fs.delete(self._jpath(f"round={stale}"), True)
+        path = self._round_path(rnd)
+        df.write.mode("overwrite").parquet(path)
         return self.spark.read.schema(PARTIAL_SCHEMA).parquet(path)
 
     def commit_root(self, rnd: int, n_items: int, build_secs: float,

@@ -1,8 +1,13 @@
-"""Probing a built sketch from a DataFrame column.
+"""Probing a built sketch, or a small sharded filter table, per row.
 
-The final sketch blob is broadcast once per job (SURVEY.md §3.2: "broadcast
-final sketch; probe via searchsorted"); each task decodes it once and probes
-whole Arrow batches vectorized. Analogous to Spark's own
+The probe target is broadcast once per job (SURVEY.md §3.2: "broadcast
+final sketch; probe via searchsorted") as one ``(directory, rows)`` value:
+a sketch blob is the one-row table ``(None, [(0, blob)])``, a sharded table
+its (row key, payload) rows and their ``ShardDirectory``. Each worker
+decodes it once into a :class:`_Table`, and one map (:func:`_probe_rows`)
+answers whole Arrow batches vectorized: each hash asks the sketch of the
+row that owns it, through the sketch's own ``contains_hashes`` /
+``count_hashes`` / ``estimate_hashes``. Analogous to Spark's own
 ``might_contain(bloom, col)`` but for every sketch kind here.
 """
 
@@ -13,76 +18,123 @@ import numpy as np
 from ..hashing import u64_hashes_from_arrow
 from .sizing import sized_input
 
-#: per-worker sketch cache: PySpark reuses python worker processes across
-#: tasks, and a broadcast's .value object is stable per process — caching the
-#: decoded sketch by its identity makes decode + probe-index build once per
-#: WORKER instead of once per task. Values hold a strong ref to the blob, so
-#: the id() key cannot be reused while the entry lives. FIFO bounded BOTH by
-#: entry count and by approximate resident bytes: with worker reuse on
-#: (spark.python.worker.reuse default), unbounded pinned blobs would hold
-#: GBs per node across a pipeline that probes several large sketches
-#: (round-5 code-review finding). A single over-budget sketch still caches
-#: (cache of one) — the per-task decode it saves is the whole point. A
-#: broadcast sharded table is ONE entry (all its rows, decoded together).
+#: per-worker cache of decoded probe targets: PySpark reuses python worker
+#: processes across tasks, and a broadcast's .value object is stable per
+#: process, so caching the decoded :class:`_Table` by its identity decodes
+#: once per WORKER, not per task. Entries hold a strong ref to the value, so
+#: the id() key cannot be reused while they live. FIFO bounded by entry
+#: count AND approximate resident bytes: with worker reuse on, unbounded
+#: pinned tables would hold GBs per node across a pipeline that probes
+#: several large sketches. One over-budget table still caches (cache of
+#: one) — the per-task decode it saves is the whole point.
 _SKETCH_CACHE: dict = {}
 _SKETCH_CACHE_MAX = 4
 _SKETCH_CACHE_MAX_BYTES = 192 << 20
 
 
-def _approx_resident_bytes(blob, sk) -> int:
-    """Blob + every numpy array on the decoded sketch (one nested level, for
-    wrappers like RsqfSketch->Filter) + headroom for the probe bitmap an RSQF
-    may build LATER while cached: one bit per point of its fingerprint
-    domain, counted only when the filter's own gate would build it."""
+def _resident_bytes(sk) -> int:
+    """Every numpy array on a decoded sketch and on its attributes (for
+    wrappers like RsqfSketch->Filter), plus the probe bitmap a filter may
+    build LATER while cached, as the filter's own gate sizes it."""
     def attrs(obj):
-        names = list(getattr(type(obj), "__slots__", ()) or ())
-        names += list(getattr(obj, "__dict__", ()) or ())
+        names = [*(getattr(type(obj), "__slots__", ()) or ()),
+                 *getattr(obj, "__dict__", ())]
         return [getattr(obj, nm, None) for nm in names]
 
-    total = len(blob)
-    for v in attrs(sk):
-        if isinstance(v, np.ndarray):
-            total += v.nbytes
-        elif v is not None and not isinstance(v, (int, float, str, bytes, bool)):
-            for w in attrs(v):
-                if isinstance(w, np.ndarray):
-                    total += w.nbytes
-    for obj in (sk, *attrs(sk)):
-        fps = getattr(obj, "_fps", None)
-        if isinstance(fps, np.ndarray) and hasattr(obj, "fingerprint_size"):
-            fs = obj.fingerprint_size()
-            bitmap = (1 << fs) >> 3 if fs <= 32 else 0
-            gate = getattr(type(obj), "_BITMAP_MAX_BYTES", 0)
-            if bitmap <= min(gate, 8 * max(fps.nbytes, 1 << 20)):
-                total += bitmap
-    return total
+    objs = (sk, *attrs(sk))
+    return (sum(v.nbytes for o in objs for v in attrs(o)
+                if isinstance(v, np.ndarray))
+            + sum(o._bitmap_nbytes() for o in objs
+                  if hasattr(o, "_bitmap_nbytes")))
 
 
-def _decode_sketch(blob):
-    """The decoded sketch of ``blob`` and its approximate resident bytes."""
-    from .. import sketches
+def _ask(sk, h: np.ndarray, as_bool: bool) -> np.ndarray:
+    """One sketch's own kernel for uint64 hashes ``h``: membership (bool)
+    or a count estimate (int64), whichever surface the kind has."""
+    if as_bool and hasattr(sk, "contains_hashes"):
+        return np.asarray(sk.contains_hashes(h), dtype=bool)
+    count = getattr(sk, "count_hashes", None) or getattr(
+        sk, "estimate_hashes", None)
+    if count is None:
+        return sk.contains_hashes(h).astype(np.int64)
+    est = np.asarray(count(h), dtype=np.int64)
+    return est > 0 if as_bool else est
 
-    sk = sketches.loads(blob)
-    return sk, _approx_resident_bytes(blob, sk)
+
+class _Table:
+    """The decoded rows of one probe target, decoded once per worker.
+
+    ``rows`` are (row key, payload) pairs of a sharded filter table routed
+    by ``directory`` (a ``sharded.ShardDirectory``); a single sketch blob
+    is the one-row table ``_Table(None, [(0, blob)])``. ``nbytes`` is the
+    approximate resident size the per-worker cache budgets.
+    """
+
+    def __init__(self, directory, rows):
+        from .. import sketches
+
+        self.directory = directory
+        self.sketches = {}
+        self.nbytes = 0
+        for key, payload in rows:
+            sk = self.sketches[key] = sketches.loads(payload)
+            self.nbytes += len(payload) + _resident_bytes(sk)
+
+    def answer(self, h: np.ndarray, as_bool: bool) -> np.ndarray:
+        """Per-hash membership (``as_bool``) or count estimate of uint64
+        hashes ``h``: each hash asks the sketch of the row that owns it, in
+        shard-local coordinates. A hash whose range has no row in the
+        table answers False / 0."""
+        d = self.directory
+        if d is None:
+            return _ask(self.sketches[0], h, as_bool)
+        out = np.zeros(h.size, dtype=bool if as_bool else np.int64)
+        rows = d.row_of(h)
+        order = np.argsort(rows, kind="stable")  # one slice per row
+        for idx in np.split(order, np.flatnonzero(np.diff(rows[order])) + 1):
+            sk = self.sketches.get(int(rows[idx[0]])) if idx.size else None
+            if sk is not None:
+                out[idx] = _ask(sk, h[idx] & d.local_mask, as_bool)
+        return out
 
 
-def _load_cached(blob, decode=_decode_sketch):
-    """``decode(blob)``'s object, decoded once per worker while cached.
-
-    ``decode`` returns (object, approximate resident bytes); the default
-    decodes one sketch blob."""
-    key = id(blob)
+def _load_cached(value) -> _Table:
+    """``_Table(*value)`` for a broadcast ``(directory, rows)`` value,
+    decoded once per worker while cached."""
+    key = id(value)
     hit = _SKETCH_CACHE.get(key)
-    if hit is not None and hit[0] is blob:
+    if hit is not None and hit[0] is value:
         return hit[1]
-    sk, cost = decode(blob)
+    table = _Table(*value)
     held = sum(e[2] for e in _SKETCH_CACHE.values())
     while _SKETCH_CACHE and (len(_SKETCH_CACHE) >= _SKETCH_CACHE_MAX
-                             or held + cost > _SKETCH_CACHE_MAX_BYTES):
+                             or held + table.nbytes > _SKETCH_CACHE_MAX_BYTES):
         _, _, freed = _SKETCH_CACHE.pop(next(iter(_SKETCH_CACHE)))
         held -= freed
-    _SKETCH_CACHE[key] = (blob, sk, cost)
-    return sk
+    _SKETCH_CACHE[key] = (value, table, table.nbytes)
+    return table
+
+
+def _probe_rows(df, hash_col: str, out_col: str, as_bool: bool, b,
+                context: str):
+    """The one probe map: ``df`` with ``out_col`` appended, each row's
+    answer from the broadcast ``(directory, rows)`` value ``b``
+    (:meth:`_Table.answer`). NULL hashes are refused with ``context``."""
+    import pyarrow as pa
+
+    out_type = "boolean" if as_bool else "long"
+    schema = ", ".join([f"{f.name} {f.dataType.simpleString()}"
+                        for f in df.schema.fields] + [f"{out_col} {out_type}"])
+
+    def run(batches):
+        table = _load_cached(b.value)
+        for batch in batches:
+            h = u64_hashes_from_arrow(batch.column(hash_col), context)
+            yield pa.record_batch(
+                batch.columns + [pa.array(table.answer(h, as_bool))],
+                names=batch.schema.names + [out_col])
+
+    return sized_input(df).mapInArrow(run, schema)
 
 
 def probe_hashes(df, blob: bytes, hash_col: str, out_col: str = "est_count",
@@ -91,8 +143,6 @@ def probe_hashes(df, blob: bytes, hash_col: str, out_col: str = "est_count",
 
     Works for rsqf (count), bloom (membership), cms (count estimate).
     """
-    import pyarrow as pa
-
     from .. import sketches
 
     if hash_col not in df.columns:
@@ -109,31 +159,6 @@ def probe_hashes(df, blob: bytes, hash_col: str, out_col: str = "est_count",
         raise TypeError(f"sketch kind {name!r} has no "
                         "hash-probe surface (contains/count/estimate)")
 
-    sc = df.sparkSession.sparkContext
-    b = sc.broadcast(blob)
-    out_type = "boolean" if as_bool else "long"
-    schema = f"{', '.join(f'{f.name} {f.dataType.simpleString()}' for f in df.schema.fields)}, {out_col} {out_type}"
-
-    def run(batches):
-        sk = _load_cached(b.value)
-        for batch in batches:
-            h = u64_hashes_from_arrow(batch.column(hash_col),
-                                      f"probe_hashes ({hash_col!r})")
-            if as_bool:
-                if hasattr(sk, "contains_hashes"):
-                    vals = sk.contains_hashes(h)
-                else:
-                    vals = sk.estimate_hashes(h) > 0
-                col = pa.array(np.asarray(vals, dtype=bool))
-            else:
-                if hasattr(sk, "count_hashes"):
-                    vals = sk.count_hashes(h)
-                elif hasattr(sk, "estimate_hashes"):
-                    vals = sk.estimate_hashes(h)
-                else:
-                    vals = sk.contains_hashes(h).astype(np.int64)
-                col = pa.array(np.asarray(vals, dtype=np.int64))
-            arrays = [batch.column(i) for i in range(batch.num_columns)] + [col]
-            yield pa.record_batch(arrays, names=list(batch.schema.names) + [out_col])
-
-    return sized_input(df).mapInArrow(run, schema)
+    b = df.sparkSession.sparkContext.broadcast((None, [(0, blob)]))
+    return _probe_rows(df, hash_col, out_col, as_bool, b,
+                       f"probe_hashes ({hash_col!r})")

@@ -34,14 +34,17 @@ they always take this plan.
 Probe / count: the plan is picked the way Spark picks a broadcast join.
 When the table's optimized-plan ``sizeInBytes`` is at most
 ``spark.sql.autoBroadcastJoinThreshold``, its (key, payload) rows are
-collected once and broadcast; each worker decodes them once per call, and
-one map stage answers the probes (the emit stage for
-:func:`probe_sharded_chunks`, whose per-task rows a JVM ``groupBy`` sums
-per row key; a per-row map for :func:`count_sharded`). Otherwise — a
-larger table, a threshold of ``-1``, or a table whose size Spark does not
-know, which is never collected — probe chunks are co-grouped with their
-row like a remove, and :func:`count_sharded` shuffles single probe rows
-to their shard.
+collected once and broadcast with the directory; each worker decodes them
+once per call into the probe module's ``_Table`` — the table a single
+sketch blob is the one-row case of — and one map stage answers the probes
+(the emit stage for :func:`probe_sharded_chunks`, whose per-task rows a
+JVM ``groupBy`` sums per row key; :func:`probe.probe_hashes`'s per-row map
+for :func:`count_sharded`). Otherwise — a larger table, a threshold of
+``-1``, or a table whose size Spark does not know, which is never
+collected — probe chunks are co-grouped with their row like a remove, and
+:func:`count_sharded` shuffles single probe rows to their shard. Every
+plan asks each row's sketch through its own ``contains_hashes`` /
+``count_hashes``.
 """
 
 from __future__ import annotations
@@ -52,7 +55,7 @@ from .. import sketches
 from ..hashing import u64_hashes_from_arrow
 from ..rsqf import Filter
 from .agg import SketchSpec
-from .probe import _decode_sketch, _load_cached
+from .probe import _Table, _load_cached, _probe_rows
 from .sizing import broadcastable, sized_input
 
 SHARDED_SCHEMA = "shard int, n_fps long, payload binary"
@@ -120,10 +123,6 @@ def _fp_mask(fs: int) -> np.uint64:
     return np.uint64((1 << fs) - 1) if fs < 64 else np.uint64(0xFFFFFFFFFFFFFFFF)
 
 
-def _local_mask(fs: int, k: int) -> np.uint64:
-    return np.uint64((1 << (fs - k)) - 1)
-
-
 def _fp_meta(spec: SketchSpec) -> tuple[int, int, int]:
     """(qbits, rbits, fingerprint_size) of the spec's filter params."""
     f = spec.make().filter
@@ -160,6 +159,12 @@ class ShardDirectory:
         self.split = self.starts.size > (1 << k)
         self.key = "key" if self.split else "shard"
         self.schema = SPLIT_SCHEMA if self.split else SHARDED_SCHEMA
+        self.local_mask = np.uint64((1 << (fs - k)) - 1)  # shard-local bits
+
+    def row_of(self, h: np.ndarray) -> np.ndarray:
+        """The directory row owning each uint64 hash's fingerprint."""
+        return np.searchsorted(self.starts, h & _fp_mask(self.fs),
+                               side="right") - 1
 
     def split_sorted(self, fps: np.ndarray) -> list[tuple[int, np.ndarray]]:
         """Split an ASCENDING fingerprint array at row boundaries."""
@@ -308,54 +313,22 @@ def _emit_chunks(df, spec_in: SketchSpec, directory: ShardDirectory,
 
 
 def _broadcast_table(filter_df, directory: ShardDirectory):
-    """The table's (row key, payload) rows, collected and broadcast, when
-    Spark would broadcast the table in a join (:func:`sizing.broadcastable`:
-    its estimate is at most ``spark.sql.autoBroadcastJoinThreshold``);
-    otherwise None, and nothing is collected."""
+    """``(directory, [(row key, payload), ...])`` of the table, collected
+    and broadcast when Spark would broadcast the table in a join
+    (:func:`sizing.broadcastable`); otherwise None, and nothing is
+    collected."""
     if not broadcastable(filter_df):
         return None
     rows = filter_df.select(directory.key, "payload").collect()
     return filter_df.sparkSession.sparkContext.broadcast(
-        [(int(key), bytes(payload)) for key, payload in rows])
-
-
-def _decode_table(rows):
-    """{row key: decoded sketch} of broadcast table rows and its resident
-    bytes: one per-worker cache entry for the whole table, so a probe
-    decodes each row once per worker, not once per task."""
-    table, cost = {}, 0
-    for key, payload in rows:
-        table[key], nbytes = _decode_sketch(payload)
-        cost += nbytes
-    return table, cost
+        (directory, [(int(key), bytes(payload)) for key, payload in rows]))
 
 
 def _hits(sk, runs, lm: np.uint64) -> int:
-    """The one hit kernel: how many of the sorted global fingerprint
-    ``runs`` of one row are in the row's decoded sketch ``sk``. No table
-    row (``sk`` None) and a drained row hit nothing."""
-    table = sk.filter._fps if sk is not None else None
-    # table.size guard: a row drained to empty by remove_sharded still
-    # exists, and min(lo, -1) would index into nothing
-    if table is None or table.size == 0:
-        return 0
-    hit = 0
-    for q in runs:  # sorted: locality-optimal
-        q = q & lm  # shard-local coordinates (stays sorted)
-        lo = np.searchsorted(table, q, side="left")
-        hit += int(((lo < table.size)
-                    & (table[np.minimum(lo, table.size - 1)] == q)).sum())
-    return hit
-
-
-def _counts(sks, h: np.ndarray, lm: np.uint64) -> np.ndarray:
-    """The one count kernel: per-hash count estimates of uint64 hashes
-    ``h`` against the decoded rows ``sks`` of their shard. A split shard's
-    rows hold disjoint ranges, so the shard's estimate is their sum."""
-    est = np.zeros(h.size, dtype=np.int64)
-    for sk in sks:
-        est += np.asarray(sk.count_hashes(h & lm), dtype=np.int64)
-    return est
+    """How many of the sorted global fingerprint ``runs`` of one row are in
+    the row's decoded sketch ``sk`` (None: no table row, no hits)."""
+    return 0 if sk is None else sum(
+        int(sk.contains_hashes(q & lm).sum()) for q in runs)
 
 
 def _merge(chunks, directory: ShardDirectory, spec: SketchSpec,
@@ -529,9 +502,9 @@ def probe_sharded_chunks(df, spec_in: SketchSpec, filter_df, n_shards,
     The probe side runs the same emitter as the build (``spec_in``
     describes how to extract probe hashes from ``df``; same modes as the
     build spec): each task sorts its partition's hashes once and cuts them
-    at the row boundaries, and each row's sorted queries are searched in
-    the row's sorted fingerprints, the cache-optimal case. The plan is
-    picked the way Spark picks a broadcast join:
+    at the row boundaries, and each row's sorted queries go to the row
+    sketch's own ``contains_hashes``. The plan is picked the way Spark
+    picks a broadcast join:
 
     - **small table** (``filter_df``'s estimated ``sizeInBytes`` at most
       ``spark.sql.autoBroadcastJoinThreshold``): its (key, payload) rows
@@ -549,8 +522,7 @@ def probe_sharded_chunks(df, spec_in: SketchSpec, filter_df, n_shards,
     from pyspark.sql import functions as F
 
     directory = _directory(n_shards, spec)
-    fs, k = directory.fs, directory.k
-    lm = _local_mask(fs, k)
+    fs, k, lm = directory.fs, directory.k, directory.local_mask
     schema = f"{directory.key} int, n_probed long, n_contained long"
 
     def stats(keys, ns, hits):
@@ -561,10 +533,10 @@ def probe_sharded_chunks(df, spec_in: SketchSpec, filter_df, n_shards,
     b = _broadcast_table(filter_df, directory)
     if b is not None:
         def probe_wave(fps):
-            table = _load_cached(b.value, _decode_table)
+            sks = _load_cached(b.value).sketches
             parts = directory.split_sorted(fps)
             return stats([i for i, _ in parts], [c.size for _, c in parts],
-                         [_hits(table.get(i), [c], lm) for i, c in parts]
+                         [_hits(sks.get(i), [c], lm) for i, c in parts]
                          ).to_batches()
 
         return (_emit(df, spec_in, directory, probe_wave, schema)
@@ -624,7 +596,7 @@ def remove_sharded(filter_df, removals_df, hash_col: str, n_shards,
         if rem_tbl.num_rows:
             f.remove_hashes(np.concatenate(
                 [_unpack_chunk(p.as_py(), shard, fs - k)
-                 for p in rem_tbl.column("payload")]) & _local_mask(fs, k))
+                 for p in rem_tbl.column("payload")]) & directory.local_mask)
         blob = sketches.RsqfSketch(
             Filter(f.qbits, f.rbits, None, f.fingerprints()),
             keep).to_blocks_bytes()
@@ -656,8 +628,9 @@ def count_sharded(probe_df, hash_col: str, filter_df, n_shards,
     counting semantics src/lib.rs:1008-1018 applied at table scale).
 
     Each probe row receives the shard-local ``count_hashes`` estimate of
-    its fingerprint-prefix shard. A split shard's rows hold disjoint
-    ranges, so the shard's estimate is the sum over its rows. Returns
+    the table row that owns its fingerprint (:meth:`probe._Table.answer`);
+    a split shard's rows hold disjoint ranges, so that row's count is the
+    shard's. Returns
     (h, est), one row per probe row, keyed by the probe hash; join back on
     ``h`` downstream. Counting multiplicity lives entirely inside one shard
     (a fingerprint's copies share its prefix), so sharded counts are
@@ -672,47 +645,28 @@ def count_sharded(probe_df, hash_col: str, filter_df, n_shards,
     table rows.
     """
     import pyarrow as pa
+    from pyspark.sql import functions as F
 
     directory = _directory(n_shards, spec)
-    fs, k = directory.fs, directory.k
-    lm = _local_mask(fs, k)
-    mask = _fp_mask(fs)
-
-    def answer(h_u64, est):
-        return pa.record_batch([pa.array(h_u64.view(np.int64), pa.int64()),
-                                pa.array(est, pa.int64())], names=["h", "est"])
-
     b = _broadcast_table(filter_df, directory)
     if b is not None:
-        def count_batches(batches):
-            by_shard: dict = {}
-            for key, sk in _load_cached(b.value, _decode_table).items():
-                by_shard.setdefault(int(directory.shards[key]), []).append(sk)
-            for batch in batches:
-                h_u64 = u64_hashes_from_arrow(batch.column(0), "count_sharded")
-                rows = np.searchsorted(directory.starts, h_u64 & mask,
-                                       side="right") - 1
-                shard = directory.shards[rows]
-                est = np.zeros(h_u64.size, dtype=np.int64)
-                for s in np.unique(shard):
-                    sel = shard == s
-                    est[sel] = _counts(by_shard.get(int(s), ()), h_u64[sel], lm)
-                yield answer(h_u64, est)
-
-        return sized_input(probe_df.select(hash_col)).mapInArrow(
-            count_batches, "h long, est long")
+        return _probe_rows(
+            probe_df.select(F.col(hash_col).cast("long").alias("h")),
+            "h", "est", False, b, "count_sharded")
 
     def count_group(key, probes_tbl, filt_tbl):
         # a NULL hash routes to the NULL shard, whose filter side is always
         # empty: refuse it via the shared helper (the chunk emitter refuses
         # NULLs in SketchSpec.extract) instead of laundering it through NaN
-        h_u64 = u64_hashes_from_arrow(probes_tbl.column("h"), "count_sharded")
-        sks = ([sketches.loads(p.as_py()) for p in filt_tbl.column("payload")]
-               if probes_tbl.num_rows else [])
-        return pa.Table.from_batches([answer(h_u64, _counts(sks, h_u64, lm))])
+        h = u64_hashes_from_arrow(probes_tbl.column("h"), "count_sharded")
+        table = _Table(directory, zip(
+            filt_tbl.column(directory.key).to_pylist(),
+            filt_tbl.column("payload").to_pylist()) if h.size else ())
+        return pa.table({"h": pa.array(h.view(np.int64), pa.int64()),
+                         "est": pa.array(table.answer(h, False), pa.int64())})
 
-    return (_route_by_shard(probe_df, hash_col, fs, k).groupBy("shard")
-            .cogroup(filter_df.groupBy("shard"))
+    return (_route_by_shard(probe_df, hash_col, directory.fs, directory.k)
+            .groupBy("shard").cogroup(filter_df.groupBy("shard"))
             .applyInArrow(count_group, "h long, est long"))
 
 
@@ -728,27 +682,19 @@ def shrink_sharded(filter_df):
     """
     import pyarrow as pa
 
+    def shrink(payload: bytes) -> bytes:
+        sk = sketches.loads(payload)
+        while True:
+            q0 = sk.filter.qbits
+            sk.filter.shrink_to_fit()
+            if sk.filter.qbits == q0:
+                return sk.to_blocks_bytes()
+
     def shrink_rows(batches):
         for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            cols = {n: [] for n in batch.schema.names}
-            payload_idx = batch.schema.get_field_index("payload")
-            for i in range(batch.num_rows):
-                sk = sketches.loads(batch.column(payload_idx)[i].as_py())
-                while True:
-                    q0 = sk.filter.qbits
-                    sk.filter.shrink_to_fit()
-                    if sk.filter.qbits == q0:
-                        break
-                for j, name in enumerate(batch.schema.names):
-                    cols[name].append(sk.to_blocks_bytes() if j == payload_idx
-                                      else batch.column(j)[i].as_py())
-            yield pa.record_batch(
-                [pa.array(cols[f.name],
-                          pa.binary() if f.name == "payload" else f.type)
-                 for f in batch.schema],
-                names=list(batch.schema.names))
+            i = batch.schema.get_field_index("payload")
+            yield batch.set_column(i, "payload", pa.array(
+                [shrink(p) for p in batch.column(i).to_pylist()], pa.binary()))
 
     schema = ", ".join(f"{f.name} {f.dataType.simpleString()}"
                        for f in filter_df.schema.fields)
@@ -766,12 +712,9 @@ def sharded_to_single(filter_df, spec: SketchSpec, n_shards=64) -> bytes:
     k = _directory(n_shards, spec).k
     qbits, rbits, fs = _fp_meta(spec)
     keep = getattr(spec.make(), "keep_duplicates", True)
-    rows = sorted(filter_df.collect(), key=lambda r: r["shard"])
-    parts = []
-    for r in rows:
-        local = sketches.loads(bytes(r["payload"])).filter.fingerprints()
-        base = np.uint64(int(r["shard"])) << np.uint64(fs - k)
-        parts.append(local + base)
-    fps = (np.concatenate(parts) if parts else np.empty(0, dtype=np.uint64))
+    parts = [sketches.loads(bytes(r["payload"])).filter.fingerprints()
+             + (np.uint64(r["shard"]) << np.uint64(fs - k))
+             for r in sorted(filter_df.collect(), key=lambda r: r["shard"])]
+    fps = np.concatenate(parts or [np.empty(0, dtype=np.uint64)])
     fps.sort(kind="stable")
     return sketches.RsqfSketch(Filter(qbits, rbits, None, fps), keep).to_bytes()

@@ -443,17 +443,9 @@ def _ngram_bucket_count(spark, df: DataFrame) -> int:
     consumer stage, measured; a corpus-sized rule keeps buckets in the
     tens-of-MB range at any scale). The explode is a small constant factor
     of the input text bytes, so input bytes / 8 MB, clamped to
-    [4, 4 * defaultParallelism], is used; ``spark.qfilter.ngram.buckets``
-    pins it outright, and unknown input sizes (non-file sources) fall back
-    to defaultParallelism.
+    [4, 4 * defaultParallelism], is used; unknown input sizes (non-file
+    sources) fall back to defaultParallelism.
     """
-    pinned = spark.conf.get("spark.qfilter.ngram.buckets", None)
-    if pinned:
-        n = int(pinned)
-        if n < 1:
-            raise ValueError(
-                f"spark.qfilter.ngram.buckets = {pinned!r}: must be >= 1")
-        return n
     par = spark.sparkContext.defaultParallelism
     try:
         from .. import fsutil

@@ -107,7 +107,7 @@ class _session_confs:
                 self.spark.conf.set(k, v)
 
 
-def _few_shuffle_partitions(spark: SparkSession, n: int | None = None):
+def _few_shuffle_partitions(spark: SparkSession, n: int = 2):
     """Cap spark.sql.shuffle.partitions for a streaming query, and pin the
     session timezone to UTC so event-time window arithmetic is portable.
 
@@ -120,10 +120,8 @@ def _few_shuffle_partitions(spark: SparkSession, n: int | None = None):
     types / <= 30 windows — more state partitions than distinct keys is
     pure per-trigger task overhead at any cluster size; measured 8 -> 2
     cuts the keyed gate row ~30%). Production streams with real key
-    cardinality should set ``spark.qfilter.stream.statePartitions``.
+    cardinality should pass a larger ``n``.
     """
-    if n is None:
-        n = int(spark.conf.get("spark.qfilter.stream.statePartitions", "2"))
     return _session_confs(spark, **{"spark.sql.shuffle.partitions": n,
                                     "spark.sql.session.timeZone": "UTC"})
 

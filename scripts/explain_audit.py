@@ -12,6 +12,8 @@ Asserts the properties the engine is designed around (SURVEY.md §4.2):
   and no cogroup; with ``spark.sql.autoBroadcastJoinThreshold=-1`` it
   keeps the co-partitioned cogroup (counted from the event log, per job
   group)
+- ``probe_hashes`` over a sketch blob and ``count_sharded`` over a small
+  table are the same per-row map: one MapInArrow, no Exchange
 
 Usage: python scripts/explain_audit.py [sf_dir]
 Prints one PASS/FAIL line per check plus the formatted plans to stderr.
@@ -156,6 +158,13 @@ def main():
           "cogroup", cogrouped["cogroup"] and cogrouped["python_stages"] == 2,
           f"{cogrouped['python_stages']} Python stages")
 
+    # 7. one per-row probe map for a sketch blob and a broadcast table
+    for name, tree in probe_map_plans(spark, tempfile.mkdtemp()).items():
+        print(tree, file=sys.stderr)
+        check(f"{name}: one MapInArrow, no Exchange",
+              tree.count("MapInArrow") == 1 and "Exchange" not in tree,
+              "the broadcast per-row probe map")
+
     spark.stop()
     print(f"{failures} failures")
     sys.exit(1 if failures else 0)
@@ -235,6 +244,35 @@ def sharded_probe_shapes(spark, logs: str, work: str) -> dict:
         shape.update(python_stages=len(py),
                      python_tasks=sum(s.tasks for s in py))
     return shapes
+
+
+def probe_map_plans(spark, work: str) -> dict:
+    """Formatted operator trees of ``probe_hashes`` over a sketch blob and
+    of ``count_sharded`` over a small written 8-shard table (the broadcast
+    plan under the session's default threshold)."""
+    from pyspark.sql import functions as F
+
+    from qfilter_spark import sources
+    from qfilter_spark.dist import SketchSpec, build_sketch
+    from qfilter_spark.dist.probe import probe_hashes
+    from qfilter_spark.dist.sharded import build_sharded_filter, count_sharded
+
+    spec = SketchSpec("rsqf", dict(capacity=8192, fp_rate=0.01),
+                      "hash_col", "h")
+    hashes = spark.range(0, 6000, numPartitions=4).select(
+        F.xxhash64("id").alias("h"))
+    path = os.path.join(work, "count_table")
+    sources.write_filter_table(
+        build_sharded_filter(hashes, spec, n_shards=8), path)
+    table = sources.read_filter_table(spark, path)
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+        "formatted")
+    frames = {"probe_hashes": probe_hashes(hashes, build_sketch(hashes, spec),
+                                           "h"),
+              "broadcast count_sharded": count_sharded(hashes, "h", table, 8,
+                                                       spec)}
+    return {name: df._jdf.queryExecution().explainString(mode)
+            .split("\n\n")[0] for name, df in frames.items()}
 
 
 if __name__ == "__main__":

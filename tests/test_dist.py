@@ -334,6 +334,30 @@ def test_reused_lineage_dir_invalidates_stale_rounds(spark, corpus_df,
     assert not os.path.exists(os.path.join(ckpt, f"round={old_rounds[-1]}"))
 
 
+def test_killed_round0_write_cannot_resume_previous_run(spark, corpus_df,
+                                                       unsized_inputs,
+                                                       tmp_path):
+    """A new run whose round-0 write dies in its tasks, in a reused
+    directory, leaves no round of the previous run behind: resume finds no
+    complete round instead of returning the previous run's blob."""
+    from pyspark.sql import functions as F
+
+    ckpt = str(tmp_path / "lineage_killed")
+    spec = SketchSpec("hll", dict(p=10), "hash_col", "h")
+    parts = partial_sketches(
+        corpus_df.select(F.xxhash64("doc_id").alias("h")), spec)
+    lineage = MergeLineage(spark, ckpt)
+    tree_merge(parts, fan_in=2, lineage=lineage)
+    assert len(lineage.complete_rounds()) >= 3
+    killed = parts.withColumn(
+        "payload", F.raise_error(F.lit("task killed")).cast("binary"))
+    with pytest.raises(Exception, match="task killed"):
+        tree_merge(killed, fan_in=2, lineage=lineage)
+    assert lineage.complete_rounds() == []
+    with pytest.raises(FileNotFoundError):
+        resume_tree_merge(spark, ckpt)
+
+
 # ---------------------------------------------------------------------------
 # probe_hashes failure modes (round-5 review)
 # ---------------------------------------------------------------------------
@@ -398,10 +422,11 @@ def test_sketch_cache_bounded_by_bytes(monkeypatch):
         return sk.to_bytes()
 
     monkeypatch.setattr(probe_mod, "_SKETCH_CACHE", {})
-    b1, b2, b3 = blob_of(1), blob_of(2), blob_of(3)
+    # a blob is the one-row table of the broadcast (directory, rows) value
+    b1, b2, b3 = ((None, [(0, blob_of(seed))]) for seed in (1, 2, 3))
     probe_mod._load_cached(b1)
     one_cost = next(iter(probe_mod._SKETCH_CACHE.values()))[2]
-    assert one_cost > len(b1)            # counts decoded arrays, not just blob
+    assert one_cost > len(b1[1][0][1])  # counts decoded arrays, not just blob
     # budget for about two entries: the third insert must evict the first
     monkeypatch.setattr(probe_mod, "_SKETCH_CACHE_MAX_BYTES",
                         int(one_cost * 2.5))

@@ -5,6 +5,7 @@ both plans on the same table with ``spark.sql.autoBroadcastJoinThreshold``
 (the session's default, then ``-1``) and needs identical answers."""
 
 import contextlib
+from collections import Counter
 import json
 import os
 import subprocess
@@ -16,6 +17,7 @@ import pytest
 from qfilter_spark import sketches, sources
 from qfilter_spark.dist import SketchSpec
 from qfilter_spark.dist import probe as probe_mod
+from qfilter_spark.dist.probe import probe_hashes
 from qfilter_spark.dist import sharded as S
 from qfilter_spark.dist.sizing import plan_bytes
 
@@ -23,7 +25,8 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 THRESHOLD = "spark.sql.autoBroadcastJoinThreshold"
 N_SHARDS = 8
 SPEC = SketchSpec("rsqf", dict(capacity=4096, fp_rate=0.01), "hash_col", "h")
-_, _, FS = S._fp_meta(SPEC)
+QBITS, _, FS = S._fp_meta(SPEC)
+FP_MASK = (1 << FS) - 1
 SHIFT = FS - 3
 
 
@@ -43,6 +46,7 @@ def _shard_of(h):
 
 
 PRESENT = np.concatenate([_hashes(1, 1500), _hashes(2, 600, shard=5)])
+GROWN = _hashes(6, 400, shard=5)  # overfills shard 5's local quotient
 ABSENT = _hashes(3, 400)
 
 
@@ -87,8 +91,8 @@ def _written(spark, table, path, route=N_SHARDS):
 @pytest.fixture(scope="module")
 def tables(spark, tmp_path_factory):
     """name -> (written table, routing): uniform, split (shard 5 cut into
-    several rows), drained (shard 5's rows at n_fps = 0) and gap (no row
-    for shard 6)."""
+    several rows), drained (shard 5's rows at n_fps = 0), gap (no row for
+    shard 6) and grown (shard 5's row grew its local qbits)."""
     base = tmp_path_factory.mktemp("tables")
     present = _df(spark, PRESENT)
     uniform = _written(spark, S.build_sharded_filter(present, SPEC, N_SHARDS),
@@ -106,10 +110,15 @@ def tables(spark, tmp_path_factory):
     gap = _written(spark, S.build_sharded_filter(
         _df(spark, PRESENT[_shard_of(PRESENT) != 6]), SPEC, N_SHARDS),
         str(base / "gap"))
+    grown = _written(spark, S.build_sharded_filter(
+        _df(spark, np.concatenate([PRESENT, GROWN])), SPEC, N_SHARDS),
+        str(base / "grown"))
     out = dict(uniform=(uniform, N_SHARDS), split=(split, directory),
                drained=(drained, N_SHARDS),
                drained_split=(drained_split, directory),
-               gap=(gap, N_SHARDS))
+               gap=(gap, N_SHARDS), grown=(grown, N_SHARDS))
+    assert any(sketches.loads(r["payload"]).filter.qbits > QBITS - 3
+               for r in grown.collect())
     assert any(r["n_fps"] == 0 for r in drained.collect())
     assert 6 not in {r["shard"] for r in gap.collect()}
     yield out
@@ -147,6 +156,52 @@ def test_probe_and_count_paths_agree(spark, tables, table, probe):
                           ("drained_split", "hot")):
         assert not any(r["n_contained"] for r in small)
         assert not any(r["est"] for r in small_est)
+
+
+def _model(table):
+    """Counter of the fingerprint multiset each fixture table holds."""
+    fps = Counter(int(h) & FP_MASK for h in PRESENT)
+    if table == "drained":
+        fps -= Counter(int(h) & FP_MASK
+                       for h in PRESENT[_shard_of(PRESENT) == 5])
+    if table == "gap":
+        fps = Counter(int(h) & FP_MASK
+                      for h in PRESENT[_shard_of(PRESENT) != 6])
+    if table == "grown":
+        fps += Counter(int(h) & FP_MASK for h in GROWN)
+    return fps
+
+
+@pytest.mark.parametrize("table",
+                         ["uniform", "split", "drained", "gap", "grown"])
+def test_blob_and_table_probes_answer_the_model(spark, tables, table):
+    """One fingerprint multiset, four probes: ``probe_hashes`` over the
+    table collapsed to one blob (counts and ``as_bool``), ``count_sharded``
+    on both plans and the chunk probe on both plans all answer the Counter
+    model of the table."""
+    filt, route = tables[table]
+    model = _model(table)
+    hashes = np.concatenate([PROBES["mixed"], PROBES["hot"], PROBES["gap"],
+                             GROWN[::4], PRESENT[:40]])  # some probed twice
+    signed = hashes.view(np.int64).tolist()
+    want = sorted((h, model[h & FP_MASK]) for h in signed)
+    df = _df(spark, hashes)
+    blob = S.sharded_to_single(filt, SPEC, route)
+    counts = probe_hashes(df, blob, "h").collect()
+    members = probe_hashes(df, blob, "h", as_bool=True).collect()
+    assert sorted((r["h"], r["est_count"]) for r in counts) == want
+    assert sorted((r["h"], r["est_count"]) for r in members) == sorted(
+        (h, n > 0) for h, n in want)
+    small, large = _both(spark, lambda: S.count_sharded(
+        df, "h", filt, route, SPEC))
+    assert [tuple(r) for r in small] == [tuple(r) for r in large] == want
+    rows = S._directory(route, SPEC).row_of(hashes)
+    hit = np.array([model[h & FP_MASK] > 0 for h in signed])
+    want_rows = sorted((int(k), int((rows == k).sum()),
+                        int(hit[rows == k].sum())) for k in np.unique(rows))
+    small, large = _both(spark, lambda: S.probe_sharded_chunks(
+        df, SPEC, filt, route, SPEC))
+    assert [tuple(r) for r in small] == [tuple(r) for r in large] == want_rows
 
 
 def test_split_counts_sum_over_the_shard_rows(spark, tables):
@@ -211,10 +266,12 @@ def test_decode_once_per_worker(spark, tables, monkeypatch):
     """Two probes of one broadcast table decode each row once (one cache
     entry for the whole table); a second table evicts the first when the
     byte budget demands it."""
+    directory = S._directory(N_SHARDS, SPEC)
     rows = [(int(r["shard"]), bytes(r["payload"]))
             for r in tables["uniform"][0].collect()]
     other = [(int(r["shard"]), bytes(r["payload"]))
              for r in tables["gap"][0].collect()]
+    value, other_value = (directory, rows), (directory, other)
     decoded = []
     loads = sketches.loads
 
@@ -224,15 +281,16 @@ def test_decode_once_per_worker(spark, tables, monkeypatch):
 
     monkeypatch.setattr(sketches, "loads", counting_loads)
     monkeypatch.setattr(probe_mod, "_SKETCH_CACHE", {})
-    first = probe_mod._load_cached(rows, S._decode_table)
-    assert probe_mod._load_cached(rows, S._decode_table) is first
-    assert len(decoded) == len(rows) and sorted(first) == [k for k, _ in rows]
+    first = probe_mod._load_cached(value)
+    assert probe_mod._load_cached(value) is first
+    assert len(decoded) == len(rows)
+    assert sorted(first.sketches) == [k for k, _ in rows]
     (_, _, cost), = probe_mod._SKETCH_CACHE.values()
     assert cost > sum(len(p) for _, p in rows)
     # room for one table: the second evicts the first
     monkeypatch.setattr(probe_mod, "_SKETCH_CACHE_MAX_BYTES", int(cost * 1.5))
-    probe_mod._load_cached(other, S._decode_table)
-    assert list(probe_mod._SKETCH_CACHE) == [id(other)]
+    probe_mod._load_cached(other_value)
+    assert list(probe_mod._SKETCH_CACHE) == [id(other_value)]
     assert len(decoded) == len(rows) + len(other)
 
 
