@@ -1,4 +1,4 @@
-"""Vectorized RSQF physical block layout (encode / decode / navigate).
+"""Vectorized RSQF physical block layout (encode / decode).
 
 Reproduces the reference's at-rest layout (/root/reference/src/lib.rs:468-486,
 570-572): an array of 64-slot blocks, each
@@ -50,8 +50,9 @@ _U64 = np.uint64
 #: threads (each thread's arena is bounded by the same caps).
 _SCRATCH = threading.local()
 _SCRATCH_MAX_BYTES = 64 << 20    # per-buffer cap; larger requests bypass
-_SCRATCH_TOTAL_BYTES = 192 << 20  # per-thread arena budget (matches the
-                                  # probe-cache precedent in dist/probe)
+_SCRATCH_TOTAL_BYTES = 192 << 20  # per-thread arena budget: a reused
+                                  # worker pins at most three buffers at
+                                  # the per-buffer cap
 
 
 def _buf(name: str, count: int, dtype, zero: bool = False) -> np.ndarray:
@@ -96,30 +97,6 @@ def _iota(n: int) -> np.ndarray:
         store = _SCRATCH.iota = np.arange(
             max(n, 1 << 12), dtype=np.int64)
     return store[:n]
-
-
-def _placement(buckets: np.ndarray, counts: np.ndarray, n_slots: int) -> np.ndarray:
-    """Start slot of each run (unwrapped; values may exceed n_slots-1).
-
-    ``buckets`` strictly increasing, ``counts >= 1``, ``counts.sum() <= n_slots``.
-    """
-    k = buckets.size
-    if k == 0:
-        return np.empty(0, dtype=np.int64)
-    csum = np.concatenate([[0], np.cumsum(counts)])  # exclusive prefix
-    # linear pass: start_i = max(bucket_i, start_{i-1} + count_{i-1})
-    t = np.maximum.accumulate(buckets - csum[:-1])
-    starts = t + csum[:-1]
-    ends = starts + counts - 1
-    if ends[-1] < n_slots:
-        return starts
-    # wrapped: two-lap doubling; lap-2 placement is the circular fixed point
-    b2 = np.concatenate([buckets, buckets + n_slots])
-    c2 = np.concatenate([counts, counts])
-    csum2 = np.concatenate([[0], np.cumsum(c2)])
-    t2 = np.maximum.accumulate(b2 - csum2[:-1])
-    s2 = t2 + csum2[:-1]
-    return s2[k:] - n_slots  # unwrapped start in [bucket_i, bucket_i + 2*n_slots)
 
 
 def _pack_rems(rem_by_slot: np.ndarray, rbits: int) -> np.ndarray:
@@ -190,19 +167,20 @@ def _gcd(a: int, b: int) -> int:
 def encode(fps: np.ndarray, qbits: int, rbits: int) -> bytes:
     """Build the blocked byte layout from a sorted fingerprint multiset.
 
-    Placement runs as a PER-ITEM recurrence instead of per-group arrays:
-    with group_first(i) = index of the first item of item i's quotient
-    group, the unwrapped slot of item i is
+    Placement is a PER-ITEM recurrence: run j starts at
+    ``max(bucket_j, end_{j-1} + 1)``, so with csum_j the number of items
+    in runs before run j, start_j = csum_j + running_max(bucket - csum)(j),
+    and the unwrapped slot of item i (quotient quot_i) is
 
-        pos(i) = i + running_max(quot - group_first)(i)
+        pos(i) = i + running_max(quot - i)(i)
 
-    (the per-group ``max(bucket - csum_prefix)`` of :func:`_placement`,
-    evaluated per item — constant within a group, so the running maxima
-    agree). pos is strictly increasing, so run ends are just the positions
-    of group-last items and the per-block offset byte needs one
-    searchsorted over quot, not a doubled running-max array. Wrap-around
-    re-runs the same recurrence on the doubled domain (two-lap fixed
-    point, exactly as :func:`_placement`).
+    — within a group quot - i is largest at the group's first item, where
+    it equals bucket - csum. pos is strictly increasing, so run ends are
+    just the positions of group-last items and the per-block offset byte
+    needs one searchsorted over quot. Wrap-around (a run pushed past the
+    last slot continues at slot 0) is the second lap of the same
+    recurrence over the bucket sequence placed twice, whose lap-1 carry is
+    a scalar.
     """
     assert qbits >= 6, "block layout requires >= 64 slots"
     n_slots = 1 << qbits
@@ -221,16 +199,16 @@ def encode(fps: np.ndarray, qbits: int, rbits: int) -> bytes:
         new_group[0] = True
         np.not_equal(quot[1:], quot[:-1], out=new_group[1:])
         # within a group, quot - idx is maximal at the group's FIRST item
-        # (where it equals bucket - csum_prefix, the _placement term), so
-        # the per-item running max needs no group_first bookkeeping at all
+        # (where it equals bucket - csum, the run-start term), so the
+        # per-item running max needs no group_first bookkeeping at all
         t = _buf("enc_t", n, np.int64)
         np.subtract(quot, idx, out=t)
         np.maximum.accumulate(t, out=t)
-        # wrap-around: on the doubled domain (see _placement), lap-2's
-        # running max is max(t[i], t[-1] - (n_slots - n)) — the carry from
-        # lap 1 is a SCALAR, so the circular fixed point needs no doubled
-        # arrays: one np.maximum with the carry c covers both cases
-        # (unwrapped iff c <= 0, where max(t, c) == t since t >= 0)
+        # wrap-around: on the doubled domain (buckets, then buckets +
+        # n_slots), lap-2's running max is max(t[i], t[-1] - (n_slots - n))
+        # — the carry from lap 1 is a SCALAR, so the circular fixed point
+        # needs no doubled arrays: one np.maximum with the carry c covers
+        # both cases (unwrapped iff c <= 0, where max(t, c) == t since t >= 0)
         c = int(t[-1]) - (n_slots - n)
         if c > 0:
             np.maximum(t, c, out=t)
@@ -359,19 +337,3 @@ def decode(payload: bytes, qbits: int, rbits: int, n_items: int) -> np.ndarray:
     assert fps.size == n_items, f"decoded {fps.size} fingerprints, header says {n_items}"
     return fps
 
-
-def probe(payload: bytes, qbits: int, rbits: int, n_items: int,
-          hashes: np.ndarray) -> np.ndarray:
-    """Count matching fingerprints per query hash, through the block structure.
-
-    Rank/select navigation (vectorized): decode run boundaries once, then
-    binary-search each query's (quotient, remainder) — equivalent to the
-    reference's contains/count run scan (src/lib.rs:977-1018) because runs
-    are remainder-sorted and globally ordered by quotient.
-    """
-    fps = decode(payload, qbits, rbits, n_items)
-    mask = _U64((1 << (qbits + rbits)) - 1) if qbits + rbits < 64 else _U64(0xFFFFFFFFFFFFFFFF)
-    q = np.asarray(hashes, dtype=np.uint64) & mask
-    lo = np.searchsorted(fps, q, side="left")
-    hi = np.searchsorted(fps, q, side="right")
-    return (hi - lo).astype(np.int64)

@@ -34,9 +34,10 @@ they always take this plan.
 Probe / count: the plan is picked the way Spark picks a broadcast join.
 When the table's optimized-plan ``sizeInBytes`` is at most
 ``spark.sql.autoBroadcastJoinThreshold``, its (key, payload) rows are
-collected once and broadcast with the directory; each worker decodes them
-once per call into the probe module's ``_Table`` — the table a single
-sketch blob is the one-row case of — and one map stage answers the probes
+collected once and broadcast with the directory as the probe module's
+``_Table`` — the table a single sketch blob is the one-row case of — which
+decodes a row the first time a worker's probe reaches it and keeps it while
+the broadcast lives; one map stage answers the probes
 (the emit stage for :func:`probe_sharded_chunks`, whose per-task rows a
 JVM ``groupBy`` sums per row key; :func:`probe.probe_hashes`'s per-row map
 for :func:`count_sharded`). Otherwise — a larger table, a threshold of
@@ -55,7 +56,7 @@ from .. import sketches
 from ..hashing import u64_hashes_from_arrow
 from ..rsqf import Filter
 from .agg import SketchSpec
-from .probe import _Table, _load_cached, _probe_rows
+from .probe import _Table, _probe_rows
 from .sizing import broadcastable, sized_input
 
 SHARDED_SCHEMA = "shard int, n_fps long, payload binary"
@@ -313,15 +314,14 @@ def _emit_chunks(df, spec_in: SketchSpec, directory: ShardDirectory,
 
 
 def _broadcast_table(filter_df, directory: ShardDirectory):
-    """``(directory, [(row key, payload), ...])`` of the table, collected
-    and broadcast when Spark would broadcast the table in a join
-    (:func:`sizing.broadcastable`); otherwise None, and nothing is
-    collected."""
+    """The table's ``probe._Table``, collected and broadcast when Spark
+    would broadcast the table in a join (:func:`sizing.broadcastable`);
+    otherwise None, and nothing is collected."""
     if not broadcastable(filter_df):
         return None
     rows = filter_df.select(directory.key, "payload").collect()
-    return filter_df.sparkSession.sparkContext.broadcast(
-        (directory, [(int(key), bytes(payload)) for key, payload in rows]))
+    return filter_df.sparkSession.sparkContext.broadcast(_Table(
+        directory, [(int(key), bytes(payload)) for key, payload in rows]))
 
 
 def _hits(sk, runs, lm: np.uint64) -> int:
@@ -508,8 +508,9 @@ def probe_sharded_chunks(df, spec_in: SketchSpec, filter_df, n_shards,
 
     - **small table** (``filter_df``'s estimated ``sizeInBytes`` at most
       ``spark.sql.autoBroadcastJoinThreshold``): its (key, payload) rows
-      are collected and broadcast, each worker decodes them once, and the
-      emit stage probes its sorted waves in place. One Python map stage;
+      are collected and broadcast, each worker decodes a row the first
+      time a wave reaches it, and the emit stage probes its sorted waves
+      in place. One Python map stage;
       a JVM ``groupBy`` sums the per-task rows per row key.
     - **otherwise** (a larger table, a threshold of ``-1``, or a table
       whose size Spark does not know, which is never collected): the
@@ -533,10 +534,10 @@ def probe_sharded_chunks(df, spec_in: SketchSpec, filter_df, n_shards,
     b = _broadcast_table(filter_df, directory)
     if b is not None:
         def probe_wave(fps):
-            sks = _load_cached(b.value).sketches
+            table = b.value
             parts = directory.split_sorted(fps)
             return stats([i for i, _ in parts], [c.size for _, c in parts],
-                         [_hits(sks.get(i), [c], lm) for i, c in parts]
+                         [_hits(table.sketch(i), [c], lm) for i, c in parts]
                          ).to_batches()
 
         return (_emit(df, spec_in, directory, probe_wave, schema)
@@ -661,7 +662,7 @@ def count_sharded(probe_df, hash_col: str, filter_df, n_shards,
         h = u64_hashes_from_arrow(probes_tbl.column("h"), "count_sharded")
         table = _Table(directory, zip(
             filt_tbl.column(directory.key).to_pylist(),
-            filt_tbl.column("payload").to_pylist()) if h.size else ())
+            filt_tbl.column("payload").to_pylist()))
         return pa.table({"h": pa.array(h.view(np.int64), pa.int64()),
                          "est": pa.array(table.answer(h, False), pa.int64())})
 

@@ -222,12 +222,3 @@ def sample_frames(df: DataFrame, media_col: str = "media", every: int = 2,
                 names=names + ["frame_idx", "frame"])
 
     return base.mapInArrow(run, schema)
-
-
-def media_stats(df: DataFrame, media_col: str = "media") -> DataFrame:
-    """Aggregate payload stats (exact; SQL-oracle-checkable)."""
-    return df.select(
-        F.count("*").alias("n_media"),
-        F.sum(F.col(f"{media_col}.n_bytes")).alias("total_bytes"),
-        F.max(F.col(f"{media_col}.n_bytes")).alias("max_bytes"),
-    )

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from ..hashing import xxh64_u64_chain, xxh64_u64_chain_sliding
+from ..hashing import xxh64_u64_chain_sliding
 
 
 def flat_from_arrow(list_array) -> tuple[np.ndarray, np.ndarray]:
@@ -60,17 +60,3 @@ def ngram_hash_rows(df, col: str = "tokens", n: int = 3):
                                   names=["h"])
 
     return df.select(col).mapInArrow(run, "h long")
-
-
-def ngram_hashes_per_doc(flat: np.ndarray, offsets: np.ndarray, n: int
-                         ) -> tuple[np.ndarray, np.ndarray]:
-    """Like :func:`ngram_hashes` but also returns the doc index per hash."""
-    total = flat.size
-    if total < n:
-        return np.empty(0, dtype=np.uint64), np.empty(0, dtype=np.int64)
-    n_windows = total - n + 1
-    hashes = xxh64_u64_chain_sliding(flat, n)  # fused: one lane pass
-    lengths = np.diff(offsets)
-    doc_of = np.repeat(np.arange(lengths.size, dtype=np.int64), lengths)
-    valid = doc_of[:n_windows] == doc_of[n - 1:]
-    return hashes[valid], doc_of[:n_windows][valid]

@@ -16,7 +16,7 @@ Python in the hot path.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, functions as F
 
 
 def token_hash_col(text_col: str = "text") -> Column:
@@ -62,14 +62,3 @@ def winnow_col(grams_col: str = "grams", w: int = 4) -> Column:
         f"WHEN size({grams_col}) < {w} THEN array(array_min({grams_col})) "
         f"ELSE array_distinct(transform(arrays_zip({zips}), "
         f"p -> least({mins}))) END")
-
-
-def winnow_fingerprints(df: DataFrame, text_col: str = "text",
-                        id_col: str = "doc_id", n: int = 3, w: int = 4,
-                        out_col: str = "winnowed") -> DataFrame:
-    """(id, winnowed array<long>): the document's winnowing fingerprints."""
-    return (df.select(id_col, text_col)
-            .withColumn("__tk", token_hash_col(text_col))
-            .withColumn("__grams", gram_hash_col("__tk", n))
-            .withColumn(out_col, winnow_col("__grams", w))
-            .drop("__tk", "__grams"))

@@ -37,10 +37,6 @@ _P5 = np.uint64(0x27D4EB2F165667C5)
 _M64 = (1 << 64) - 1
 
 
-def _rotl(x: np.ndarray, n: int) -> np.ndarray:
-    return (x << np.uint64(n)) | (x >> np.uint64(64 - n))
-
-
 _CHUNK = 65536  # keep working set L2-resident: ~10x on this host, where
                 # parallel first-touch of large fresh pages is pathological
 

@@ -187,18 +187,6 @@ class Filter:
         self._probe_words = None
         self._probe_seen = 0
 
-    def _bitmap_nbytes(self) -> int:
-        """Bytes of the probe bitmap this filter would build, 0 when the gate
-        refuses it: the one gate decision, read by :meth:`_probe_bitmap` and
-        by caches that budget a decoded filter's resident bytes."""
-        fs = self.fingerprint_size()
-        if fs > 32:
-            return 0
-        nbytes = max((1 << fs) >> 6, 1) * 8
-        if nbytes > self._BITMAP_MAX_BYTES or nbytes > 8 * max(self._fps.nbytes, 1 << 20):
-            return 0
-        return nbytes
-
     def _probe_bitmap(self) -> np.ndarray | None:
         """Exact membership bitmap over the 2^fs fingerprint domain, or None.
 
@@ -212,11 +200,15 @@ class Filter:
         """
         if self._probe_words is not None:
             return self._probe_words
-        if not self._bitmap_nbytes():
-            return None
         fs = self.fingerprint_size()
+        if fs > 32:
+            return None
         fps = self._fps
-        words = np.zeros(max((1 << fs) >> 6, 1), dtype=np.uint64)
+        n_words = max((1 << fs) >> 6, 1)
+        if n_words * 8 > min(self._BITMAP_MAX_BYTES,
+                             8 * max(fps.nbytes, 1 << 20)):
+            return None
+        words = np.zeros(n_words, dtype=np.uint64)
         # chunked like every other kernel here: full-size temporaries under
         # concurrent workers hit this host's parallel first-touch pathology
         ch = self._PROBE_CHUNK

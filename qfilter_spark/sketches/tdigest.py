@@ -52,10 +52,6 @@ class TDigest:
         if sum(b.size for b in self._buf_v) > 16 * self.compression:
             self._flush()
 
-    def _k1(self, q: np.ndarray) -> np.ndarray:
-        return (self.compression / (2.0 * np.pi)) * np.arcsin(
-            np.clip(2.0 * q - 1.0, -1.0, 1.0))
-
     def _flush(self) -> None:
         if not self._buf_v:
             # means/weights came from a previous flush; re-running the

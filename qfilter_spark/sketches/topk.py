@@ -80,16 +80,6 @@ class TopKSketch:
         hit = self.keys[idx] == h
         return np.where(hit, self.counts[idx], 0).astype(np.int64)
 
-    def heavy_hitters(self, min_count: int) -> tuple[np.ndarray, np.ndarray]:
-        """(keys, est) for all tracked items with est + err >= min_count.
-
-        Complete: contains every item with true count >= min_count whenever
-        min_count > err (MG guarantee).
-        """
-        ub = self.counts + self.err
-        sel = ub >= min_count
-        return self.keys[sel], self.counts[sel]
-
     def merge(self, other: "TopKSketch") -> None:
         if self.k != other.k:
             raise ValueError("incompatible top-k capacity")

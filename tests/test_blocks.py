@@ -1,4 +1,4 @@
-"""Physical block layout: encode/decode roundtrip, placement, offsets, probe.
+"""Physical block layout: encode/decode roundtrip and offsets.
 
 Mirrors the reference's internal unit tests (src/lib.rs:1461-1555 run
 navigation, 1652-1685 remainder packing) at the property level: the layout we
@@ -76,26 +76,6 @@ def test_roundtrip_with_duplicates():
     assert np.array_equal(out, fps)
 
 
-def test_placement_matches_slow_model():
-    rng = np.random.default_rng(123)
-    for trial in range(50):
-        qbits = int(rng.integers(6, 9))
-        n_slots = 1 << qbits
-        k = int(rng.integers(1, max(2, n_slots // 4)))
-        buckets = np.sort(rng.choice(n_slots, size=k, replace=False)).astype(np.int64)
-        counts = rng.integers(1, 4, size=k).astype(np.int64)
-        while counts.sum() > int(n_slots * 0.95):
-            counts = np.maximum(1, counts - 1)
-            if counts.sum() <= k:
-                break
-        if counts.sum() >= n_slots:
-            continue
-        fast = blocks._placement(buckets, counts, n_slots)
-        slow = slow_layout(list(buckets), list(counts), n_slots)
-        assert [s % n_slots for s in fast] == [s % n_slots for s in slow], (
-            buckets, counts, list(fast), slow)
-
-
 def test_offsets_byte_semantics():
     """offset[B] = run_start(B*64) - B*64 (src/lib.rs:897-907), saturated."""
     rng = np.random.default_rng(5)
@@ -125,16 +105,3 @@ def test_offsets_byte_semantics():
             want = min(re - x, 255)
             assert offsets[b] == want, (trial, b, offsets[b], want)
 
-
-def test_probe_counts_match_multiset():
-    rng = np.random.default_rng(11)
-    qbits, rbits = 7, 8
-    base = make_fps(rng, qbits, rbits, 60)
-    fps = np.sort(np.concatenate([base, base[::3]]))
-    payload = blocks.encode(fps, qbits, rbits)
-    # probe all present + some absent
-    queries = np.concatenate([fps, rng.integers(0, 1 << 15, size=200).astype(np.uint64)])
-    got = blocks.probe(payload, qbits, rbits, fps.size, queries)
-    mask = np.uint64((1 << (qbits + rbits)) - 1)
-    want = np.array([(fps == (q & mask)).sum() for q in queries])
-    assert np.array_equal(got, want)

@@ -407,42 +407,6 @@ def test_probe_hashes_empty_filter_and_empty_frame(spark):
     assert probe_hashes(empty_df, empty_filter, "h").count() == 0
 
 
-def test_sketch_cache_bounded_by_bytes(monkeypatch):
-    """The per-worker decoded-sketch cache evicts by approximate resident
-    BYTES, not just entry count: with python-worker reuse, four pinned
-    multi-MB sketches would otherwise stay resident per worker for its
-    lifetime (round-5 code-review finding)."""
-    import qfilter_spark.dist.probe as probe_mod
-    from qfilter_spark import sketches
-
-    def blob_of(seed, n=20_000):
-        rng = np.random.default_rng(seed)
-        sk = sketches.create("rsqf", capacity=1 << 15)
-        sk.update_hashes(rng.integers(0, 1 << 64, size=n, dtype=np.uint64))
-        return sk.to_bytes()
-
-    monkeypatch.setattr(probe_mod, "_SKETCH_CACHE", {})
-    # a blob is the one-row table of the broadcast (directory, rows) value
-    b1, b2, b3 = ((None, [(0, blob_of(seed))]) for seed in (1, 2, 3))
-    probe_mod._load_cached(b1)
-    one_cost = next(iter(probe_mod._SKETCH_CACHE.values()))[2]
-    assert one_cost > len(b1[1][0][1])  # counts decoded arrays, not just blob
-    # budget for about two entries: the third insert must evict the first
-    monkeypatch.setattr(probe_mod, "_SKETCH_CACHE_MAX_BYTES",
-                        int(one_cost * 2.5))
-    probe_mod._load_cached(b2)
-    assert len(probe_mod._SKETCH_CACHE) == 2
-    probe_mod._load_cached(b3)
-    assert len(probe_mod._SKETCH_CACHE) == 2
-    assert id(b1) not in probe_mod._SKETCH_CACHE       # FIFO evicted
-    # cache hit returns the identical decoded object (no re-decode)
-    assert probe_mod._load_cached(b3) is probe_mod._load_cached(b3)
-    # an over-budget single sketch still caches (cache of one)
-    monkeypatch.setattr(probe_mod, "_SKETCH_CACHE_MAX_BYTES", 1)
-    probe_mod._load_cached(b1)
-    assert list(e[0] for e in probe_mod._SKETCH_CACHE.values()) == [b1]
-
-
 def test_build_null_hashes_refused(spark):
     """The BUILD side must refuse NULL hashes like the probe side does:
     pandas/Arrow silently cast NaN (a NULL) to INT64_MIN, so without the

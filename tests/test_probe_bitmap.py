@@ -204,22 +204,3 @@ def test_mutation_resets_probe_volume_credit():
     assert f._probe_words is not None
     assert f.contains_hashes(present[:5000]).all()
 
-
-def test_cache_budget_counts_the_bitmap_the_filter_builds():
-    """The per-worker probe cache budgets a decoded filter by the gate the
-    filter itself applies: exactly the bitmap bytes it builds, and nothing
-    for a filter whose gate refuses one."""
-    from qfilter_spark import sketches
-    from qfilter_spark.dist.probe import _resident_bytes
-
-    keys = np.random.default_rng(5).integers(0, 1 << 64, size=3000,
-                                             dtype=np.uint64)
-    small = sketches.create("rsqf", capacity=1 << 12, fp_rate=0.01)
-    wide = sketches.RsqfSketch(Filter.with_fingerprint_size(1 << 12, 48))
-    for sk, builds in ((small, True), (wide, False)):
-        sk.update_hashes(keys)
-        f = sk.filter
-        assert _resident_bytes(sk) == f._fps.nbytes + f._bitmap_nbytes()
-        words = f._probe_bitmap()
-        assert (words is not None) == builds
-        assert f._bitmap_nbytes() == (words.nbytes if builds else 0)

@@ -8,6 +8,7 @@ import contextlib
 from collections import Counter
 import json
 import os
+import pickle
 import subprocess
 import sys
 
@@ -262,16 +263,16 @@ def test_no_collect_without_stats(spark, tables, monkeypatch):
     assert [sorted(p.collect()) for p in planned] == want + want
 
 
-def test_decode_once_per_worker(spark, tables, monkeypatch):
-    """Two probes of one broadcast table decode each row once (one cache
-    entry for the whole table); a second table evicts the first when the
-    byte budget demands it."""
+def test_decode_once_per_worker(tables, monkeypatch):
+    """A broadcast table as a worker unpickles it: each row a probe reaches
+    is decoded once over two answers and then handed back as the same
+    object, a row that nothing asks for is never decoded, and the pickle
+    carries the directory and row payloads only, never a decoded sketch."""
     directory = S._directory(N_SHARDS, SPEC)
     rows = [(int(r["shard"]), bytes(r["payload"]))
             for r in tables["uniform"][0].collect()]
-    other = [(int(r["shard"]), bytes(r["payload"]))
-             for r in tables["gap"][0].collect()]
-    value, other_value = (directory, rows), (directory, other)
+    probed = [2, 5]
+    assert len(rows) > len(probed)
     decoded = []
     loads = sketches.loads
 
@@ -280,18 +281,90 @@ def test_decode_once_per_worker(spark, tables, monkeypatch):
         return loads(blob)
 
     monkeypatch.setattr(sketches, "loads", counting_loads)
-    monkeypatch.setattr(probe_mod, "_SKETCH_CACHE", {})
-    first = probe_mod._load_cached(value)
-    assert probe_mod._load_cached(value) is first
-    assert len(decoded) == len(rows)
-    assert sorted(first.sketches) == [k for k, _ in rows]
-    (_, _, cost), = probe_mod._SKETCH_CACHE.values()
-    assert cost > sum(len(p) for _, p in rows)
-    # room for one table: the second evicts the first
-    monkeypatch.setattr(probe_mod, "_SKETCH_CACHE_MAX_BYTES", int(cost * 1.5))
-    probe_mod._load_cached(other_value)
-    assert list(probe_mod._SKETCH_CACHE) == [id(other_value)]
-    assert len(decoded) == len(rows) + len(other)
+    table = pickle.loads(pickle.dumps(probe_mod._Table(directory, rows)))
+    h = PRESENT[np.isin(_shard_of(PRESENT), probed)]
+    for _ in range(2):
+        assert table.answer(h, True).all()
+    assert decoded == [dict(rows)[k] for k in probed]
+    assert table.sketch(5) is table.sketch(5)
+    assert table.sketch(N_SHARDS) is None
+    assert len(decoded) == len(probed)
+    # a decoded table pickles as it was sent: (directory, rows)
+    cls, (d, payloads) = table.__reduce__()
+    assert cls is probe_mod._Table and d is table.directory
+    assert payloads == dict(rows)
+    assert pickle.loads(pickle.dumps(table))._sketches == {}
+
+
+_LIFETIME = """
+import gc, json, os
+import numpy as np
+from pyspark.sql import SparkSession, functions as F
+from qfilter_spark import sketches
+from qfilter_spark.dist.probe import probe_hashes
+
+spark = (SparkSession.builder.master("local[1]")
+         .config("spark.ui.enabled", "false")
+         .config("spark.python.worker.reuse", "true").getOrCreate())
+
+
+def report(batches):
+    import pyarrow as pa
+    from qfilter_spark.dist.probe import _Table
+    for _ in batches:
+        pass
+    gc.collect()
+    live = sum(isinstance(o, _Table) for o in gc.get_objects())
+    yield pa.record_batch(
+        [pa.array([os.getpid()]), pa.array([live])], names=["pid", "tables"])
+
+
+def report_after(batches):
+    import pyarrow as pa
+    for batch in batches:
+        yield pa.record_batch(batch.columns + [pa.array([os.getpid()])],
+                              names=batch.schema.names + ["next_pid"])
+
+
+def blob(h):
+    sk = sketches.create("rsqf", capacity=4096, fp_rate=0.01)
+    sk.update_hashes(h)
+    return sk.to_bytes()
+
+
+one = spark.range(1, numPartitions=1)
+df = spark.range(0, 2000, numPartitions=1).select(F.xxhash64("id").alias("h"))
+h = np.array([r.h for r in df.collect()], dtype=np.int64).view(np.uint64)
+before = one.mapInArrow(report, "pid long, tables long").collect()[0]
+a, b = blob(h[:1000]), blob(h[1000:])
+hits = [probe_hashes(df, x, "h", as_bool=True).where("est_count").count()
+        for x in (a, a, b)]
+after = one.mapInArrow(report, "pid long, tables long").collect()[0]
+piped = (one.mapInArrow(report, "pid long, tables long")
+         .mapInArrow(report_after, "pid long, tables long, next_pid long")
+         .collect()[0])
+spark.stop()
+print(json.dumps(dict(before=before.asDict(), after=after.asDict(),
+                      piped=piped.asDict(), hits=hits)))
+"""
+
+
+def test_reused_worker_drops_probe_tables():
+    """Three ``probe_hashes`` calls over two blobs leave no decoded table in
+    the reused Python worker: a later task that uses none of the
+    broadcasts counts 0 live ``_Table`` objects. Premises: one worker
+    (same pid before and after the probes, ``local[1]``) ran everything,
+    and a map pipelined after another runs in a worker of its own, so the
+    count has to come from a job of its own."""
+    env = dict(os.environ, PYTHONPATH=REPO)
+    out = subprocess.run([sys.executable, "-c", _LIFETIME], env=env,
+                         capture_output=True, text=True, timeout=600)
+    assert out.returncode == 0, out.stderr[-2000:]
+    got = json.loads(out.stdout.strip().splitlines()[-1])
+    assert got["before"]["pid"] == got["after"]["pid"]
+    assert got["piped"]["pid"] != got["piped"]["next_pid"]
+    assert got["hits"][0] == got["hits"][1] >= 1000
+    assert got["after"]["tables"] == 0
 
 
 _SHAPE = """
