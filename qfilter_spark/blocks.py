@@ -33,70 +33,11 @@ has pending 0 and no runend bit).
 
 from __future__ import annotations
 
-import threading
+import math
 
 import numpy as np
 
 _U64 = np.uint64
-
-#: reusable per-thread scratch buffers for encode/decode temporaries.
-#: This host's parallel first-touch of fresh multi-MB allocations is
-#: pathologically slow (see NOTES_NEXT_ROUND round-5 kernel findings): a
-#: 1.9M-item encode spent ~40% of its wall in page faults on arrays whose
-#: sizes repeat call-to-call inside a reused Spark worker. Buffers are
-#: grown to fit and kept; per-buffer sizes are capped so a worker that
-#: once encoded a huge filter does not pin its peak forever. Thread-local
-#: because driver-side queries may encode/decode from concurrent job
-#: threads (each thread's arena is bounded by the same caps).
-_SCRATCH = threading.local()
-_SCRATCH_MAX_BYTES = 64 << 20    # per-buffer cap; larger requests bypass
-_SCRATCH_TOTAL_BYTES = 192 << 20  # per-thread arena budget: a reused
-                                  # worker pins at most three buffers at
-                                  # the per-buffer cap
-
-
-def _buf(name: str, count: int, dtype, zero: bool = False) -> np.ndarray:
-    """A reusable scratch array of ``count`` items of ``dtype``.
-
-    Bounded twice: per buffer (oversized requests bypass the arena) and
-    per thread (past the total budget the LARGEST other buffers are
-    dropped first, so one big encode cannot pin ~15 buffers at their
-    peak for the worker's lifetime).
-    """
-    dt = np.dtype(dtype)
-    nbytes = count * dt.itemsize
-    if nbytes > _SCRATCH_MAX_BYTES:
-        return (np.zeros if zero else np.empty)(count, dt)
-    store = getattr(_SCRATCH, "bufs", None)
-    if store is None:
-        store = _SCRATCH.bufs = {}
-    raw = store.get(name)
-    if raw is None or raw.nbytes < nbytes:
-        need = max(nbytes, 1 << 12)
-        total = sum(b.nbytes for k, b in store.items() if k != name)
-        while total + need > _SCRATCH_TOTAL_BYTES and len(store) > 1:
-            victim = max((k for k in store if k != name),
-                         key=lambda k: store[k].nbytes, default=None)
-            if victim is None:
-                break
-            total -= store.pop(victim).nbytes
-        raw = store[name] = np.empty(need, dtype=np.uint8)
-    out = raw[:nbytes].view(dt)
-    if zero:
-        out.fill(0)
-    return out
-
-
-def _iota(n: int) -> np.ndarray:
-    """Cached ascending int64 index array (values are index-stable, so a
-    grown cache needs no refill — just a slice)."""
-    if n * 8 > _SCRATCH_MAX_BYTES:
-        return np.arange(n, dtype=np.int64)
-    store = getattr(_SCRATCH, "iota", None)
-    if store is None or store.size < n:
-        store = _SCRATCH.iota = np.arange(
-            max(n, 1 << 12), dtype=np.int64)
-    return store[:n]
 
 
 def _pack_rems(rem_by_slot: np.ndarray, rbits: int) -> np.ndarray:
@@ -110,40 +51,30 @@ def _pack_rems(rem_by_slot: np.ndarray, rbits: int) -> np.ndarray:
     column stride defeats the cache.
     """
     n_slots = rem_by_slot.size
-    g = 64 // _gcd(rbits, 64)          # slots per repeating period
+    g = 64 // math.gcd(rbits, 64)      # slots per repeating period
     P = rbits * g // 64                # 64-bit words per period
     n_per = n_slots // g
     rem_t = rem_by_slot.reshape(n_per, g).T  # (g, n_per) lanes, rows strided
-    words_t = _buf("pack_words", P * n_per, np.uint64,
-                   zero=True).reshape(P, n_per)
-    lane = _buf("pack_lane", n_per, np.uint64)
-    tmp = _buf("pack_tmp", n_per, np.uint64)
+    words_t = np.zeros((P, n_per), dtype=np.uint64)
     for j in range(g):
-        np.copyto(lane, rem_t[j])
+        lane = rem_t[j]
         p = j * rbits
         w0, sh = p >> 6, p & 63
-        np.left_shift(lane, _U64(sh), out=tmp)
-        words_t[w0] |= tmp
+        words_t[w0] |= lane << _U64(sh)
         if sh + rbits > 64:
-            np.right_shift(lane, _U64(64 - sh), out=tmp)
-            words_t[w0 + 1] |= tmp
-    out = _buf("pack_out", P * n_per, np.uint64).reshape(n_per, P)
-    np.copyto(out, words_t.T)
-    return out.reshape(-1).view(np.uint8)
+            words_t[w0 + 1] |= lane >> _U64(64 - sh)
+    return np.ascontiguousarray(words_t.T).reshape(-1).view(np.uint8)
 
 
 def _unpack_rems(rem_area: np.ndarray, rbits: int, n_slots: int) -> np.ndarray:
     """Inverse of :func:`_pack_rems`: remainder per slot from the packed
     little-endian bit area, O(n_slots) word-lane shifts."""
-    g = 64 // _gcd(rbits, 64)
+    g = 64 // math.gcd(rbits, 64)
     P = rbits * g // 64
     n_per = n_slots // g
-    words_t = _buf("unpack_words", P * n_per, np.uint64).reshape(P, n_per)
-    np.copyto(words_t,
-              np.ascontiguousarray(rem_area).view(np.uint64)
-              .reshape(n_per, P).T)
-    out_t = _buf("unpack_out_t", g * n_per, np.uint64).reshape(g, n_per)
-    tmp = _buf("unpack_tmp", n_per, np.uint64)
+    words_t = np.ascontiguousarray(
+        np.ascontiguousarray(rem_area).view(np.uint64).reshape(n_per, P).T)
+    out_t = np.empty((g, n_per), dtype=np.uint64)
     mask = _U64((1 << rbits) - 1) if rbits < 64 else _U64(0xFFFFFFFFFFFFFFFF)
     for j in range(g):
         p = j * rbits
@@ -151,17 +82,9 @@ def _unpack_rems(rem_area: np.ndarray, rbits: int, n_slots: int) -> np.ndarray:
         v = out_t[j]
         np.right_shift(words_t[w0], _U64(sh), out=v)
         if sh + rbits > 64:
-            np.left_shift(words_t[w0 + 1], _U64(64 - sh), out=tmp)
-            v |= tmp
+            v |= words_t[w0 + 1] << _U64(64 - sh)
         v &= mask
-    out = _buf("unpack_out", g * n_per, np.uint64).reshape(n_per, g)
-    np.copyto(out, out_t.T)
-    return out.reshape(-1)
-
-
-def _gcd(a: int, b: int) -> int:
-    import math
-    return math.gcd(a, b)
+    return np.ascontiguousarray(out_t.T).reshape(-1)
 
 
 def encode(fps: np.ndarray, qbits: int, rbits: int) -> bytes:
@@ -182,28 +105,29 @@ def encode(fps: np.ndarray, qbits: int, rbits: int) -> bytes:
     recurrence over the bucket sequence placed twice, whose lap-1 carry is
     a scalar.
     """
-    assert qbits >= 6, "block layout requires >= 64 slots"
+    if qbits < 6:
+        raise ValueError(f"block layout requires >= 64 slots, got qbits={qbits}")
     n_slots = 1 << qbits
     n_blocks = n_slots // 64
     n = fps.size
     block_starts = np.arange(n_blocks, dtype=np.int64) * 64
+    offsets = np.zeros(n_blocks, dtype=np.uint8)
+    occ_bits = np.zeros(n_slots, dtype=np.uint8)
+    run_bits = np.zeros(n_slots, dtype=np.uint8)
+    rem_by_slot = np.zeros(n_slots, dtype=np.uint64)
 
     if n:
-        idx = _iota(n)
-        quot = _buf("enc_quot", n, np.uint64)
-        np.right_shift(fps, _U64(rbits), out=quot)
-        quot = quot.view(np.int64)  # values < 2^qbits: reinterpret is safe
-        rem = _buf("enc_rem", n, np.uint64)
-        np.bitwise_and(fps, _U64((1 << rbits) - 1), out=rem)
-        new_group = _buf("enc_ng", n, np.bool_)
+        idx = np.arange(n, dtype=np.int64)
+        # values < 2^qbits: the int64 reinterpret is safe
+        quot = (fps >> _U64(rbits)).view(np.int64)
+        rem = fps & _U64((1 << rbits) - 1)
+        new_group = np.empty(n, dtype=np.bool_)
         new_group[0] = True
         np.not_equal(quot[1:], quot[:-1], out=new_group[1:])
         # within a group, quot - idx is maximal at the group's FIRST item
         # (where it equals bucket - csum, the run-start term), so the
         # per-item running max needs no group_first bookkeeping at all
-        t = _buf("enc_t", n, np.int64)
-        np.subtract(quot, idx, out=t)
-        np.maximum.accumulate(t, out=t)
+        t = np.maximum.accumulate(quot - idx)
         # wrap-around: on the doubled domain (buckets, then buckets +
         # n_slots), lap-2's running max is max(t[i], t[-1] - (n_slots - n))
         # — the carry from lap 1 is a SCALAR, so the circular fixed point
@@ -230,9 +154,8 @@ def encode(fps: np.ndarray, qbits: int, rbits: int) -> bytes:
         re = np.maximum(x, ends)
         offsets = np.minimum(re - x, 255).astype(np.uint8)
 
-        pos = _buf("enc_pos", n, np.int64)
-        np.bitwise_and(pos_un, n_slots - 1, out=pos)
-        last = _buf("enc_last", n, np.bool_)
+        pos = pos_un & (n_slots - 1)
+        last = np.empty(n, dtype=np.bool_)
         last[-1] = True
         last[:-1] = new_group[1:]
         # scatter WITHOUT the boolean-mask extractions (each cost more than
@@ -240,30 +163,21 @@ def encode(fps: np.ndarray, qbits: int, rbits: int) -> bytes:
         # per item (duplicates re-write the same 1), and pos is a
         # permutation of the occupied slots (no duplicates), so the runend
         # flags scatter as the full last-of-group byte vector
-        occ_bits = _buf("enc_occ", n_slots, np.uint8, zero=True)
         occ_bits[quot] = 1
-        run_bits = _buf("enc_run", n_slots, np.uint8, zero=True)
         run_bits[pos] = last.view(np.uint8)
-        rem_by_slot = _buf("enc_rbs", n_slots, np.uint64, zero=True)
         rem_by_slot[pos] = rem
-    else:
-        offsets = np.zeros(n_blocks, dtype=np.uint8)
-        occ_bits = np.zeros(n_slots, dtype=np.uint8)
-        run_bits = np.zeros(n_slots, dtype=np.uint8)
-        rem_by_slot = np.zeros(n_slots, dtype=np.uint64)
 
     occ_words = np.packbits(occ_bits, bitorder="little").view(np.uint64)
     run_words = np.packbits(run_bits, bitorder="little").view(np.uint64)
     rem_bytes = _pack_rems(rem_by_slot, rbits)
 
     block_bytes = 17 + 8 * rbits
-    out = _buf("enc_out", n_blocks * block_bytes, np.uint8)
-    view = out.reshape(n_blocks, block_bytes)
+    view = np.empty((n_blocks, block_bytes), dtype=np.uint8)
     view[:, 0] = offsets
     view[:, 1:9] = occ_words.view(np.uint8).reshape(n_blocks, 8)
     view[:, 9:17] = run_words.view(np.uint8).reshape(n_blocks, 8)
     view[:, 17:] = rem_bytes.reshape(n_blocks, 8 * rbits)
-    return out.tobytes()
+    return view.tobytes()
 
 
 def decode(payload: bytes, qbits: int, rbits: int, n_items: int) -> np.ndarray:
@@ -334,6 +248,7 @@ def decode(payload: bytes, qbits: int, rbits: int, n_items: int) -> np.ndarray:
     # ascending order — no sort
     m1 = int(counts[:occ_pos.size - so].sum())
     fps = np.concatenate([fps[m1:], fps[:m1]])
-    assert fps.size == n_items, f"decoded {fps.size} fingerprints, header says {n_items}"
+    if fps.size != n_items:
+        raise ValueError(f"decoded {fps.size} fingerprints, header says {n_items}")
     return fps
 

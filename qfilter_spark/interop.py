@@ -86,7 +86,7 @@ def _validated_decode(buf: bytes, qbits: int, rbits: int, length: int,
             f"{_expected_buffer_len(qbits, rbits)} for q={qbits} r={rbits}")
     try:
         fps = blocks.decode(buf, qbits, rbits, length)
-    except (IndexError, AssertionError, ValueError) as e:
+    except (IndexError, ValueError) as e:
         raise ValueError(f"corrupt block buffer: {e}") from None
     return Filter(qbits, rbits, max_qbits, fps)
 

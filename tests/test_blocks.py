@@ -6,6 +6,9 @@ build must be the same fixed point sequential insertion reaches, and decode
 must invert encode for any admissible multiset — including wrap-around runs.
 """
 
+import gc
+import tracemalloc
+
 import numpy as np
 import pytest
 
@@ -105,3 +108,23 @@ def test_offsets_byte_semantics():
             want = min(re - x, 255)
             assert offsets[b] == want, (trial, b, offsets[b], want)
 
+
+
+def test_round_trip_retains_no_memory():
+    """The kernels keep no scratch between calls: once a 200k-item encode
+    and decode are freed, under 1 MiB of what they allocated stays traced."""
+    rng = np.random.default_rng(3)
+    qbits, rbits = 18, 7
+    fps = make_fps(rng, qbits, rbits, 200_000)
+    tracemalloc.start()
+    try:
+        base = tracemalloc.get_traced_memory()[0]
+        payload = blocks.encode(fps, qbits, rbits)
+        out = blocks.decode(payload, qbits, rbits, fps.size)
+        assert np.array_equal(out, fps)
+        del payload, out
+        gc.collect()
+        retained = tracemalloc.get_traced_memory()[0] - base
+    finally:
+        tracemalloc.stop()
+    assert retained < 1 << 20, f"{retained / 2**20:.2f} MiB retained"

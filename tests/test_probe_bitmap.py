@@ -204,3 +204,37 @@ def test_mutation_resets_probe_volume_credit():
     assert f._probe_words is not None
     assert f.contains_hashes(present[:5000]).all()
 
+
+
+@pytest.mark.parametrize("gate_open", [False, True])
+def test_ascending_batch_skips_the_argsort(monkeypatch, gate_open):
+    """An ascending batch of more than 4096 keys (each per-row wave of the
+    sharded chunk probe arrives so) answers as its shuffled copy and as
+    count_fingerprint do, and is searched in place: no argsort."""
+    rng = np.random.default_rng(21)
+    present = rng.integers(0, 1 << 64, size=30_000, dtype=np.uint64)
+    absent = rng.integers(0, 1 << 64, size=30_000, dtype=np.uint64)
+    f = Filter.new(1 << 16, 0.01)
+    f.insert_hashes(np.concatenate([present, present[:3000]]))
+    if gate_open:
+        assert f._probe_bitmap() is not None
+    else:
+        f = _forced_off(f)
+    q = np.sort(np.concatenate([present[:8000], absent[:8000]]) & f._fp_mask())
+    want = np.array([f.count_fingerprint(int(h)) for h in q])
+    assert want.max() >= 2
+
+    calls = []
+    argsort = np.argsort
+    monkeypatch.setattr(np, "argsort",
+                        lambda *a, **k: calls.append(1) or argsort(*a, **k))
+    got_c = f.contains_hashes(q)
+    got_n = f.count_hashes(q)
+    monkeypatch.undo()
+    assert calls == []
+    assert (got_c == (want > 0)).all()
+    assert (got_n == want).all()
+
+    perm = rng.permutation(q.size)
+    assert (f.contains_hashes(q[perm]) == got_c[perm]).all()
+    assert (f.count_hashes(q[perm]) == got_n[perm]).all()

@@ -26,6 +26,7 @@ import numpy as np
 import pytest
 
 from qfilter_spark.hashing import xxh64_i64
+from qfilter_spark.rsqf import _HEADER, Filter
 from qfilter_spark.sketches import (
     BloomFilter,
     CountMinSketch,
@@ -199,3 +200,33 @@ def test_topk_unsorted_keys_rejected():
     struct.pack_into("<Q", blob, off + 8 * (m - 1), first)
     with pytest.raises(ValueError, match="not sorted"):
         loads(bytes(blob))
+
+
+# ---------------------------------------------------------------------------
+# RSQF at-rest blocks layout (Filter.to_bytes("blocks"))
+# ---------------------------------------------------------------------------
+
+def _rsqf_blocks_blob(**fields):
+    f = Filter.new(1000, 0.01)
+    f.insert_hashes(hashes_of(np.arange(500)))
+    blob = bytearray(f.to_bytes("blocks"))
+    magic, fmt, q, r, mq, n = _HEADER.unpack_from(blob)
+    assert n == 500
+    head = dict(magic=magic, fmt=fmt, q=q, r=r, mq=mq, n=n)
+    head.update(fields)
+    _HEADER.pack_into(blob, 0, *head.values())
+    return bytes(blob)
+
+
+@pytest.mark.parametrize("delta", [-1, 1])
+def test_rsqf_blocks_length_off_by_one_rejected(delta):
+    # the decoded count must match the header's, under -O too
+    with pytest.raises(ValueError, match="header says"):
+        Filter.from_bytes(_rsqf_blocks_blob(n=500 + delta))
+
+
+def test_rsqf_blocks_qbits_below_one_block_rejected():
+    with pytest.raises(ValueError, match="qbits"):
+        Filter.from_bytes(_rsqf_blocks_blob(q=5))
+    with pytest.raises(ValueError, match="qbits"):
+        Filter(5, 7).to_bytes("blocks")
