@@ -14,8 +14,9 @@ rows; row ``i`` owns [starts[i], starts[i+1]) inside one shard. The
 fixed-prefix table is the uniform directory — one row per shard, starting
 at ``shard << (fs-k)``, row key == shard id — and is stored as
 (shard, n_fps, payload). The skew-resistant build
-(:func:`build_sharded_filter_split`) cuts hot shards into several rows;
-only a table with more rows than shards carries the extra ``key`` column
+(:func:`build_sharded_filter_split`) plans a directory that cuts hot
+shards into several rows, then runs the ordinary build over it; only a
+table with more rows than shards carries the extra ``key`` column
 (key, shard, n_fps, payload). Every operation takes ``n_shards`` as an int
 (the uniform directory) or as a ShardDirectory.
 
@@ -61,8 +62,7 @@ from .sizing import broadcastable, sized_input
 
 SHARDED_SCHEMA = "shard int, n_fps long, payload binary"
 SPLIT_SCHEMA = "key int, " + SHARDED_SCHEMA
-_SPLIT_PREFIX = "qfs_split_"
-_SAMPLES_PER_CHUNK = 64  # bounded per (task, shard) row => driver metadata
+_SAMPLES_PER_CHUNK = 64  # bounded per (wave, shard) row => driver metadata
                          # stays KB-scale at ANY corpus size (RangePartitioner
                          # uses the same bounded-sample-per-partition idea)
 # per-task fingerprint buffer (~128 MB) before the emitter flushes a chunk
@@ -227,8 +227,7 @@ def plan_directory(sizes_samples: list, n_shards: int, fs: int,
     return ShardDirectory(np.array(sorted(set(starts)), dtype=np.uint64), fs, k)
 
 
-def _rows(directory: ShardDirectory, keys, ns, payloads,
-          **extra) -> "pa.Table":
+def _rows(directory: ShardDirectory, keys, ns, payloads) -> "pa.Table":
     """Rows in the directory's table schema; ``keys`` are row keys."""
     import pyarrow as pa
 
@@ -236,28 +235,18 @@ def _rows(directory: ShardDirectory, keys, ns, payloads,
     cols = {"key": pa.array(keys, pa.int32())} if directory.split else {}
     cols.update(shard=pa.array(directory.shards[keys], pa.int32()),
                 n_fps=pa.array(ns, pa.int64()),
-                payload=pa.array(payloads, pa.binary()), **extra)
+                payload=pa.array(payloads, pa.binary()))
     return pa.table(cols)
 
 
-def _cut(directory: ShardDirectory, fps: np.ndarray,
-         with_samples: bool = False) -> "pa.Table":
+def _cut(directory: ShardDirectory, fps: np.ndarray) -> "pa.Table":
     """Cut ASCENDING global fingerprints at the directory's row bounds into
-    packed chunk rows, optionally with a bounded systematic sample per row
-    for split planning."""
-    import pyarrow as pa
-
+    packed chunk rows."""
     parts = directory.split_sorted(fps)
-    keys = [i for i, _ in parts]
     rb = directory.fs - directory.k
-    extra = {}
-    if with_samples:
-        extra["sample"] = pa.array(
-            [c[::max(1, c.size // _SAMPLES_PER_CHUNK)].tobytes()
-             for _, c in parts], pa.binary())
-    return _rows(directory, keys, [c.size for _, c in parts],
+    return _rows(directory, [i for i, _ in parts], [c.size for _, c in parts],
                  [_pack_chunk(c, int(directory.shards[i]), rb)
-                  for i, c in parts], **extra)
+                  for i, c in parts])
 
 
 def _emit(df, spec_in: SketchSpec, directory: ShardDirectory, consume,
@@ -265,8 +254,8 @@ def _emit(df, spec_in: SketchSpec, directory: ShardDirectory, consume,
     """The one emitter: a mapInArrow pass that extracts fingerprints with
     ``spec_in``, masks them to the fingerprint width and sorts them; each
     sorted wave goes to ``consume(fps)``, which returns the stage's record
-    batches for it (:func:`_emit_chunks` packs chunk rows, the broadcast
-    probe counts hits in place).
+    batches for it (:func:`_emit_chunks` packs chunk rows, the split build's
+    planning pass samples them, the broadcast probe counts hits in place).
 
     Spill-aware: a task's fingerprint buffer flushes every ``_MAX_BUFFER``
     entries, so per-task memory stays bounded no matter the input partition
@@ -302,15 +291,12 @@ def _emit(df, spec_in: SketchSpec, directory: ShardDirectory, consume,
     return sized_input(df.select(spec_in.col)).mapInArrow(emit, schema)
 
 
-def _emit_chunks(df, spec_in: SketchSpec, directory: ShardDirectory,
-                 with_samples: bool = False):
+def _emit_chunks(df, spec_in: SketchSpec, directory: ShardDirectory):
     """Per-(task, row) sorted chunk rows of ``df``'s fingerprints, in the
-    directory's table schema (plus a bounded ``sample`` for split
-    planning)."""
-    schema = directory.schema + (", sample binary" if with_samples else "")
+    directory's table schema."""
     return _emit(df, spec_in, directory,
-                 lambda fps: _cut(directory, fps, with_samples).to_batches(),
-                 schema)
+                 lambda fps: _cut(directory, fps).to_batches(),
+                 directory.schema)
 
 
 def _broadcast_table(filter_df, directory: ShardDirectory):
@@ -333,9 +319,9 @@ def _hits(sk, runs, lm: np.uint64) -> int:
 
 def _merge(chunks, directory: ShardDirectory, spec: SketchSpec,
            filter_df=None):
-    """The one merge kernel (build, split build, insert): every row's
-    sorted chunk runs — plus, when ``filter_df`` is given, the row's
-    current fingerprints — merge into one canonical shard-local blob.
+    """The one merge kernel (build, insert): every row's sorted chunk
+    runs — plus, when ``filter_df`` is given, the row's current
+    fingerprints — merge into one canonical shard-local blob.
 
     Row blobs hold SHARD-LOCAL fingerprints while chunks arrive in global
     coordinates: old rows are lifted to global, merged, and re-encoded
@@ -387,94 +373,40 @@ def build_sharded_filter(df, spec: SketchSpec, n_shards=64):
 
 
 def build_sharded_filter_split(df, spec: SketchSpec, n_shards: int = 64,
-                               max_fps_per_row: int = 16_000_000,
-                               path: str | None = None):
+                               max_fps_per_row: int = 16_000_000):
     """Skew-resistant build: returns (filter_df, directory).
 
-    A shard whose fingerprint range is hit disproportionately (biased
-    upstream hashes, adversarial prefixes) would concentrate one task's
-    memory. The fix is a RangePartitioner-style split. Two passes over the
-    CHUNK rows (never the raw input): pass 1 collects per-shard sizes + a
-    bounded sample of each sorted chunk (driver sees only metadata, a few
-    KB) and plans quantile split points for oversized shards; pass 2
-    re-cuts each sorted chunk at the planned boundaries and merges per row
-    key. Every merge task handles <= ~max_fps_per_row fingerprints
-    regardless of prefix skew. Row payloads stay in shard-local
-    coordinates, so the canonical form and the blob codec are untouched —
-    the split is pure metadata, and the union of a shard's rows is
-    bit-equal to the unsplit shard. Limitation: a multiset piled onto ONE
-    fingerprint value cannot be range-split (its copies stay in one row);
-    distinct-key skew is fully handled.
-
-    The merged table's at-rest form is a parquet directory at ``path``
-    (default: a unique dir under ``spark.qfilter.intermediateDir`` /
-    system temp) and the returned DataFrame simply reads it — matching how
-    the unsplit filter lives as a parquet table, with NO caller-side
-    unpersist contract and nothing pinned in executor memory. Call
-    :func:`retire_split_filter` on the returned DataFrame to delete the
-    directory when the filter is retired.
+    Hot shards (biased upstream hashes, adversarial prefixes) are split
+    RangePartitioner-style, so that no merge task holds more than
+    ~``max_fps_per_row`` fingerprints. A planning pass of the build's
+    emitter yields, per (sorted wave, shard), the fingerprint count and a
+    bounded systematic sample; :func:`plan_directory` cuts each oversized
+    shard at weighted sample quantiles from those few KB on the driver, and
+    the table is :func:`build_sharded_filter` over that directory — lazy,
+    like every build. Payloads stay shard-local, so the union of a shard's
+    rows is bit-equal to the unsplit shard. Copies of ONE fingerprint value
+    cannot be range-split. Trade-off: the input is scanned and hashed twice.
     """
-    import uuid
+    import pyarrow as pa
 
-    from pyspark import StorageLevel
-
+    if max_fps_per_row < 1:
+        raise ValueError(
+            f"max_fps_per_row must be >= 1, got {max_fps_per_row!r}")
     uniform = _directory(n_shards, spec)
-    chunks_df = _emit_chunks(df, spec, uniform, with_samples=True) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    meta = chunks_df.select("shard", "n_fps", "sample").collect()
-    directory = plan_directory(
-        [(r["shard"], r["n_fps"], r["sample"]) for r in meta],
-        n_shards, uniform.fs, max_fps_per_row)
-    rb = directory.fs - directory.k
 
-    def resplit(batches):
-        for batch in batches:
-            shards = batch.column("shard").to_numpy(zero_copy_only=False)
-            for shard, p in zip(shards, batch.column("payload")):
-                fps = _unpack_chunk(p.as_py(), int(shard), rb)
-                yield from _cut(directory, fps).to_batches()
+    def sizes(fps):
+        parts = uniform.split_sorted(fps)
+        return pa.table({
+            "shard": pa.array([i for i, _ in parts], pa.int32()),
+            "n_fps": pa.array([c.size for _, c in parts], pa.int64()),
+            "sample": pa.array(
+                [c[::max(1, c.size // _SAMPLES_PER_CHUNK)].tobytes()
+                 for _, c in parts], pa.binary())}).to_batches()
 
-    keyed = chunks_df.mapInArrow(resplit, directory.schema)
-
-    # materialize the merged table NOW (to its at-rest parquet home) so the
-    # corpus-scale chunk cache can be released inside this call
-    spark = df.sparkSession
-    if path is None:
-        from ..fsutil import child
-        from ..sources import intermediate_dir, sweep_dead_intermediates
-
-        base = intermediate_dir(spark)
-        app = spark.sparkContext.applicationId
-        # dead-session leftovers; once per (base, prefix) per process
-        sweep_dead_intermediates(spark, base, app, _SPLIT_PREFIX)
-        path = child(base, f"{_SPLIT_PREFIX}{app}_{uuid.uuid4().hex[:8]}")
-    _merge(keyed, directory, spec).write.mode("errorifexists").parquet(path)
-    chunks_df.unpersist()
-    out = spark.read.schema(directory.schema).parquet(path)
-    out._qfs_split_path = path  # lets retire_split_filter find an empty table
-    return out, directory
-
-
-def retire_split_filter(filter_df) -> None:
-    """Delete a split filter table's at-rest parquet directory — the
-    retire contract from :func:`build_sharded_filter_split`. The directory
-    is recovered from the path the builder attached, falling back to the
-    scan's input files (covers DataFrames re-created from the path by the
-    caller); an empty-table scan with no input files and no attached path
-    is a no-op. Deletion goes through the session's Hadoop FileSystem,
-    keeping the full URI: a remote table (``hdfs://``/``s3a://`` — the
-    ``intermediateDir`` conf explicitly invites remote scratch) is really
-    freed, and the scheme is never stripped down to a bare path that
-    could name an unrelated directory on the driver's local disk."""
-    from ..fsutil import delete
-
-    path = getattr(filter_df, "_qfs_split_path", None)
-    if path is None:
-        files = filter_df.inputFiles()
-        if not files:
-            return
-        path = files[0].rsplit("/", 1)[0]
-    delete(filter_df.sparkSession, path)
+    meta = _emit(df, spec, uniform, sizes,
+                 "shard int, n_fps long, sample binary").collect()
+    directory = plan_directory(meta, n_shards, uniform.fs, max_fps_per_row)
+    return build_sharded_filter(df, spec, directory), directory
 
 
 def insert_sharded(filter_df, new_df, spec_in: SketchSpec, n_shards,

@@ -1,7 +1,7 @@
 """Hadoop FileSystem helpers for engine-managed directories.
 
-Modules that own on-disk state (bucketed dedup intermediates, split-filter
-tables, merge-lineage checkpoints) route existence checks, listings, and
+Modules that own on-disk state (bucketed dedup intermediates, merge-lineage
+checkpoints, stored filter tables) route existence checks, listings, and
 deletion through the Hadoop FileSystem API of the live SparkSession rather
 than driver-local ``os``/``shutil``. That makes every path scheme Spark can
 write — local, ``hdfs://``, ``s3a://`` — equally manageable: a remote
@@ -70,6 +70,19 @@ def list_entries(spark, base: str) -> list[tuple[str, float, bool]]:
         return out
     except Exception:
         return []
+
+
+def parquet_columns(spark, location: str) -> list[str]:
+    """Column names in the footer of one Parquet file under ``location``
+    (a directory or a file), read on the driver; [] when there is none."""
+    fs, p = get_fs(spark, location), jpath(spark, location)
+    for st in fs.listStatus(p) if fs.exists(p) else []:
+        if st.getPath().getName().endswith(".parquet"):
+            footer = spark._jvm.org.apache.parquet.hadoop.ParquetFileReader \
+                .readFooter(spark._jsc.hadoopConfiguration(), st)
+            return [f.getName()
+                    for f in footer.getFileMetaData().getSchema().getFields()]
+    return []
 
 
 def child(base: str, name: str) -> str:

@@ -12,9 +12,8 @@ from __future__ import annotations
 
 def intermediate_dir(spark) -> str:
     """Home for engine-managed intermediate tables (bucketed dedup
-    intermediates, split filter tables): ``spark.qfilter.intermediateDir``
-    — a warehouse deployment points this at scratch storage with its own
-    lifecycle — defaulting to the system temp dir."""
+    intermediates): ``spark.qfilter.intermediateDir``, which a deployment
+    points at scratch storage with its own lifecycle; default system temp."""
     import tempfile
 
     return spark.conf.get("spark.qfilter.intermediateDir",
@@ -79,10 +78,18 @@ def write_corpus(df, location: str, mode: str = "overwrite"):
 
 
 def write_filter_table(filter_df, location: str, mode: str = "overwrite"):
-    """Persist a sharded filter table (shard, n_fps, payload)."""
+    """Persist a sharded filter table: (shard, n_fps, payload), or
+    (key, shard, n_fps, payload) for a split table."""
     return filter_df.write.mode(mode).parquet(location)
 
 
 def read_filter_table(spark, location: str):
-    from .dist.sharded import SHARDED_SCHEMA
-    return spark.read.schema(SHARDED_SCHEMA).parquet(location)
+    """A stored filter table with the columns it was written with: the
+    split schema when a part file's footer (read on the driver; schema
+    inference would run a Spark job) has ``key``, else the uniform one."""
+    from .dist.sharded import SHARDED_SCHEMA, SPLIT_SCHEMA
+    from .fsutil import parquet_columns
+
+    split = "key" in parquet_columns(spark, location)
+    return spark.read.schema(SPLIT_SCHEMA if split else SHARDED_SCHEMA) \
+        .parquet(location)

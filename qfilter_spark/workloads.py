@@ -565,8 +565,7 @@ def q_rsqf_sharded_skew(spark, sf_dir):
     single-blob filter and probes find every inserted fingerprint.
     """
     from .dist.sharded import (_fp_meta, build_sharded_filter_split,
-                               probe_sharded_chunks, retire_split_filter,
-                               sharded_to_single)
+                               probe_sharded_chunks, sharded_to_single)
 
     ev = load(spark, sf_dir, "events")
     n = table_rows(sf_dir, "events")
@@ -591,10 +590,10 @@ def q_rsqf_sharded_skew(spark, sf_dir):
     except Exception:
         df.unpersist()
         raise
+    filt = filt.cache()  # read by the three consumers below
     try:
-        # (the split build's at-rest form is a parquet dir; removed after
-        # the last consumer below). The split build materialized df into
-        # the cache, so the single-blob build and the probe below reuse it;
+        # The split build's planning pass materialized df into the cache,
+        # so the single-blob build and the probe below reuse it;
         # the three consumers are independent driver jobs — overlap them
         # (guide §2.6).
         with ThreadPoolExecutor(2) as pool:
@@ -612,7 +611,7 @@ def q_rsqf_sharded_skew(spark, sf_dir):
         identical = bool(np.array_equal(merged.filter.fingerprints(),
                                         single.filter.fingerprints()))
     finally:
-        retire_split_filter(filt)
+        filt.unpersist()
         df.unpersist()
     return _one_row(spark,
                     n_probed=int(stats[0]), n_contained=int(stats[1]),
@@ -641,8 +640,7 @@ def q_rsqf_split_remove_shrink(spark, sf_dir):
     """
     from .dist.sharded import (build_sharded_filter, build_sharded_filter_split,
                                probe_sharded, remove_sharded,
-                               retire_split_filter, sharded_to_single,
-                               shrink_sharded)
+                               sharded_to_single, shrink_sharded)
 
     ev = _hashed(load(spark, sf_dir, "events"), "event_id")
     n = table_rows(sf_dir, "events")
@@ -678,6 +676,7 @@ def q_rsqf_split_remove_shrink(spark, sf_dir):
         pool.shutdown(wait=False)
         raise
     after = shrunk = None
+    filt = filt.cache()  # counted, then read by the remove
     try:
         n_split_rows = filt.count()
         after = remove_sharded(filt, removals, "h", directory, spec).cache()
@@ -699,10 +698,9 @@ def q_rsqf_split_remove_shrink(spark, sf_dir):
                                         b.filter.fingerprints()))
         stats = fut_stats.result()
     finally:
-        for df_ in (after, shrunk):
+        for df_ in (filt, after, shrunk):
             if df_ is not None:
                 df_.unpersist()
-        retire_split_filter(filt)
         pool.shutdown(wait=True)
     return _one_row(spark, len_after=int(len_after),
                     n_remaining_contained=int(stats["n"]),

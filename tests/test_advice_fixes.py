@@ -142,28 +142,6 @@ def test_ngram_sweep_hadoop_fs(spark, tmp_path):
     dedup._sweep_dead_tables(spark, str(tmp_path / "missing"), "myapp")
 
 
-def test_retire_split_filter_full_uri(spark, tmp_path):
-    """ADVICE r4 (medium): retire must delete the table's directory via
-    the Hadoop FS of the FULL URI — never strip a scheme down to a bare
-    path. A file:-qualified attached path and the inputFiles fallback
-    (scheme-qualified URIs) must both free the real directory."""
-    from qfilter_spark.dist.sharded import retire_split_filter
-
-    d = tmp_path / "split_a"
-    spark.range(5).write.parquet(str(d))
-    filt = spark.read.parquet(str(d))
-    filt._qfs_split_path = "file:" + str(d)  # scheme-qualified attach
-    retire_split_filter(filt)
-    assert not d.exists()
-
-    d2 = tmp_path / "split_b"
-    spark.range(5).write.parquet(str(d2))
-    reread = spark.read.parquet(str(d2))  # no attached path: inputFiles
-    assert reread.inputFiles()[0].startswith("file:")
-    retire_split_filter(reread)
-    assert not d2.exists()
-
-
 # ---------------------------------------------------------------------------
 # round-5 ADVICE findings (fixed in the round-6 optimization round)
 # ---------------------------------------------------------------------------

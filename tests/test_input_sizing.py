@@ -21,7 +21,6 @@ from qfilter_spark.dist.sharded import (
     insert_sharded,
     probe_sharded_chunks,
     remove_sharded,
-    retire_split_filter,
     shrink_sharded,
 )
 from qfilter_spark.dist.sizing import sized_input
@@ -249,7 +248,7 @@ def test_sharded_tables_equal(spark, df):
     assert sized == unsized
 
 
-def test_split_build_equal(spark, tmp_path):
+def test_split_build_equal(spark):
     """Split build over a few keys per shard: every chunk ships all its
     fingerprints as samples, so the planned directory, and with it every
     row, is the same however the input is split."""
@@ -260,11 +259,8 @@ def test_split_build_equal(spark, tmp_path):
 
     def run():
         filt, directory = build_sharded_filter_split(
-            keys, spec, n_shards=8, max_fps_per_row=20,
-            path=str(tmp_path / uuid.uuid4().hex))
-        rows = _table(filt, "key")
-        retire_split_filter(filt)
-        return directory.starts.tolist(), rows
+            keys, spec, n_shards=8, max_fps_per_row=20)
+        return directory.starts.tolist(), _table(filt, "key")
 
     sized, unsized = _sized_and_unsized(spark, run)
     assert len(sized[0]) > 8          # rows were split

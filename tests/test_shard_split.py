@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 from qfilter_spark import sketches
 from qfilter_spark.dist import SketchSpec, build_sketch
 from qfilter_spark.dist.sharded import (build_sharded_filter_split,
-                                        probe_sharded_chunks,
+                                        probe_sharded, probe_sharded_chunks,
                                         sharded_to_single, _fp_meta)
 
 
@@ -30,18 +30,11 @@ def skewed(spark):
     return uniform.union(hot).repartition(8), spec, 16, 2 * n
 
 
-def test_split_bounds_row_sizes(spark, skewed, tmp_path):
-    import os
-
+def test_split_bounds_row_sizes(spark, skewed):
     df, spec, n_shards, n = skewed
     cap = n // 6
-    at_rest = str(tmp_path / "split_table")
     filt, directory = build_sharded_filter_split(df, spec, n_shards=n_shards,
-                                                 max_fps_per_row=cap,
-                                                 path=at_rest)
-    # the at-rest form IS a parquet dir at the requested path (no persisted
-    # DataFrame, no unpersist contract)
-    assert os.path.isdir(at_rest)
+                                                 max_fps_per_row=cap)
     assert not filt.storageLevel.useMemory
     rows = filt.collect()
     by_shard = {}
@@ -58,24 +51,22 @@ def test_split_bounds_row_sizes(spark, skewed, tmp_path):
         if not any(r["key"] == i for r in rows))
 
 
-def test_split_union_bit_equal_to_single(spark, skewed, tmp_path):
+def test_split_union_bit_equal_to_single(spark, skewed):
     df, spec, n_shards, n = skewed
     filt, directory = build_sharded_filter_split(df, spec, n_shards=n_shards,
-                                                 max_fps_per_row=n // 6,
-                                                 path=str(tmp_path / "t"))
+                                                 max_fps_per_row=n // 6)
     single = sketches.loads(build_sketch(df, spec, fan_in=8))
     merged = sketches.loads(sharded_to_single(filt, spec, directory))
     assert np.array_equal(merged.filter.fingerprints(),
                           single.filter.fingerprints())
 
 
-def test_split_remove_then_probe(spark, skewed, tmp_path):
+def test_split_remove_then_probe(spark, skewed):
     from qfilter_spark.dist.sharded import remove_sharded
 
     df, spec, n_shards, n = skewed
     filt, directory = build_sharded_filter_split(df, spec, n_shards=n_shards,
-                                                 max_fps_per_row=n // 6,
-                                                 path=str(tmp_path / "t"))
+                                                 max_fps_per_row=n // 6)
     before = filt.groupBy().sum("n_fps").collect()[0][0]
     # remove a quarter of the uniform keys (fingerprint-width collisions
     # make exact-count asserts off by a handful; tolerances cover them)
@@ -122,11 +113,10 @@ def test_shrink_sharded_reclaims_bytes_keeps_answers(spark, skewed):
     filt.unpersist(); after.unpersist(); shrunk.unpersist()
 
 
-def test_split_probe_zero_false_negatives(spark, skewed, tmp_path):
+def test_split_probe_zero_false_negatives(spark, skewed):
     df, spec, n_shards, n = skewed
     filt, directory = build_sharded_filter_split(df, spec, n_shards=n_shards,
-                                                 max_fps_per_row=n // 6,
-                                                 path=str(tmp_path / "t"))
+                                                 max_fps_per_row=n // 6)
     stats = (probe_sharded_chunks(df, spec, filt, directory, spec)
              .groupBy().sum("n_probed", "n_contained").collect()[0])
     assert int(stats[0]) == n
@@ -140,20 +130,55 @@ def test_split_probe_zero_false_negatives(spark, skewed, tmp_path):
     assert int(a[1]) / int(a[0]) <= 4 * sk.filter.max_error_ratio() + 0.001
 
 
-def test_retire_split_filter_removes_dir(spark, skewed, tmp_path):
-    import os
-
-    from qfilter_spark.dist.sharded import retire_split_filter
+def test_split_table_reads_back_and_probes(spark, skewed, tmp_path):
+    """A stored split table reads back with its ``key`` column, so its
+    directory still routes probes to it."""
+    from qfilter_spark import sources
 
     df, spec, n_shards, n = skewed
-    at_rest = str(tmp_path / "retire_me")
-    filt, _ = build_sharded_filter_split(df, spec, n_shards=n_shards,
-                                         max_fps_per_row=n // 6,
-                                         path=at_rest)
-    assert os.path.isdir(at_rest)
-    retire_split_filter(filt)
-    assert not os.path.exists(at_rest)
-    # a re-read DataFrame with no attached path and no files is a no-op
-    retire_split_filter(spark.range(0).selectExpr(
-        "cast(id as int) key", "cast(id as int) shard",
-        "id n_fps", "cast(null as binary) payload"))
+    filt, directory = build_sharded_filter_split(df, spec, n_shards=n_shards,
+                                                 max_fps_per_row=n // 6)
+    path = str(tmp_path / "split")
+    sources.write_filter_table(filt, path)
+    back = sources.read_filter_table(spark, path)
+    assert back.columns == ["key", "shard", "n_fps", "payload"]
+    assert sorted(map(tuple, back.collect())) == sorted(
+        map(tuple, filt.collect()))
+    stats = (probe_sharded(df, "h", back, directory, spec)
+             .groupBy().sum("n_probed", "n_contained").collect()[0])
+    assert (int(stats[0]), int(stats[1])) == (n, n)
+
+
+@pytest.mark.parametrize("bad", [0, -1])
+def test_split_rejects_max_fps_per_row_below_one(spark, skewed, bad):
+    df, spec, n_shards, _ = skewed
+    sc = spark.sparkContext
+    sc.setJobGroup("split_bad_max", "refused before any job")
+    try:
+        with pytest.raises(ValueError,
+                           match=f"max_fps_per_row must be >= 1, got {bad}"):
+            build_sharded_filter_split(df, spec, n_shards=n_shards,
+                                       max_fps_per_row=bad)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert not sc.statusTracker().getJobIdsForGroup("split_bad_max")
+
+
+def test_split_build_leaves_nothing_behind(spark, skewed, tmp_path):
+    """The split build writes no intermediate table and caches nothing:
+    its table is as lazy as the ordinary build's."""
+    import os
+
+    df, spec, n_shards, n = skewed
+    key = "spark.qfilter.intermediateDir"
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persistent().keys())
+    spark.conf.set(key, str(tmp_path))
+    try:
+        filt, _ = build_sharded_filter_split(df, spec, n_shards=n_shards,
+                                             max_fps_per_row=n // 6)
+        assert sum(r["n_fps"] for r in filt.collect()) == n
+    finally:
+        spark.conf.unset(key)
+    assert os.listdir(tmp_path) == []
+    assert set(persistent().keys()) == before

@@ -112,10 +112,8 @@ def _build(spark, shape, hashes):
         return _pin(spark, table), N_SHARDS
     table, directory = S.build_sharded_filter_split(
         df, SPEC, n_shards=N_SHARDS, max_fps_per_row=4)
-    pinned = _pin(spark, table)
-    S.retire_split_filter(table)
     assert directory.starts.size > N_SHARDS  # the hot shard really split
-    return pinned, directory
+    return _pin(spark, table), directory
 
 
 def _check_collapse(table, route, model: Counter, single):
@@ -178,11 +176,9 @@ def _run(spark, path, shape, initial, steps):
     # Parquet round trip: the same rows come back and still collapse to
     # the model
     sources.write_filter_table(table, path)
-    if shape == "uniform":
-        back = sources.read_filter_table(spark, path)
-        assert back.columns == ["shard", "n_fps", "payload"]
-    else:
-        back = spark.read.schema(route.schema).parquet(path)
+    back = sources.read_filter_table(spark, path)
+    assert back.columns == (["shard", "n_fps", "payload"] if shape == "uniform"
+                            else ["key", "shard", "n_fps", "payload"])
     assert (sorted(tuple(r) for r in back.collect())
             == sorted(tuple(r) for r in table.collect()))
     _check_collapse(back, route, model, single)

@@ -82,11 +82,11 @@ def _both(spark, call):
         return sorted(small.collect()), sorted(large.collect())
 
 
-def _written(spark, table, path, route=N_SHARDS):
+def _written(spark, table, path):
     """``table`` written to Parquet and read back: a table whose size
     Spark knows, like a stored filter table."""
     sources.write_filter_table(table, path)
-    return spark.read.schema(S._directory(route, SPEC).schema).parquet(path)
+    return sources.read_filter_table(spark, path)
 
 
 @pytest.fixture(scope="module")
@@ -99,15 +99,15 @@ def tables(spark, tmp_path_factory):
     uniform = _written(spark, S.build_sharded_filter(present, SPEC, N_SHARDS),
                        str(base / "uniform"))
     split, directory = S.build_sharded_filter_split(
-        present, SPEC, n_shards=N_SHARDS, max_fps_per_row=200,
-        path=str(base / "split"))
+        present, SPEC, n_shards=N_SHARDS, max_fps_per_row=200)
+    split = _written(spark, split, str(base / "split"))
     assert directory.starts.size > N_SHARDS
     hot = _df(spark, PRESENT[_shard_of(PRESENT) == 5])
     drained = _written(spark, S.remove_sharded(uniform, hot, "h", N_SHARDS,
                                                SPEC), str(base / "drained"))
     drained_split = _written(
         spark, S.remove_sharded(split, hot, "h", directory, SPEC),
-        str(base / "drained_split"), directory)
+        str(base / "drained_split"))
     gap = _written(spark, S.build_sharded_filter(
         _df(spark, PRESENT[_shard_of(PRESENT) != 6]), SPEC, N_SHARDS),
         str(base / "gap"))
@@ -122,8 +122,7 @@ def tables(spark, tmp_path_factory):
                for r in grown.collect())
     assert any(r["n_fps"] == 0 for r in drained.collect())
     assert 6 not in {r["shard"] for r in gap.collect()}
-    yield out
-    S.retire_split_filter(split)
+    return out
 
 
 PROBES = dict(mixed=np.concatenate([PRESENT[::3], ABSENT]), absent=ABSENT,
