@@ -99,35 +99,41 @@ class SketchSpec:
         return int(data.size)
 
 
-def _fold(spec: SketchSpec, batches):
-    """The build kernel: Arrow batches -> (new sketch, items absorbed)."""
-    sk = spec.make()
-    n = 0
-    # RSQF keeps a SORTED multiset: feeding it per Arrow batch re-sorts
-    # the whole accumulated array once per batch (O(batches * n log n)
-    # across a task — measured 2.3 s for a 600k-row single-partition
-    # build at the 2048-row batch size). Buffer the extracted hash
-    # chunks and fold them in bounded bulk updates instead — identical
-    # final multiset (insert_hashes is sequential-equivalent and calls
-    # compose), one sort per ~16M hashes. Other sketch kinds
-    # (HLL/CMS/KLL/t-digest/Bloom) absorb batches in O(batch) already.
-    bulk = isinstance(sk, sketches.RsqfSketch)
+# per-task wave of extracted values (~128 MB of hashes) for the RSQF bulk
+# update and the sharded emitter; read on the driver when a plan is built
+_MAX_BUFFER = 16_000_000
+
+
+def _waves(spec: SketchSpec, batches, limit: int):
+    """``spec.extract`` of the non-empty batches, concatenated into waves of
+    at least ``limit`` values (the last one may hold fewer); a ``limit`` of
+    0 yields each batch's array as it comes."""
     bufs: list[np.ndarray] = []
     buffered = 0
     for batch in batches:
         if batch.num_rows:
-            data = spec.extract(batch)
-            if not bulk:
-                n += spec.update(sk, data)
-            elif data.size:
-                bufs.append(data)
-                buffered += data.size
-                if buffered >= 16_000_000:
-                    n += spec.update(sk, np.concatenate(bufs))
-                    bufs, buffered = [], 0
-    if bufs:
-        n += spec.update(sk, np.concatenate(bufs))
-    return sk, n
+            bufs.append(spec.extract(batch))
+            buffered += bufs[-1].size
+            if buffered >= limit:
+                yield np.concatenate(bufs) if limit else bufs[0]
+                bufs, buffered = [], 0
+    if buffered:
+        yield np.concatenate(bufs)
+
+
+def _fold(spec: SketchSpec, batches, limit: int):
+    """The build kernel: Arrow batches -> (new sketch, items absorbed)."""
+    sk = spec.make()
+    # RSQF keeps a SORTED multiset: feeding it per Arrow batch re-sorts
+    # the whole accumulated array once per batch (O(batches * n log n)
+    # across a task — measured 2.3 s for a 600k-row single-partition
+    # build at the 2048-row batch size). It folds waves of ``limit``
+    # hashes in bounded bulk updates instead — identical final multiset
+    # (insert_hashes is sequential-equivalent and calls compose). Other
+    # sketch kinds (HLL/CMS/KLL/t-digest/Bloom) absorb batches in
+    # O(batch) already, so they take each batch's array as it comes.
+    bulk = limit if isinstance(sk, sketches.RsqfSketch) else 0
+    return sk, sum(spec.update(sk, data) for data in _waves(spec, batches, bulk))
 
 
 def merge_payloads(payloads, acc=None):
@@ -158,11 +164,13 @@ def partial_sketches(df, spec: SketchSpec, _key: str | None = None):
     import pyarrow as pa
     from pyspark import TaskContext
 
+    limit = _MAX_BUFFER  # read here, on the driver
+
     def build(batches):
         pid = pa.array([TaskContext.get().partitionId()], pa.int64())
         for key, run in _runs(batches, _key) if _key else [({}, batches)]:
             t0 = time.perf_counter()
-            sk, n = _fold(spec, run)
+            sk, n = _fold(spec, run, limit)
             yield pa.record_batch({
                 **key, "shard_id": pid, "n_items": pa.array([n], pa.int64()),
                 "build_secs": pa.array([time.perf_counter() - t0], pa.float64()),

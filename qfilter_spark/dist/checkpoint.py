@@ -156,11 +156,7 @@ class MergeLineage:
             return None  # pre-manifest checkpoint: caller falls back
         inp = fs.open(p)
         try:
-            data = bytearray()
-            b = inp.read()
-            while b != -1 and len(data) < 4096:
-                data.append(b)
-                b = inp.read()
+            data = inp.readNBytes(4096)
         finally:
             inp.close()
         return int(json.loads(bytes(data).decode())["fan_in"])

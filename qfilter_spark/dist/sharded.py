@@ -56,6 +56,7 @@ import numpy as np
 from .. import sketches
 from ..hashing import u64_hashes_from_arrow
 from ..rsqf import Filter
+from . import agg
 from .agg import SketchSpec
 from .probe import _Table, _probe_rows
 from .sizing import broadcastable, sized_input
@@ -65,9 +66,6 @@ SPLIT_SCHEMA = "key int, " + SHARDED_SCHEMA
 _SAMPLES_PER_CHUNK = 64  # bounded per (wave, shard) row => driver metadata
                          # stays KB-scale at ANY corpus size (RangePartitioner
                          # uses the same bounded-sample-per-partition idea)
-# per-task fingerprint buffer (~128 MB) before the emitter flushes a chunk
-# wave; read on the driver when a plan is built
-_MAX_BUFFER = 16_000_000
 
 _FMT_RAW64 = 0
 _FMT_REL32 = 1
@@ -257,36 +255,24 @@ def _emit(df, spec_in: SketchSpec, directory: ShardDirectory, consume,
     batches for it (:func:`_emit_chunks` packs chunk rows, the split build's
     planning pass samples them, the broadcast probe counts hits in place).
 
-    Spill-aware: a task's fingerprint buffer flushes every ``_MAX_BUFFER``
-    entries, so per-task memory stays bounded no matter the input partition
-    size (SURVEY.md §7 "Python-side memory" risk item); every consumer
-    treats each extra wave as one more sorted run of its row.
+    Spill-aware: a task's fingerprints go out in waves of
+    ``agg._MAX_BUFFER`` (the RSQF build's wave buffer, :func:`agg._waves`),
+    so per-task memory stays bounded no matter the input partition size
+    (SURVEY.md §7 "Python-side memory" risk item); every consumer treats
+    each extra wave as one more sorted run of its row.
     """
     mask = _fp_mask(directory.fs)
-    flush_at = _MAX_BUFFER  # read here, on the driver
-
-    def flush(buf: list):
-        fps = np.concatenate(buf)
-        # default introsort: the buffer is fresh UNSORTED hashes (unlike the
-        # merge paths, which concatenate sorted runs and want timsort) and
-        # this numpy's stable u64 sort is ~7x slower on random input
-        fps.sort()
-        return consume(fps)
+    limit = agg._MAX_BUFFER  # read here, on the driver
 
     def emit(batches):
-        buf: list[np.ndarray] = []
-        buffered = 0
-        for batch in batches:
-            if batch.num_rows:
-                data = spec_in.extract(batch)
-                if data.size:
-                    buf.append(np.asarray(data, dtype=np.uint64) & mask)
-                    buffered += data.size
-            if buffered >= flush_at:
-                yield from flush(buf)
-                buf, buffered = [], 0
-        if buf:
-            yield from flush(buf)
+        for wave in agg._waves(spec_in, batches, limit):
+            fps = wave.astype(np.uint64, copy=False)
+            fps &= mask
+            # default introsort: a wave is fresh UNSORTED hashes (unlike the
+            # merge paths, which concatenate sorted runs and want timsort)
+            # and this numpy's stable u64 sort is ~7x slower on random input
+            fps.sort()
+            yield from consume(fps)
 
     return sized_input(df.select(spec_in.col)).mapInArrow(emit, schema)
 

@@ -75,7 +75,7 @@ def extract_features(df: DataFrame, media_col: str = "media",
     """
     import pyarrow as pa
 
-    from ..hashing import xxh64_u64
+    from ..hashing import xxh64_u64_multi_seed
 
     seeded = df.withColumn("__seed", F.xxhash64(F.col(f"{media_col}.bytes")))
     in_fields = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
@@ -87,10 +87,10 @@ def extract_features(df: DataFrame, media_col: str = "media",
             _require_payloads(batch, media_col)
             seeds = (batch.column("__seed").to_numpy(zero_copy_only=False)
                      .astype(np.int64).view(np.uint64))
-            feats = np.empty((n, dim), dtype=np.float32)
-            for j in range(dim):  # dim vectorized passes, no per-row Python
-                u = xxh64_u64(seeds, np.uint64(1 + j)).astype(np.float64) / 2.0**64
-                feats[:, j] = (2.0 * u - 1.0).astype(np.float32)
+            # (dim, n): the seeds' lanes mixed once, one combine per dimension
+            u = xxh64_u64_multi_seed(seeds, np.arange(1, dim + 1, dtype=np.uint64)
+                                     ).astype(np.float64) / 2.0**64
+            feats = np.ascontiguousarray((2.0 * u - 1.0).astype(np.float32).T)
             keep = [k for k, nm in enumerate(batch.schema.names) if nm != "__seed"]
             cols = [batch.column(k) for k in keep]
             names = [batch.schema.names[k] for k in keep]
@@ -120,7 +120,7 @@ def resize_media(df: DataFrame, media_col: str = "media", width: int = 8,
     """
     import pyarrow as pa
 
-    from ..hashing import xxh64_u64
+    from ..hashing import xxh64_u64_multi_seed
 
     n_lanes = RESIZE_NATIVE * RESIZE_NATIVE * 3 // 8
     out_px = height * width * 3
@@ -142,9 +142,9 @@ def resize_media(df: DataFrame, media_col: str = "media", width: int = 8,
             _require_payloads(batch, media_col)
             seeds = (batch.column("__seed").to_numpy(zero_copy_only=False)
                      .astype(np.int64).view(np.uint64))
-            lanes = np.empty((n, n_lanes), dtype=np.uint64)
-            for j in range(n_lanes):  # lane-vectorized, no per-row Python
-                lanes[:, j] = xxh64_u64(seeds, np.uint64(101 + j))
+            # (n_lanes, n): the seeds' lanes mixed once, one combine per lane
+            lanes = np.ascontiguousarray(xxh64_u64_multi_seed(
+                seeds, np.arange(101, 101 + n_lanes, dtype=np.uint64)).T)
             raster = lanes.view(np.uint8).reshape(
                 n, RESIZE_NATIVE, RESIZE_NATIVE, 3)
             small = raster[:, idx_y][:, :, idx_x]  # (n, h, w, 3) NN resize

@@ -19,7 +19,12 @@ Spark semantics mirrored here (public Spark source, XxHash64 expression):
 - multi-column ``xxhash64(c1, c2, ...)`` chains: each column's hash seeds
   the next (see :func:`xxh64_u64_chain`).
 
-All numpy kernels are fully vectorized (no per-row Python).
+The numpy kernels are fully vectorized (no per-row Python). One lane mix
+(``_xxh64_lane_block``), one combine + avalanche (``_xxh64_combine_block``)
+and one chunk loop (:func:`xxh64_u64_chain`; :func:`xxh64_u64` is its
+one-column case); the lane-sharing kernels mix each block's lanes once for
+the n windows of :func:`xxh64_u64_chain_sliding` or the k seeds of
+:func:`xxh64_u64_multi_seed`, the one way to hash a stream under k seeds.
 """
 
 from __future__ import annotations
@@ -41,111 +46,69 @@ _CHUNK = 65536  # keep working set L2-resident: ~10x on this host, where
                 # parallel first-touch of large fresh pages is pathological
 
 
+# Both blocks take arrays (0-d included), whose uint64 arithmetic wraps
+# without a warning; only numpy scalars warn on overflow.
+def _xxh64_lane_block(v: np.ndarray) -> np.ndarray:
+    """The lane mix, seed-independent: k = rotl31(v * P2) * P1."""
+    k = v * _P2
+    tmp = k >> np.uint64(33)
+    np.left_shift(k, np.uint64(31), out=k)
+    np.bitwise_or(k, tmp, out=k)
+    np.multiply(k, _P1, out=k)
+    return k
+
+
+def _xxh64_combine_block(k: np.ndarray, seed) -> np.ndarray:
+    """The seed-dependent combine + avalanche of the lanes ``k``.
+
+    Does NOT modify ``k`` (lanes are shared across windows and seeds).
+    """
+    seed = np.asarray(seed).astype(np.uint64, copy=False)
+    acc = np.bitwise_xor(seed + (_P5 + np.uint64(8)), k)
+    tmp = acc >> np.uint64(37)
+    np.left_shift(acc, np.uint64(27), out=acc)
+    np.bitwise_or(acc, tmp, out=acc)
+    np.multiply(acc, _P1, out=acc)
+    np.add(acc, _P4, out=acc)
+    np.right_shift(acc, np.uint64(33), out=tmp)
+    np.bitwise_xor(acc, tmp, out=acc)
+    np.multiply(acc, _P2, out=acc)
+    np.right_shift(acc, np.uint64(29), out=tmp)
+    np.bitwise_xor(acc, tmp, out=acc)
+    np.multiply(acc, _P3, out=acc)
+    np.right_shift(acc, np.uint64(32), out=tmp)
+    np.bitwise_xor(acc, tmp, out=acc)
+    return acc
+
+
 def xxh64_u64(values: np.ndarray, seed=SPARK_SEED) -> np.ndarray:
     """Vectorized XXH64 of each uint64 value as one 8-byte LE lane.
 
     Matches Spark's ``xxhash64(longCol)`` (XXH64.hashLong). ``seed`` may be a
-    scalar or a per-row uint64 array (used for column chaining). Large
-    inputs are processed in cache-resident chunks (bit-identical output).
+    scalar or a per-row uint64 array (used for column chaining). The
+    one-column case of :func:`xxh64_u64_chain`, shaped like ``values``.
     """
-    v_arr = np.asarray(values)
-    if v_arr.size > _CHUNK:
-        out = np.empty(v_arr.shape, dtype=np.uint64)
-        seed_arr = np.asarray(seed)
-        for s in range(0, v_arr.size, _CHUNK):
-            e = min(s + _CHUNK, v_arr.size)
-            sd = seed_arr[s:e] if seed_arr.ndim else seed_arr
-            out[s:e] = _xxh64_u64_block(v_arr[s:e], sd)
-        return out
-    return _xxh64_u64_block(v_arr, seed)
-
-
-def _xxh64_u64_block(values: np.ndarray, seed=SPARK_SEED) -> np.ndarray:
-    with np.errstate(over="ignore"):
-        v = np.asarray(values).astype(np.uint64, copy=False)
-        seed = np.asarray(seed).astype(np.uint64, copy=False)
-        # lane: k = rotl31(v * P2) * P1  (in-place where possible)
-        k = v * _P2
-        tmp = k >> np.uint64(33)
-        np.left_shift(k, np.uint64(31), out=k)
-        np.bitwise_or(k, tmp, out=k)
-        np.multiply(k, _P1, out=k)
-        # acc = rotl27(seed + P5 + 8 ^ k) * P1 + P4
-        acc = np.bitwise_xor(seed + (_P5 + np.uint64(8)), k, out=k)
-        np.right_shift(acc, np.uint64(37), out=tmp)
-        np.left_shift(acc, np.uint64(27), out=acc)
-        np.bitwise_or(acc, tmp, out=acc)
-        np.multiply(acc, _P1, out=acc)
-        np.add(acc, _P4, out=acc)
-        # avalanche
-        np.right_shift(acc, np.uint64(33), out=tmp)
-        np.bitwise_xor(acc, tmp, out=acc)
-        np.multiply(acc, _P2, out=acc)
-        np.right_shift(acc, np.uint64(29), out=tmp)
-        np.bitwise_xor(acc, tmp, out=acc)
-        np.multiply(acc, _P3, out=acc)
-        np.right_shift(acc, np.uint64(32), out=tmp)
-        np.bitwise_xor(acc, tmp, out=acc)
-        return acc
+    return xxh64_u64_chain([values], seed)
 
 
 def xxh64_u64_chain(columns: list[np.ndarray], seed=SPARK_SEED) -> np.ndarray:
     """Spark multi-column xxhash64: hash of col i seeds col i+1.
 
-    Chunked across the whole chain so each block stays cache-hot through
-    every column (bit-identical to the unchunked computation).
+    Runs in cache-resident blocks of ``_CHUNK`` rows, each block through
+    every column (bit-identical to the unblocked computation); the output
+    is shaped like ``columns[0]``.
     """
-    cols = [np.asarray(c) for c in columns]
-    n = cols[0].size
-    if n > _CHUNK:
-        out = np.empty(n, dtype=np.uint64)
-        seed_arr = np.asarray(seed)
-        for s in range(0, n, _CHUNK):
-            e = min(s + _CHUNK, n)
-            acc = seed_arr[s:e] if seed_arr.ndim else seed_arr
-            for col in cols:
-                acc = _xxh64_u64_block(col[s:e], acc)
-            out[s:e] = acc
-        return out
-    acc = seed
-    for col in cols:
-        acc = _xxh64_u64_block(col, acc)
-    return acc
-
-
-def _xxh64_lane_block(v: np.ndarray) -> np.ndarray:
-    """Seed-independent lane mix: k = rotl31(v * P2) * P1."""
-    with np.errstate(over="ignore"):
-        k = v * _P2
-        tmp = k >> np.uint64(33)
-        np.left_shift(k, np.uint64(31), out=k)
-        np.bitwise_or(k, tmp, out=k)
-        np.multiply(k, _P1, out=k)
-        return k
-
-
-def _xxh64_combine_block(k: np.ndarray, seed) -> np.ndarray:
-    """Seed-dependent combine + avalanche over a precomputed lane array.
-
-    Does NOT modify ``k`` (lanes are shared across sliding windows).
-    """
-    with np.errstate(over="ignore"):
-        seed = np.asarray(seed).astype(np.uint64, copy=False)
-        acc = np.bitwise_xor(seed + (_P5 + np.uint64(8)), k)
-        tmp = acc >> np.uint64(37)
-        np.left_shift(acc, np.uint64(27), out=acc)
-        np.bitwise_or(acc, tmp, out=acc)
-        np.multiply(acc, _P1, out=acc)
-        np.add(acc, _P4, out=acc)
-        np.right_shift(acc, np.uint64(33), out=tmp)
-        np.bitwise_xor(acc, tmp, out=acc)
-        np.multiply(acc, _P2, out=acc)
-        np.right_shift(acc, np.uint64(29), out=tmp)
-        np.bitwise_xor(acc, tmp, out=acc)
-        np.multiply(acc, _P3, out=acc)
-        np.right_shift(acc, np.uint64(32), out=tmp)
-        np.bitwise_xor(acc, tmp, out=acc)
-        return acc
+    shape = np.shape(columns[0])
+    cols = [np.asarray(c).reshape(-1) for c in columns]
+    seed = np.asarray(seed)
+    out = np.empty(cols[0].size, dtype=np.uint64)
+    for s in range(0, out.size, _CHUNK):
+        acc = seed.reshape(-1)[s:s + _CHUNK] if seed.ndim else seed
+        for col in cols:
+            block = col[s:s + _CHUNK].astype(np.uint64, copy=False)
+            acc = _xxh64_combine_block(_xxh64_lane_block(block), acc)
+        out[s:s + _CHUNK] = acc
+    return out.reshape(shape)
 
 
 def xxh64_u64_chain_sliding(flat: np.ndarray, n: int,
@@ -162,9 +125,7 @@ def xxh64_u64_chain_sliding(flat: np.ndarray, n: int,
     flat = np.asarray(flat)
     if flat.dtype != np.uint64:
         flat = flat.astype(np.int64).view(np.uint64)
-    n_windows = flat.size - n + 1
-    if n_windows <= 0:
-        return np.empty(0, dtype=np.uint64)
+    n_windows = max(flat.size - n + 1, 0)
     out = np.empty(n_windows, dtype=np.uint64)
     for s in range(0, n_windows, _CHUNK):
         e = min(s + _CHUNK, n_windows)
@@ -190,10 +151,9 @@ def xxh64_u64_multi_seed(values: np.ndarray, seeds: np.ndarray) -> np.ndarray:
     seeds = np.asarray(seeds, dtype=np.uint64)
     out = np.empty((seeds.size, v.size), dtype=np.uint64)
     for s in range(0, v.size, _CHUNK):
-        e = min(s + _CHUNK, v.size)
-        lanes = _xxh64_lane_block(v[s:e])
+        lanes = _xxh64_lane_block(v[s:s + _CHUNK])
         for i, sd in enumerate(seeds):
-            out[i, s:e] = _xxh64_combine_block(lanes, sd)
+            out[i, s:s + _CHUNK] = _xxh64_combine_block(lanes, sd)
     return out
 
 

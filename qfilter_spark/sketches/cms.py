@@ -14,7 +14,7 @@ import struct
 
 import numpy as np
 
-from ..hashing import xxh64_u64
+from ..hashing import xxh64_u64_multi_seed
 from .base import KIND_CMS, frame, register
 
 _HDR = struct.Struct("<IIQ")  # depth, width, n_total
@@ -42,10 +42,9 @@ class CountMinSketch:
 
     def _indexes(self, hashes: np.ndarray) -> np.ndarray:
         """(depth, n) column indexes; row i re-hashes with seed i."""
-        h = np.asarray(hashes, dtype=np.uint64)
-        rows = [xxh64_u64(h, np.uint64(0xC5EED + i)) % np.uint64(self.width)
-                for i in range(self.depth)]
-        return np.stack(rows).astype(np.int64)
+        seeds = np.uint64(0xC5EED) + np.arange(self.depth, dtype=np.uint64)
+        rows = xxh64_u64_multi_seed(np.asarray(hashes, dtype=np.uint64), seeds)
+        return (rows % np.uint64(self.width)).astype(np.int64)
 
     def update_hashes(self, hashes: np.ndarray, weights: np.ndarray | None = None) -> None:
         idx = self._indexes(hashes)
@@ -58,9 +57,7 @@ class CountMinSketch:
         self.n_total += int(w.sum())
 
     def estimate_hashes(self, hashes: np.ndarray) -> np.ndarray:
-        idx = self._indexes(hashes)
-        ests = np.stack([self.table[i][idx[i]] for i in range(self.depth)])
-        return ests.min(axis=0)
+        return np.take_along_axis(self.table, self._indexes(hashes), axis=1).min(axis=0)
 
     def merge(self, other: "CountMinSketch") -> None:
         if (self.depth, self.width) != (other.depth, other.width):

@@ -35,6 +35,7 @@ def main():
     spark = (SparkSession.builder.master(master)
              .config("spark.sql.shuffle.partitions", shuffle)
              .config("spark.ui.enabled", "false")
+             .config("spark.ui.showConsoleProgress", "false")
              .config("spark.sql.adaptive.enabled", "true")
              .config("spark.sql.session.timeZone", "UTC")
              .getOrCreate())

@@ -8,12 +8,15 @@ parity live inside a SparkSession.
 import numpy as np
 
 from qfilter_spark.hashing import (
+    _CHUNK,
     to_i64,
     xxh64_bytes,
     xxh64_i64,
     xxh64_str,
     xxh64_u64,
     xxh64_u64_chain,
+    xxh64_u64_chain_sliding,
+    xxh64_u64_multi_seed,
 )
 
 SPARK_LONG_VECTORS = {
@@ -105,3 +108,75 @@ def test_hash_obj_none_and_nested():
     assert hash_obj((1, (2.5, "x"), b"y")) == hash_obj((1, 2.5, "x", b"y"))
     # mixed-type chain is order-sensitive
     assert hash_obj((1, "a")) != hash_obj(("a", 1))
+
+
+# Inputs longer than two kernel blocks: every entry point is checked
+# against the pure-Python reference on both sides of both block edges.
+N_EDGE = 2 * _CHUNK + 3
+EDGE_ROWS = [0, 1, _CHUNK - 1, _CHUNK, _CHUNK + 1,
+             2 * _CHUNK - 1, 2 * _CHUNK, N_EDGE - 1]
+
+
+def _ref_lane(value, seed) -> int:
+    """XXH64 of one 8-byte LE lane, by the pure-Python reference."""
+    return xxh64_bytes(int(value).to_bytes(8, "little"), int(seed))
+
+
+def test_u64_across_chunk_edges():
+    rng = np.random.default_rng(11)
+    vals = rng.integers(0, 2**64, N_EDGE, dtype=np.uint64)
+    seeds = rng.integers(0, 2**64, N_EDGE, dtype=np.uint64)
+    scalar, per_row = xxh64_u64(vals), xxh64_u64(vals, seeds)
+    assert scalar.shape == per_row.shape == (N_EDGE,)
+    for i in EDGE_ROWS:
+        assert int(scalar[i]) == _ref_lane(vals[i], 42)
+        assert int(per_row[i]) == _ref_lane(vals[i], seeds[i])
+
+
+def test_chain_across_chunk_edges():
+    rng = np.random.default_rng(12)
+    cols = [rng.integers(0, 2**64, N_EDGE, dtype=np.uint64) for _ in range(3)]
+    out = xxh64_u64_chain(cols)
+    assert out.shape == (N_EDGE,)
+    for i in EDGE_ROWS:
+        acc = 42
+        for col in cols:
+            acc = _ref_lane(col[i], acc)
+        assert int(out[i]) == acc
+
+
+def test_sliding_across_chunk_edges():
+    n = 3
+    rng = np.random.default_rng(13)
+    tokens = rng.integers(-2**40, 2**40, N_EDGE + n - 1, dtype=np.int64)
+    assert (tokens < 0).any()
+    got = xxh64_u64_chain_sliding(tokens, n)
+    u = tokens.view(np.uint64)
+    assert np.array_equal(got, xxh64_u64_chain([u[k:k + N_EDGE] for k in range(n)]))
+    for i in EDGE_ROWS:
+        acc = 42
+        for k in range(n):
+            acc = _ref_lane(u[i + k], acc)
+        assert int(got[i]) == acc
+
+
+def test_multi_seed_across_chunk_edges():
+    rng = np.random.default_rng(14)
+    vals = rng.integers(0, 2**64, N_EDGE, dtype=np.uint64)
+    seeds = np.uint64(0xC5EED) + np.arange(5, dtype=np.uint64)
+    got = xxh64_u64_multi_seed(vals, seeds)
+    assert np.array_equal(got, np.stack([xxh64_u64(vals, s) for s in seeds]))
+    for i in EDGE_ROWS:
+        assert int(got[4, i]) == _ref_lane(vals[i], seeds[4])
+
+
+def test_output_shape_follows_input():
+    from qfilter_spark.hashing import hash_obj
+
+    for v in (np.empty(0, dtype=np.uint64), np.asarray([np.uint64(7)]),
+              np.arange(6, dtype=np.uint64).reshape(2, 3)):
+        assert xxh64_u64(v).shape == v.shape
+        assert xxh64_u64(v, 2**64 - 1).shape == v.shape  # hash_obj's seeds
+        assert xxh64_u64_chain([v, v]).shape == v.shape
+    assert hash_obj(7) == _ref_lane(7, 42)
+    assert hash_obj((7, 8)) == _ref_lane(8, _ref_lane(7, 42))

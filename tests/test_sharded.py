@@ -119,14 +119,42 @@ def test_remove_sharded_matches_single_node(spark, hashed_df):
 def test_build_spill_waves_identical(spark, hashed_df, monkeypatch):
     """A tiny emitter buffer forces multiple chunk waves per task; result
     unchanged."""
-    from qfilter_spark.dist import sharded
+    from qfilter_spark.dist import agg
 
     a = build_sharded_filter(hashed_df, SPEC, n_shards=8)
     pa_ = {r["shard"]: bytes(r["payload"]) for r in a.collect()}
-    monkeypatch.setattr(sharded, "_MAX_BUFFER", 50)
+    monkeypatch.setattr(agg, "_MAX_BUFFER", 50)
     b = build_sharded_filter(hashed_df, SPEC, n_shards=8)
     pb = {r["shard"]: bytes(r["payload"]) for r in b.collect()}
     assert pa_ == pb
+
+
+def test_waves_join_batches_up_to_the_limit():
+    import pyarrow as pa
+
+    from qfilter_spark.dist.agg import _waves
+
+    batches = [pa.record_batch([pa.array(np.arange(k), pa.int64())], names=["h"])
+               for k in (30, 0, 30, 30, 10)]
+    assert [w.size for w in _waves(SPEC, batches, 0)] == [30, 30, 30, 10]
+    assert [w.size for w in _waves(SPEC, batches, 50)] == [60, 40]
+
+
+def test_build_sketch_fold_waves_identical(spark, hashed_df, monkeypatch):
+    """Small Arrow batches and a tiny wave limit make the RSQF build fold
+    several bulk waves per task; the sketch bytes are unchanged."""
+    from qfilter_spark.dist import agg
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "64")
+    try:
+        a = build_sketch(hashed_df, SPEC)
+        monkeypatch.setattr(agg, "_MAX_BUFFER", 50)
+        b = build_sketch(hashed_df, SPEC)
+    finally:
+        spark.conf.set(key, old)
+    assert a == b
 
 
 @pytest.mark.parametrize("bad", [0, 3, 6, -4, 2.5])
