@@ -35,7 +35,8 @@ import struct
 import numpy as np
 
 from . import params
-from .errors import CapacityExceeded, IncompatibleFingerprintSize
+from .errors import (CapacityExceeded, IncompatibleFingerprintSize,
+                     NotEnoughFingerprintBits)
 from .hashing import hash_obj
 
 _U64_MAX = (1 << 64) - 1
@@ -49,8 +50,7 @@ _FMT_BLOCKS = 2
 class Filter:
     """A quotient filter over 64-bit hashes with counting and merge support."""
 
-    __slots__ = ("qbits", "rbits", "max_qbits", "_fps", "_probe_words",
-                 "_probe_seen")
+    __slots__ = ("qbits", "rbits", "max_qbits", "_fps")
 
     # ------------------------------------------------------------------
     # constructors (src/lib.rs:392-466)
@@ -58,14 +58,11 @@ class Filter:
     def __init__(self, qbits: int, rbits: int, max_qbits: int | None = None,
                  fps: np.ndarray | None = None):
         if qbits < 1 or rbits < 1 or qbits + rbits > 64:
-            from .errors import NotEnoughFingerprintBits
             raise NotEnoughFingerprintBits(f"invalid qbits={qbits} rbits={rbits}")
         self.qbits = qbits
         self.rbits = rbits
         self.max_qbits = max_qbits
         self._fps = np.empty(0, dtype=np.uint64) if fps is None else fps
-        self._probe_words = None  # lazy probe bitmap; see _probe_bitmap()
-        self._probe_seen = 0      # cumulative probe volume (build heuristic)
 
     @classmethod
     def new(cls, capacity: int, fp_rate: float) -> "Filter":
@@ -128,7 +125,6 @@ class Filter:
 
     def clear(self) -> None:
         self._fps = np.empty(0, dtype=np.uint64)
-        self._invalidate_probe_cache()
 
     # ------------------------------------------------------------------
     # fingerprints
@@ -167,93 +163,13 @@ class Filter:
         hi = np.searchsorted(self._fps, fp, side="right")
         return int(hi - lo)
 
-    #: probe slice: bounds every probe temporary to one slice (measured at
-    #: 2M keys on 4 cores: the bitmap test 26 ns/key sliced, 32-33 whole)
+    #: probe slice (see _search)
     _PROBE_CHUNK = 65536
-
-    #: probe-bitmap gate: one bit per point of the 2^fs fingerprint domain.
-    #: Worth building only when the domain is small (<= this many bytes) and
-    #: not wildly sparse relative to the stored set (<= 8x the fps array).
-    _BITMAP_MAX_BYTES = 64 << 20
-
-    def _invalidate_probe_cache(self) -> None:
-        """Drop the probe bitmap AND the cumulative-volume credit.
-
-        Probes answered before a mutation must not pay for a rebuild after
-        it: without the reset, once the len/2 threshold has been crossed a
-        single >4096-row batch after every mutation would re-zero and
-        re-populate the whole 2^fs domain — ~len/2-probes' worth of work
-        charged to one batch (code-review finding, round 5)."""
-        self._probe_words = None
-        self._probe_seen = 0
-
-    def _probe_bitmap(self) -> np.ndarray | None:
-        """Exact membership bitmap over the 2^fs fingerprint domain, or None.
-
-        One bit per possible fingerprint, so a probe is a single random
-        load + bit test — no sort, no binary search (~60 M probes/s vs
-        ~11 M/s for the argsort+searchsorted path at 1.9M stored). Exact,
-        not approximate: bit set <=> fingerprint present. Cached until any
-        mutation reassigns ``_fps``; grow/shrink keep the fingerprint size
-        (qbits+1/rbits-1) so the cache survives them. This is probe-time
-        scratch, NOT part of the at-rest format (memory_usage() excludes it).
-        """
-        if self._probe_words is not None:
-            return self._probe_words
-        fs = self.fingerprint_size()
-        if fs > 32:
-            return None
-        fps = self._fps
-        n_words = max((1 << fs) >> 6, 1)
-        if n_words * 8 > min(self._BITMAP_MAX_BYTES,
-                             8 * max(fps.nbytes, 1 << 20)):
-            return None
-        words = np.zeros(n_words, dtype=np.uint64)
-        # sliced like the probes: the temporaries stay one slice big
-        ch = self._PROBE_CHUNK
-        for s in range(0, fps.size, ch):
-            c = fps[s:s + ch]
-            widx = (c >> np.uint64(6)).astype(np.int64)
-            bits = np.uint64(1) << (c & np.uint64(63))
-            # fps is sorted, so word indices group contiguously: OR each
-            # group with reduceat instead of the per-element bitwise_or.at
-            # loop; |= composes a group split across a chunk boundary
-            new_group = np.empty(widx.size, dtype=bool)
-            new_group[0] = True
-            np.not_equal(widx[1:], widx[:-1], out=new_group[1:])
-            first = np.flatnonzero(new_group)
-            words[widx[first]] |= np.bitwise_or.reduceat(bits, first)
-        self._probe_words = words
-        return words
-
-    def _probe_bitmap_if_worth(self, n_queries: int) -> np.ndarray | None:
-        """The bitmap, building it only once probe volume justifies the cost.
-
-        Build is O(len(self)) (one chunked pass + zeroing the domain), probe
-        saving is ~linear in queries; measured breakeven is around half the
-        stored size, so the build triggers once CUMULATIVE probe volume on
-        this filter reaches len/2 — a one-shot small batch against a big
-        filter keeps the cheap sorted-search path, while a stream of Arrow
-        batches (the distributed probe shape) converts after the first few.
-        """
-        self._probe_seen += n_queries
-        if self._probe_words is None and self._probe_seen < (self._fps.size >> 1):
-            return None
-        return self._probe_bitmap()
-
-    def _bitmap_test(self, words: np.ndarray, fps: np.ndarray) -> np.ndarray:
-        """Membership bit test per query (chunked gathers, see _PROBE_CHUNK)."""
-        out = np.empty(fps.size, dtype=bool)
-        ch = self._PROBE_CHUNK
-        for s in range(0, fps.size, ch):
-            c = fps[s:s + ch]
-            w = words[(c >> np.uint64(6)).astype(np.int64)]
-            out[s:s + ch] = (w >> (c & np.uint64(63))) & np.uint64(1)
-        return out
 
     def _search(self, fps: np.ndarray, count: bool) -> np.ndarray:
         """Per-query membership (bool) or multiplicity (int64) by binary
-        search of the stored fingerprints; ``fps`` is already masked and
+        search of the stored fingerprints: the one probe path of
+        contains_hashes and count_hashes. ``fps`` is already masked and
         the filter is non-empty.
 
         A batch over 4096 keys is searched in ascending order: binary
@@ -291,27 +207,12 @@ class Filter:
         fps = np.asarray(hashes, dtype=np.uint64) & self._fp_mask()
         if self._fps.size == 0:
             return np.zeros(fps.size, dtype=bool)
-        if fps.size > 4096:
-            words = self._probe_bitmap_if_worth(fps.size)
-            if words is not None:
-                return self._bitmap_test(words, fps)
         return self._search(fps, count=False)
 
     def count_hashes(self, hashes: np.ndarray) -> np.ndarray:
         fps = np.asarray(hashes, dtype=np.uint64) & self._fp_mask()
         if self._fps.size == 0:
             return np.zeros(fps.size, dtype=np.int64)
-        if fps.size > 4096:
-            words = self._probe_bitmap_if_worth(fps.size)
-            if words is not None:
-                # bitmap prefilter: absent fingerprints count 0 without any
-                # sort; only the present subset needs the binary search
-                present = self._bitmap_test(words, fps)
-                out = np.zeros(fps.size, dtype=np.int64)
-                sub = fps[present]
-                if sub.size:
-                    out[present] = self._search(sub, count=True)
-                return out
         return self._search(fps, count=True)
 
     # ------------------------------------------------------------------
@@ -353,7 +254,6 @@ class Filter:
         if len(self) >= self.capacity():
             raise CapacityExceeded(f"len {len(self)} >= capacity {self.capacity()}")
         self._fps = np.insert(self._fps, lo, fp)
-        self._invalidate_probe_cache()
         return count
 
     def remove(self, item) -> bool:
@@ -371,7 +271,6 @@ class Filter:
         if lo >= len(self) or self._fps[lo] != fp:
             return False
         self._fps = np.delete(self._fps, lo)
-        self._invalidate_probe_cache()
         return True
 
     # ------------------------------------------------------------------
@@ -450,7 +349,6 @@ class Filter:
         # numpy's stable u64 path is ~7x slower (0.21s vs 0.03s at 1.9M)
         merged.sort()
         self._fps = merged
-        self._invalidate_probe_cache()
 
     def remove_hashes(self, hashes: np.ndarray) -> int:
         """Batch remove: one occurrence per request, if present.
@@ -480,7 +378,6 @@ class Filter:
         np.add.at(drop, starts + take, -1)
         in_drop = np.cumsum(drop[:-1]) > 0
         self._fps = self._fps[~in_drop]
-        self._invalidate_probe_cache()
         return removed
 
     # ------------------------------------------------------------------
@@ -510,7 +407,8 @@ class Filter:
         """qbits+1 / rbits-1: fingerprint size invariant, FPR doubles
         (src/lib.rs:1365-1377, doc src/lib.rs:420-423). A canonical-form
         no-op on the fingerprint multiset."""
-        assert self.rbits > 1, "cannot grow with rbits == 1"
+        if self.rbits <= 1:
+            raise NotEnoughFingerprintBits("cannot grow with rbits == 1")
         self.qbits += 1
         self.rbits -= 1
 

@@ -27,7 +27,9 @@ class BloomFilter:
 
     def __init__(self, m_bits: int, k: int, words: np.ndarray | None = None,
                  n_added: int = 0):
-        assert m_bits % 64 == 0
+        if m_bits <= 0 or m_bits % 64 != 0 or k < 1:
+            raise ValueError(f"bad Bloom geometry m_bits={m_bits} k={k}: "
+                             "m_bits must be a positive multiple of 64, k >= 1")
         self.m_bits = m_bits
         self.k = k
         self.words = (np.zeros(m_bits // 64, dtype=np.uint64)

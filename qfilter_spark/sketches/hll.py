@@ -53,7 +53,8 @@ class HllSketch:
     kind = "hll"
 
     def __init__(self, p: int = 14, registers: np.ndarray | None = None):
-        assert 4 <= p <= 18
+        if not 4 <= p <= 18:
+            raise ValueError(f"HLL precision {p} out of range 4..18")
         self.p = p
         self.m = 1 << p
         self.registers = (np.zeros(self.m, dtype=np.uint8)

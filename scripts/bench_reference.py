@@ -72,9 +72,6 @@ def bench_ours(cpu: int, cap: int, fp_rate: float, n: int, reps: int) -> dict:
             t0 = time.perf_counter()
             f.insert_hashes(present)
             insert_secs = time.perf_counter() - t0
-            tb = time.perf_counter()
-            f._probe_bitmap()  # one-time probe-index build, timed as its own phase
-            bitmap_build_secs = time.perf_counter() - tb
             t1 = time.perf_counter()
             hits = int(f.contains_hashes(present).sum())
             query_hit_secs = time.perf_counter() - t1
@@ -86,7 +83,6 @@ def bench_ours(cpu: int, cap: int, fp_rate: float, n: int, reps: int) -> dict:
             blocks_encode_secs = time.perf_counter() - t3
             assert hits == n
             r = {"insert_secs": insert_secs,
-                 "bitmap_build_secs": bitmap_build_secs,
                  "query_hit_secs": query_hit_secs,
                  "query_miss_secs": query_miss_secs,
                  "blocks_encode_secs": blocks_encode_secs,
@@ -114,14 +110,11 @@ f = Filter.new(cap, fp_rate)
 t0 = time.perf_counter()
 f.insert_hashes(hashes)
 ins = time.perf_counter() - t0
-tb = time.perf_counter()
-f._probe_bitmap()
-bld = time.perf_counter() - tb
 t1 = time.perf_counter()
 hits = int(f.contains_hashes(hashes).sum())
 q = time.perf_counter() - t1
 assert hits == n
-print(ins, bld, q)
+print(ins, q)
 """
 
 
@@ -139,13 +132,13 @@ def bench_ours_sharded(cpus: list[int], cap: int, fp_rate: float, n: int,
              str(c), str(per), str(cap), str(fp_rate), str(100 + rep * 31 + i)],
             stdout=subprocess.PIPE, text=True)
             for i, c in enumerate(cpus)]
-        ins, bld, q = 0.0, 0.0, 0.0
+        ins, q = 0.0, 0.0
         for p in procs:
             out, _ = p.communicate()
-            a, c, b = map(float, out.split())
+            a, b = map(float, out.split())
             # wall = slowest shard
-            ins, bld, q = max(ins, a), max(bld, c), max(q, b)
-        r = {"insert_secs": ins, "bitmap_build_secs": bld, "query_hit_secs": q}
+            ins, q = max(ins, a), max(q, b)
+        r = {"insert_secs": ins, "query_hit_secs": q}
         best = r if best is None else {k: min(best[k], r[k]) for k in r}
     return {**best, "n_workers": len(cpus), "n_per_worker": per}
 
@@ -198,14 +191,6 @@ def main():
             "insert": round(ref["insert_secs"] / ours["insert_secs"], 3),
             "query_hit": round(
                 ref["query_hit_secs"] / ours["query_hit_secs"], 3),
-            # query_hit excludes the one-time probe-bitmap build (timed as
-            # bitmap_build_secs): it compares steady-state probes against
-            # the reference's probes. The first real probe wave pays that
-            # build, so the amortized ratio charges it to this n-probe
-            # phase — the honest first-probe number (ADVICE r5)
-            "query_hit_amortized_first_wave": round(
-                ref["query_hit_secs"]
-                / (ours["query_hit_secs"] + ours["bitmap_build_secs"]), 3),
             "query_miss": round(
                 ref["query_miss_secs"] / ours["query_miss_secs"], 3),
         },

@@ -364,7 +364,7 @@ def test_capacity_exceeded_parity(ref):
 # Arrow UDFs (dist/agg.py, dist/sharded.py, sketches/*); the tests above drive
 # the scalar paths only. Here the bulk kernels are compared op-for-op against
 # the reference's sequential public API on the same hash streams, including
-# the >4096-probe sorted-chunk/bitmap branches.
+# the >4096-probe argsorted and ascending search branches.
 
 
 def _ref_insert_stream(theirs: RefFilter, hashes, max_count: int) -> int:
@@ -394,8 +394,8 @@ def test_bulk_insert_matches_reference(ref, max_count, seed):
 
 
 def test_bulk_probe_matches_reference(ref):
-    """contains_hashes / count_hashes on a >4096 probe batch (the sorted-chunk
-    / bitmap-eligible branch) must answer exactly like the reference's per-op
+    """contains_hashes / count_hashes on a >4096 probe batch (the argsorted
+    search branch) must answer exactly like the reference's per-op
     contains/count on every element."""
     rng = np.random.default_rng(61)
     universe = rng.integers(0, U64, size=1200, dtype=np.uint64)

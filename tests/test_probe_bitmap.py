@@ -1,10 +1,16 @@
-"""Probe-bitmap fast path: exactness, invalidation, and gating.
+"""Batch probes against reference answers.
 
-contains_hashes/count_hashes use an exact membership bitmap over the 2^fs
-fingerprint domain when it's small enough (rsqf.Filter._probe_bitmap). The
-bitmap is a pure accelerator: every answer must be bit-identical to the
-binary-search path (the reference's contains/count semantics,
-/root/reference/src/lib.rs:972-1018).
+contains_hashes/count_hashes answer a uint64 hash column by one sorted
+search of the stored fingerprints (rsqf.Filter._search): an unsorted batch
+of more than 4096 keys is argsorted first, an ascending one is searched in
+place, and every batch is searched in _PROBE_CHUNK slices. Each answer must
+equal the scalar count_fingerprint, or a numpy multiset of the stored
+fingerprints, the reference's contains/count semantics (src/lib.rs:972-1018
+of the reference crate).
+
+The file and some test names date from a probe bitmap that Filter kept
+beside the search; the bitmap is deleted, and every test here checks the
+one sorted search.
 """
 
 import numpy as np
@@ -13,213 +19,162 @@ import pytest
 from qfilter_spark.rsqf import Filter
 
 
+def _keys(rng, n):
+    return rng.integers(0, 1 << 64, size=n, dtype=np.uint64)
+
+
 def _mk(n=200_000, cap=1 << 18, seed=7):
     rng = np.random.default_rng(seed)
-    present = rng.integers(0, 1 << 64, size=n, dtype=np.uint64)
-    absent = rng.integers(0, 1 << 64, size=n, dtype=np.uint64)
+    present, absent = _keys(rng, n), _keys(rng, n)
     f = Filter.new(cap, 0.01)
     f.insert_hashes(present)
     return f, present, absent
 
 
-class _NoBitmapFilter(Filter):
-    """Filter with the bitmap gate closed (class attr shadows the gate;
-    Filter has __slots__, so an instance attribute would not stick)."""
-    _BITMAP_MAX_BYTES = 0
+def _multiset_counts(f, q):
+    """Multiplicity of each masked query in the stored fingerprints, by
+    np.unique rather than the filter's own search."""
+    vals, cnt = np.unique(f.fingerprints(), return_counts=True)
+    fq = q & f._fp_mask()
+    pos = np.minimum(np.searchsorted(vals, fq), vals.size - 1)
+    return np.where(vals[pos] == fq, cnt[pos], 0).astype(np.int64)
 
 
-def _forced_off(f):
-    """Same filter contents with the bitmap gate closed."""
-    return _NoBitmapFilter(f.qbits, f.rbits, f.max_qbits, f.fingerprints())
-
-
-def test_bitmap_gate_is_open_for_this_shape():
-    f, _, _ = _mk()
-    assert f._probe_bitmap() is not None  # otherwise this file tests nothing
+def _check(f, q):
+    """Batch counts and membership of ``q`` equal the scalar probe's."""
+    want = np.array([f.count_fingerprint(int(h)) for h in q], dtype=np.int64)
+    got_c = f.contains_hashes(q)
+    got_n = f.count_hashes(q)
+    assert got_c.dtype == np.bool_ and got_n.dtype == np.int64
+    assert (got_n == want).all()
+    assert (got_c == (want > 0)).all()
+    return want
 
 
 def test_contains_parity_with_search_path():
+    """Membership of present, absent and mixed unsorted batches equals
+    np.isin over the stored fingerprints."""
     f, present, absent = _mk()
-    g = _forced_off(f)
     for q in (present, absent, np.concatenate([present[:1000], absent[:1000]])):
         got = f.contains_hashes(q)
-        want = g.contains_hashes(q)
         assert got.dtype == np.bool_
-        assert (got == want).all()
+        assert (got == np.isin(q & f._fp_mask(), f.fingerprints())).all()
     assert f.contains_hashes(present).all()
 
 
 def test_count_parity_with_search_path_including_duplicates():
+    """Counts of keys stored up to three times, and of absent keys, equal
+    the multiset of stored fingerprints."""
     rng = np.random.default_rng(11)
-    base = rng.integers(0, 1 << 64, size=50_000, dtype=np.uint64)
-    dup = np.concatenate([base, base[:20_000], base[:5_000]])
+    base = _keys(rng, 50_000)
     f = Filter.new(1 << 18, 0.01)
-    f.insert_hashes(dup)
-    g = _forced_off(f)
-    q = np.concatenate([base, rng.integers(0, 1 << 64, size=60_000, dtype=np.uint64)])
+    f.insert_hashes(np.concatenate([base, base[:20_000], base[:5_000]]))
+    q = np.concatenate([base, _keys(rng, 60_000)])
     got = f.count_hashes(q)
-    want = g.count_hashes(q)
-    assert (got == want).all()
+    assert got.dtype == np.int64
+    assert (got == _multiset_counts(f, q)).all()
     assert got[:5_000].min() >= 3
+    assert (f.contains_hashes(q) == (got > 0)).all()
+
+
+@pytest.mark.parametrize("n", [4096, 4097, 65536, 65537, 200_001])
+def test_chunk_boundaries(n):
+    """A batch of n keys, half present (some stored three times) and half
+    absent, ascending and shuffled, answers as the scalar probe: n = 4096
+    is the last size searched without the argsort, 65536 is one probe
+    slice and 65537 two."""
+    rng = np.random.default_rng(n)
+    present = _keys(rng, n)
+    f = Filter.new(2 * n, 0.01)
+    f.insert_hashes(np.concatenate([present, present[: n // 8], present[: n // 16]]))
+    q = np.concatenate([present[: n // 2], _keys(rng, n - n // 2)])
+    q = np.sort(q & f._fp_mask())
+    want = _check(f, q)
+    assert want.max() >= 3 and (want == 0).any()
+
+    perm = rng.permutation(n)
+    assert (f.count_hashes(q[perm]) == want[perm]).all()
+    assert (f.contains_hashes(q[perm]) == (want[perm] > 0)).all()
+
+
+@pytest.mark.parametrize("make", [
+    lambda: Filter.with_fingerprint_size(1 << 12, 48),  # fingerprints over 32 bits
+    lambda: Filter.new(1 << 10, 0.01),                  # small domain, few keys
+], ids=["wide_fingerprints", "small_filter"])
+def test_filter_shapes(make):
+    f = make()
+    rng = np.random.default_rng(3)
+    keys = _keys(rng, f.capacity() // 2)
+    f.insert_hashes(keys)
+    q = np.concatenate([np.tile(keys, 10), _keys(rng, 5000)])
+    want = _check(f, q)
+    assert (want[: 10 * keys.size] > 0).all()
 
 
 def test_mutations_invalidate_cached_bitmap():
+    """Every mutation shows in the probe right after it: the filter keeps
+    no probe-time state that a mutation could leave stale."""
     f, present, absent = _mk(n=100_000)
-    f._probe_bitmap()
-    assert f._probe_words is not None
+    mask = f._fp_mask()
+    assert f.contains_hashes(present).all()
 
-    # remove one present fingerprint -> its probe must turn False
+    # remove one present fingerprint: its probe turns False unless another
+    # stored hash collides with it (removal deletes ONE copy)
     victim = present[0]
     assert f.remove_fingerprint(int(victim))
-    assert f._probe_words is None
-    q = np.concatenate([np.array([victim], dtype=np.uint64), present[1:5000]])
-    got = f.contains_hashes(np.tile(q, 2))  # >4096 so the bitmap path runs
-    fp_mask = f._fp_mask()
-    # removal deletes ONE copy; another hash colliding to the same fp keeps it
-    still = ((present[1:] & fp_mask) == (victim & fp_mask)).any()
-    assert bool(got[0]) == still
+    q = np.tile(np.concatenate([[victim], present[1:5000]]), 2)  # > 4096 keys
+    got = f.contains_hashes(q)
+    assert bool(got[0]) == ((present[1:] & mask) == (victim & mask)).any()
     assert got[1:5000].all()
+    _check(f, q)
 
-    # batch insert after a cached build -> new keys must probe True
-    f._probe_bitmap()
     f.insert_hashes(absent[:10_000])
-    assert f._probe_words is None
-    assert f.contains_hashes(np.concatenate([absent[:10_000]] * 2)).all()
-
-    # batch remove invalidates too
-    f._probe_bitmap()
+    assert f.contains_hashes(np.tile(absent[:10_000], 2)).all()
     f.remove_hashes(absent[:10_000])
-    assert f._probe_words is None
-
-    # single-item insert invalidates
-    f._probe_bitmap()
+    _check(f, np.concatenate([absent[:10_000], present[:10_000]]))
     f.insert_fingerprint(True, 123456789)
-    assert f._probe_words is None
+    assert f.count_hashes(np.full(5000, 123456789, dtype=np.uint64)).min() >= 1
 
-    # clear invalidates
-    f._probe_bitmap()
     f.clear()
-    assert f._probe_words is None
-    assert not f.contains_hashes(np.tile(present, 1)[:8192]).any()
+    assert not f.contains_hashes(present[:8192]).any()
+    assert not f.count_hashes(present[:8192]).any()
 
 
 def test_bitmap_survives_grow_and_shrink():
-    # grow/shrink keep fingerprint size (qbits+-1 / rbits-+1), so the cached
-    # domain bitmap stays valid across them
-    f, present, absent = _mk(n=60_000, cap=1 << 18)
-    words = f._probe_bitmap()
-    assert f.max_qbits is None or True
-    fs_before = f.fingerprint_size()
-    if f.rbits > 1:
-        f.grow()
-        assert f.fingerprint_size() == fs_before
-        assert f._probe_words is words
-        assert f.contains_hashes(present[:10_000].repeat(2)).all()
-        g = _forced_off(f)
-        q = absent[:10_000].repeat(2)
-        assert (f.contains_hashes(q) == g.contains_hashes(q)).all()
+    """grow and shrink_to_fit keep the fingerprint size (qbits+-1,
+    rbits-+1), so they leave every answer as it was."""
+    f, present, absent = _mk(n=60_000)
+    q = np.concatenate([present[:20_000], present[:20_000], absent[:20_000]])
+    before_n, before_c = f.count_hashes(q), f.contains_hashes(q)
+    assert before_c[:40_000].all()
+    qbits, fs = f.qbits, f.fingerprint_size()
 
+    f.grow()
+    assert (f.qbits, f.fingerprint_size()) == (qbits + 1, fs)
+    assert (f.count_hashes(q) == before_n).all()
+    assert (f.contains_hashes(q) == before_c).all()
 
-def test_wide_fingerprints_skip_the_bitmap():
-    f = Filter.with_fingerprint_size(1 << 12, 48)
-    rng = np.random.default_rng(3)
-    keys = rng.integers(0, 1 << 64, size=3000, dtype=np.uint64)
-    f.insert_hashes(keys)
-    assert f.fingerprint_size() > 32
-    assert f._probe_bitmap() is None
-    assert f.contains_hashes(np.tile(keys, 3)).all()
-
-
-def test_sparse_filter_in_small_domain_still_gated_correctly():
-    # tiny filter, small fs: bitmap allowed only while the domain is not
-    # wildly sparse vs the stored set (<= 8 x max(fps bytes, 1 MiB))
-    f = Filter.new(1 << 10, 0.01)
-    keys = np.arange(500, dtype=np.uint64) * np.uint64(0x9E3779B97F4A7C15)
-    f.insert_hashes(keys)
-    nbytes = (1 << f.fingerprint_size()) >> 3
-    allowed = nbytes <= 8 * max(f._fps.nbytes, 1 << 20)
-    assert (f._probe_bitmap() is not None) == allowed
-    assert f.contains_hashes(np.tile(keys, 20)).all()
-
-
-def test_volume_heuristic_defers_then_builds():
-    # one small-vs-big batch stays on the sorted-search path; a stream of
-    # batches crosses the len/2 cumulative threshold and converts
-    f, present, absent = _mk(n=400_000, cap=1 << 19)
-    batch = absent[:10_000]
-    f.contains_hashes(batch)
-    assert f._probe_words is None, "a single 10k batch must not trigger an O(len) build"
-    seen = f._probe_seen
-    assert seen == batch.size
-    for i in range(25):  # 250k more probes -> crosses 400k/2
-        f.contains_hashes(batch)
-    assert f._probe_words is not None
-    # and answers stay identical to the forced-off path
-    g = _forced_off(f)
-    q = np.concatenate([present[:20_000], absent[:20_000]])
-    assert (f.contains_hashes(q) == g.contains_hashes(q)).all()
+    f.shrink_to_fit()
+    assert (f.qbits, f.fingerprint_size()) == (qbits, fs)
+    assert (f.count_hashes(q) == before_n).all()
+    assert (f.contains_hashes(q) == before_c).all()
 
 
 def test_empty_filter_bitmap_and_probes():
     f = Filter.new(1 << 16, 0.01)
-    rng = np.random.default_rng(5)
-    q = rng.integers(0, 1 << 64, size=10_000, dtype=np.uint64)
+    q = _keys(np.random.default_rng(5), 10_000)
     assert not f.contains_hashes(q).any()
     assert f.count_hashes(q).max(initial=0) == 0
 
 
-@pytest.mark.parametrize("n", [4097, 65536, 65537, 200_001])
-def test_chunk_boundaries(n):
-    rng = np.random.default_rng(n)
-    present = rng.integers(0, 1 << 64, size=n, dtype=np.uint64)
-    f = Filter.new(1 << 18, 0.01)
-    f.insert_hashes(present)
-    g = _forced_off(f)
-    q = np.concatenate([present[: n // 2],
-                        rng.integers(0, 1 << 64, size=n, dtype=np.uint64)])
-    assert (f.contains_hashes(q) == g.contains_hashes(q)).all()
-    assert (f.count_hashes(q) == g.count_hashes(q)).all()
-
-
-def test_mutation_resets_probe_volume_credit():
-    """Invalidation must also reset the cumulative probe counter: probes
-    answered before a mutation don't justify rebuilding the bitmap for the
-    first small batch after it (round-5 code-review regression — without the
-    reset, every mutate+probe cycle re-paid the full O(len + 2^fs/8) build)."""
-    f, present, _ = _mk(n=40_000, cap=1 << 16)
-    n = len(f)
-    # cross the len/2 cumulative threshold and build the bitmap
-    f.contains_hashes(present[: n // 2 + 4096 + 1])
-    assert f._probe_words is not None
-    # any mutation drops the bitmap AND the credit
-    f.insert_fingerprint(True, 12345)
-    assert f._probe_words is None and f._probe_seen == 0
-    # a single modest batch (> the 4096 small-batch cutoff, < len/2) must
-    # take the sorted-search path, not re-pay the bitmap build...
-    out = f.contains_hashes(present[:5000])
-    assert f._probe_words is None
-    assert out.all()
-    # ...while sustained probe volume converts again, with identical answers
-    f.contains_hashes(present[: n // 2])
-    assert f._probe_words is not None
-    assert f.contains_hashes(present[:5000]).all()
-
-
-
-@pytest.mark.parametrize("gate_open", [False, True])
-def test_ascending_batch_skips_the_argsort(monkeypatch, gate_open):
+def test_ascending_batch_skips_the_argsort(monkeypatch):
     """An ascending batch of more than 4096 keys (each per-row wave of the
     sharded chunk probe arrives so) answers as its shuffled copy and as
     count_fingerprint do, and is searched in place: no argsort."""
     rng = np.random.default_rng(21)
-    present = rng.integers(0, 1 << 64, size=30_000, dtype=np.uint64)
-    absent = rng.integers(0, 1 << 64, size=30_000, dtype=np.uint64)
+    present, absent = _keys(rng, 30_000), _keys(rng, 30_000)
     f = Filter.new(1 << 16, 0.01)
     f.insert_hashes(np.concatenate([present, present[:3000]]))
-    if gate_open:
-        assert f._probe_bitmap() is not None
-    else:
-        f = _forced_off(f)
     q = np.sort(np.concatenate([present[:8000], absent[:8000]]) & f._fp_mask())
     want = np.array([f.count_fingerprint(int(h)) for h in q])
     assert want.max() >= 2

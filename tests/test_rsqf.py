@@ -194,6 +194,16 @@ def test_fixed_filter_does_not_grow():
     assert len(f) == cap
 
 
+def test_grow_without_remainder_bits_raises():
+    # grow() trades one remainder bit for one quotient bit; with rbits == 1
+    # it must refuse with the named error (also under python -O) and leave
+    # the filter as it was
+    f = Filter(10, 1)
+    with pytest.raises(NotEnoughFingerprintBits):
+        f.grow()
+    assert (f.qbits, f.rbits) == (10, 1)
+
+
 def test_batch_insert_grows():
     from qfilter_spark.hashing import xxh64_i64
     f = Filter.new_resizeable(50, 10_000, 0.01)

@@ -40,6 +40,13 @@ def test_bloom_no_false_negatives_and_fpr():
     assert fpr <= 0.02, fpr  # 2x slack over configured 1%
 
 
+def test_bloom_rejects_bad_geometry():
+    # a geometry its own blob decoder refuses is refused at construction
+    for m_bits, k in ((100, 3), (0, 3), (128, 0)):
+        with pytest.raises(ValueError, match="Bloom geometry"):
+            BloomFilter(m_bits=m_bits, k=k)
+
+
 def test_bloom_merge_is_union():
     bf1, bf2 = BloomFilter.create(1000, 0.01), BloomFilter.create(1000, 0.01)
     bf1.update_hashes(hashes_of(np.arange(0, 500)))
@@ -61,6 +68,14 @@ def test_hll_estimate_within_bound(true_n):
     est = h.estimate()
     rsd = h.relative_sd()
     assert abs(est - true_n) <= 4 * rsd * true_n + 2, (est, true_n)
+
+
+@pytest.mark.parametrize("p", [3, 19, 20])
+def test_hll_rejects_precision_out_of_range(p):
+    # the decoder accepts 4..18 only, so create() refuses the rest rather
+    # than build a sketch whose own blob would not load
+    with pytest.raises(ValueError, match="precision"):
+        create("hll", p=p)
 
 
 def test_hll_merge_max_and_idempotent():
