@@ -20,11 +20,15 @@ table with more rows than shards carries the extra ``key`` column
 (key, shard, n_fps, payload). Every operation takes ``n_shards`` as an int
 (the uniform directory) or as a ShardDirectory.
 
-Build / insert: one ``mapInArrow`` pass emits per-(task, row) sorted
+Build / insert: one ``mapInArrow`` pass emits per-(wave, row) sorted
 fingerprint chunks; one grouped merge per row key (k-way timsort of sorted
 runs) writes each row's blob, and an insert co-groups the chunks with the
-existing rows. The filter then LIVES as a Parquet table — the checkpointed
-lineage IS the data.
+existing rows. A build whose sized emit stage is one task
+(:func:`sizing.sized_tasks`) skips the shuffle: that task keeps each row's
+runs across its waves and writes every row's blob through the same per-row
+merge kernel, so the plan is scan, ``Coalesce 1``, ``MapInArrow``. The
+filter then LIVES as a Parquet table — the checkpointed lineage IS the
+data.
 
 Remove: retraction hashes travel as the same sorted chunks, co-grouped
 with their row (``cogroup.applyInArrow``) — a co-partitioned join; each
@@ -38,15 +42,16 @@ When the table's optimized-plan ``sizeInBytes`` is at most
 collected once and broadcast with the directory as the probe module's
 ``_Table`` — the table a single sketch blob is the one-row case of — which
 decodes a row the first time a worker's probe reaches it and keeps it while
-the broadcast lives; one map stage answers the probes
-(the emit stage for :func:`probe_sharded_chunks`, whose per-task rows a
-JVM ``groupBy`` sums per row key; :func:`probe.probe_hashes`'s per-row map
-for :func:`count_sharded`). Otherwise — a larger table, a threshold of
-``-1``, or a table whose size Spark does not know, which is never
-collected — probe chunks are co-grouped with their row like a remove, and
-:func:`count_sharded` shuffles single probe rows to their shard. Every
-plan asks each row's sketch through its own ``contains_hashes`` /
-``count_hashes``.
+the broadcast lives; one map stage answers the probes (the emit stage for
+:func:`probe_sharded_chunks`, each task summing its waves' counts per row
+key, and a JVM ``groupBy`` summing the per-task rows only when the stage
+has more than one task or an unknown count; :func:`probe.probe_hashes`'s
+per-row map for :func:`count_sharded`). Otherwise — a larger table, a
+threshold of ``-1``, or a table whose size Spark does not know, which is
+never collected — probe chunks are co-grouped with their row like a
+remove, and :func:`count_sharded` shuffles single probe rows to their
+shard. Every plan asks each row's sketch through its own
+``contains_hashes`` / ``count_hashes``.
 """
 
 from __future__ import annotations
@@ -59,7 +64,7 @@ from ..rsqf import Filter
 from . import agg
 from .agg import SketchSpec
 from .probe import _Table, _probe_rows
-from .sizing import broadcastable, sized_input
+from .sizing import broadcastable, sized_input, sized_tasks
 
 SHARDED_SCHEMA = "shard int, n_fps long, payload binary"
 SPLIT_SCHEMA = "key int, " + SHARDED_SCHEMA
@@ -247,24 +252,33 @@ def _cut(directory: ShardDirectory, fps: np.ndarray) -> "pa.Table":
                   for i, c in parts])
 
 
-def _emit(df, spec_in: SketchSpec, directory: ShardDirectory, consume,
+def _sized(df, spec_in: SketchSpec):
+    """``(frame, tasks)`` of an emit stage's input: ``df`` projected to
+    ``spec_in``'s column and sized (:func:`sizing.sized_tasks`)."""
+    return sized_tasks(df.select(spec_in.col))
+
+
+def _emit(frame, spec_in: SketchSpec, directory: ShardDirectory, stage,
           schema: str):
-    """The one emitter: a mapInArrow pass that extracts fingerprints with
-    ``spec_in``, masks them to the fingerprint width and sorts them; each
-    sorted wave goes to ``consume(fps)``, which returns the stage's record
-    batches for it (:func:`_emit_chunks` packs chunk rows, the split build's
-    planning pass samples them, the broadcast probe counts hits in place).
+    """The one emitter: a mapInArrow pass over ``frame`` (an input from
+    :func:`_sized`) that extracts fingerprints with ``spec_in``, masks them
+    to the fingerprint width and sorts them; ``stage(waves)`` takes a
+    task's sorted waves and yields the task's record batches
+    (:func:`_emit_chunks` packs chunk rows per wave, the split build's
+    planning pass samples them, the one-task build merges every row at the
+    end, the broadcast probe counts hits in place).
 
     Spill-aware: a task's fingerprints go out in waves of
     ``agg._MAX_BUFFER`` (the RSQF build's wave buffer, :func:`agg._waves`),
     so per-task memory stays bounded no matter the input partition size
-    (SURVEY.md §7 "Python-side memory" risk item); every consumer treats
-    each extra wave as one more sorted run of its row.
+    (SURVEY.md §7 "Python-side memory" risk item) for every stage but the
+    one-task build; every consumer treats each extra wave as one more
+    sorted run of its row.
     """
     mask = _fp_mask(directory.fs)
     limit = agg._MAX_BUFFER  # read here, on the driver
 
-    def emit(batches):
+    def waves(batches):
         for wave in agg._waves(spec_in, batches, limit):
             fps = wave.astype(np.uint64, copy=False)
             fps &= mask
@@ -272,17 +286,19 @@ def _emit(df, spec_in: SketchSpec, directory: ShardDirectory, consume,
             # merge paths, which concatenate sorted runs and want timsort)
             # and this numpy's stable u64 sort is ~7x slower on random input
             fps.sort()
-            yield from consume(fps)
+            yield fps
 
-    return sized_input(df.select(spec_in.col)).mapInArrow(emit, schema)
+    return frame.mapInArrow(lambda batches: stage(waves(batches)), schema)
 
 
-def _emit_chunks(df, spec_in: SketchSpec, directory: ShardDirectory):
-    """Per-(task, row) sorted chunk rows of ``df``'s fingerprints, in the
-    directory's table schema."""
-    return _emit(df, spec_in, directory,
-                 lambda fps: _cut(directory, fps).to_batches(),
-                 directory.schema)
+def _emit_chunks(frame, spec_in: SketchSpec, directory: ShardDirectory):
+    """Per-(wave, row) sorted chunk rows of the fingerprints of ``frame``
+    (an input from :func:`_sized`), in the directory's table schema."""
+    def chunks(waves):
+        for fps in waves:
+            yield from _cut(directory, fps).to_batches()
+
+    return _emit(frame, spec_in, directory, chunks, directory.schema)
 
 
 def _broadcast_table(filter_df, directory: ShardDirectory):
@@ -303,38 +319,55 @@ def _hits(sk, runs, lm: np.uint64) -> int:
         int(sk.contains_hashes(q & lm).sum()) for q in runs)
 
 
-def _merge(chunks, directory: ShardDirectory, spec: SketchSpec,
-           filter_df=None):
-    """The one merge kernel (build, insert): every row's sorted chunk
-    runs — plus, when ``filter_df`` is given, the row's current
-    fingerprints — merge into one canonical shard-local blob.
+def _row_merge(directory: ShardDirectory, spec: SketchSpec):
+    """The one merge kernel (build, insert): ``merge(row, runs)`` merges
+    the sorted global fingerprint ``runs`` of one directory row into the
+    row's canonical shard-local blob, as a one-row table.
 
-    Row blobs hold SHARD-LOCAL fingerprints while chunks arrive in global
-    coordinates: old rows are lifted to global, merged, and re-encoded
-    shard-local. Rows absent from the table are created (a new prefix range
-    appearing in fresh data), and a hot row grows its local qbits exactly
-    like a build does, so an insert is bit-equal to rebuilding from the
-    union of old and new data (canonical-form merge).
+    A hot row grows its local qbits exactly like a build does, so the blob
+    is a pure function of the row's fingerprint multiset: an insert is
+    bit-equal to rebuilding from the union of old and new data, and every
+    build plan writes the same bytes.
     """
-    qbits, rbits, fs = _fp_meta(spec)
+    qbits, rbits, _ = _fp_meta(spec)
     k = directory.k
     keep = getattr(spec.make(), "keep_duplicates", True)
 
-    def merge(key, new_tbl, old_tbl):
-        row = key[0].as_py()
-        shard = int(directory.shards[row])
-        runs = [_unpack_chunk(p.as_py(), shard, fs - k)
-                for p in new_tbl.column("payload")]
-        if old_tbl is not None and old_tbl.num_rows:
-            old = sketches.loads(old_tbl.column("payload")[0].as_py())
-            runs.append(old.filter.fingerprints()
-                        + (np.uint64(shard) << np.uint64(fs - k)))
+    def merge(row, runs):
         fps = np.concatenate(runs) if runs else np.empty(0, dtype=np.uint64)
         fps.sort(kind="stable")  # timsort: adaptive on concatenated sorted runs
         if not keep:
             fps = np.unique(fps)
         return _rows(directory, [row], [fps.size],
-                     [_shard_blob(fps, shard, qbits - k, rbits, keep)])
+                     [_shard_blob(fps, int(directory.shards[row]), qbits - k,
+                                  rbits, keep)])
+
+    return merge
+
+
+def _merge(chunks, directory: ShardDirectory, spec: SketchSpec,
+           filter_df=None):
+    """The grouped merge (build, insert): one :func:`_row_merge` per row
+    key over the row's chunk runs — plus, when ``filter_df`` is given, the
+    row's current fingerprints.
+
+    Row blobs hold SHARD-LOCAL fingerprints while chunks arrive in global
+    coordinates: old rows are lifted to global and merged. Rows absent from
+    the table are created (a new prefix range appearing in fresh data).
+    """
+    rb = directory.fs - directory.k
+    merge_row = _row_merge(directory, spec)
+
+    def merge(key, new_tbl, old_tbl):
+        row = key[0].as_py()
+        shard = int(directory.shards[row])
+        runs = [_unpack_chunk(p.as_py(), shard, rb)
+                for p in new_tbl.column("payload")]
+        if old_tbl is not None and old_tbl.num_rows:
+            old = sketches.loads(old_tbl.column("payload")[0].as_py())
+            runs.append(old.filter.fingerprints()
+                        + (np.uint64(shard) << np.uint64(rb)))
+        return merge_row(row, runs)
 
     grouped = chunks.groupBy(directory.key)
     if filter_df is None:
@@ -353,9 +386,32 @@ def build_sharded_filter(df, spec: SketchSpec, n_shards=64):
     the row's fingerprint range — for shard s of the uniform directory,
     [s << (fs-k), (s+1) << (fs-k)). Write it to Parquet to persist; union
     of rows == the single filter.
+
+    The plan follows the emit stage's task count
+    (:func:`sizing.sized_tasks`). With more than one task, or an unknown
+    count, each task ships per-(wave, row) chunks to one grouped merge per
+    row key. With one task, that task keeps each row's sorted runs across
+    its waves and merges every row itself (scan, ``Coalesce 1``,
+    ``MapInArrow``: one Python stage, no Exchange). That task holds all of
+    its fingerprints until it emits, where the grouped merge holds one row
+    at a time; one task means the estimated input is at most AQE's target
+    partition size, which bounds it.
     """
     directory = _directory(n_shards, spec)
-    return _merge(_emit_chunks(df, spec, directory), directory, spec)
+    frame, tasks = _sized(df, spec)
+    if tasks != 1:
+        return _merge(_emit_chunks(frame, spec, directory), directory, spec)
+    merge_row = _row_merge(directory, spec)
+
+    def merge_task(waves):
+        runs: dict[int, list[np.ndarray]] = {}
+        for fps in waves:
+            for row, run in directory.split_sorted(fps):
+                runs.setdefault(row, []).append(run)
+        for row in sorted(runs):
+            yield from merge_row(row, runs[row]).to_batches()
+
+    return _emit(frame, spec, directory, merge_task, directory.schema)
 
 
 def build_sharded_filter_split(df, spec: SketchSpec, n_shards: int = 64,
@@ -363,15 +419,17 @@ def build_sharded_filter_split(df, spec: SketchSpec, n_shards: int = 64,
     """Skew-resistant build: returns (filter_df, directory).
 
     Hot shards (biased upstream hashes, adversarial prefixes) are split
-    RangePartitioner-style, so that no merge task holds more than
-    ~``max_fps_per_row`` fingerprints. A planning pass of the build's
-    emitter yields, per (sorted wave, shard), the fingerprint count and a
-    bounded systematic sample; :func:`plan_directory` cuts each oversized
-    shard at weighted sample quantiles from those few KB on the driver, and
-    the table is :func:`build_sharded_filter` over that directory — lazy,
-    like every build. Payloads stay shard-local, so the union of a shard's
-    rows is bit-equal to the unsplit shard. Copies of ONE fingerprint value
-    cannot be range-split. Trade-off: the input is scanned and hashed twice.
+    RangePartitioner-style, so that no grouped merge task holds more than
+    ~``max_fps_per_row`` fingerprints (a one-task build merges every row
+    in its one task, see :func:`build_sharded_filter`). A planning pass of
+    the build's emitter yields, per (sorted wave, shard), the fingerprint
+    count and a bounded systematic sample; :func:`plan_directory` cuts
+    each oversized shard at weighted sample quantiles from those few KB on
+    the driver, and the table is :func:`build_sharded_filter` over that
+    directory — lazy, like every build. Payloads stay shard-local, so the
+    union of a shard's rows is bit-equal to the unsplit shard. Copies of
+    ONE fingerprint value cannot be range-split. Trade-off: the input is
+    scanned and hashed twice.
     """
     import pyarrow as pa
 
@@ -380,16 +438,17 @@ def build_sharded_filter_split(df, spec: SketchSpec, n_shards: int = 64,
             f"max_fps_per_row must be >= 1, got {max_fps_per_row!r}")
     uniform = _directory(n_shards, spec)
 
-    def sizes(fps):
-        parts = uniform.split_sorted(fps)
-        return pa.table({
-            "shard": pa.array([i for i, _ in parts], pa.int32()),
-            "n_fps": pa.array([c.size for _, c in parts], pa.int64()),
-            "sample": pa.array(
-                [c[::max(1, c.size // _SAMPLES_PER_CHUNK)].tobytes()
-                 for _, c in parts], pa.binary())}).to_batches()
+    def sizes(waves):
+        for fps in waves:
+            parts = uniform.split_sorted(fps)
+            yield from pa.table({
+                "shard": pa.array([i for i, _ in parts], pa.int32()),
+                "n_fps": pa.array([c.size for _, c in parts], pa.int64()),
+                "sample": pa.array(
+                    [c[::max(1, c.size // _SAMPLES_PER_CHUNK)].tobytes()
+                     for _, c in parts], pa.binary())}).to_batches()
 
-    meta = _emit(df, spec, uniform, sizes,
+    meta = _emit(_sized(df, spec)[0], spec, uniform, sizes,
                  "shard int, n_fps long, sample binary").collect()
     directory = plan_directory(meta, n_shards, uniform.fs, max_fps_per_row)
     return build_sharded_filter(df, spec, directory), directory
@@ -407,8 +466,8 @@ def insert_sharded(filter_df, new_df, spec_in: SketchSpec, n_shards,
     shape.
     """
     directory = _directory(n_shards, spec)
-    return _merge(_emit_chunks(new_df, spec_in, directory), directory, spec,
-                  filter_df)
+    chunks = _emit_chunks(_sized(new_df, spec_in)[0], spec_in, directory)
+    return _merge(chunks, directory, spec, filter_df)
 
 
 def probe_sharded_chunks(df, spec_in: SketchSpec, filter_df, n_shards,
@@ -428,8 +487,10 @@ def probe_sharded_chunks(df, spec_in: SketchSpec, filter_df, n_shards,
       ``spark.sql.autoBroadcastJoinThreshold``): its (key, payload) rows
       are collected and broadcast, each worker decodes a row the first
       time a wave reaches it, and the emit stage probes its sorted waves
-      in place. One Python map stage;
-      a JVM ``groupBy`` sums the per-task rows per row key.
+      in place, summing each row's counts over the task's waves. One
+      Python map stage; when it runs more than one task (or an unknown
+      number, :func:`sizing.sized_tasks`), a JVM ``groupBy`` sums the
+      per-task rows per row key.
     - **otherwise** (a larger table, a threshold of ``-1``, or a table
       whose size Spark does not know, which is never collected): the
       emitter ships one binary chunk per (task, row), co-grouped with the
@@ -449,19 +510,26 @@ def probe_sharded_chunks(df, spec_in: SketchSpec, filter_df, n_shards,
                          "n_probed": pa.array(ns, pa.int64()),
                          "n_contained": pa.array(hits, pa.int64())})
 
+    frame, tasks = _sized(df, spec_in)
     b = _broadcast_table(filter_df, directory)
     if b is not None:
-        def probe_wave(fps):
+        def probe_task(waves):
             table = b.value
-            parts = directory.split_sorted(fps)
-            return stats([i for i, _ in parts], [c.size for _, c in parts],
-                         [_hits(table.sketch(i), [c], lm) for i, c in parts]
-                         ).to_batches()
+            ns = np.zeros(directory.starts.size, dtype=np.int64)
+            hits = np.zeros_like(ns)
+            for fps in waves:
+                for i, c in directory.split_sorted(fps):
+                    ns[i] += c.size
+                    hits[i] += _hits(table.sketch(i), [c], lm)
+            keys = np.flatnonzero(ns)
+            yield from stats(keys, ns[keys], hits[keys]).to_batches()
 
-        return (_emit(df, spec_in, directory, probe_wave, schema)
-                .groupBy(directory.key)
-                .agg(F.sum("n_probed").alias("n_probed"),
-                     F.sum("n_contained").alias("n_contained")))
+        sums = _emit(frame, spec_in, directory, probe_task, schema)
+        if tasks == 1:
+            return sums
+        return sums.groupBy(directory.key).agg(
+            F.sum("n_probed").alias("n_probed"),
+            F.sum("n_contained").alias("n_contained"))
 
     def probe_row(key, probes_tbl, filt_tbl):
         if probes_tbl.num_rows == 0:
@@ -475,7 +543,7 @@ def probe_sharded_chunks(df, spec_in: SketchSpec, filter_df, n_shards,
         return stats([row], [sum(int(q.size) for q in qs)],
                      [_hits(sk, qs, lm)])
 
-    return (_emit_chunks(df, spec_in, directory).groupBy(directory.key)
+    return (_emit_chunks(frame, spec_in, directory).groupBy(directory.key)
             .cogroup(filter_df.groupBy(directory.key))
             .applyInArrow(probe_row, schema))
 
@@ -521,8 +589,9 @@ def remove_sharded(filter_df, removals_df, hash_col: str, n_shards,
             keep).to_blocks_bytes()
         return _rows(directory, [row], [len(f)], [blob])
 
-    return (_emit_chunks(removals_df, spec_in, directory)
-            .groupBy(directory.key)
+    chunks = _emit_chunks(_sized(removals_df, spec_in)[0], spec_in,
+                          directory)
+    return (chunks.groupBy(directory.key)
             .cogroup(filter_df.groupBy(directory.key))
             .applyInArrow(remove_row, directory.schema))
 

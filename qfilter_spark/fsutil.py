@@ -72,17 +72,48 @@ def list_entries(spark, base: str) -> list[tuple[str, float, bool]]:
         return []
 
 
-def parquet_columns(spark, location: str) -> list[str]:
-    """Column names in the footer of one Parquet file under ``location``
-    (a directory or a file), read on the driver; [] when there is none."""
+def parquet_schema(spark, location: str):
+    """The Spark schema of one Parquet data file under ``location`` (a
+    file, or a directory searched depth-first through its partition
+    directories, skipping the names Spark's file index skips), or None
+    when there is none.
+
+    Read on the driver from the file's footer and converted the way
+    Spark's schema inference converts a footer, so that
+    ``spark.read.schema(...)`` reads what inference would, without the
+    Spark job inference runs; partition columns are still inferred from
+    the paths and are not part of it.
+    """
+    from pyspark.sql.types import _parse_datatype_json_string
+
+    jvm = spark._jvm
     fs, p = get_fs(spark, location), jpath(spark, location)
-    for st in fs.listStatus(p) if fs.exists(p) else []:
-        if st.getPath().getName().endswith(".parquet"):
-            footer = spark._jvm.org.apache.parquet.hadoop.ParquetFileReader \
-                .readFooter(spark._jsc.hadoopConfiguration(), st)
-            return [f.getName()
-                    for f in footer.getFileMetaData().getSchema().getFields()]
-    return []
+
+    def data_file(st):
+        if not st.isDirectory():
+            return st
+        for child in fs.listStatus(st.getPath()):
+            name = child.getPath().getName()
+            # Spark's file index skips these, but keeps _key=value dirs
+            if name.startswith(".") or (name.startswith("_")
+                                        and "=" not in name):
+                continue
+            found = data_file(child)
+            if found is not None:
+                return found
+        return None
+
+    st = data_file(fs.getFileStatus(p)) if fs.exists(p) else None
+    if st is None:
+        return None
+    parquet = jvm.org.apache.parquet.hadoop
+    footer = parquet.Footer(st.getPath(), parquet.ParquetFileReader.readFooter(
+        spark._jsc.hadoopConfiguration(), st))
+    sql = jvm.org.apache.spark.sql.execution.datasources.parquet
+    converter = sql.ParquetToSparkSchemaConverter(
+        spark._jsparkSession.sessionState().conf())
+    return _parse_datatype_json_string(
+        sql.ParquetFileFormat.readSchemaFromFooter(footer, converter).json())
 
 
 def child(base: str, name: str) -> str:

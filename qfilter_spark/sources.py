@@ -62,11 +62,18 @@ def read_corpus(spark, location: str):
     """Read the (doc_id, tokens, n_tok, source) corpus.
 
     ``location`` is either an Iceberg table identifier (used when the
-    Iceberg runtime is on the classpath) or a Parquet directory path.
+    Iceberg runtime is on the classpath) or a Parquet directory path,
+    whose schema comes from one data file's footer, read on the driver
+    (:func:`fsutil.parquet_schema`; inference would run a Spark job), and
+    whose partition columns Spark infers from the paths.
     """
     if "/" not in location and _has_iceberg(spark):
         return spark.read.format("iceberg").load(location)
-    return spark.read.parquet(location)
+    from .fsutil import parquet_schema
+
+    schema = parquet_schema(spark, location)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(location)
 
 
 def write_corpus(df, location: str, mode: str = "overwrite"):
@@ -88,8 +95,9 @@ def read_filter_table(spark, location: str):
     split schema when a part file's footer (read on the driver; schema
     inference would run a Spark job) has ``key``, else the uniform one."""
     from .dist.sharded import SHARDED_SCHEMA, SPLIT_SCHEMA
-    from .fsutil import parquet_columns
+    from .fsutil import parquet_schema
 
-    split = "key" in parquet_columns(spark, location)
+    schema = parquet_schema(spark, location)
+    split = schema is not None and "key" in schema.names
     return spark.read.schema(SPLIT_SCHEMA if split else SHARDED_SCHEMA) \
         .parquet(location)

@@ -9,11 +9,14 @@ Asserts the properties the engine is designed around (SURVEY.md §4.2):
 - the grouped build folds per group in the same map stage: raw rows never
   cross an Exchange, only the per-group partials do
 - a probe of a small written sharded filter table runs one Python stage
-  and no cogroup; with ``spark.sql.autoBroadcastJoinThreshold=-1`` it
+  and no cogroup, and with a one-task emit stage no per-key
+  HashAggregate; with ``spark.sql.autoBroadcastJoinThreshold=-1`` it
   keeps the co-partitioned cogroup (counted from the event log, per job
   group)
 - ``probe_hashes`` over a sketch blob and ``count_sharded`` over a small
   table are the same per-row map: one MapInArrow, no Exchange
+- a one-task sharded build is Coalesce -> MapInArrow: the emit task
+  merges every row, with no Sort or FlatMapGroupsInArrow behind it
 
 Usage: python scripts/explain_audit.py [sf_dir]
 Prints one PASS/FAIL line per check plus the formatted plans to stderr.
@@ -154,8 +157,11 @@ def main():
           "FlatMapCoGroupsInArrow",
           small["python_stages"] == 1 and not small["cogroup"],
           f"{small['python_stages']} Python stages")
-    check("broadcast threshold -1: the probe keeps the co-partitioned "
-          "cogroup", cogrouped["cogroup"] and cogrouped["python_stages"] == 2,
+    check("small sharded table, one emit task: the probe sums in that "
+          "task, no HashAggregate", not small["hash_aggregate"])
+    check("broadcast threshold -1: the one-task probe keeps the "
+          "co-partitioned cogroup",
+          cogrouped["cogroup"] and cogrouped["python_stages"] == 2,
           f"{cogrouped['python_stages']} Python stages")
 
     # 7. one per-row probe map for a sketch blob and a broadcast table
@@ -164,6 +170,17 @@ def main():
         check(f"{name}: one MapInArrow, no Exchange",
               tree.count("MapInArrow") == 1 and "Exchange" not in tree,
               "the broadcast per-row probe map")
+
+    # 8. a one-task sharded build merges its rows in the emit task
+    tree = one_task_build_plan(spark)
+    print(tree, file=sys.stderr)
+    check("one-task sharded build: Coalesce then MapInArrow, no Sort, "
+          "FlatMapGroupsInArrow or Exchange",
+          tree.count("MapInArrow") == 1
+          and "Coalesce" in tree.split("MapInArrow", 1)[1]
+          and not any(op in tree for op in
+                      ("Sort", "FlatMapGroupsInArrow", "Exchange")),
+          "one Python stage")
 
     spark.stop()
     print(f"{failures} failures")
@@ -189,9 +206,10 @@ def audit_session(logs: str):
 
 def sharded_probe_shapes(spark, logs: str, work: str) -> dict:
     """Per broadcast threshold ("default", "-1"): the Spark work of one
-    ``probe_sharded`` call on a written 8-shard table, counted with the
-    job-group, StatusTracker and event-log recipe: jobs, stages, Python
-    stages and tasks, and whether the plan has FlatMapCoGroupsInArrow.
+    ``probe_sharded`` call on a written 8-shard table (a one-task emit
+    stage), counted with the job-group, StatusTracker and event-log
+    recipe: jobs, stages, Python stages and tasks, and whether the plan
+    has FlatMapCoGroupsInArrow and HashAggregate.
     ``spark`` must log uncompressed events to ``logs``."""
     from pyspark.sql import functions as F
 
@@ -215,8 +233,7 @@ def sharded_probe_shapes(spark, logs: str, work: str) -> dict:
     def call():
         out = probe_sharded(hashes, "h", table, 8, spec)
         out.collect()
-        return "FlatMapCoGroupsInArrow" in (
-            out._jdf.queryExecution().executedPlan().toString())
+        return out._jdf.queryExecution().executedPlan().toString()
 
     call()  # warm-up: worker start-up
     shapes = {}
@@ -226,14 +243,15 @@ def sharded_probe_shapes(spark, logs: str, work: str) -> dict:
                 spark.conf.set(key, threshold)
             sc.setJobGroup(str(group), "sharded probe")  # digit: a span
             try:
-                cogroup = call()
+                plan = call()
             finally:
                 sc.setLocalProperty("spark.jobGroup.id", None)
             sc._jsc.sc().listenerBus().waitUntilEmpty()
             st = sc.statusTracker()
             jobs = st.getJobIdsForGroup(str(group))
             shapes[threshold or "default"] = dict(
-                group=group, cogroup=cogroup, jobs=len(jobs),
+                group=group, cogroup="FlatMapCoGroupsInArrow" in plan,
+                hash_aggregate="HashAggregate" in plan, jobs=len(jobs),
                 stages=sum(len(st.getJobInfo(j).stageIds) for j in jobs))
     finally:
         spark.conf.set(key, old)
@@ -273,6 +291,24 @@ def probe_map_plans(spark, work: str) -> dict:
                                                        spec)}
     return {name: df._jdf.queryExecution().explainString(mode)
             .split("\n\n")[0] for name, df in frames.items()}
+
+
+def one_task_build_plan(spark) -> str:
+    """The formatted operator tree of ``build_sharded_filter`` over a tiny
+    4-partition input, which sizes to one emit task."""
+    from pyspark.sql import functions as F
+
+    from qfilter_spark.dist import SketchSpec
+    from qfilter_spark.dist.sharded import build_sharded_filter
+
+    spec = SketchSpec("rsqf", dict(capacity=8192, fp_rate=0.01),
+                      "hash_col", "h")
+    hashes = spark.range(0, 6000, numPartitions=4).select(
+        F.xxhash64("id").alias("h"))
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+        "formatted")
+    return (build_sharded_filter(hashes, spec, n_shards=8)._jdf
+            .queryExecution().explainString(mode).split("\n\n")[0])
 
 
 if __name__ == "__main__":

@@ -23,7 +23,7 @@ from qfilter_spark.dist.sharded import (
     remove_sharded,
     shrink_sharded,
 )
-from qfilter_spark.dist.sizing import sized_input
+from qfilter_spark.dist.sizing import sized_input, sized_tasks
 
 COALESCE = "spark.sql.adaptive.coalescePartitions.enabled"
 N = 6000
@@ -31,15 +31,19 @@ N = 6000
 
 @contextlib.contextmanager
 def _conf(spark, **settings):
-    """Session confs set for the block, then restored."""
-    old = {k: spark.conf.get(k) for k in settings}
+    """Session confs set for the block, then restored (unset when they
+    had no value)."""
+    old = {k: spark.conf.get(k, None) for k in settings}
     for k, v in settings.items():
         spark.conf.set(k, v)
     try:
         yield
     finally:
         for k, v in old.items():
-            spark.conf.set(k, v)
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def _unsized(spark):
@@ -102,21 +106,47 @@ def test_tiny_input_coalesces_without_exchange(df):
 
 
 def test_target_follows_aqe_confs(spark, df):
-    """k = ceil(sizeInBytes / target): minPartitionSize under
-    parallelismFirst, advisoryPartitionSizeInBytes without it, and never
-    more partitions than the input has."""
+    """k = ceil(sizeInBytes / target), with CoalesceShufflePartitions'
+    target: max(minPartitionSize, min(advisoryPartitionSizeInBytes,
+    ceil(sizeInBytes / n))), n the default parallelism (or minPartitionNum)
+    under parallelismFirst and 1 without it; never more partitions than
+    the input has."""
     h = df.select("h")
     size = h._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
     assert size == 8 * N
     pre = "spark.sql.adaptive."
-    with _conf(spark, **{pre + "coalescePartitions.minPartitionSize":
-                         str(size // 4)}):
+    floor = pre + "coalescePartitions.minPartitionSize"
+    num = pre + "coalescePartitions.minPartitionNum"
+    # the default parallelism (local[2]) sets the target above the floor
+    assert spark.sparkContext.defaultParallelism == 2
+    with _conf(spark, **{floor: str(size // 4)}):
+        assert sized_tasks(h)[1] == _n_parts(sized_input(h)) == 2
+    with _conf(spark, **{floor: "1b"}):
+        assert sized_tasks(h)[1] == _n_parts(sized_input(h)) == 2
+    with _conf(spark, **{floor: "1b", num: "4"}):
         assert _n_parts(sized_input(h)) == 4
-    with _conf(spark, **{pre + "coalescePartitions.minPartitionSize": "1b"}):
-        assert _n_parts(sized_input(h)) == 8
-    with _conf(spark, **{pre + "coalescePartitions.parallelismFirst": "false",
-                         pre + "advisoryPartitionSizeInBytes": str(size // 2)}):
+    with _conf(spark, **{floor: str(size // 4), num: "8"}):  # the floor
+        assert sized_tasks(h)[1] == _n_parts(sized_input(h)) == 4
+    without = {pre + "coalescePartitions.parallelismFirst": "false",
+               pre + "advisoryPartitionSizeInBytes": str(size // 2)}
+    with _conf(spark, **without, **{floor: "1b"}):
         assert _n_parts(sized_input(h)) == 2
+    with _conf(spark, **without):  # the 1 MB floor is above the advisory
+        assert sized_tasks(h)[1] == _n_parts(sized_input(h)) == 1
+
+
+def test_many_partitions_size_to_the_parallelism(spark):
+    """A 200-partition input at a 1-byte floor runs as many tasks as AQE
+    would coalesce a shuffle of it to: the default parallelism, not one
+    task per 1-byte target (which a split never goes below)."""
+    from pyspark.sql import functions as F
+
+    wide = spark.range(0, 20_000, numPartitions=200).select(
+        F.xxhash64("id").alias("h"))
+    with _conf(spark, **{"spark.sql.adaptive.coalescePartitions."
+                         "minPartitionSize": "1b"}):
+        frame, tasks = sized_tasks(wide)
+        assert tasks == _n_parts(frame) == spark.sparkContext.defaultParallelism
 
 
 def test_unknown_stats_and_disabled_confs_keep_partitions(spark, df):
@@ -138,8 +168,10 @@ def test_unknown_stats_and_disabled_confs_keep_partitions(spark, df):
 
 
 def test_tiny_input_builds_in_one_python_task(spark):
-    """A tiny 4-partition input: build_sketch is one job of one one-task
-    stage, and build_sharded_filter's chunk emitter runs one task."""
+    """A tiny 4-partition input: build_sketch and build_sharded_filter are
+    each one job of one one-task stage, and the sharded build merges its
+    rows in that task (no Sort, no FlatMapGroupsInArrow); unsized, the
+    sharded build's four emit tasks feed the grouped merge."""
     from pyspark.sql import functions as F
 
     few = spark.range(0, 5000, numPartitions=4).select(F.xxhash64("id").alias("h"))
@@ -149,11 +181,16 @@ def test_tiny_input_builds_in_one_python_task(spark):
         assert _stage_tasks(spark, lambda: build_sketch(few, cms)) == [[4]]
 
     rsqf = SketchSpec("rsqf", dict(capacity=8192, fp_rate=0.01), "hash_col", "h")
-    jobs = _stage_tasks(spark, lambda: build_sharded_filter(few, rsqf, 4).collect())
-    assert jobs[0] == [1]          # the emit stage: AQE runs it as its own job
+    table = build_sharded_filter(few, rsqf, 4)
+    assert _stage_tasks(spark, table.collect) == [[1]]
+    plan = _plan(table)
+    assert "FlatMapGroupsInArrow" not in plan and "Sort" not in plan
+    assert "Coalesce 1" in plan and "Exchange" not in plan
     with _unsized(spark):
-        jobs = _stage_tasks(spark, lambda: build_sharded_filter(few, rsqf, 4).collect())
-    assert jobs[0] == [4]
+        table = build_sharded_filter(few, rsqf, 4)
+        jobs = _stage_tasks(spark, table.collect)
+    assert jobs[0] == [4]          # the emit stage: AQE runs it as its own job
+    assert "FlatMapGroupsInArrow" in _plan(table)
 
 
 def test_partial_count_is_the_sized_count(spark, tmp_path):
@@ -246,6 +283,57 @@ def test_sharded_tables_equal(spark, df):
     assert sized["built"] == sized["removed"]
     assert sum(r[2] for r in sized["probed"]) == N
     assert sized == unsized
+
+
+@pytest.mark.parametrize("layout", ["uniform", "split"])
+def test_one_task_plans_equal_multi_task(spark, df, tmp_path, monkeypatch,
+                                         layout):
+    """The one-task build and broadcast probe (sized: one emit task, no
+    grouped merge, no per-key sum) give what the multi-task plans
+    (unsized) give: byte-identical table rows and identical probe rows,
+    also when the one task sees several waves; an empty input gives no
+    rows on either plan."""
+    from pyspark.sql import functions as F
+
+    from qfilter_spark import sources
+    from qfilter_spark.dist import agg
+
+    spec = SketchSpec("rsqf", dict(capacity=1 << 14, fp_rate=0.01),
+                      "hash_col", "h")
+    route, key = 8, "shard"
+    if layout == "split":
+        route, key = build_sharded_filter_split(df, spec, 8, 400)[1], "key"
+        assert route.split
+    probes = df.select("h").union(
+        df.select(F.xxhash64(F.col("h") + 1).alias("h")))
+    empty = df.select("h").limit(0)
+    assert sized_tasks(df.select("h"))[1] == sized_tasks(probes)[1] == 1
+    path = str(tmp_path / "table")
+
+    def run():
+        sources.write_filter_table(build_sharded_filter(df, spec, route), path)
+        table = sources.read_filter_table(spark, path)
+        probed = probe_sharded_chunks(probes, spec, table, route, spec)
+        return dict(
+            stored=_table(table, key), probed=sorted(probed.collect()),
+            plan=_plan(probed),
+            empty_built=build_sharded_filter(empty, spec, route).collect(),
+            empty_probed=probe_sharded_chunks(empty, spec, table, route,
+                                              spec).collect())
+
+    sized, unsized = _sized_and_unsized(spark, run)
+    assert "HashAggregate" not in sized.pop("plan")
+    assert "HashAggregate" in unsized.pop("plan")
+    assert sized == unsized
+    assert sum(r["n_probed"] for r in sized["probed"]) == 2 * N
+    assert sized["empty_built"] == sized["empty_probed"] == []
+    # 1000-row Arrow batches and 1000-value waves: several waves per task
+    monkeypatch.setattr(agg, "_MAX_BUFFER", 1000)
+    with _conf(spark, **{"spark.sql.execution.arrow.maxRecordsPerBatch":
+                         "1000"}):
+        waves = run()
+    waves.pop("plan")
+    assert waves == unsized
 
 
 def test_split_build_equal(spark):
