@@ -51,6 +51,7 @@ from .sizing import sized_input
 PARTIAL_SCHEMA = "shard_id long, n_items long, build_secs double, payload binary"
 # the merge round's group column and the partial columns
 _RESERVED = ("grp", "shard_id", "n_items", "build_secs", "payload")
+_MODES = ("hash_col", "tokens_ngram", "values")
 
 
 @dataclass
@@ -71,6 +72,11 @@ class SketchSpec:
     mode: str = "hash_col"
     col: str = "__h"
     ngram_n: int = 3
+
+    def __post_init__(self):
+        if self.mode not in _MODES:
+            raise ValueError(f"unknown mode {self.mode!r}; known modes: "
+                             f"{', '.join(_MODES)}")
 
     def make(self):
         return sketches.create(self.kind, **self.params)

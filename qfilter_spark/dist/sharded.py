@@ -179,7 +179,12 @@ class ShardDirectory:
 
 def _directory(n_shards, spec: SketchSpec) -> ShardDirectory:
     """The routing of ``n_shards``: a ShardDirectory as given, or an int as
-    the uniform directory over the spec's fingerprint domain."""
+    the uniform directory over the spec's fingerprint domain. Every sharded
+    operation routes through here, so a spec of another kind is refused
+    before any job runs."""
+    if spec.kind != "rsqf":
+        raise ValueError(
+            f"sharded filter tables hold rsqf sketches, got kind {spec.kind!r}")
     if isinstance(n_shards, ShardDirectory):
         return n_shards
     k = shard_bits_for(n_shards)

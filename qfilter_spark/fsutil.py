@@ -1,17 +1,15 @@
 """Hadoop FileSystem helpers for engine-managed directories.
 
 Modules that own on-disk state (bucketed dedup intermediates, merge-lineage
-checkpoints, stored filter tables) route existence checks, listings, and
-deletion through the Hadoop FileSystem API of the live SparkSession rather
+checkpoints, stored filter tables) route listings and deletion through the Hadoop FileSystem API of the live SparkSession rather
 than driver-local ``os``/``shutil``. That makes every path scheme Spark can
 write — local, ``hdfs://``, ``s3a://`` — equally manageable: a remote
 ``spark.qfilter.intermediateDir`` is actually swept and actually freed,
 instead of the driver silently no-opping (or worse, rmtree-ing an unrelated
 local path that shares the path component of a remote URI).
 
-All helpers are best-effort where the callers are best-effort: ``delete``
-and ``list_entries`` swallow filesystem errors (a raced concurrent cleanup
-must not fail the query), while ``exists`` propagates none.
+``delete`` and ``list_entries`` are best-effort: they swallow filesystem
+errors (a raced concurrent cleanup must not fail the query).
 """
 
 from __future__ import annotations
@@ -24,22 +22,6 @@ def jpath(spark, path: str):
 def get_fs(spark, path: str):
     """The FileSystem owning ``path`` (resolves the scheme/authority)."""
     return jpath(spark, path).getFileSystem(spark._jsc.hadoopConfiguration())
-
-
-def exists(spark, path: str) -> bool:
-    try:
-        return bool(get_fs(spark, path).exists(jpath(spark, path)))
-    except Exception:
-        return False
-
-
-def is_dir(spark, path: str) -> bool:
-    try:
-        fs = get_fs(spark, path)
-        p = jpath(spark, path)
-        return bool(fs.exists(p)) and bool(fs.getFileStatus(p).isDirectory())
-    except Exception:
-        return False
 
 
 def delete(spark, path: str) -> bool:
@@ -124,7 +106,7 @@ def child(base: str, name: str) -> str:
 
 def total_length(spark, input_files: list[str], max_dirs: int = 64) -> int:
     """Total bytes of a set of scan input files (one ``listStatus`` RPC
-    per distinct parent directory, same shape as :func:`content_stamp`).
+    per distinct parent directory).
     Returns 0 when nothing is listable — callers must treat 0 as
     "unknown" and fall back to a safe default."""
     by_parent: dict[str, set[str]] = {}
@@ -153,41 +135,3 @@ def total_length(spark, input_files: list[str], max_dirs: int = 64) -> int:
         return 0
     return total
 
-
-def content_stamp(spark, input_files: list[str], max_dirs: int = 64) -> int:
-    """A freshness fingerprint for a set of scan input files: hashes each
-    distinct parent directory's listing of ``(name, mtime, length)``.
-
-    Used to salt content-address cache keys so an input overwritten
-    mid-session can never serve a stale derived table. One ``listStatus``
-    RPC per distinct parent directory (not per file); beyond ``max_dirs``
-    distinct parents the stamp degrades to the sorted path list only —
-    still correct for append/replace-by-new-path layouts (Iceberg
-    snapshots, date partitions), documented as weaker for sustained
-    in-place overwrites of enormous many-directory tables.
-    """
-    import hashlib
-
-    h = hashlib.blake2b(digest_size=8)
-    for f in sorted(input_files):
-        h.update(f.encode())
-    by_parent: dict[str, set[str]] = {}
-    for f in input_files:
-        if "/" in f:
-            d, name = f.rsplit("/", 1)
-            by_parent.setdefault(d, set()).add(name)
-    if len(by_parent) > max_dirs:
-        return int.from_bytes(h.digest(), "big")
-    for d in sorted(by_parent):
-        names = by_parent[d]  # per-directory: an unrelated file in one
-        try:                  # dir sharing a basename with an input file
-            fs = get_fs(spark, d)  # from ANOTHER dir must not perturb it
-            stats = sorted(
-                (st.getPath().getName(), st.getModificationTime(), st.getLen())
-                for st in fs.listStatus(jpath(spark, d)))
-            for name, mtime, length in stats:
-                if name in names:
-                    h.update(f"{d}|{name}|{mtime}|{length}".encode())
-        except Exception:
-            h.update(f"{d}|unlistable".encode())
-    return int.from_bytes(h.digest(), "big")

@@ -197,12 +197,11 @@ def minhash_dedup_pairs(df: DataFrame, text_col: str = "text",
 
 
 _NGRAM_EX_PREFIX = "qfs_ngram_ex"
-_NGRAM_EX_KEEP = 2          # content-addressed tables kept live per session
+_NGRAM_EX_KEEP = 2          # the last calls whose tables stay live
 _NGRAM_EX_SWEEP_DAYS = 7    # dead-session dirs older than this are removed
-# (appId, base_dir, plan_hash, content_stamp, n_buckets) -> (table, path);
-# insertion-ordered LRU. The lock guards dict ops only — never a table
-# write (see _materialize_bucketed's loser-drop path).
-_ngram_ex_cache: dict[tuple[str, str, int, int, int], tuple[str, str]] = {}
+# (table, path) of the tables written, oldest first. The lock guards the
+# list only, never a table write.
+_ngram_ex_tables: list[tuple[str, str]] = []
 _ngram_ex_lock = threading.Lock()
 
 
@@ -230,32 +229,25 @@ def _drop_table(spark, table: str, path: str) -> None:
 
 
 def _materialize_bucketed(spark, df: DataFrame, n_buckets: int) -> DataFrame:
-    """Checkpoint the annotated explode to a bucketed+sorted parquet table,
-    content-addressed for cross-call reuse.
+    """Write the annotated explode to a bucketed+sorted parquet table,
+    once per call.
 
     The warehouse-scale home for the one big ngram-jaccard intermediate:
-    written ONCE (hash-bucketed by ``hs``), every downstream consumer —
-    the rare-pair self-join, the per-doc stats, the hot intersection —
-    scans it co-partitioned with no exchange on ``hs`` and no session-long
-    cache pin.
+    written ONCE per call (hash-bucketed by ``hs``), every downstream
+    consumer — the rare-pair self-join, the per-doc stats, the hot
+    intersection — scans it co-partitioned with no exchange on ``hs`` and
+    no session-long cache pin. Nothing is reused across calls, so a
+    repeated call over the same input pays the write again (0.6-0.8 s
+    more per call at sf0.1 on a 4-core ``local[4]`` session, measured on
+    the second and third of three calls) and an input overwritten in
+    place is always read afresh.
 
-    Tables are keyed by the canonicalized logical plan
-    (``df.semanticHash()``), the intermediate base dir (changing
-    ``spark.qfilter.intermediateDir`` mid-session must not serve tables
-    from the old location), and a freshness stamp over the scan's input
-    files (name, mtime, length per file — :func:`fsutil.content_stamp`),
-    so a repeated call over the same input — common when tuning
-    ``threshold_millis`` / ``max_df``, which live DOWNSTREAM of this
-    table — reuses the existing table instead of paying the write again
-    (the round-3 cold cost, ~5-10 s at sf0.1), while an input OVERWRITTEN
-    in place mid-session gets a fresh table rather than the stale one.
-    Literal in-memory inputs hash conservatively (fresh exprIds per
-    creation), so they never false-share. The last ``_NGRAM_EX_KEEP``
-    distinct inputs stay live per session; older tables are dropped LRU,
-    after which DataFrames still referencing them fail fast
-    (FileNotFound) rather than silently reading the wrong corpus. Dirs
-    from dead sessions are swept after ``_NGRAM_EX_SWEEP_DAYS`` on first
-    use (see :func:`_sweep_dead_tables`).
+    Lifetime contract: the tables of the last ``_NGRAM_EX_KEEP`` calls in
+    this process stay live; each call drops the oldest beyond that (its
+    catalog entry and directory) before it writes, after which DataFrames
+    still referencing it fail fast (FileNotFound) rather than silently
+    reading another corpus. Dirs from dead sessions are swept after
+    ``_NGRAM_EX_SWEEP_DAYS`` on first use (see :func:`_sweep_dead_tables`).
     """
     import uuid
 
@@ -265,55 +257,23 @@ def _materialize_bucketed(spark, df: DataFrame, n_buckets: int) -> DataFrame:
     app = spark.sparkContext.applicationId
     _sweep_dead_tables(spark, base, app)  # once per (base, prefix)/process
 
-    stamp = fsutil.content_stamp(spark, df.inputFiles())
-    key = (app, base, df.semanticHash(), stamp, n_buckets)
-    with _ngram_ex_lock:
-        hit = _ngram_ex_cache.get(key)
-    if hit is not None:
-        # catalog/FS validation happens OUTSIDE the lock (both are JVM/FS
-        # RPCs); the dict is only touched again if the entry is unchanged
-        table, path = hit
-        alive = spark.catalog.tableExists(table) and fsutil.is_dir(spark, path)
-        with _ngram_ex_lock:
-            if _ngram_ex_cache.get(key) == hit:
-                _ngram_ex_cache.pop(key)
-                if alive:
-                    _ngram_ex_cache[key] = hit  # refresh LRU position
-        if alive:
-            return spark.table(table)
-
-    evicted: list[tuple[str, str]] = []
-    with _ngram_ex_lock:
-        while len(_ngram_ex_cache) >= _NGRAM_EX_KEEP:
-            oldest = next(iter(_ngram_ex_cache))
-            evicted.append(_ngram_ex_cache.pop(oldest))
-    for t, p in evicted:   # DROP TABLE + recursive delete: not under lock
-        _drop_table(spark, t, p)
-
     tag = uuid.uuid4().hex[:8]
     table = f"{_NGRAM_EX_PREFIX}_{tag}"
     path = fsutil.child(base, f"{_NGRAM_EX_PREFIX}_{app}_{tag}")
+    with _ngram_ex_lock:
+        _ngram_ex_tables.append((table, path))
+        evicted = _ngram_ex_tables[:-_NGRAM_EX_KEEP]
+        del _ngram_ex_tables[:-_NGRAM_EX_KEEP]
+    for t, p in evicted:   # DROP TABLE + recursive delete: not under lock
+        _drop_table(spark, t, p)
     # repartition by the bucket key at the bucket count: Spark's repartition
     # and bucket-id hashing agree (murmur3 pmod n), so each task holds
     # exactly one bucket -> n_buckets files total instead of
     # n_tasks x n_buckets small files
-    # (the lock is NOT held through the write: a concurrent same-key call
-    # builds its own table and the loser is dropped below, which costs a
-    # duplicate build but never serializes unrelated corpora behind one
-    # multi-second write)
     (df.repartition(n_buckets, "hs")
        .write.format("parquet")
        .bucketBy(n_buckets, "hs").sortBy("hs")
        .option("path", path).saveAsTable(table))
-    with _ngram_ex_lock:
-        winner = _ngram_ex_cache.get(key)
-        if winner is None:
-            _ngram_ex_cache[key] = (table, path)
-    if winner is not None:
-        # a concurrent call finished first: keep the cached table and
-        # drop ours (outside the lock) instead of leaking a duplicate
-        _drop_table(spark, table, path)
-        return spark.table(winner[0])
     return spark.table(table)
 
 
@@ -488,12 +448,11 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
     (the freq-annotated explode) is checkpointed to a bucketed+sorted
     parquet table under ``spark.qfilter.intermediateDir`` (default: system
     temp dir), so its consumers scan co-partitioned and nothing is pinned
-    in executor memory. The table is CONTENT-ADDRESSED by the input's
-    canonicalized plan and reused across calls — repeated calls over the
-    same input (e.g. threshold/max_df sweeps) skip the write. Lifetime
-    contract: the most recent 2 distinct inputs stay live per session;
-    consume a returned DataFrame before calling this on a 3rd distinct
-    input, or a stale plan fails fast with FileNotFound (see
+    in executor memory. Every call writes its own table; a repeated call
+    over the same input (e.g. a threshold/max_df sweep) writes it again.
+    Lifetime contract: the tables of the last 2 calls in this process
+    stay live; consume a returned DataFrame before the 2nd call after it,
+    or its plan fails fast with FileNotFound (see
     :func:`_materialize_bucketed`). Recall caveat (unchanged
     from round 1): a qualifying pair whose every common shingle is hot is
     missed; at J >= 0.8 a pair shares most of its shingles, so sharing at

@@ -16,7 +16,7 @@ from .topk import TopKSketch
 
 def create(kind: str, **params):
     """Factory: create('hll', p=14), create('rsqf', capacity=..., fp_rate=...)."""
-    cls = {
+    classes = {
         "rsqf": RsqfSketch,
         "bloom": BloomFilter,
         "hll": HllSketch,
@@ -24,8 +24,11 @@ def create(kind: str, **params):
         "kll": KllSketch,
         "tdigest": TDigest,
         "topk": TopKSketch,
-    }[kind]
-    return cls.create(**params)
+    }
+    if kind not in classes:
+        raise ValueError(
+            f"unknown sketch kind {kind!r}; known kinds: {', '.join(classes)}")
+    return classes[kind].create(**params)
 
 
 __all__ = [

@@ -118,8 +118,7 @@ def main():
     # 5. ngram-jaccard intermediate: bucketed scan with pushed freq filter
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     dedup.ngram_jaccard_pairs(docs)  # materializes the bucketed table
-    from qfilter_spark.functions.dedup import _ngram_ex_cache
-    table = next(reversed(_ngram_ex_cache.values()))[0]  # most recent table
+    table = dedup._ngram_ex_tables[-1][0]  # the table that call wrote
     # the audited stage IS the production stage: _rare_pair_stats is the
     # exact function ngram_jaccard_pairs calls, at the production default
     # max_df — no hand-copied wiring that could drift

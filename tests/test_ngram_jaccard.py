@@ -86,7 +86,7 @@ def test_lower_threshold_still_exact(spark, hot_corpus):
 
 
 # ---------------------------------------------------------------------------
-# content-addressed bucketed intermediate (round-4)
+# bucketed intermediate: one table per call, the last two kept live
 # ---------------------------------------------------------------------------
 
 def _write_docs(spark, tmp_path, name, docs):
@@ -95,26 +95,34 @@ def _write_docs(spark, tmp_path, name, docs):
     return p
 
 
-def test_bucketed_table_reused_across_calls(spark, tmp_path):
-    """Same parquet input twice -> ONE table write, same backing table; the
-    second call (even with different threshold/max_df, which live downstream
-    of the table) must not rewrite it."""
-    p = _write_docs(spark, tmp_path, "in1",
-                    [(f"d{i}", " ".join(f"w{i}x{j}" for j in range(8)))
-                     for i in range(20)])
+def test_repeated_calls_write_fresh_tables(spark, tmp_path):
+    """Three calls over one input: identical pairs, each call writes its
+    own table, and only the last two calls' tables stay live — the first
+    call's catalog entry and directory are gone."""
+    import os
+    p = _write_docs(spark, tmp_path, "rep",
+                    [(f"r{i}", " ".join(f"r{i % 6}x{j}" for j in range(8)))
+                     for i in range(18)])
     docs = spark.read.parquet(p)
-    dedup.ngram_jaccard_pairs(docs, threshold_millis=800).collect()
-    t1 = next(reversed(dedup._ngram_ex_cache.values()))[0]
-    dedup.ngram_jaccard_pairs(docs, threshold_millis=300, max_df=7).collect()
-    t2 = next(reversed(dedup._ngram_ex_cache.values()))[0]
-    assert t1 == t2
-    # a re-read of the same path also hits (plan hash keys on the path)
-    dedup.ngram_jaccard_pairs(spark.read.parquet(p)).collect()
-    assert next(reversed(dedup._ngram_ex_cache.values()))[0] == t1
+    results, tables = [], []
+    for _ in range(3):
+        results.append(sorted(
+            (r.doc_a, r.doc_b, r.jacc_millis)
+            for r in dedup.ngram_jaccard_pairs(docs).collect()))
+        tables.append(dedup._ngram_ex_tables[-1])
+    assert results[0] and results[0] == results[1] == results[2]
+    assert len(set(tables)) == 3
+    assert dedup._ngram_ex_tables == tables[1:]
+    first_name, first_path = tables[0]
+    assert not spark.catalog.tableExists(first_name)
+    assert not os.path.isdir(first_path)
+    for name, path in tables[1:]:
+        assert spark.catalog.tableExists(name) and os.path.isdir(path)
 
 
 def test_bucketed_table_lru_eviction(spark, tmp_path):
-    """The keep-2 LRU drops the oldest table's files and catalog entry."""
+    """Keeping the last 2 calls' tables drops the oldest table's files
+    and catalog entry."""
     import os
     paths = [_write_docs(spark, tmp_path, f"ev{k}",
                          [(f"d{k}_{i}", " ".join(f"v{k}w{i}x{j}" for j in range(6)))
@@ -123,8 +131,8 @@ def test_bucketed_table_lru_eviction(spark, tmp_path):
     tables = []
     for p in paths:
         dedup.ngram_jaccard_pairs(spark.read.parquet(p)).collect()
-        tables.append(next(reversed(dedup._ngram_ex_cache.values())))
-    assert len(dedup._ngram_ex_cache) <= dedup._NGRAM_EX_KEEP
+        tables.append(dedup._ngram_ex_tables[-1])
+    assert len(dedup._ngram_ex_tables) <= dedup._NGRAM_EX_KEEP
     t0_name, t0_path = tables[0]
     assert not spark.catalog.tableExists(t0_name)
     assert not os.path.isdir(t0_path)
@@ -144,7 +152,7 @@ def test_intermediate_dir_conf_respected(spark, tmp_path):
                         [(f"c{i}", " ".join(f"c{i}x{j}" for j in range(6)))
                          for i in range(10)])
         dedup.ngram_jaccard_pairs(spark.read.parquet(p)).collect()
-        _, path = next(reversed(dedup._ngram_ex_cache.values()))
+        _, path = dedup._ngram_ex_tables[-1]
         assert path.startswith(target)
         assert os.path.isdir(path)
     finally:
@@ -152,15 +160,14 @@ def test_intermediate_dir_conf_respected(spark, tmp_path):
 
 
 def test_overwritten_input_gets_fresh_table(spark, tmp_path):
-    """Round-5 (VERDICT r4 #6): the content-address key is salted with a
-    freshness stamp over the scan's input files, so an input OVERWRITTEN
-    in place mid-session gets a fresh bucketed table — never the stale
-    one the old path-keyed plan hash would have served."""
+    """An input OVERWRITTEN in place mid-session gets a fresh bucketed
+    table and answers from its new contents, never from the table the
+    first call wrote."""
     p = _write_docs(spark, tmp_path, "fresh1",
                     [(f"d{i}", " ".join(f"a{i}x{j}" for j in range(8)))
                      for i in range(10)])
     dedup.ngram_jaccard_pairs(spark.read.parquet(p)).collect()
-    t1 = next(reversed(dedup._ngram_ex_cache.values()))[0]
+    t1 = dedup._ngram_ex_tables[-1][0]
 
     # overwrite the SAME path with two exact-duplicate docs
     dup = " ".join(f"z{j}" for j in range(12))
@@ -168,26 +175,26 @@ def test_overwritten_input_gets_fresh_table(spark, tmp_path):
                            "doc_id string, text string")
      .write.mode("overwrite").parquet(p))
     pairs = dedup.ngram_jaccard_pairs(spark.read.parquet(p)).collect()
-    t2 = next(reversed(dedup._ngram_ex_cache.values()))[0]
+    t2 = dedup._ngram_ex_tables[-1][0]
     assert t2 != t1, "stale table served after in-place overwrite"
     assert {(r.doc_a, r.doc_b) for r in pairs} == {("n1", "n2")}
 
 
 def test_changed_intermediate_dir_fresh_table(spark, tmp_path):
     """Changing spark.qfilter.intermediateDir mid-session must write to
-    the NEW location (the cache key includes the base dir)."""
+    the NEW location (each call reads the conf when it writes)."""
     import os
     p = _write_docs(spark, tmp_path, "movedir",
                     [(f"m{i}", " ".join(f"m{i}x{j}" for j in range(6)))
                      for i in range(10)])
     dedup.ngram_jaccard_pairs(spark.read.parquet(p)).collect()
-    _, path_before = next(reversed(dedup._ngram_ex_cache.values()))
+    _, path_before = dedup._ngram_ex_tables[-1]
     target = str(tmp_path / "relocated")
     os.makedirs(target, exist_ok=True)
     spark.conf.set("spark.qfilter.intermediateDir", target)
     try:
         dedup.ngram_jaccard_pairs(spark.read.parquet(p)).collect()
-        _, path_after = next(reversed(dedup._ngram_ex_cache.values()))
+        _, path_after = dedup._ngram_ex_tables[-1]
         assert path_after.startswith(target)
         assert path_after != path_before
     finally:
