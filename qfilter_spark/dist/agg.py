@@ -25,8 +25,9 @@ Every path shares one build kernel (:func:`_fold`) and one merge kernel
    of Python tasks fewer per call. Fan-in keeps every reducer's input,
    the driver's included, at <= fan_in small blobs, so no single reducer
    becomes a bottleneck at any scale; each round optionally checkpoints to
-   Parquet with per-shard lineage + metrics for resumability (north_rule),
-   the driver-merged root included. The grouped build runs the same
+   Parquet with per-shard lineage + metrics for resumability (north_rule);
+   the driver commits the root, and a round 0 of at most fan_in counted
+   partials, from the rows it collects. The grouped build runs the same
    rounds keyed by group, and its last round merges each group to one row.
 
 Merge-order independence: hash sketches (RSQF/Bloom/HLL/CMS) are bit-stable
@@ -261,16 +262,25 @@ def tree_merge(partials, fan_in: int = 16, lineage=None, n_partials: int | None 
     ``n_partials`` is the row count of ``partials`` when the caller knows
     it (one row per sized task of :func:`partial_sketches`). Without it, a
     checkpointed run counts the written round 0; an uncheckpointed one
-    counts ``partials``, which runs the partial build once more.
+    counts ``partials``, which runs the partial build once more. A
+    checkpointed run of ``n_partials <= fan_in`` writes nothing with Spark:
+    the driver collects the partials once and commits them as round 0.
     """
     _check_fan_in(fan_in)
+    by_driver = (lineage is not None and n_partials is not None
+                 and n_partials <= fan_in)  # the driver commits round 0
     if lineage is not None:
         # the start of a fresh checkpointed run: record the merge shape so
         # resume can default to the same fan_in
         lineage.record_fan_in(fan_in)
-        partials = lineage.write_round(partials, 0)
+        if by_driver:
+            # the previous run's rounds go before the collect, so a killed
+            # collect leaves nothing of that run to resume into
+            lineage.drop_rounds(0)
+        else:
+            partials = lineage.write_round(partials, 0)
     n = n_partials if n_partials is not None else partials.count()
-    return _reduce_rounds(partials, n, fan_in, lineage, 0)
+    return _reduce_rounds(partials, n, fan_in, lineage, 0, by_driver)
 
 
 def _tree_rounds(current, n: int, fan_in: int, schema=PARTIAL_SCHEMA,
@@ -287,9 +297,11 @@ def _tree_rounds(current, n: int, fan_in: int, schema=PARTIAL_SCHEMA,
     return current, n, rnd
 
 
-def _reduce_rounds(current, n: int, fan_in: int, lineage, rnd: int) -> bytes:
+def _reduce_rounds(current, n: int, fan_in: int, lineage, rnd: int,
+                   commit: bool = False) -> bytes:
     """Merge rounds after round ``rnd`` (``current``, ``n`` rows) down to one
-    blob, numbered on from ``rnd`` as in the checkpoint directory."""
+    blob, numbered on from ``rnd`` as in the checkpoint directory; with
+    ``commit``, the driver commits round ``rnd`` from the rows it collects."""
     current, n, rnd = _tree_rounds(current, n, fan_in, lineage=lineage, rnd=rnd)
     rows = current.collect()
     if not rows:
@@ -301,16 +313,19 @@ def _reduce_rounds(current, n: int, fan_in: int, lineage, rnd: int) -> bytes:
         raise ValueError(
             f"tree_merge: {len(rows)} roots remain after the final round, "
             f"{n} planned — n_partials under-counts the partials DataFrame")
+    if commit:
+        lineage.commit_round(rnd, rows)
     if len(rows) == 1:
         return bytes(rows[0]["payload"])
     t0 = time.perf_counter()
     rows.sort(key=lambda r: r["shard_id"])
     root = merge_payloads(r["payload"] for r in rows).to_bytes()
     if lineage is not None:
-        lineage.commit_root(
-            rnd + 1, sum(r["n_items"] for r in rows),
-            sum(r["build_secs"] for r in rows) + (time.perf_counter() - t0),
-            root)
+        lineage.commit_round(rnd + 1, [{
+            "shard_id": 0, "n_items": sum(r["n_items"] for r in rows),
+            "build_secs": sum(r["build_secs"] for r in rows)
+            + (time.perf_counter() - t0),
+            "payload": root}])
     return root
 
 

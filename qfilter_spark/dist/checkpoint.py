@@ -2,10 +2,11 @@
 
 Each tree-merge round is persisted as a Parquet table
 ``<dir>/round=K/`` carrying per-shard lineage + metrics
-(shard_id, n_items, build_secs, payload). Spark writes round 0 and every
-shuffle round; the root, which the driver merges from the last <= fan_in
-blobs, is committed by the driver as one Parquet file without a Spark job,
-its ``_SUCCESS`` marker created last. A round is complete when its
+(shard_id, n_items, build_secs, payload). Spark writes the shuffle rounds
+and a round 0 of more than fan_in (or uncounted) partials; the driver
+commits, as one Parquet file without a Spark job, the rows it collects
+anyway: the root it merges from the last <= fan_in blobs, and a round 0
+of at most fan_in counted partials. A round is complete when its
 ``_SUCCESS`` marker exists; resume reads the last complete round and
 continues the reduction from there, skipping all finished work.
 
@@ -15,10 +16,11 @@ any Spark-writable location — ``hdfs://``, ``s3a://``, or a local path —
 and completeness detection works wherever the data was written.
 
 Two recovery hazards are closed structurally:
-- **stale rounds**: writing round K deletes every round > K (committing a
-  root at K first deletes every round >= K), so a reused
-  directory can never resume into leftovers of a previous run (the
-  highest complete round always belongs to the run that wrote last);
+- **stale rounds**: writing round K deletes every round > K (committing
+  round K first deletes every round >= K, and a driver-committed round 0
+  before its collect), so a reused directory can never resume into
+  leftovers of a previous run (the highest complete round always belongs
+  to the run that wrote last);
 - **merge-shape drift**: the fan_in is recorded in ``manifest.json`` at
   first write, and :func:`resume_tree_merge` defaults to it — resuming
   with a different fan_in than the original run would regroup the
@@ -59,6 +61,13 @@ class MergeLineage:
         sep = "" if self.dir.endswith("/") else "/"
         return f"{self.dir}{sep}round={rnd}"
 
+    def drop_rounds(self, rnd: int) -> None:
+        """Delete every round >= ``rnd``."""
+        fs = self._fs()
+        for stale in self._round_dirs(fs):
+            if stale >= rnd:
+                fs.delete(self._jpath(f"round={stale}"), True)
+
     def write_round(self, df, rnd: int):
         """Persist a round and return the re-read DataFrame (cuts lineage).
 
@@ -67,37 +76,31 @@ class MergeLineage:
         into them would silently return the previous run's data — also
         when this write dies, so they go before it starts.
         """
-        fs = self._fs()
-        for stale in self._round_dirs(fs):
-            if stale > rnd:
-                fs.delete(self._jpath(f"round={stale}"), True)
+        self.drop_rounds(rnd + 1)
         path = self._round_path(rnd)
         df.write.mode("overwrite").parquet(path)
         return self.spark.read.schema(PARTIAL_SCHEMA).parquet(path)
 
-    def commit_root(self, rnd: int, n_items: int, build_secs: float,
-                    payload: bytes) -> None:
-        """Commit the driver-merged root as round ``rnd`` without a Spark job.
+    def commit_round(self, rnd: int, rows) -> None:
+        """Commit the driver's ``rows`` (Rows or dicts of the
+        ``PARTIAL_SCHEMA`` fields) as round ``rnd`` without a Spark job.
 
-        One ``PARTIAL_SCHEMA`` Parquet file (shard_id 0) built with pyarrow.
-        Rounds >= ``rnd`` are deleted first and ``_SUCCESS`` is created
-        last, so a crash mid-commit leaves an incomplete round that resume
-        ignores, merging again from the round below.
+        One Parquet file built with pyarrow. Rounds >= ``rnd`` are deleted
+        first and ``_SUCCESS`` is created last, so a crash mid-commit
+        leaves an incomplete round that resume ignores, merging again from
+        the round below.
         """
         import pyarrow as pa
         import pyarrow.parquet as pq
 
+        schema = pa.schema([("shard_id", pa.int64()), ("n_items", pa.int64()),
+                            ("build_secs", pa.float64()),
+                            ("payload", pa.binary())])
         sink = pa.BufferOutputStream()
-        pq.write_table(pa.table({
-            "shard_id": pa.array([0], pa.int64()),
-            "n_items": pa.array([n_items], pa.int64()),
-            "build_secs": pa.array([build_secs], pa.float64()),
-            "payload": pa.array([payload], pa.binary()),
-        }), sink)
+        pq.write_table(pa.table({f.name: [r[f.name] for r in rows]
+                                 for f in schema}, schema=schema), sink)
+        self.drop_rounds(rnd)
         fs = self._fs()
-        for stale in self._round_dirs(fs):
-            if stale >= rnd:
-                fs.delete(self._jpath(f"round={stale}"), True)
         self._put(fs, sink.getvalue(), f"round={rnd}", "part-00000.parquet")
         self._put(fs, b"", f"round={rnd}", "_SUCCESS")
 

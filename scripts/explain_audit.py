@@ -17,6 +17,10 @@ Asserts the properties the engine is designed around (SURVEY.md §4.2):
   table are the same per-row map: one MapInArrow, no Exchange
 - a one-task sharded build is Coalesce -> MapInArrow: the emit task
   merges every row, with no Sort or FlatMapGroupsInArrow behind it
+- a checkpointed ``tree_merge`` of at most ``fan_in`` partials is one
+  Spark job: the driver commits round 0 and the root
+- ``probe_hashes`` over local rows (no statistics) reads them through a
+  rebalance Exchange, and its MapInArrow stage runs one task
 
 Usage: python scripts/explain_audit.py [sf_dir]
 Prints one PASS/FAIL line per check plus the formatted plans to stderr.
@@ -181,6 +185,19 @@ def main():
                       ("Sort", "FlatMapGroupsInArrow", "Exchange")),
           "one Python stage")
 
+    # 9. a small checkpointed merge: one job
+    jobs = checkpointed_merge_jobs(spark, tempfile.mkdtemp())
+    check("checkpointed tree_merge of <= fan_in partials: one Spark job",
+          len(jobs) == 1, f"stage tasks per job {jobs}")
+
+    # 10. a probe over local rows: AQE sizes it behind a rebalance
+    tree, jobs = local_rows_probe(spark)
+    print(tree, file=sys.stderr)
+    check("local-rows probe_hashes: rebalance Exchange, one-task "
+          "MapInArrow stage",
+          "REBALANCE_PARTITIONS_BY_NONE" in tree and tree.count("MapInArrow")
+          == 1 and jobs[-1] == [1], f"stage tasks per job {jobs}")
+
     spark.stop()
     print(f"{failures} failures")
     sys.exit(1 if failures else 0)
@@ -308,6 +325,65 @@ def one_task_build_plan(spark) -> str:
         "formatted")
     return (build_sharded_filter(hashes, spec, n_shards=8)._jdf
             .queryExecution().explainString(mode).split("\n\n")[0])
+
+
+def stage_tasks(spark, call) -> list:
+    """Per Spark job ``call`` runs, in job order: the task count of each
+    stage that ran (a skipped stage is left out)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"audit-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "audit")
+    try:
+        call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    st = sc.statusTracker()
+    out = []
+    for job in sorted(st.getJobIdsForGroup(group)):
+        stages = (st.getStageInfo(s)
+                  for s in sorted(st.getJobInfo(job).stageIds))
+        out.append([s.numTasks for s in stages
+                    if s is not None and s.numCompletedTasks])
+    return out
+
+
+def checkpointed_merge_jobs(spark, work: str) -> list:
+    """:func:`stage_tasks` of one checkpointed KLL ``tree_merge`` at
+    ``fan_in=4`` over the partials of a tiny 4-partition input."""
+    from pyspark.sql import functions as F
+
+    from qfilter_spark.dist import SketchSpec, partial_sketches, tree_merge
+    from qfilter_spark.dist.checkpoint import MergeLineage
+
+    values = spark.range(0, 6000, numPartitions=4).select(
+        F.sin("id").alias("v"))
+    spec = SketchSpec("kll", dict(k=50), "values", "v")
+    lineage = MergeLineage(spark, os.path.join(work, "lineage"))
+    parts = partial_sketches(values, spec)
+    n = parts.rdd.getNumPartitions()
+    return stage_tasks(spark, lambda: tree_merge(
+        parts, fan_in=4, lineage=lineage, n_partials=n))
+
+
+def local_rows_probe(spark) -> tuple:
+    """The final executed operator tree and :func:`stage_tasks` of one
+    ``probe_hashes`` over 2000 ``createDataFrame`` rows."""
+    from pyspark.sql import functions as F
+
+    from qfilter_spark import sketches
+    from qfilter_spark.dist.probe import probe_hashes
+
+    local = spark.createDataFrame(
+        [(i,) for i in range(2000)], "id long").select(
+        F.xxhash64("id").alias("h"))
+    blob = sketches.create("cms", eps=0.01, delta=0.01).to_bytes()
+    out = probe_hashes(local, blob, "h")
+    jobs = stage_tasks(spark, out.collect)
+    tree = out._jdf.queryExecution().executedPlan().toString()
+    return tree.split("== Initial Plan ==")[0], jobs
 
 
 if __name__ == "__main__":

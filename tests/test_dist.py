@@ -358,6 +358,30 @@ def test_killed_round0_write_cannot_resume_previous_run(spark, corpus_df,
         resume_tree_merge(spark, ckpt)
 
 
+def test_killed_driver_round0_cannot_resume_previous_run(spark, corpus_df,
+                                                        unsized_inputs,
+                                                        tmp_path):
+    """The same for a run whose round 0 the driver commits (n_partials <=
+    fan_in): the previous run's rounds go before the collect, so a partial
+    build that dies leaves no round to resume into."""
+    from pyspark.sql import functions as F
+
+    ckpt = str(tmp_path / "lineage_killed_driver")
+    spec = SketchSpec("hll", dict(p=10), "hash_col", "h")
+    parts = partial_sketches(
+        corpus_df.select(F.xxhash64("doc_id").alias("h")), spec)
+    lineage = MergeLineage(spark, ckpt)
+    tree_merge(parts, fan_in=2, lineage=lineage)
+    assert len(lineage.complete_rounds()) >= 3
+    killed = parts.withColumn(
+        "payload", F.raise_error(F.lit("task killed")).cast("binary"))
+    with pytest.raises(Exception, match="task killed"):
+        tree_merge(killed, fan_in=16, lineage=lineage, n_partials=8)
+    assert lineage.complete_rounds() == []
+    with pytest.raises(FileNotFoundError):
+        resume_tree_merge(spark, ckpt)
+
+
 # ---------------------------------------------------------------------------
 # probe_hashes failure modes (round-5 review)
 # ---------------------------------------------------------------------------

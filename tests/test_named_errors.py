@@ -49,3 +49,18 @@ def test_spec_refuses_unknown_mode():
     with pytest.raises(ValueError, match="unknown mode 'bogus'; known modes: "
                                          "hash_col, tokens_ngram, values"):
         SketchSpec("hll", dict(p=12), mode="bogus", col="h")
+
+
+def test_split_build_refuses_a_directory(spark):
+    """The split build plans its own directory from an int shard count: a
+    ShardDirectory is refused by name before its planning job runs."""
+    df = spark.range(0, 2000).select(F.xxhash64("id").alias("h"))
+    sc = spark.sparkContext
+    sc.setJobGroup("split_directory", "refused before any job")
+    try:
+        with pytest.raises(ValueError, match="pass n_shards as an int"):
+            sharded.build_sharded_filter_split(
+                df, RSQF, sharded._directory(16, RSQF), 100)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert not sc.statusTracker().getJobIdsForGroup("split_directory")

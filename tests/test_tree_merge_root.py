@@ -90,6 +90,35 @@ def test_driver_root_equals_spark_root(spark, df, tmp_path, kind):
     assert old.complete_rounds() == [0, 1, 2, 3]
 
 
+def _round_rows(lineage, rnd):
+    """(shard_id, n_items, payload) of a written round, in shard order."""
+    return sorted((r["shard_id"], r["n_items"], bytes(r["payload"]))
+                  for r in lineage.read_round(rnd).collect())
+
+
+@pytest.mark.usefixtures("unsized_inputs")
+@pytest.mark.parametrize("kind", list(SPECS))
+def test_driver_round0_equals_spark_round0(spark, df, tmp_path, kind):
+    """8 partials at fan_in=8: the driver commits round 0 and the root. The
+    round reads back as the rows a Spark write of the same partials
+    stores (build_secs aside), and resume from round 0, with the root cut
+    away, returns the same blob."""
+    spec = SPECS[kind]
+    parts = partial_sketches(df, spec)
+    spark_written = MergeLineage(spark, str(tmp_path / "spark_round0"))
+    spark_written.write_round(parts, 0)
+    ckpt = str(tmp_path / "driver_round0")
+    lineage = MergeLineage(spark, ckpt)
+    blob = tree_merge(parts, fan_in=8, lineage=lineage, n_partials=8)
+    assert blob == tree_merge(parts, fan_in=8)
+    assert lineage.complete_rounds() == [0, 1]
+    rows = _round_rows(lineage, 0)
+    assert len(rows) == 8 and rows == _round_rows(spark_written, 0)
+    _cut_after(ckpt, lineage, 0)
+    assert resume_tree_merge(spark, ckpt) == blob
+    assert lineage.complete_rounds() == [0, 1]
+
+
 @pytest.mark.usefixtures("unsized_inputs")
 def test_root_without_success_is_ignored(spark, df, tmp_path):
     """A crash mid-commit leaves a root directory without _SUCCESS: resume
@@ -162,14 +191,15 @@ def _jobs_of(spark, call):
 @pytest.mark.usefixtures("unsized_inputs")
 def test_plan_shape_of_one_call(spark, df, tmp_path):
     """<= fan_in partials: build_sketch is one job of one stage (no
-    shuffle); a checkpointed tree_merge writes round 0, then collects it."""
+    shuffle); a checkpointed tree_merge is one job too: it collects the
+    partials, and the driver commits round 0 and the root."""
     spec = SPECS["cms"]
     few = df.coalesce(4)
     assert _jobs_of(spark, lambda: build_sketch(few, spec, fan_in=4)) == [1]
     lineage = MergeLineage(spark, str(tmp_path / "lineage"))
     stages = _jobs_of(spark, lambda: tree_merge(
         partial_sketches(few, spec), fan_in=4, lineage=lineage, n_partials=4))
-    assert stages == [1, 1]
+    assert stages == [1]
     assert lineage.complete_rounds() == [0, 1]
 
 
