@@ -270,14 +270,11 @@ def tree_merge(partials, fan_in: int = 16, lineage=None, n_partials: int | None 
     by_driver = (lineage is not None and n_partials is not None
                  and n_partials <= fan_in)  # the driver commits round 0
     if lineage is not None:
-        # the start of a fresh checkpointed run: record the merge shape so
-        # resume can default to the same fan_in
+        # a fresh checkpointed run records its merge shape for resume and
+        # drops the previous run's rounds before any of its jobs can die
         lineage.record_fan_in(fan_in)
-        if by_driver:
-            # the previous run's rounds go before the collect, so a killed
-            # collect leaves nothing of that run to resume into
-            lineage.drop_rounds(0)
-        else:
+        lineage.drop_rounds(0)
+        if not by_driver:
             partials = lineage.write_round(partials, 0)
     n = n_partials if n_partials is not None else partials.count()
     return _reduce_rounds(partials, n, fan_in, lineage, 0, by_driver)
@@ -321,11 +318,10 @@ def _reduce_rounds(current, n: int, fan_in: int, lineage, rnd: int,
     rows.sort(key=lambda r: r["shard_id"])
     root = merge_payloads(r["payload"] for r in rows).to_bytes()
     if lineage is not None:
-        lineage.commit_round(rnd + 1, [{
-            "shard_id": 0, "n_items": sum(r["n_items"] for r in rows),
-            "build_secs": sum(r["build_secs"] for r in rows)
-            + (time.perf_counter() - t0),
-            "payload": root}])
+        lineage.commit_round(rnd + 1, [dict(
+            shard_id=0, n_items=sum(r["n_items"] for r in rows),
+            build_secs=sum(r["build_secs"] for r in rows)
+            + (time.perf_counter() - t0), payload=root)])
     return root
 
 

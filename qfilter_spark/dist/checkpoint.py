@@ -4,11 +4,11 @@ Each tree-merge round is persisted as a Parquet table
 ``<dir>/round=K/`` carrying per-shard lineage + metrics
 (shard_id, n_items, build_secs, payload). Spark writes the shuffle rounds
 and a round 0 of more than fan_in (or uncounted) partials; the driver
-commits, as one Parquet file without a Spark job, the rows it collects
-anyway: the root it merges from the last <= fan_in blobs, and a round 0
-of at most fan_in counted partials. A round is complete when its
-``_SUCCESS`` marker exists; resume reads the last complete round and
-continues the reduction from there, skipping all finished work.
+commits the rows it collects, the root and a round 0 of at most fan_in
+counted partials, as one Parquet file without a Spark job. A round is
+complete when its ``_SUCCESS`` marker exists; resume reads the last
+complete round and continues the reduction from there, skipping all
+finished work.
 
 Filesystem access goes through the Hadoop FileSystem API of the live
 SparkSession (not driver-local ``os``), so the checkpoint directory may be
@@ -16,11 +16,10 @@ any Spark-writable location — ``hdfs://``, ``s3a://``, or a local path —
 and completeness detection works wherever the data was written.
 
 Two recovery hazards are closed structurally:
-- **stale rounds**: writing round K deletes every round > K (committing
-  round K first deletes every round >= K, and a driver-committed round 0
-  before its collect), so a reused directory can never resume into
-  leftovers of a previous run (the highest complete round always belongs
-  to the run that wrote last);
+- **stale rounds**: a fresh run deletes every round before its first job,
+  and writing round K every round > K, so a reused directory can never
+  resume into leftovers of a previous run (the highest complete round
+  always belongs to the run that wrote last);
 - **merge-shape drift**: the fan_in is recorded in ``manifest.json`` at
   first write, and :func:`resume_tree_merge` defaults to it — resuming
   with a different fan_in than the original run would regroup the
@@ -31,12 +30,12 @@ Two recovery hazards are closed structurally:
 from __future__ import annotations
 
 import json
+import os
+import tempfile
 
 from .agg import PARTIAL_SCHEMA, _check_fan_in, _reduce_rounds
 
 _MANIFEST = "manifest.json"
-#: bytes per Hadoop FS write call: bounds the Py4J message for large roots
-_CHUNK = 1 << 20
 
 
 class MergeLineage:
@@ -85,32 +84,43 @@ class MergeLineage:
         """Commit the driver's ``rows`` (Rows or dicts of the
         ``PARTIAL_SCHEMA`` fields) as round ``rnd`` without a Spark job.
 
-        One Parquet file built with pyarrow. Rounds >= ``rnd`` are deleted
-        first and ``_SUCCESS`` is created last, so a crash mid-commit
-        leaves an incomplete round that resume ignores, merging again from
-        the round below.
+        pyarrow streams them, a row group each, into a Parquet file in
+        PySpark's driver scratch directory (under ``spark.local.dir``),
+        which Hadoop copies into place: no payload crosses Py4J. Rounds >=
+        ``rnd`` are deleted first and ``_SUCCESS`` is created last, so a
+        crash mid-commit leaves an incomplete round that resume ignores,
+        merging again from the round below.
         """
         import pyarrow as pa
         import pyarrow.parquet as pq
 
+        from .. import fsutil
+
         schema = pa.schema([("shard_id", pa.int64()), ("n_items", pa.int64()),
                             ("build_secs", pa.float64()),
                             ("payload", pa.binary())])
-        sink = pa.BufferOutputStream()
-        pq.write_table(pa.table({f.name: [r[f.name] for r in rows]
-                                 for f in schema}, schema=schema), sink)
         self.drop_rounds(rnd)
         fs = self._fs()
-        self._put(fs, sink.getvalue(), f"round={rnd}", "part-00000.parquet")
+        with tempfile.TemporaryDirectory(
+                dir=self.spark.sparkContext._temp_dir) as tmp:
+            local = os.path.join(tmp, "part-00000.parquet")
+            # min/max statistics of a blob column cost a pass over it
+            with pq.ParquetWriter(local, schema, use_dictionary=False,
+                                  write_statistics=False) as writer:
+                for r in rows:
+                    writer.write_batch(pa.record_batch(
+                        [pa.array([r[f.name]], f.type) for f in schema],
+                        schema=schema))
+            fs.copyFromLocalFile(True, True, fsutil.jpath(self.spark, local),
+                                 self._jpath(f"round={rnd}",
+                                             "part-00000.parquet"))
         self._put(fs, b"", f"round={rnd}", "_SUCCESS")
 
-    def _put(self, fs, data, *parts: str) -> None:
-        """Create (overwrite) the file ``parts`` holding ``data``."""
-        view = memoryview(data)
+    def _put(self, fs, data: bytes, *parts: str) -> None:
+        """Create (overwrite) the small file ``parts`` holding ``data``."""
         out = fs.create(self._jpath(*parts), True)
         try:
-            for i in range(0, len(view), _CHUNK):
-                out.write(bytearray(view[i:i + _CHUNK]))
+            out.write(bytearray(data))
         finally:
             out.close()
 

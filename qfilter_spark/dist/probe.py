@@ -8,8 +8,6 @@ its (row key, payload) rows and their ``ShardDirectory``. One map
 asks the sketch of the row that owns it, through the sketch's own
 ``contains_hashes`` / ``count_hashes`` / ``estimate_hashes``. Analogous to
 Spark's own ``might_contain(bloom, col)`` but for every sketch kind here.
-Its input is sized by :func:`~qfilter_spark.dist.sizing.sized_rows`, so
-a small probe is one Python task, also over local rows.
 
 A reused Python worker hands every task of a job the same unpickled
 broadcast value, so a row decoded on the table object stays decoded for
@@ -22,7 +20,7 @@ from __future__ import annotations
 import numpy as np
 
 from ..hashing import u64_hashes_from_arrow
-from .sizing import sized_rows
+from .sizing import sized_input
 
 
 def _ask(sk, h: np.ndarray, as_bool: bool) -> np.ndarray:
@@ -88,8 +86,7 @@ def _probe_rows(df, hash_col: str, out_col: str, as_bool: bool, b,
                 context: str):
     """The one probe map: ``df`` with ``out_col`` appended, each row's
     answer from the broadcast :class:`_Table` ``b``
-    (:meth:`_Table.answer`). NULL hashes are refused with ``context``. An
-    input without statistics is rebalanced: join on the hash, not order."""
+    (:meth:`_Table.answer`). NULL hashes are refused with ``context``."""
     import pyarrow as pa
 
     out_type = "boolean" if as_bool else "long"
@@ -104,7 +101,7 @@ def _probe_rows(df, hash_col: str, out_col: str, as_bool: bool, b,
                 batch.columns + [pa.array(table.answer(h, as_bool))],
                 names=batch.schema.names + [out_col])
 
-    return sized_rows(df).mapInArrow(run, schema)
+    return sized_input(df).mapInArrow(run, schema)
 
 
 def probe_hashes(df, blob: bytes, hash_col: str, out_col: str = "est_count",

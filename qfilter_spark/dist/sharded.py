@@ -442,7 +442,7 @@ def build_sharded_filter_split(df, spec: SketchSpec, n_shards: int = 64,
         raise ValueError(
             f"max_fps_per_row must be >= 1, got {max_fps_per_row!r}")
     uniform = _directory(n_shards, spec)
-    if uniform is n_shards:
+    if isinstance(n_shards, ShardDirectory):
         raise ValueError("build_sharded_filter_split plans its directory: "
                          "pass n_shards as an int, not a ShardDirectory")
 

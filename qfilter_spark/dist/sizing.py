@@ -11,8 +11,6 @@ Exchange, no extra job); :func:`sized_tasks` reports the task count from
 the same estimate, so the sharded build and broadcast probe can finish a
 one-task stage in that task. :func:`broadcastable` reads the same estimate
 to pick a broadcast plan the way Spark picks a broadcast join.
-An input Spark cannot size keeps its partitions, except under the per-row
-probe, which reads it through an AQE ``rebalance`` (:func:`sized_rows`).
 """
 
 from __future__ import annotations
@@ -40,29 +38,6 @@ def broadcastable(df) -> bool:
     return size < _LONG_MAX and 0 <= size <= conf.autoBroadcastJoinThreshold()
 
 
-def _target_tasks(df) -> int | None:
-    """``k`` of :func:`sized_tasks`: None when AQE coalescing is off or
-    ``df`` streams, ``_INT_MAX`` or more when Spark cannot size ``df``."""
-    spark = df.sparkSession
-    conf = spark._jsparkSession.sessionState().conf()
-    if df.isStreaming or not (conf.adaptiveExecutionEnabled()
-                              and conf.coalesceShufflePartitionsEnabled()):
-        return None
-    size = plan_bytes(df)
-    if size >= _LONG_MAX:
-        return _INT_MAX
-    entries = spark._jvm.org.apache.spark.sql.internal.SQLConf
-    n = 1
-    if conf.getConf(entries.COALESCE_PARTITIONS_PARALLELISM_FIRST()):
-        num = conf.getConf(entries.COALESCE_PARTITIONS_MIN_PARTITION_NUM())
-        n = (num.get() if num.isDefined()
-             else spark.sparkContext.defaultParallelism)
-    advisory = conf.getConf(entries.ADVISORY_PARTITION_SIZE_IN_BYTES())
-    floor = conf.getConf(entries.COALESCE_PARTITIONS_MIN_PARTITION_SIZE())
-    target = max(floor, min(advisory, -(-size // n)))
-    return max(1, -(-size // target))  # an empty input still needs a task
-
-
 def sized_tasks(df):
     """``(frame, tasks)``: ``df`` coalesced to ``k = ceil(estimated bytes /
     target)`` partitions, and ``k``, the most tasks a map stage over
@@ -75,30 +50,34 @@ def sized_tasks(df):
     n)))``, where ``n`` is ``coalescePartitions.minPartitionNum`` (or the
     default parallelism when that is unset) under ``parallelismFirst``,
     else 1. ``df`` comes back as is when ``spark.sql.adaptive.enabled`` or
-    ``coalescePartitions.enabled`` is off, when it is streaming, or when
-    its size is unknown (no statistics, e.g. a ``createDataFrame`` from
-    local rows, or a projection of one; :func:`sized_rows` rebalances it).
-    ``coalesce`` never adds partitions, so an input with fewer partitions
-    than ``k`` keeps its own; nothing runs to count them (``df.rdd`` can
-    run the input's AQE shuffles).
+    ``coalescePartitions.enabled`` is off, when it streams, or when its
+    size is unknown (no statistics, e.g. a ``createDataFrame`` from local
+    rows, or a projection of one). ``coalesce`` never adds partitions, so
+    an input with fewer partitions than ``k`` keeps its own; nothing runs
+    to count them (``df.rdd`` can run the input's AQE shuffles).
     """
-    k = _target_tasks(df)
-    return (df.coalesce(k), k) if k is not None and k < _INT_MAX else (df, None)
+    spark = df.sparkSession
+    conf = spark._jsparkSession.sessionState().conf()
+    if df.isStreaming or not (conf.adaptiveExecutionEnabled()
+                              and conf.coalesceShufflePartitionsEnabled()):
+        return df, None
+    size = plan_bytes(df)
+    if size >= _LONG_MAX:
+        return df, None
+    entries = spark._jvm.org.apache.spark.sql.internal.SQLConf
+    n = 1
+    if conf.getConf(entries.COALESCE_PARTITIONS_PARALLELISM_FIRST()):
+        num = conf.getConf(entries.COALESCE_PARTITIONS_MIN_PARTITION_NUM())
+        n = (num.get() if num.isDefined()
+             else spark.sparkContext.defaultParallelism)
+    advisory = conf.getConf(entries.ADVISORY_PARTITION_SIZE_IN_BYTES())
+    floor = conf.getConf(entries.COALESCE_PARTITIONS_MIN_PARTITION_SIZE())
+    target = max(floor, min(advisory, -(-size // n)))
+    k = max(1, -(-size // target))  # an empty input still needs a task
+    return (df.coalesce(k), k) if k < _INT_MAX else (df, None)
 
 
 def sized_input(df):
     """``df`` sized for an input-side Python map stage: the frame of
     :func:`sized_tasks`."""
     return sized_tasks(df)[0]
-
-
-def sized_rows(df):
-    """``df`` sized for a map stage that emits a row per input row: the frame
-    of :func:`sized_tasks`, or, when Spark cannot size ``df`` (a count of
-    local rows would miss a ``flatMap`` behind the same lineage), ``df``
-    through a ``rebalance`` hint, whose Exchange AQE coalesces by the bytes
-    it shuffled: at most what the stage emits."""
-    k = _target_tasks(df)
-    if k is not None and k >= _INT_MAX:
-        return df.hint("rebalance")
-    return df if k is None else df.coalesce(k)

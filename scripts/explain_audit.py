@@ -19,8 +19,10 @@ Asserts the properties the engine is designed around (SURVEY.md §4.2):
   merges every row, with no Sort or FlatMapGroupsInArrow behind it
 - a checkpointed ``tree_merge`` of at most ``fan_in`` partials is one
   Spark job: the driver commits round 0 and the root
-- ``probe_hashes`` over local rows (no statistics) reads them through a
-  rebalance Exchange, and its MapInArrow stage runs one task
+- ``probe_hashes`` over local rows (no statistics) is one MapInArrow over
+  the input's own partitions, with no Exchange: Spark cannot tell such an
+  input from a large one, where a raw-row shuffle costs more than the
+  probe's task count saves
 
 Usage: python scripts/explain_audit.py [sf_dir]
 Prints one PASS/FAIL line per check plus the formatted plans to stderr.
@@ -190,13 +192,13 @@ def main():
     check("checkpointed tree_merge of <= fan_in partials: one Spark job",
           len(jobs) == 1, f"stage tasks per job {jobs}")
 
-    # 10. a probe over local rows: AQE sizes it behind a rebalance
-    tree, jobs = local_rows_probe(spark)
+    # 10. a probe over local rows: no Exchange, the input's partitions
+    tree, jobs, n_parts = local_rows_probe(spark)
     print(tree, file=sys.stderr)
-    check("local-rows probe_hashes: rebalance Exchange, one-task "
-          "MapInArrow stage",
-          "REBALANCE_PARTITIONS_BY_NONE" in tree and tree.count("MapInArrow")
-          == 1 and jobs[-1] == [1], f"stage tasks per job {jobs}")
+    check("local-rows probe_hashes: one MapInArrow over the input's "
+          "partitions, no Exchange",
+          "Exchange" not in tree and tree.count("MapInArrow") == 1
+          and jobs == [[n_parts]], f"stage tasks per job {jobs}")
 
     spark.stop()
     print(f"{failures} failures")
@@ -370,7 +372,8 @@ def checkpointed_merge_jobs(spark, work: str) -> list:
 
 def local_rows_probe(spark) -> tuple:
     """The final executed operator tree and :func:`stage_tasks` of one
-    ``probe_hashes`` over 2000 ``createDataFrame`` rows."""
+    ``probe_hashes`` over 2000 ``createDataFrame`` rows, and the input's
+    partition count."""
     from pyspark.sql import functions as F
 
     from qfilter_spark import sketches
@@ -383,7 +386,8 @@ def local_rows_probe(spark) -> tuple:
     out = probe_hashes(local, blob, "h")
     jobs = stage_tasks(spark, out.collect)
     tree = out._jdf.queryExecution().executedPlan().toString()
-    return tree.split("== Initial Plan ==")[0], jobs
+    return (tree.split("== Initial Plan ==")[0], jobs,
+            local.rdd.getNumPartitions())
 
 
 if __name__ == "__main__":

@@ -23,7 +23,7 @@ from qfilter_spark.dist.sharded import (
     remove_sharded,
     shrink_sharded,
 )
-from qfilter_spark.dist.sizing import sized_input, sized_rows, sized_tasks
+from qfilter_spark.dist.sizing import sized_input, sized_tasks
 
 COALESCE = "spark.sql.adaptive.coalescePartitions.enabled"
 N = 6000
@@ -252,60 +252,25 @@ def test_probe_hashes_equal(spark, df):
     assert sized == unsized and len(sized) == 2 * N
 
 
-def test_local_rows_probe_is_one_task(spark, df, tmp_path):
-    """A probe over local rows (no statistics) reads them through AQE's
-    rebalance: probe_hashes and the broadcast count_sharded each answer in
-    one MapInArrow task, with the (h, answer) multiset of the unsized
-    plan, which keeps the input's partitions and plans no Exchange."""
-    from pyspark.sql import functions as F
-
-    from qfilter_spark import sources
-    from qfilter_spark.dist.sharded import count_sharded
-
-    cms = SketchSpec("cms", dict(eps=0.01, delta=0.01), "hash_col", "h")
-    rsqf = SketchSpec("rsqf", dict(capacity=1 << 14, fp_rate=0.01),
-                      "hash_col", "h")
-    blob = build_sketch(df, cms)
-    path = str(tmp_path / "table")
-    sources.write_filter_table(build_sharded_filter(df, rsqf, 8), path)
-    table = sources.read_filter_table(spark, path)
-    ids = range(0, 2 * N, 3)  # half present in the sketches
-    local = spark.createDataFrame([(i,) for i in ids], "id long").select(
-        F.xxhash64("id").alias("h"))
-    assert _n_parts(local) > 1
-    calls = {"probe_hashes": lambda: probe_hashes(local, blob, "h"),
-             "count_sharded": lambda: count_sharded(local, "h", table, 8,
-                                                    rsqf)}
-    for name, call in calls.items():
-        sized, rows = call(), []
-        jobs = _stage_tasks(spark, lambda: rows.extend(sized.collect()))
-        assert jobs[-1] == [1], (name, jobs)
-        plan = _plan(sized).split("== Initial Plan ==")[0]
-        assert "REBALANCE_PARTITIONS_BY_NONE" in plan, name
-        assert plan.count("MapInArrow") == 1, name
-        with _unsized(spark):
-            unsized = call()
-            assert "Exchange" not in _plan(unsized), name
-            assert _n_parts(unsized) == _n_parts(local), name
-            assert sorted(unsized.collect()) == sorted(rows), name
-        assert len(rows) == len(ids), name
-
-
 def test_probe_plans_without_exchange(spark, df):
-    """A sized input (spark.range) keeps the narrow coalesce, a session
-    with AQE off keeps the input's partitions, and a streaming input is
-    left as it is: none of them is rebalanced."""
+    """The probe adds no Exchange: a sized input (spark.range) keeps the
+    narrow coalesce, while local rows (no statistics), a session with AQE
+    off and a streaming input keep their own partitions."""
     from pyspark.sql import functions as F
 
     blob = sketches.create("cms", eps=0.01, delta=0.01).to_bytes()
     local = spark.createDataFrame([(i,) for i in range(100)], "h long")
     plan = _plan(probe_hashes(df, blob, "h"))
     assert "Coalesce 1" in plan and "Exchange" not in plan
+    probed = probe_hashes(local, blob, "h")
+    assert "Exchange" not in _plan(probed)
+    assert _n_parts(probed) == _n_parts(local)
     with _conf(spark, **{"spark.sql.adaptive.enabled": "false"}):
-        assert "Exchange" not in _plan(probe_hashes(local, blob, "h"))
+        assert "Exchange" not in _plan(probe_hashes(df, blob, "h"))
     stream = spark.readStream.format("rate").load().select(
         F.col("value").alias("h"))
-    assert sized_rows(stream) is stream
+    frame, tasks = sized_tasks(stream)
+    assert frame is stream and tasks is None
     assert probe_hashes(stream, blob, "h").isStreaming
 
 
